@@ -230,7 +230,7 @@ def q_corr_lag_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # merge subtree computes exactly once, all four consumers read its
     # shuffle files, the per-entity grid windows reuse the partitioning,
     # and no executor memory is pinned (same measured pattern as
-    # qa_invariants, tools/r13_pin_shape_ab.py).
+    # qa_invariants, artifacts/r13_shape_ab_results.json).
     merged = _merged(spark, sf_dir).repartition(F.col("cus_code"))
     grid = lag_correlation_grid(merged, MAX_LAG)
     corr = F.when(F.isnan("corr"), F.lit(None)).otherwise(F.col("corr"))
@@ -389,7 +389,8 @@ def q_qa_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concurrently by every consumer (duplicate lineitem scans profiled
     # in this leg), while the exchange computes each aggregation subtree
     # exactly once and its partitioning feeds the downstream per-entity
-    # windows/joins. Interleaved A/B at sf0.1 (tools/r13_pin_shape_ab.py,
+    # windows/joins. Interleaved A/B at sf0.1
+    # (artifacts/r13_shape_ab_results.json,
     # rows identical): pin 4.29 s median -> entity-key gate 3.11 s.
     t1 = monthly_spend(spark, sf_dir).repartition(F.col("cus_code"))
     t2 = monthly_revenue(spark, sf_dir).repartition(F.col("cus_code"))
@@ -596,10 +597,11 @@ def q_production_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     # entity-key exchange per frame (subtree computes once, consumers
     # read its shuffle files, no cold-pin materialization race, no
     # pinned executor memory — measured on the qa/corr/auto twins,
-    # tools/r13_map_shape_ab.py). The STAGED flow (SPARK_GRAFT_STAGE_DIR)
-    # keeps scoped_pin: it runs TWO actions (the routed-model build,
-    # then the mapping build), and shuffle files are not reused across
-    # actions — only a cache survives into the second action.
+    # artifacts/r13_shape_ab_results.json). The STAGED flow
+    # (SPARK_GRAFT_STAGE_DIR) keeps scoped_pin: it runs TWO actions (the
+    # routed-model build, then the mapping build), and shuffle files are
+    # not reused across actions — only a cache survives into the second
+    # action.
     stage_dir = os.environ.get("SPARK_GRAFT_STAGE_DIR", "")
     if stage_dir:
         from mapping_timeseries_spark.operators.dedup import (
@@ -1196,7 +1198,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass into the Heaps-bounded driver histogram, then driver-side
     merges). Training is an ITERATIVE DRIVER LOOP, so its Spark work
     happens at construction: bench.py times this leg with the build
-    inside the timed region (DRIVER_LEGS)."""
+    inside the timed region (build_timed)."""
     ensure_runtime_conf(spark)
     from mapping_timeseries_spark.operators.tokenizer import train_bpe
 
@@ -1207,7 +1209,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bench-only (r7): unigram-LM (SentencePiece-style) training at a
     fixed 512-piece budget (seed 2000, max piece len 6, histogram
-    mode). Same DRIVER_LEGS timing note as q_bpe_train — EM iterations
+    mode). Same build_timed timing note as q_bpe_train — EM iterations
     run Spark jobs at construction."""
     ensure_runtime_conf(spark)
     from mapping_timeseries_spark.operators.unigram import train_unigram
@@ -1711,7 +1713,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-doc score row (6 numeric cols), and nothing is pinned in
     # executor memory (the old scoped_pin raced its cold
     # materialization across both consumers). Same cost model as the
-    # mapping-family gate swap (tools/r13_pin_shape_ab.py); the ngram
+    # mapping-family gate swap (artifacts/r13_shape_ab_results.json); the ngram
     # hsets pin stays a pin because its payload (shingle-hash arrays)
     # is the OPPOSITE profile — fat rows, cheap subtree.
     lm_scored = lm_perplexity(docs, lm_model, k=0.5).repartition(

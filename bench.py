@@ -1,59 +1,43 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
-"sf": ...}.
-
-Artifact integrity (r8, VERDICT r7 #2 — the r7 round-end artifact was
-taken on a loaded box AND its single ever-growing JSON line outgrew the
-driver's 2000-char tail capture, leaving "parsed": null):
+"""Benchmark harness: runs the bench legs over the parquet fixtures in
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 set) on local[$SPARK_GRAFT_CPUS]
+and prints ONE JSON line: {"metric": "headline_total", "value": N,
+"unit": "sec", "queries": {...}, "sf": ...}.
 
 - OUTPUT: stdout carries exactly ONE compact JSON line (headline totals,
-  per-query medians at 2dp, box probes) sized to fit a 2000-char tail
-  window — if new legs ever push it past 1800 chars the per-query map is
-  dropped from the line automatically. The FULL detail (rep spreads,
-  controls, 3dp, config echo) is written to artifacts/BENCH_detail_last.
-  json instead of stdout.
-- LOAD GATE (r11, VERDICT r10 #1 — the absolute QUIET_PY_LOOP pin
-  false-invalidated three consecutive driver artifacts, the last on a
-  genuinely QUIET box that booted faster than the r8-era constant;
-  quiet boots measured r6-r10 span 0.092-0.130, wider than any +/-15%
-  absolute band): invalidation is now PER-BOOT and PER-RUN. First run
-  on a kernel boot_id self-pins a baseline (two probes 5 s apart must
-  agree within 10% — a contended box can't do that) into the committed
-  artifacts/box_baseline.json; later same-boot runs gate against that
-  pin (+/-15%, sleep-retries first). After the run, pre/post probe
-  stability > 25% also stamps invalid (the medians mixed two box
-  states). The historical absolute pin, loadavg_1m, and a slow JVM
-  boot class (jvm_boot_ratio > 1.35 vs the pinned fast-boot reference)
-  are "box_warnings" only: the kernel load average stays inflated for
-  minutes after a finished Spark run while the CPUs are idle (SCALE.md),
-  and cross-boot drift is a comparability note, not contention.
+  per-leg medians at 2dp, box probes) sized to fit a 2000-char tail
+  window — if the per-leg maps push it past 1800 chars they are dropped
+  from the line. The full detail (rep lists, controls, per-leg box
+  stamps, scratch meter, gate config) goes to
+  artifacts/BENCH_detail_last.json.
+- LOAD GATE: invalidation is per boot and per run. The first run on a
+  kernel boot_id self-pins a py_loop baseline (two probes 5 s apart
+  must agree within 10% — a contended box can't do that) into the
+  committed artifacts/box_baseline.json; later same-boot runs gate
+  against that pin (+/-15%, sleep-retries first). After the run,
+  pre/post probe instability > 25% also stamps the run invalid (the
+  medians mixed two box states). loadavg_1m is a warning only: the
+  kernel load average stays inflated for minutes after a finished Spark
+  run while the CPUs are idle (SCALE.md).
 
-Each query is fully materialized through the noop sink (executes the whole
-plan distributed, no driver collect). Every query runs N_REPS (4) times
-and the MEDIAN steady-state time is recorded, with the rep spread
-alongside: the first rep's one-off JVM/codegen compilation and page-cache
-warmup cost is excluded from the median by construction, and a median of
-4 is robust to one noisy rep where the previous min-of-2 was not
-(round-3 lesson: spreads up to 2.2 made ±30% swings unadjudicable).
+Each leg is fully materialized through the noop sink (executes the whole
+plan distributed, no driver collect). Every leg runs its table's reps
+(4, or 8 for the noisy corr family) and the MEDIAN is recorded, with the
+steady-state rep spread and min alongside: the first rep's one-off
+JVM/codegen compilation and page-cache warmup is excluded from the
+median by construction, and a median of 4 is robust to one noisy rep.
 Spark's cache is cleared between reps, so each rep recomputes the full
 plan — only JIT/page-cache warmth carries over.
 
-Anti-pattern control queries (CONTROLS) are measured and reported under
+Control legs (anti-pattern counterfactuals) are reported under
 "controls" but excluded from the headline total: the engine's production
 path uses the salted/histogram variants, and summing a deliberately-slow
-counterfactual into the total would make round-over-round totals
-incomparable.
+counterfactual into the total would make totals incomparable. Both
+trees of a paired run (tools/paired_bench.py) time the same controls, so
+their delta is the pair's noise floor.
 
 Run this ALONE: concurrent Spark sessions on the same box skew
-individual queries by 2-5x with small within-run spread (measured —
-medians are robust to a noisy rep, not to a busy machine). Because
-that cannot always be guaranteed for an unattended run, the output
-carries "box_calibration" (a fixed single-core CPU probe + load
-averages, bracketing the run): compare totals across rounds only
-after checking the probes are comparable — a busy box inflates every
-query uniformly, controls included, and the probe makes that visible
-inside the JSON itself.
+individual legs by 2-5x with small within-run spread (measured —
+medians are robust to a noisy rep, not to a busy machine).
 """
 
 from __future__ import annotations
@@ -63,132 +47,113 @@ import os
 import statistics
 import sys
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-N_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "4"))
+N_REPS = 4
 
-HEADLINE = [
-    "merged_series",
-    "corr_best_lag",
-    "corr_mapping",
-    "dtw_summary",
-    "dtw_mapping",
-    "auto_mapping",
-    "qa_invariants",
-    "sessionization",
-    "tumbling_window",
-    "exact_dedup",
-    "minhash_dedup",
-    # r6: the incremental-index leg as its own metric (see note on
-    # ADDED_THIS_ROUND)
-    "minhash_incr",
-    # r5: the heaviest-at-scale query (PPJoin filter stack — 58 s at
-    # ~sf1 in SCALE.md) finally gets a tracked per-round number
-    "ngram_jaccard",
-    "text_stats",
-    "cosine_topk",
-    # r5: the one previously-unbenched ANN family (sign-LSH multi-probe)
-    "ann_topk",
-    "ivf_topk",
-    # r5: partitioned-index twin of ivf_topk — the partition-pruning win
-    # as a wall-clock pair, not only the inputFiles() plan proof
-    "ivf_topk_indexed",
-    # r5 late: lexical retrieval (BM25 over the hashed inverted index);
-    # cold cost — the cache clear between reps forces index recompute
-    "bm25_topk",
-    "embedding_near_dups",
-    # r6: newly driver-gated legs (decontam sweep, cluster diversity
-    # audit, NFC canonicalization fingerprint)
-    "semantic_decontam",
-    "diversity_profile",
-    "normalize_text",
-    # r6 late: Gopher repetition signals (9 n values, one explode pass)
-    "gopher_repetition",
-    # r6 late: DSIR importance resampling (feature explode + broadcast
-    # log-ratio join + TakeOrderedAndProject top-k)
-    "dsir_select",
+
+class Leg(NamedTuple):
+    """One timed bench leg. ``fn`` names the query builder in
+    ``__spark_entry__``; ``build_timed`` legs run their Spark jobs while
+    the builder runs (iterative tokenizer training), so construction is
+    inside the timed region; ``control`` legs are excluded from the
+    headline total."""
+
+    name: str
+    fn: str
+    reps: int = N_REPS
+    build_timed: bool = False
+    control: bool = False
+
+
+#: The bench legs, in run order. Five legs keep a registry name but time
+#: a narrower builder than the registry entry of that name, whose
+#: queries() twin folds several legs into one correctness check:
+#: ann_topk, ivf_topk, text_stats, minhash_dedup, embedding_near_dups.
+LEGS = (
+    Leg("merged_series", "q_merged_series"),
+    # the corr family's median settles only with extra reps (spreads up
+    # to 1.55 measured at 4)
+    Leg("corr_best_lag", "q_corr_best_lag", reps=8),
+    Leg("corr_mapping", "q_corr_mapping", reps=8),
+    Leg("dtw_summary", "q_dtw_summary"),
+    Leg("dtw_mapping", "q_dtw_mapping"),
+    Leg("auto_mapping", "q_auto_mapping"),
+    Leg("qa_invariants", "q_qa_invariants"),
+    Leg("sessionization", "q_sessionization"),
+    Leg("tumbling_window", "q_tumbling_window"),
+    Leg("exact_dedup", "q_exact_dedup"),
+    Leg("minhash_dedup", "q_minhash_full"),
+    Leg("minhash_incr", "q_minhash_incr"),
+    # heaviest at scale: the PPJoin filter stack
+    Leg("ngram_jaccard", "q_ngram_jaccard"),
+    Leg("text_stats", "q_text_stats_core"),
+    Leg("cosine_topk", "q_cosine_topk"),
+    Leg("ann_topk", "q_ann_lsh"),
+    Leg("ivf_topk", "q_ivf_assign"),
+    # partitioned-index twin of ivf_topk: the partition-pruning win as a
+    # wall-clock pair
+    Leg("ivf_topk_indexed", "q_ivf_topk_indexed"),
+    # cold cost: the cache clear between reps forces index recompute
+    Leg("bm25_topk", "q_bm25_topk"),
+    Leg("embedding_near_dups", "q_emb_neardup_pairs"),
+    Leg("semantic_decontam", "q_semantic_decontam"),
+    Leg("diversity_profile", "q_diversity_profile"),
+    Leg("normalize_text", "q_normalize_fingerprint"),
+    Leg("gopher_repetition", "q_gopher_repetition"),
+    Leg("dsir_select", "q_dsir_select"),
     # hot-key skew pair: the same 3-key lineitem aggregation plain vs
-    # salted, so the salting pattern carries a measured number (the
-    # registry's salted_agg query hash-gates correctness; this measures)
-    "skew_agg_plain",
-    "salted_agg",
-    # partial-agg-resistant pair: exact median buffered (percentile) vs
-    # the skew-robust histogram formulation (exact_median_grouped)
-    "skew_median_buffered",
-    "skew_median_hist",
-    # sequence-packing export paths (r4): concat-and-chunk manifest and
-    # FFD bin packing at a 2048-token budget over documents
-    "pack_export",
-    "pack_ffd",
-    # r7 (VERDICT r6 #4): tokenizer TRAINING cost finally benched —
-    # fixed budgets (BPE 200 merges / unigram 512 pieces), histogram
-    # mode; timed as DRIVER_LEGS because the iterative driver loop runs
-    # its Spark jobs at construction time
-    "bpe_train",
-    "unigram_train",
-]
+    # salted (the registry's salted_agg hash-gates correctness)
+    Leg("skew_agg_plain", "q_skew_agg_plain", control=True),
+    Leg("salted_agg", "q_salted_agg"),
+    # partial-agg-resistant pair: buffered percentile vs the skew-robust
+    # histogram formulation
+    Leg("skew_median_buffered", "q_skew_median_buffered", control=True),
+    Leg("skew_median_hist", "q_skew_median_hist"),
+    # sequence-packing export paths at a 2048-token budget
+    Leg("pack_export", "q_pack_export"),
+    Leg("pack_ffd", "q_pack_ffd"),
+    # tokenizer training at fixed budgets (BPE 200 merges / unigram 512
+    # pieces); the driver loop runs its Spark jobs at construction time
+    Leg("bpe_train", "q_bpe_train", build_timed=True),
+    Leg("unigram_train", "q_unigram_train", build_timed=True),
+)
 
-# Legs whose Spark work happens while the query function BUILDS (driver-
-# loop training): time_query must include construction in the timed
-# region — the noop write alone would measure an already-materialized
-# driver-side result.
-DRIVER_LEGS = {"bpe_train", "unigram_train"}
 
-# Anti-pattern CONTROL variants: measured and reported (the experiment
-# needs both sides of each pair), but excluded from the headline total —
-# the engine's production path uses salted_agg / skew_median_hist; the
-# plain/buffered twins exist only as the measured counterfactual, and
-# summing a deliberately-slow control into "headline_total" would make
-# round-over-round totals incomparable.
-CONTROLS = {"skew_agg_plain", "skew_median_buffered"}
+def leg_queries() -> dict:
+    """Leg name -> query builder from ``__spark_entry__``, in table
+    order."""
+    import __spark_entry__ as entry_mod
 
-# corr_best_lag has never had two consecutive quiet measurements (r3
-# spread 1.55, r4 spread 0.52 with a +45% move adjudicated as probable
-# noise) — give the corr family extra reps so its median settles
-REP_OVERRIDE = {"corr_best_lag": 8, "corr_mapping": 8}
+    return {leg.name: getattr(entry_mod, leg.fn) for leg in LEGS}
 
-# round-over-round composition: queries ADDED to the headline this round
-# (their times are additive noise in total-vs-last-round comparisons;
-# like-for-like totals should exclude them). r8: none — bpe_train /
-# unigram_train (added r7) are now part of the established headline, so
-# like_for_like_total equals the r7 "value" scope.
-ADDED_THIS_ROUND: list[str] = []
 
-#: Historical quiet-box single-core probe (sec) — r11: DEMOTED to a
-#: WARNING (VERDICT r10 #1). Quiet boots measured across r6-r10 span
-#: 0.092-0.130 — wider than any defensible +/-15% absolute band, and the
-#: pin produced three consecutive false-invalid driver artifacts (r10's
-#: was a *quiet* box that happened to boot faster than the r8-era
-#: constant). The invalidation signals are now per-boot: a baseline
-#: pinned for THIS boot id (contention = deviation from the same boot's
-#: own quiet reading) plus pre/post run stability. The absolute value
-#: survives only as a cross-boot drift note in box_warnings.
-#: The shipped default the QUIET_PY_SPAN constants were measured
-#: against — the span scales by (effective pin / this) when the pin is
-#: overridden for a hardware change, so the override moves the span
-#: with it instead of leaving it warning on the new hardware's quiet
-#: readings forever.
+#: Historical quiet-box single-core probe (sec). Not a gate by itself:
+#: quiet boots measured 0.092-0.130, wider than any defensible absolute
+#: band. It anchors the self-pin guard (PIN_VS_HISTORICAL_BAND) and
+#: scales QUIET_PY_SPAN. SPARK_GRAFT_QUIET_PY_LOOP overrides it on a
+#: hardware change.
 _QUIET_PY_DEFAULT = 0.115
 QUIET_PY_LOOP = float(
     os.environ.get("SPARK_GRAFT_QUIET_PY_LOOP", str(_QUIET_PY_DEFAULT))
 )
-#: Measured quiet-boot py_loop span (r6-r12 committed artifacts; the
-#: r12 anchor boot pinned 0.0972). The cross-boot drift NOTE fires only
-#: OUTSIDE this span (r12 fix): the r11 form warned at >15% from the
-#: 0.115 point constant, which fired for readings its own message
-#: documented as quiet — a warning that mislabels a measured-quiet box
-#: poisons the box_warned bit the judge reads.
+#: Measured quiet-boot py_loop span, against _QUIET_PY_DEFAULT. It
+#: bounds the upward re-pin in gate_decision and scales by (effective
+#: pin / _QUIET_PY_DEFAULT) when the pin is overridden.
 QUIET_PY_SPAN = (0.092, 0.145)
-MAX_LOAD1 = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_LOAD1", "2.0"))
+MAX_LOAD1 = 2.0
+#: Sleep-retries (30 s apart) of an invalid pre-run gate before the run
+#: proceeds stamped invalid.
+GATE_RETRIES = 10
 
 #: Per-boot baseline store (committed): {boot_id: {"py_loop": s,
-#: "jvm_loop_post": s|None, "runs": n}}. The first bench run on a boot
-#: pins its own quiet value (guarded by a two-probe stability check —
-#: a contended box cannot produce two agreeing GIL-bound probes 5 s
-#: apart, measured spread under load is 2-5x); later runs on the same
-#: boot are gated against that pin, which IS an apples-to-apples
-#: constant in a way a cross-boot number never was.
+#: "pinned_at": epoch, "runs": n}}. The first bench run on a boot pins
+#: its own quiet value (guarded by a two-probe stability check — a
+#: contended box cannot produce two agreeing GIL-bound probes 5 s apart,
+#: measured spread under load is 2-5x); later runs on the same boot are
+#: gated against that pin.
 BOX_BASELINE_PATH = os.path.join(
     os.path.dirname(os.path.abspath(__file__)),
     "artifacts",
@@ -197,11 +162,9 @@ BOX_BASELINE_PATH = os.path.join(
 #: Same-boot deviation bands. SELF_PIN: two fresh probes 5 s apart must
 #: agree this tightly to pin a new boot's baseline (quiet-box repeat
 #: spread measured <= 7%). BASELINE: later same-boot pre-probes must sit
-#: within this of the boot's pin (same-boot quiet drift is small; the
-#: cross-boot 0.092-0.145 spread does not apply within one boot).
-#: STABILITY: pre vs post bracketing the run — historical valid runs
-#: max at 17.7% (a1814cb), so 25% invalidates only a genuinely
-#: state-changed box while 15% warns.
+#: within this of the boot's pin. STABILITY: pre vs post bracketing the
+#: run — historical valid runs max at 17.7%, so 25% invalidates only a
+#: genuinely state-changed box while 15% warns.
 SELF_PIN_BAND = 0.10
 BASELINE_BAND = 0.15
 STABILITY_WARN_BAND = 0.15
@@ -210,46 +173,13 @@ STABILITY_INVALID_BAND = 0.25
 #: boot class", it is a different hardware class or a pathological box —
 #: needs eyes, not a silent re-pin.
 PY_LOOP_SANITY = (0.04, 0.40)
-#: Self-pin guard vs STEADY load (r11 review): two probes 5 s apart
-#: agree under a constant background job just as well as on a quiet box
-#: — the stability check only defeats BURSTY contention. A fresh pin
-#: must also sit within this relative band of the historical quiet
-#: constant (quiet boots measured 0.092-0.145 = within 26% of 0.115;
-#: 45% rejects a 0.19 steady-load reading while leaving room for a
-#: genuinely faster/slower container class). A true hardware change is
-#: the documented override: SPARK_GRAFT_QUIET_PY_LOOP.
+#: Self-pin guard vs STEADY load: two probes 5 s apart agree under a
+#: constant background job just as well as on a quiet box — the
+#: stability check only defeats BURSTY contention. A fresh pin must also
+#: sit within this relative band of the historical quiet constant (45%
+#: rejects a 0.19 steady-load reading while leaving room for a genuinely
+#: faster/slower container class).
 PIN_VS_HISTORICAL_BAND = 0.45
-
-#: JVM boot-class reference (r11, VERDICT r10 #2): post-run jvm_loop_sec
-#: on the fastest boot class measured so far (r10 driver boot 0.1005;
-#: the same-day slow boot read 0.1178 — a 17% JVM-side gap invisible to
-#: py_loop). The artifact carries jvm_boot_ratio = post_jvm / REF so a
-#: +47% ngram swing on unchanged code is mechanically attributed to boot
-#: class instead of narratively; ratio > JVM_SLOW_WARN warns.
-JVM_LOOP_REF = float(os.environ.get("SPARK_GRAFT_JVM_LOOP_REF", "0.10"))
-JVM_SLOW_WARN = 1.35
-
-#: Shuffle-class reference (r12, VERDICT r11 #2): the codegen jvm_loop
-#: probe under-responds to the drift that actually moves the suite's
-#: legs — r11 measured +3% probe vs ~+11% leg, because the drift lives
-#: in shuffle write/read and join hash tables the pure-codegen probe
-#: never touches. shuffle_calibration is a frozen shuffle+join
-#: microbenchmark (deterministic id-derived keys, no RNG; a hinted
-#: shuffle_hash join forces BOTH sides through an Exchange, then a
-#: grouped aggregate adds a partial-agg + final Exchange). PROVENANCE:
-#: REF pinned from four fresh-session medians (1.18/1.44/1.33/1.48,
-#: session jitter ~±12%) on the r12 boot — which read jvm_boot_ratio
-#: 2.27, the SLOWEST JVM class yet measured, so faster-class boots are
-#: expected to read ratio < 1 here; re-pin downward (env override) the
-#: first time a fast-class boot is observed, exactly as JVM_LOOP_REF
-#: was pinned on the r10 fast boot. The quantitative reading rule
-#: (SCALE.md): for shuffle-bound legs, expected round-over-round drift
-#: = shuffle_pre(round A) / shuffle_pre(round B); the residual after
-#: dividing that out is the code's own change.
-SHUFFLE_LOOP_REF = float(
-    os.environ.get("SPARK_GRAFT_SHUFFLE_LOOP_REF", "1.39")
-)
-SHUFFLE_SLOW_WARN = 1.5
 
 
 def _boot_id() -> str:
@@ -299,50 +229,44 @@ def gate_decision(
     quiet_pin: float = None,
 ) -> tuple[list, list, float | None]:
     """Pure gate arithmetic (pytest-covered): given the pre-run probe
-    (and, when no baseline exists for this boot, a second probe taken
-    5 s later), decide (invalid_reasons, warnings, new_pin_or_None).
+    (and, when no baseline exists for this boot or probe1 deviates from
+    it, a second probe taken 5 s later), decide (invalid_reasons,
+    warnings, new_pin_or_None).
 
     - baseline exists  -> invalid iff probe1 is SLOWER than the boot's
       own pin by > BASELINE_BAND (same-boot contention is real
       contention) — UNLESS a stable confirming pair medians inside the
       measured quiet span, in which case the pin itself was a
-      transient-fast reading and is re-pinned UPWARD with a warning
-      (ADVICE r12: the old one-directional re-pin had no recovery path
-      short of hand-editing box_baseline.json). A probe significantly
-      FASTER than the pin is NOT
-      contention — contention only ever slows a GIL-bound loop — it
-      means the pin itself was taken on a mildly loaded first run
-      (ADVICE r11: the old both-directions band re-introduced the r10
-      false-invalid failure mode per-boot). Faster-side deviation is a
-      RE-PIN opportunity: iff a second probe agrees within
-      SELF_PIN_BAND (and the sanity/historical guards pass), the
+      transient-fast reading and is re-pinned UPWARD with a warning. A
+      probe significantly FASTER than the pin is NOT contention —
+      contention only ever slows a GIL-bound loop — it means the pin
+      was taken on a mildly loaded first run: iff a second probe agrees
+      within SELF_PIN_BAND (and the sanity/historical guards pass), the
       baseline is updated DOWNWARD with a warning; an unstable fast
       pair still invalidates.
     - no baseline      -> self-pin median(probe1, probe2) iff the two
-      agree within SELF_PIN_BAND and the pin is inside PY_LOOP_SANITY;
-      otherwise invalid (an unstable box cannot pin).
-    - the historical absolute pin only ever WARNS (cross-boot drift)."""
+      agree within SELF_PIN_BAND and the pin is inside PY_LOOP_SANITY
+      and near the historical quiet class; otherwise invalid (an
+      unstable box cannot pin)."""
     pin = QUIET_PY_LOOP if quiet_pin is None else quiet_pin
     invalid, warnings = [], []
     new_pin = None
-    # scaled quiet span (computed once; the drift note below and the
-    # upward re-pin bound both use it)
+    # the quiet span scales with an overridden pin (by the SHIPPED
+    # default the span was measured against), so a hardware override
+    # moves the upward re-pin bound with it
     _scale = pin / _QUIET_PY_DEFAULT
     _span_lo, _span_hi = QUIET_PY_SPAN[0] * _scale, QUIET_PY_SPAN[1] * _scale
     if boot_baseline is not None:
-        ref = boot_baseline
         if rel_dev(probe1, boot_baseline) > BASELINE_BAND:
             if probe1 >= boot_baseline:
-                # ADVICE r12 #4: the downward re-pin is one-directional
-                # and persisted — a transient fast probe pair (CPU
-                # boost, scheduler luck) would otherwise lower the pin
-                # for the boot's lifetime and stamp every genuinely
-                # quiet later reading invalid. BOUNDED upward re-pin:
-                # a STABLE pair whose median is itself inside the
-                # measured quiet-boot span is by definition a quiet
-                # reading — re-pin up to it. A candidate outside the
-                # span is real contention (contention only ever slows
-                # the GIL-bound loop) and stays invalid.
+                # a transient fast probe pair (CPU boost, scheduler
+                # luck) would otherwise lower the pin for the boot's
+                # lifetime and stamp every genuinely quiet later reading
+                # invalid. BOUNDED upward re-pin: a STABLE pair whose
+                # median is itself inside the measured quiet-boot span
+                # is by definition a quiet reading — re-pin up to it. A
+                # candidate outside the span is real contention and
+                # stays invalid.
                 candidate = (
                     round(statistics.median([probe1, probe2]), 4)
                     if probe2 is not None
@@ -354,7 +278,6 @@ def gate_decision(
                     and _span_lo <= candidate <= _span_hi
                 ):
                     new_pin = candidate
-                    ref = new_pin
                     warnings.append(
                         f"py_loop {probe1} slower than this boot's pin "
                         f"{boot_baseline} but a stable confirming pair "
@@ -400,7 +323,6 @@ def gate_decision(
                     )
                 else:
                     new_pin = candidate
-                    ref = new_pin
                     warnings.append(
                         f"py_loop {probe1} significantly FASTER than "
                         f"this boot's pin {boot_baseline}: baseline "
@@ -416,7 +338,6 @@ def gate_decision(
                 f"> {SELF_PIN_BAND:.0%}): cannot pin a baseline for a "
                 "new boot on a non-quiet box"
             )
-            ref = probe1
         else:
             new_pin = round(statistics.median([probe1, probe2]), 4)
             if not (PY_LOOP_SANITY[0] <= new_pin <= PY_LOOP_SANITY[1]):
@@ -430,8 +351,7 @@ def gate_decision(
                 # steady (non-bursty) load defeats the two-probe
                 # agreement check — refuse to commit a pin far from the
                 # historical quiet class (a bad pin would make every
-                # later QUIET run on this boot stamp invalid, the r10
-                # bug inverted)
+                # later QUIET run on this boot stamp invalid)
                 invalid.append(
                     f"py_loop self-pin candidate {new_pin} is "
                     f">{PIN_VS_HISTORICAL_BAND:.0%} from the historical "
@@ -439,29 +359,12 @@ def gate_decision(
                     "hardware change (override SPARK_GRAFT_QUIET_PY_LOOP)"
                 )
                 new_pin = None
-            ref = new_pin if new_pin is not None else probe1
-    # cross-boot drift note: only OUTSIDE the measured quiet span (r12 —
-    # the point-constant ±15% form warned for readings inside the span
-    # its own message documented as quiet). When the quiet pin is
-    # overridden (SPARK_GRAFT_QUIET_PY_LOOP on a hardware change, or
-    # quiet_pin in tests), scale the span by pin / the SHIPPED default
-    # the span was measured against — NOT pin / QUIET_PY_LOOP, which is
-    # the same env-overridden value and made the scale identically 1.0
-    # (r12 review): the documented override would then warn forever on
-    # the new hardware's quiet readings.
-    lo, hi = _span_lo, _span_hi
-    if not lo <= ref <= hi:
-        warnings.append(
-            f"py_loop boot class {ref} outside the measured quiet-boot "
-            f"span [{lo:.3f}, {hi:.3f}] (warning only: cross-boot "
-            "drift — compare totals against same-class rounds)"
-        )
     return invalid, warnings, new_pin
 
 
 def stability_decision(pre: float, post: float) -> tuple[list, list]:
     """Pure pre/post bracketing check (pytest-covered): the box must be
-    in the same state after the run as before it, else per-query medians
+    in the same state after the run as before it, else per-leg medians
     mixed two box states and the total is not a number."""
     dev = rel_dev(post, pre)
     if dev > STABILITY_INVALID_BAND:
@@ -477,183 +380,29 @@ def stability_decision(pre: float, post: float) -> tuple[list, list]:
     return [], []
 
 
-def jvm_boot_class(post_jvm: float | None) -> tuple[dict, list]:
-    """Boot-class ratio from the POST jvm_loop reading (the PRE includes
-    the probe's own codegen warmup — SCALE.md). Returns ({ratio, ref},
-    warnings)."""
-    if post_jvm is None:
-        return {"jvm_boot_ratio": None, "jvm_loop_ref": JVM_LOOP_REF}, []
-    ratio = round(post_jvm / JVM_LOOP_REF, 3)
-    warnings = []
-    if ratio > JVM_SLOW_WARN:
-        warnings.append(
-            f"slow JVM boot class: jvm_loop_post {post_jvm} = "
-            f"{ratio}x the fast-boot reference {JVM_LOOP_REF} — JVM-leg "
-            "times inflate 10-20% on this class at unchanged code "
-            "(SCALE.md boot-class table); compare against same-class "
-            "rounds"
-        )
-    return {"jvm_boot_ratio": ratio, "jvm_loop_ref": JVM_LOOP_REF}, warnings
-
-
-def shuffle_boot_class(pre_shuffle: float | None) -> tuple[dict, list]:
-    """Shuffle-class ratio from the PRE shuffle_loop reading — the
-    opposite position from jvm_boot_class, deliberately: the probe
-    absorbs its own codegen in 2 warm reps, so the PRE is taken in a
-    CONTROLLED state (fresh session + fixed warmup) that is identical
-    every round, while the POST reading is suite-warmed and therefore
-    varies with the suite's own composition and SF (measured: pre
-    1.41 vs post 1.03 bracketing one sf0.001 run — the suite's JIT/
-    page-cache warmth bleeds into the post probe). The REF was pinned
-    from four fresh-session pre-position readings. Pure
-    (pytest-covered). Returns ({ratio, ref}, warnings).
-
-    Unlike jvm_boot_ratio (ref = fastest class measured), the ref here
-    was pinned on the r12 SLOW boot (see SHUFFLE_LOOP_REF provenance),
-    so ratio < 1 is the expected fast-class reading and only
-    slower-than-the-slowest-class (> SHUFFLE_SLOW_WARN) warns. The
-    cross-round use is quantitative, not a gate: divide a shuffle-bound
-    leg's round-over-round drift by shuffle_pre_A/shuffle_pre_B
-    before reading it as a code change (SCALE.md reading rule)."""
-    if pre_shuffle is None:
-        return {
-            "shuffle_boot_ratio": None,
-            "shuffle_loop_ref": SHUFFLE_LOOP_REF,
-        }, []
-    ratio = round(pre_shuffle / SHUFFLE_LOOP_REF, 3)
-    warnings = []
-    if ratio > SHUFFLE_SLOW_WARN:
-        warnings.append(
-            f"slow shuffle boot class: shuffle_loop_pre {pre_shuffle} "
-            f"= {ratio}x the r12 slow-boot reference {SHUFFLE_LOOP_REF} "
-            "— shuffle/join legs inflate on this class at unchanged "
-            "code; normalize per-leg drift by the shuffle_pre ratio "
-            "(SCALE.md) before reading regressions"
-        )
-    return {
-        "shuffle_boot_ratio": ratio,
-        "shuffle_loop_ref": SHUFFLE_LOOP_REF,
-    }, warnings
-
-#: Per-leg disk-scratch ceilings (bytes), pinned the way QUIET_PY_LOOP is
-#: (VERDICT r9 #7): peak_scratch_bytes is RECORDED since r9, but nothing
-#: failed when it doubled. Pins are ~3x the r9 quiet measurement for the
-#: three legs whose scratch is materially above the noise floor; every
-#: other leg measured <17 MB, so a shared 64 MB default ceiling (sampled
-#: lower-bound meter — generous headroom over sampling jitter) catches a
-#: new shuffle materializing where none existed. A violation is a WARNING
-#: key in the artifact (like box_warnings), not an invalid stamp: scratch
-#: regressions need a code-diff look, not an artifact discard.
+#: Per-leg disk-scratch ceilings (bytes). Pins are ~3x the highest quiet
+#: measurement for the legs whose scratch is materially above the noise
+#: floor; every other leg measured <17 MB, so a shared 64 MB default
+#: ceiling (sampled lower-bound meter — generous headroom over sampling
+#: jitter) catches a new shuffle materializing where none existed. A
+#: violation is a WARNING key in the artifact (like box_warnings), not
+#: an invalid stamp: scratch regressions need a code-diff look, not an
+#: artifact discard.
 SCRATCH_CEILING_BYTES = {
-    "ngram_jaccard": 750_000_000,       # r9: 237 MB (two-leg union)
-    "gopher_repetition": 350_000_000,   # r9: 111 MB (9-n explode pass)
-    "skew_median_hist": 128_000_000,    # r9: 36 MB
-    # r11: the mapping pair's sampled readings jitter 13-33 MB across
-    # boots on unchanged code (dying-residue bases, SCALE.md) — own pins
-    # so the 2x-headroom pytest doesn't trip on meter noise
-    # r13opt: the pin->exchange reuse swaps moved the mapping family's
-    # shared intermediates from executor memory into shuffle files by
-    # design (OPTIMIZATION_r13.md "gate" sites), so their sampled
-    # scratch is higher AND more boot-variable than the r10/r11 pinned
-    # era (the meter is a sampled lower bound: the same tree read
-    # auto_mapping at 0, 86 and 62 MB across three r13opt runs —
-    # BENCH_anchor/confirm/closeout_r13opt.json; ADVICE r13 corrected
-    # the third figure to the committed artifact's reading). Pins
-    # re-seated at ~3x the highest r13opt reading, same convention.
-    "corr_mapping": 256_000_000,        # r13opt: 33-73 MB across boots
-    "auto_mapping": 256_000_000,        # r13opt: 0-86 MB across boots
-    "corr_best_lag": 128_000_000,       # r13opt: 12-28 MB (gate swap)
-    "merged_series": 128_000_000,       # r13opt: 23 MB (exchange set)
-    # r12 anchor boot: 37 MB (same dying-residue meter jitter family —
-    # the r11 runs read it under 17 MB on unchanged code)
-    "qa_invariants": 128_000_000,
+    "ngram_jaccard": 750_000_000,       # 237 MB (two-leg union)
+    "gopher_repetition": 350_000_000,   # 111 MB (9-n explode pass)
+    "skew_median_hist": 128_000_000,    # 36 MB
+    # the mapping family's shared intermediates live in shuffle files
+    # (exchange reuse points, OPTIMIZATION_r13.md), so their sampled
+    # scratch is boot-variable on unchanged code: auto_mapping read 0,
+    # 86 and 62 MB across three runs of one tree
+    "corr_mapping": 256_000_000,        # 33-73 MB across boots
+    "auto_mapping": 256_000_000,        # 0-86 MB across boots
+    "corr_best_lag": 128_000_000,       # 12-28 MB
+    "merged_series": 128_000_000,       # 23 MB (exchange set)
+    "qa_invariants": 128_000_000,       # 17-37 MB across boots
 }
 SCRATCH_CEILING_DEFAULT = 64_000_000
-
-#: Quiet-box reference readings for the run-level TENANCY FACTOR (r14,
-#: VERDICT r13 #1: both driver comparison runs were box_warned and the
-#: per-leg medians mixed host-tenancy into code deltas — "implement the
-#: control-normalized total as an ADDITIVE field next to the unchanged
-#: headline_total"). Keyed by (sf, cpus) because every signal scales
-#: with data size and core count. Signals are only things the
-#: optimization rounds are forbidden to touch: the three frozen
-#: anti-pattern/control legs plus the fixed jvm/shuffle probes.
-#: Provenance (committed artifacts, this hardware class): sf0.1/32 =
-#: per-signal MEDIAN over BENCH_anchor_r13opt, BENCH_closeout_r13opt,
-#: BENCH_confirm_r13opt and BENCH_r14_open_quiet (four valid+unwarned
-#: runs across three boots); sf0.1/8 = the single BENCH_cpus8_r13opt
-#: run (n=1 AND jvm-boot-warned — lower confidence; re-pin from the
-#: first quiet 8-core run, same convention as JVM_LOOP_REF's
-#: single-boot pin). Re-pin on a hardware change the way QUIET_PY_LOOP
-#: is re-pinned.
-TENANCY_REFS = {
-    ("0.1", "32"): {
-        "skew_agg_plain": 0.1465,
-        "skew_median_buffered": 1.1215,
-        "skew_median_hist": 1.337,
-        "jvm_loop_post": 0.1075,
-        "shuffle_loop_min_pre": 0.9878,
-        "shuffle_loop_min_post": 0.6918,
-    },
-    ("0.1", "8"): {
-        "skew_agg_plain": 0.212,
-        "skew_median_buffered": 1.15,
-        "skew_median_hist": 1.251,
-        "jvm_loop_post": 0.1612,
-        "shuffle_loop_min_pre": 0.5987,
-        "shuffle_loop_min_post": 0.4614,
-    },
-}
-#: Minimum control signals for a factor to be reported: a single noisy
-#: control must not steer the normalization (the quiet anchors
-#: themselves wobble ±20% on the short control legs; the MEDIAN over
-#: >=4 signals is what converges).
-TENANCY_MIN_SIGNALS = 4
-
-
-def tenancy_normalization(now: dict, refs: dict | None) -> dict:
-    """Pure run-level tenancy factor (pytest-covered): the MEDIAN of
-    now/ref over the available frozen-control signals. factor > 1 means
-    the box ran the frozen workloads slower than the pinned quiet class
-    (sustained tenancy/slow boot); dividing each leg's median by it
-    recovers a quiet-box-comparable number. Symmetric by design — a
-    faster-than-reference box yields factor < 1 and normalization
-    adjusts totals UP — so the field cannot flatter one direction.
-
-    LIMIT (documented, measured r14 open): this corrects SUSTAINED
-    contention only. The r13 driver run's poison was BURSTY — probes
-    and controls read quiet while individual legs caught a host burst —
-    which run-level signals cannot see; the per-leg steady-state MIN
-    (``queries_min``) and per-leg box stamps (``leg_box``) are the
-    instruments for that failure mode. Read all three together.
-    """
-    if not refs:
-        return {
-            "factor": None,
-            "ratios": {},
-            "n_signals": 0,
-            "note": "no quiet-box reference pinned for this (sf, cpus)",
-        }
-    ratios = {
-        k: round(now[k] / refs[k], 3)
-        for k in sorted(refs)
-        if now.get(k) is not None and refs[k] > 0
-    }
-    if len(ratios) < TENANCY_MIN_SIGNALS:
-        return {
-            "factor": None,
-            "ratios": ratios,
-            "n_signals": len(ratios),
-            "note": (
-                f"only {len(ratios)} control signals available "
-                f"(< {TENANCY_MIN_SIGNALS}): factor withheld"
-            ),
-        }
-    return {
-        "factor": round(statistics.median(ratios.values()), 3),
-        "ratios": ratios,
-        "n_signals": len(ratios),
-    }
 
 
 def _steal_snapshot() -> tuple[int, int] | None:
@@ -707,16 +456,14 @@ def scratch_violations(
 def time_query(
     spark, fn, sf_dir: str, n_reps: int, build_timed: bool = False
 ) -> list[float]:
-    """Shared rep-timing harness (bench.py and tools/scale_stress.py):
-    the DataFrame/plan is BUILT OUTSIDE the timed region (footer reads
-    and plan construction are driver constants, not query work), the
-    timed action is a noop-sink write (full materialization, no driver
+    """Shared rep-timing harness (bench.py and the tools/ gates): the
+    DataFrame/plan is BUILT OUTSIDE the timed region (footer reads and
+    plan construction are driver constants, not query work), the timed
+    action is a noop-sink write (full materialization, no driver
     collect), and the cache is cleared between reps so each rep
-    recomputes the whole plan. ``build_timed=True`` (DRIVER_LEGS —
-    iterative tokenizer training) moves construction INSIDE the timed
-    region, because those legs run their Spark jobs while building."""
-    import time
-
+    recomputes the whole plan. ``build_timed=True`` (iterative tokenizer
+    training) moves construction INSIDE the timed region, because those
+    legs run their Spark jobs while building."""
     reps = []
     for _rep in range(n_reps):
         if build_timed:
@@ -735,14 +482,12 @@ def box_calibration() -> dict:
     """Fixed pure-CPU probe + load averages, so a reader can tell box
     contention from a code regression inside the JSON itself. Measured
     need: an otherwise-identical full bench run read 66 s on a busy box
-    vs ~45 s quiet — every query inflated uniformly, INCLUDING the
-    frozen anti-pattern controls. The probe is a constant workload —
-    a pure-Python integer loop (median of 5), deliberately NOT numpy:
-    a BLAS matmul probe measured 3x faster post-run than pre-run
-    (thread-pool/warmup effects), while the interpreter loop is
-    GIL-bound single-threaded with nothing to warm, so its time moves
-    only with CPU availability. Cross-round totals should be compared
-    after checking this number is comparable."""
+    vs ~45 s quiet — every leg inflated uniformly, INCLUDING the frozen
+    controls. The probe is a pure-Python integer loop (median of 5),
+    deliberately NOT numpy: a BLAS matmul probe measured 3x faster
+    post-run than pre-run (thread-pool/warmup effects), while the
+    interpreter loop is GIL-bound single-threaded with nothing to warm,
+    so its time moves only with CPU availability."""
     reps = []
     for _ in range(5):
         t0 = time.time()
@@ -762,113 +507,18 @@ def box_calibration() -> dict:
     }
 
 
-def jvm_calibration(spark) -> float:
-    """Fixed JVM-side probe (r10): median-of-3 codegen'd
-    ``range(50M).sum(id*id)``. Exists because py_loop is BLIND to
-    JVM-class drift — measured on a same-day box reboot: every JVM leg
-    of the suite ran 10-20% slower (bm25_topk +48%, ngram +20%,
-    UNCHANGED code) while py_loop read 0.108 pre / 0.097 post, squarely
-    inside the quiet band. A GIL-bound interpreter loop shares the CPU
-    but not the JVM's JIT tier, huge-page layout, or memory-bandwidth
-    profile, so cross-boot comparisons need a probe that lives where
-    the workload lives. Recorded (warning-free) in box_calibration as
-    ``jvm_loop_sec``; compare it across rounds the way py_loop is
-    compared before reading a total as a regression."""
-    reps = []
-    for _ in range(3):
-        t0 = time.time()
-        spark.range(50_000_000).selectExpr("sum(id * id)").collect()
-        reps.append(time.time() - t0)
-    return round(statistics.median(reps), 4)
-
-
-def shuffle_calibration(spark) -> dict:
-    """Fixed shuffle-class probe (r12, VERDICT r11 #2): the codegen
-    jvm_loop is blind to the drift that moves real legs — r11 measured
-    the probe +3% while shuffle-bound legs moved ~+11%, because boot
-    classes differ in shuffle write/read bandwidth and join hash-table
-    behavior, not arithmetic throughput. This probe lives where that
-    drift lives: a frozen, fully deterministic shuffle+join plan
-    (id-derived keys, no RNG — identical bytes every run): 4M rows
-    hash-bucketed into 100,003 keys, a hinted shuffle_hash join against
-    a 100,003-row build side (BOTH sides exchange; the hint defeats the
-    broadcast the optimizer would otherwise pick), then a 64-group
-    aggregate (partial agg + one more Exchange). 2 warm reps absorb the
-    plan's own codegen, then 7 timed reps. Two estimators from the
-    same reps (r13, VERDICT r12 #8 — the r12 median's session spread
-    on one quiet boot was 1.02-1.48, too wide to resolve the ±20% it
-    was supposed to gate):
-
-    - ``shuffle_loop_sec``: the MEDIAN — kept for comparability with
-      SHUFFLE_LOOP_REF (pinned on the r12 boot as a median) and every
-      r12 artifact; still what shuffle_boot_class consumes.
-    - ``shuffle_loop_min_sec``: the MINIMUM — noise on a fixed
-      deterministic workload is strictly additive (co-scheduling, GC,
-      shuffle-file fsync), so min-of-7 estimates the boot's uncompeted
-      shuffle capability and converges far tighter across sessions
-      (same-boot spread measured in SCALE.md r13). Use THIS field for
-      round-over-round drift attribution.
-    - ``shuffle_loop_rep_spread``: (max-min)/min over the 7 reps — an
-      honest per-reading noise stamp; a reading whose own reps spread
-      wide should not anchor a cross-round comparison.
-
-    The PRE reading classifies the boot (shuffle_boot_class — see its
-    docstring for why pre, not post), and the SCALE.md reading rule
-    divides per-leg round-over-round drift by the shuffle ratio before
-    reading it as a code change."""
-    from pyspark.sql import functions as F
-
-    def rep() -> float:
-        t0 = time.time()
-        big = spark.range(4_000_000).selectExpr(
-            "id",
-            "pmod(hash(id), 100003) AS k",
-            "pmod(id * 2654435761, 1000003) AS v",
-        )
-        dim = spark.range(100_003).selectExpr(
-            "id AS k", "pmod(id * 31, 9973) AS w"
-        )
-        out = (
-            big.join(dim.hint("shuffle_hash"), "k")
-            .groupBy(F.pmod(F.col("k"), F.lit(64)).alias("g"))
-            .agg(
-                F.sum("v").alias("sv"),
-                F.sum("w").alias("sw"),
-                F.count("*").alias("c"),
-            )
-        )
-        rows = out.collect()
-        assert len(rows) == 64, "frozen probe plan changed shape"
-        return time.time() - t0
-
-    for _ in range(2):
-        rep()
-    reps = [rep() for _ in range(7)]
-    mn = min(reps)
-    return {
-        "shuffle_loop_sec": round(statistics.median(reps), 4),
-        "shuffle_loop_min_sec": round(mn, 4),
-        "shuffle_loop_rep_spread": round((max(reps) - mn) / mn, 3),
-    }
-
-
 def _box_gate() -> tuple[dict, list, list, int, float | None]:
-    """Pre-run load gate, r11 per-boot edition (VERDICT r10 #1: three
-    consecutive driver artifacts stamped invalid by the stale absolute
-    QUIET_PY_LOOP constant — r10's was a *quiet* box that booted faster
-    than the r8-era pin). The gate now compares like with like:
+    """Pre-run load gate, compared like with like:
 
     - First run on a boot: SELF-PIN a baseline from two probes 5 s apart
-      (a contended box cannot produce two agreeing GIL-bound probes —
-      measured spread under load is 2-5x), persist it to the committed
-      artifacts/box_baseline.json keyed by kernel boot_id.
+      and persist it to the committed artifacts/box_baseline.json keyed
+      by kernel boot_id.
     - Later runs on the same boot: pre-probe within BASELINE_BAND of
       the boot's own pin, else sleep-retry then invalid (same-boot
-      deviation IS contention; cross-boot drift no longer invalidates).
-    - The historical absolute pin and loadavg are warnings only
-      (loadavg lags idle CPUs after a finished run — SCALE.md).
-    - main() adds the pre/post STABILITY check after the run (a box
-      that changed state mid-run produces medians from two box states).
+      deviation IS contention; cross-boot drift does not invalidate).
+    - loadavg is a warning only (it lags idle CPUs after a finished
+      run — SCALE.md).
+    - main() adds the pre/post STABILITY check after the run.
 
     Returns (calibration, invalid_reasons, warnings, retries, pin) where
     pin is the boot baseline in force (fresh or stored)."""
@@ -885,23 +535,18 @@ def _box_gate() -> tuple[dict, list, list, int, float | None]:
     boot = _boot_id()
     baselines = load_boot_baselines()
     stored = baselines.get(boot, {}).get("py_loop")
-    max_retries = int(os.environ.get("SPARK_GRAFT_GATE_RETRIES", "10"))
     retries = 0
     while True:
         calib = box_calibration()
         probe2 = None
         p1 = calib["py_loop_sec"]
-        # second probe feeds the self-pin path (new boot) OR either
-        # re-pin path: faster-than-pin (ADVICE r11: the pin may have
-        # been taken on a loaded first run) and slower-than-pin
-        # (ADVICE r12: the pin may have been a transient-fast pair —
-        # gate_decision re-pins upward only if the stable pair medians
-        # inside the measured quiet span)
+        # the second probe feeds the self-pin path (new boot) OR either
+        # re-pin path (faster or slower than the stored pin)
         if stored is None or rel_dev(p1, stored) > BASELINE_BAND:
             time.sleep(5)
             probe2 = box_calibration()["py_loop_sec"]
         invalid, warnings, new_pin = gate_decision(p1, probe2, stored)
-        if not invalid or retries >= max_retries:
+        if not invalid or retries >= GATE_RETRIES:
             break
         time.sleep(30)
         retries += 1
@@ -923,12 +568,11 @@ def _box_gate() -> tuple[dict, list, list, int, float | None]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # ADVICE r11 (medium): a leaked SPARK_GRAFT_STAGE_DIR would make the
-    # mapping legs run their corr/DTW/routing half as an action at
-    # plan-BUILD time — outside the timed region — silently deflating
-    # the headline with no artifact trace. The bench measures the
-    # default unstaged plan: unset it for this process and echo whether
-    # it had been set into the artifact's gate block.
+    # a leaked SPARK_GRAFT_STAGE_DIR would make the mapping legs run
+    # their corr/DTW/routing half as an action at plan-BUILD time —
+    # outside the timed region — silently deflating the headline. The
+    # bench measures the default unstaged plan: unset it for this
+    # process and echo whether it had been set into the gate block.
     leaked_stage_dir = os.environ.pop("SPARK_GRAFT_STAGE_DIR", None)
     calib, invalid_reasons, box_warnings, gate_retries, boot_pin = _box_gate()
     if leaked_stage_dir is not None:
@@ -938,9 +582,10 @@ def main() -> None:
             "plans)"
         ]
 
-    import __spark_entry__ as entry_mod
+    from mapping_timeseries_spark.scratch import ScratchMeter
     from mapping_timeseries_spark.session import get_spark
 
+    qs = leg_queries()
     spark = get_spark(
         "bench",
         master=f"local[{cpus}]",
@@ -952,43 +597,16 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    # warmup: absorb JVM/codegen startup so per-query numbers are stable
+    # warmup: absorb JVM/codegen startup and the JIT of the
+    # exchange/join/aggregate path before the first timed leg (without
+    # the join passes, merged_series read ~0.2 s slower at sf0.01)
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    calib["jvm_loop_sec"] = jvm_calibration(spark)
-    calib.update(shuffle_calibration(spark))
-
-    qs = dict(entry_mod.queries())
-    # bench-only variants that are deliberately outside the driver's
-    # 50-entry correctness registry
-    qs["skew_agg_plain"] = entry_mod.q_skew_agg_plain
-    qs["skew_median_buffered"] = entry_mod.q_skew_median_buffered
-    qs["skew_median_hist"] = entry_mod.q_skew_median_hist
-    qs["pack_export"] = entry_mod.q_pack_export
-    qs["pack_ffd"] = entry_mod.q_pack_ffd
-    qs["ivf_topk_indexed"] = entry_mod.q_ivf_topk_indexed
-    qs["bm25_topk"] = entry_mod.q_bm25_topk
-    # r6: several registry entries became multi-leg FOLDS (bm25 into
-    # ann_topk, indexed into ivf_topk, decontam/diversity into
-    # embedding_near_dups, canonicalization into text_stats, the
-    # incremental leg into minhash_dedup). The bench keeps timing the
-    # historical single-leg work under the historical names so
-    # round-over-round totals stay like-for-like; the new legs get
-    # their own keys below.
-    qs["ann_topk"] = entry_mod.q_ann_lsh
-    qs["ivf_topk"] = entry_mod.q_ivf_assign
-    qs["embedding_near_dups"] = entry_mod.q_emb_neardup_pairs
-    qs["text_stats"] = entry_mod.q_text_stats_core
-    qs["minhash_dedup"] = entry_mod.q_minhash_full
-    qs["minhash_incr"] = entry_mod.q_minhash_incr
-    qs["semantic_decontam"] = entry_mod.q_semantic_decontam
-    qs["diversity_profile"] = entry_mod.q_diversity_profile
-    qs["normalize_text"] = entry_mod.q_normalize_fingerprint
-    qs["gopher_repetition"] = entry_mod.q_gopher_repetition
-    qs["dsir_select"] = entry_mod.q_dsir_select
-    qs["bpe_train"] = entry_mod.q_bpe_train
-    qs["unigram_train"] = entry_mod.q_unigram_train
-    from mapping_timeseries_spark.scratch import ScratchMeter
+    keys = spark.range(100_003).selectExpr("id AS k")
+    for _ in range(5):
+        spark.range(4_000_000).selectExpr("pmod(hash(id), 100003) AS k").join(
+            keys.hint("shuffle_hash"), "k"
+        ).selectExpr("pmod(k, 64) AS g").groupBy("g").count().collect()
 
     times: dict[str, float] = {}
     spreads: dict[str, float] = {}
@@ -997,34 +615,24 @@ def main() -> None:
     leg_box: dict[str, dict] = {}
     scratch: dict[str, int] = {}
     scratch_base: dict[str, int] = {}
-    for name in HEADLINE:
-        if name not in qs:
-            continue
-        # per-leg box stamp (r14, VERDICT r13 #2: the driver's 6.4x
-        # text_stats reading happened inside a run whose RUN-level
-        # probes read quiet — bursty host tenancy needs PER-LEG
-        # attribution): one interpreter-probe rep + loadavg before the
-        # leg, and the /proc/stat steal delta across it. Outside every
-        # timed region (~0.1 s between legs).
+    for leg in LEGS:
+        name = leg.name
+        # per-leg box stamp: bursty host tenancy can hit one leg inside
+        # a run whose run-level probes read quiet. One interpreter-probe
+        # rep + loadavg before the leg, and the /proc/stat steal delta
+        # across it. Outside every timed region (~0.1 s between legs).
         try:
             _load1 = round(os.getloadavg()[0], 2)
         except OSError:
             _load1 = -1.0
         stamp = {"py1": _py_loop_once(), "load1": _load1}
         steal_a = _steal_snapshot()
-        # disk-residency meter (VERDICT r8 #4): per-leg peak scratch
-        # bytes over the leg's reps — the sum-of-exchanges shuffle
-        # high-water that regressions should show up in as a JSON diff,
-        # not a filled disk. Sampled lower bound; semantics on
-        # mapping_timeseries_spark/scratch.py. The canonical worst case
-        # is ngram_jaccard's two-leg union (SCALE.md).
+        # disk-residency meter: per-leg peak scratch bytes over the
+        # leg's reps (sampled lower bound; semantics in
+        # mapping_timeseries_spark/scratch.py)
         meter = ScratchMeter(spark).start()
         reps = time_query(
-            spark,
-            qs[name],
-            sf_dir,
-            REP_OVERRIDE.get(name, N_REPS),
-            build_timed=name in DRIVER_LEGS,
+            spark, qs[name], sf_dir, leg.reps, build_timed=leg.build_timed
         )
         scratch[name] = meter.stop()
         steal_b = _steal_snapshot()
@@ -1034,97 +642,36 @@ def main() -> None:
                 100.0 * (steal_b[0] - steal_a[0]) / d_total, 2
             )
         leg_box[name] = stamp
-        # base travels with the peak delta (r10, same contract as the
-        # 100x gates): a large dying-residue base deflates the delta —
-        # recording it makes a deflated reading visible in the artifact
+        # the base travels with the peak: a large dying-residue base
+        # deflates the delta, and recording it makes that visible
         scratch_base[name] = meter.base_bytes
         med = statistics.median(reps)
         times[name] = round(med, 3)
-        # rep-to-rep spread alongside the median, so a judge/reader can
-        # tell a real regression from box noise — over the STEADY-STATE
-        # reps only (the first rep carries JVM/codegen warmup the median
-        # already excludes; including it made every compile-heavy query
-        # read ~1.0 spread on a perfectly quiet box)
+        # spread and min over the STEADY-STATE reps only (the first rep
+        # carries JVM/codegen warmup the median already excludes). On a
+        # fixed workload all noise is additive, so the min estimates the
+        # box's uncontended capability for the leg — the burst-robust
+        # number to prefer when the spread is wide.
         steady = reps[1:] if len(reps) > 1 else reps
         spreads[name] = round(
             (max(steady) - min(steady)) / max(med, 1e-9), 3
         )
-        # steady-state MIN (r14): on a fixed deterministic workload all
-        # noise is additive (co-scheduling, host bursts, GC), so the min
-        # estimates the box's uncontended capability for the leg — the
-        # same argument that added shuffle_loop_min_sec in r13. The
-        # MEDIAN stays the headline stat (methodology unchanged); the
-        # min is the burst-robust per-leg number a reader should prefer
-        # when rep_spread is wide.
         mins[name] = round(min(steady), 3)
         rep_lists[name] = [round(r, 3) for r in reps]
 
-    total = round(sum(v for k, v in times.items() if k not in CONTROLS), 3)
-    controls = {k: times.pop(k) for k in list(times) if k in CONTROLS}
+    control_names = [leg.name for leg in LEGS if leg.control]
+    controls = {k: times.pop(k) for k in control_names}
+    controls_min = {k: mins.pop(k) for k in control_names}
+    total = round(sum(times.values()), 3)
+    min_total = round(sum(mins.values()), 3)
     post = box_calibration()
-    post["jvm_loop_sec"] = jvm_calibration(spark)
-    post.update(shuffle_calibration(spark))
-    # r11: pre/post stability is an INVALIDATION signal (the run itself
-    # bracketed by two probes — a box that changed state mid-run mixed
-    # two box states into the medians), and the post jvm_loop reading
-    # classifies the boot for cross-round comparison (SCALE.md table).
+    # pre/post stability is an INVALIDATION signal: a box that changed
+    # state mid-run mixed two box states into the medians
     stab_invalid, stab_warn = stability_decision(
         calib["py_loop_sec"], post["py_loop_sec"]
     )
     invalid_reasons = invalid_reasons + stab_invalid
     box_warnings = box_warnings + stab_warn
-    jvm_class, jvm_warn = jvm_boot_class(post["jvm_loop_sec"])
-    box_warnings = box_warnings + jvm_warn
-    shuffle_class, shuffle_warn = shuffle_boot_class(calib["shuffle_loop_sec"])
-    box_warnings = box_warnings + shuffle_warn
-    # persist the boot's post-run jvm + shuffle readings so the
-    # boot-class table accumulates (VERDICT r10 #3 / r11 #2)
-    try:
-        baselines = load_boot_baselines()
-        entry = baselines.setdefault(calib.get("boot_id", "unknown"), {})
-        entry["jvm_loop_post"] = post["jvm_loop_sec"]
-        entry["shuffle_loop_pre"] = calib["shuffle_loop_sec"]
-        entry["shuffle_loop_post"] = post["shuffle_loop_sec"]
-        # min estimator (r13): the drift-attribution field — tighter
-        # across sessions than the median (shuffle_calibration doc)
-        entry["shuffle_loop_min_pre"] = calib["shuffle_loop_min_sec"]
-        entry["shuffle_loop_min_post"] = post["shuffle_loop_min_sec"]
-        save_boot_baselines(baselines)
-    except OSError:
-        pass
-    like_for_like = round(
-        sum(v for k, v in times.items() if k not in ADDED_THIS_ROUND), 3
-    )
-    # r14 tenancy block (VERDICT r13 #1): run-level factor from the
-    # frozen controls + fixed probes vs the pinned quiet references,
-    # with control-normalized totals as ADDITIVE fields — value /
-    # headline_total / queries are untouched, so round-over-round
-    # comparability is preserved and the normalization is auditable
-    # (every input signal and pinned ref travels in the artifact).
-    min_total = round(sum(v for k, v in mins.items() if k not in CONTROLS), 3)
-    controls_min = {k: mins.pop(k) for k in list(mins) if k in CONTROLS}
-    tenancy_now = {
-        "skew_agg_plain": controls.get("skew_agg_plain"),
-        "skew_median_buffered": controls.get("skew_median_buffered"),
-        "skew_median_hist": times.get("skew_median_hist"),
-        "jvm_loop_post": post.get("jvm_loop_sec"),
-        "shuffle_loop_min_pre": calib.get("shuffle_loop_min_sec"),
-        "shuffle_loop_min_post": post.get("shuffle_loop_min_sec"),
-    }
-    tenancy_refs = TENANCY_REFS.get((f"{sf:g}", str(cpus)))
-    tenancy = tenancy_normalization(tenancy_now, tenancy_refs)
-    tenancy["signals"] = tenancy_now
-    tenancy["refs"] = tenancy_refs
-    _factor = tenancy.get("factor")
-    if _factor:
-        tenancy["normalized_total"] = round(total / _factor, 3)
-        tenancy["normalized_min_total"] = round(min_total / _factor, 3)
-        tenancy["normalized_queries"] = {
-            k: round(v / _factor, 3) for k, v in times.items()
-        }
-    else:
-        tenancy["normalized_total"] = None
-        tenancy["normalized_min_total"] = None
     detail = {
         "metric": "headline_total",
         "value": total,
@@ -1133,21 +680,20 @@ def main() -> None:
         "queries": times,
         "controls": controls,
         "rep_spread": spreads,
-        # r14 per-leg robust stats + box stamps (see tenancy block)
         "queries_min": mins,
         "controls_min": controls_min,
         "min_total": min_total,
         "queries_reps": rep_lists,
         "leg_box": leg_box,
-        "tenancy": tenancy,
         "peak_scratch_bytes": scratch,
         "base_scratch_bytes": scratch_base,
         "scratch_warnings": scratch_violations(scratch),
         "n": N_REPS,
-        "rep_override": REP_OVERRIDE,
+        "rep_override": {
+            leg.name: leg.reps for leg in LEGS if leg.reps != N_REPS
+        },
         # measured before the Spark session starts AND after the last
-        # query, bracketing the run; the PRE probe is additionally
-        # gated against the pinned quiet value (module docstring)
+        # leg, bracketing the run; the PRE probe is gated (_box_gate)
         "box_calibration": {"pre": calib, "post": post},
         "invalid_box": bool(invalid_reasons),
         "invalid_reasons": invalid_reasons,
@@ -1163,11 +709,7 @@ def main() -> None:
             "scratch_ceilings": SCRATCH_CEILING_BYTES,
             "scratch_ceiling_default": SCRATCH_CEILING_DEFAULT,
             "stage_dir_leak_unset": leaked_stage_dir is not None,
-            **jvm_class,
-            **shuffle_class,
         },
-        "added_this_round": ADDED_THIS_ROUND,
-        "like_for_like_total": like_for_like,
         "sf": sf,
     }
     detail_path = os.path.join(
@@ -1178,9 +720,7 @@ def main() -> None:
     os.makedirs(os.path.dirname(detail_path), exist_ok=True)
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1)
-    # stdout: exactly ONE compact line, sized for a 2000-char tail
-    # capture (VERDICT r7 #2b — the r7 detail line overgrew it and the
-    # driver recorded "parsed": null)
+    # stdout: exactly ONE compact line, sized for a 2000-char tail capture
     compact = {
         "metric": "headline_total",
         "value": total,
@@ -1188,37 +728,25 @@ def main() -> None:
         "stat": "median",
         "sf": sf,
         "n": N_REPS,
-        "like_for_like_total": like_for_like,
         "invalid_box": bool(invalid_reasons),
-        # the REASON must travel with the stamp (VERDICT r9 "wrong" #3):
-        # an invalid artifact whose why lives only in an uncommitted
-        # detail file is harder to adjudicate next round
+        # the REASON travels with the stamp, not only in the detail file
         "invalid_reasons": invalid_reasons,
         "box_warned": bool(box_warnings),
         "scratch_warned": bool(scratch_violations(scratch)),
-        # r14 additive fields (VERDICT r13 #1): the burst-robust
-        # steady-min total, and the control-normalized totals with the
-        # factor they used; "value" above stays the raw median total.
         "min_total": min_total,
-        "tenancy_factor": _factor,
-        "normalized_total": tenancy["normalized_total"],
-        "normalized_min_total": tenancy["normalized_min_total"],
         "box": {
             "pre_py_loop": calib["py_loop_sec"],
             "post_py_loop": post["py_loop_sec"],
             "loadavg_1m": calib["loadavg_1m"],
             "boot_pin": boot_pin,
-            "jvm_boot_ratio": jvm_class["jvm_boot_ratio"],
-            "shuffle_boot_ratio": shuffle_class["shuffle_boot_ratio"],
         },
         "queries": {k: round(v, 2) for k, v in times.items()},
         "queries_min": {k: round(v, 2) for k, v in mins.items()},
         "detail": "artifacts/BENCH_detail_last.json",
     }
     line = json.dumps(compact, separators=(",", ":"))
-    # size fallback chain (VERDICT r7 #2b: the line must fit a 2000-char
-    # tail window): the r14 additive per-leg min map is dropped FIRST so
-    # the historical "queries" medians survive longest
+    # size fallback chain: the per-leg min map is dropped FIRST so the
+    # per-leg medians survive longest
     for drop in ("queries_min", "queries"):
         if len(line) > 1800:
             compact.pop(drop)

@@ -77,7 +77,7 @@ def map_tables(
         # key, which co-partitions the join under the default subset
         # rule). Same-session interleaved A/B at sf0.1, results
         # identical: corr leg median 3.24->3.00 s, auto leg 3.76->2.88 s
-        # (tools/r13_map_shape_ab.py); no executor memory pinned, no
+        # (artifacts/r13_shape_ab_results.json); no executor memory pinned, no
         # clearCache contract for long-lived sessions.
         t1 = t1.repartition(F.col(KEY))
         t2 = t2.repartition(F.col(KEY))
@@ -104,7 +104,7 @@ def map_tables(
             # caller-pinned shuffle_partitions already inserted this
             # exchange two lines up). The measured winner is gating
             # merged AND corr with NO caches (shape D in
-            # tools/r13_map_shape_ab.py: 3.76 -> 2.88 s median);
+            # artifacts/r13_shape_ab_results.json: 3.76 -> 2.88 s median);
             # mixing gates with caches was the worst shape (4.62 s).
             merged = merged.repartition(F.col(KEY))
         corr = best_lag_correlation(merged, cfg.max_lag)

@@ -87,8 +87,8 @@ def bm25_index(docs: DataFrame, text_col: str = "text") -> dict:
     # Two independent interleaved A/Bs at sf0.1 (rows identical): warm
     # medians 2.11/1.91 -> 1.96/1.68 s, and on a decaying-load box
     # medians 2.57 -> 2.35 s with tied quiet-floor mins (2.10/2.12,
-    # tools/r13_bm25_gate_ab.py) — never worse, and at scale the three
-    # redundant corpus passes it removes dominate.
+    # artifacts/r13_shape_ab_results.json) — never worse, and at scale the
+    # three redundant corpus passes it removes dominate.
     postings = _pin(postings).repartition(F.col("wh"))
     # r13 (guide §2.3 "aggregate before you shuffle"): dl derives from
     # POSTINGS (sum of per-term tf per doc == the doc's token count —

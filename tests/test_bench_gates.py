@@ -215,18 +215,6 @@ def test_gate_decision_absolute_pin_is_warning_only():
     assert warn == []
 
 
-def test_gate_decision_drift_note_fires_outside_quiet_span():
-    """A stable boot genuinely outside the measured quiet span still
-    gets the cross-boot drift note (warning, never invalid)."""
-    inv, warn, pin = bench.gate_decision(0.155, 0.156, boot_baseline=None)
-    assert inv == [] and pin is not None
-    assert any("quiet-boot span" in w for w in warn)
-    # and same-boot later runs against that pin inherit the note
-    inv, warn, _ = bench.gate_decision(0.154, None, boot_baseline=0.1555)
-    assert inv == []
-    assert any("quiet-boot span" in w for w in warn)
-
-
 def test_stability_decision_bands():
     assert bench.stability_decision(0.10, 0.105) == ([], [])
     inv, warn = bench.stability_decision(0.10, 0.118)  # 18% -> warn
@@ -236,17 +224,6 @@ def test_stability_decision_bands():
     # historical valid max (a1814cb: 0.1201 -> 0.1413, 17.7%) stays valid
     inv, _ = bench.stability_decision(0.1201, 0.1413)
     assert inv == []
-
-
-def test_jvm_boot_class_ratio_and_warning():
-    info, warn = bench.jvm_boot_class(0.1005)
-    assert abs(info["jvm_boot_ratio"] - 1.005) < 1e-9 and warn == []
-    info, warn = bench.jvm_boot_class(0.1178)  # r10 slow boot: no warn yet
-    assert warn == []
-    info, warn = bench.jvm_boot_class(0.150)
-    assert len(warn) == 1 and "boot class" in warn[0]
-    info, warn = bench.jvm_boot_class(None)
-    assert info["jvm_boot_ratio"] is None and warn == []
 
 
 def test_boot_baseline_roundtrip(tmp_path):
@@ -388,7 +365,7 @@ def test_versioned_soak_requires_injected_crash():
     assert ev(**base, crash_injected=True)["resumed_after_crash"]
 
 
-# ---- r12: faster-than-pin re-pin (ADVICE r11) + shuffle boot class --------
+# ---- r12: faster-than-pin re-pin (ADVICE r11) ----------------------------
 
 
 def test_gate_decision_faster_than_pin_repins_with_agreement():
@@ -460,20 +437,6 @@ def test_gate_decision_repin_candidate_sanity_guarded():
     far from the historical quiet class must not re-pin."""
     inv, _, pin = bench.gate_decision(0.030, 0.031, boot_baseline=0.120)
     assert pin is None and len(inv) == 1 and "re-pin candidate" in inv[0]
-
-
-def test_shuffle_boot_class_ratio_and_warning():
-    # the r12 pin boot itself: ratio ~1.0, no warning
-    info, warn = bench.shuffle_boot_class(1.39)
-    assert abs(info["shuffle_boot_ratio"] - 1.0) < 1e-9 and warn == []
-    # a fast-class boot reads BELOW the slow-boot ref: expected, silent
-    info, warn = bench.shuffle_boot_class(0.70)
-    assert info["shuffle_boot_ratio"] == 0.504 and warn == []
-    # slower than the slowest class yet measured: warn
-    info, warn = bench.shuffle_boot_class(2.30)
-    assert len(warn) == 1 and "slow shuffle boot class" in warn[0]
-    info, warn = bench.shuffle_boot_class(None)
-    assert info["shuffle_boot_ratio"] is None and warn == []
 
 
 def test_index_append_gate_checks_arithmetic():
@@ -637,56 +600,6 @@ def test_paired_bench_summary_arithmetic():
     assert s["only_in_a"] == ["new_leg"] and s["only_in_b"] == ["old_leg"]
     assert s["total_a_common"] == 3.5 and s["total_b_common"] == 3.2
     assert abs(s["delta_common"] - 0.3) < 1e-9
-
-
-# ---- r14 tenancy normalization (VERDICT r13 #1) ----------------------
-
-
-def test_tenancy_normalization_quiet_box_factor_near_one():
-    refs = bench.TENANCY_REFS[("0.1", "32")]
-    # a quiet box reads the controls at the pinned refs -> factor 1.0
-    now = dict(refs)
-    out = bench.tenancy_normalization(now, refs)
-    assert out["factor"] == 1.0
-    assert out["n_signals"] == len(refs)
-
-
-def test_tenancy_normalization_contended_box_factor_up():
-    refs = bench.TENANCY_REFS[("0.1", "32")]
-    now = {k: v * 1.5 for k, v in refs.items()}
-    out = bench.tenancy_normalization(now, refs)
-    assert out["factor"] == 1.5
-
-
-def test_tenancy_normalization_median_robust_to_one_outlier():
-    refs = {"a": 1.0, "b": 1.0, "c": 1.0, "d": 1.0, "e": 1.0}
-    now = {"a": 1.0, "b": 1.0, "c": 1.0, "d": 1.0, "e": 9.0}
-    out = bench.tenancy_normalization(now, refs)
-    assert out["factor"] == 1.0  # the single burst signal cannot steer
-
-
-def test_tenancy_normalization_withholds_without_enough_signals():
-    refs = {"a": 1.0, "b": 1.0, "c": 1.0, "d": 1.0}
-    now = {"a": 1.2, "b": None, "c": None, "d": None}
-    out = bench.tenancy_normalization(now, refs)
-    assert out["factor"] is None
-    assert out["n_signals"] == 1
-    assert "withheld" in out["note"]
-
-
-def test_tenancy_normalization_no_refs_is_explicit():
-    out = bench.tenancy_normalization({"a": 1.0}, None)
-    assert out["factor"] is None
-    assert "no quiet-box reference" in out["note"]
-
-
-def test_tenancy_normalization_symmetric_fast_box():
-    # faster-than-reference box: factor < 1, normalization adjusts UP —
-    # the field cannot deflate only in the flattering direction
-    refs = {"a": 1.0, "b": 1.0, "c": 1.0, "d": 1.0}
-    now = {"a": 0.8, "b": 0.8, "c": 0.8, "d": 0.8}
-    out = bench.tenancy_normalization(now, refs)
-    assert out["factor"] == 0.8
 
 
 def test_steal_snapshot_shape():

@@ -176,6 +176,28 @@ def test_pvalue_expected_matches_live_oracle_sf001_entity():
             assert got == want, (lag, REGEN)
 
 
+#: p-value tolerance for the full-slice recompute. The quadrature
+#: generator's float summation order differs across platforms: on an
+#: unchanged input (same input_fp) 81 of 966 sf0.001 cells moved by at
+#: most 1.1e-14 absolute (1.4e-12 relative). 1e-12 stays far inside the
+#: 6-dp window the oracle hash compares at.
+PVALUE_ATOL = 1e-12
+
+
+def _assert_pvalues_match(stored, live):
+    """Keys, input fingerprint and NaN positions must agree exactly; the
+    p-values themselves within PVALUE_ATOL."""
+    merged = stored.merge(
+        live, on=["sf_tag", "cus_code", "lag"], suffixes=("_stored", "_live")
+    )
+    assert len(merged) == len(stored) == len(live), REGEN
+    assert (merged["input_fp_stored"] == merged["input_fp_live"]).all(), REGEN
+    a = merged["pvalue_stored"].to_numpy(dtype=float)
+    b = merged["pvalue_live"].to_numpy(dtype=float)
+    assert np.array_equal(np.isnan(a), np.isnan(b)), REGEN
+    assert np.all(np.isnan(a) | (np.abs(a - b) <= PVALUE_ATOL)), REGEN
+
+
 def test_pvalue_expected_matches_live_oracle_sf0001():
     from tools.gen_pvalue_expected import expected_for
 
@@ -184,11 +206,33 @@ def test_pvalue_expected_matches_live_oracle_sf0001():
     tag = _orders_count(sf_dir)
     stored = pd.read_parquet(os.path.join(ARTIFACTS, "pvalue_expected.parquet"))
     stored = stored[stored["sf_tag"] == tag].reset_index(drop=True)
-    merged = stored.merge(
-        live, on=["sf_tag", "cus_code", "lag"], suffixes=("_stored", "_live")
-    )
-    assert len(merged) == len(stored) == len(live), REGEN
-    a = merged["pvalue_stored"].to_numpy(dtype=float)
-    b = merged["pvalue_live"].to_numpy(dtype=float)
-    both_nan = np.isnan(a) & np.isnan(b)
-    assert np.all(both_nan | (a == b)), REGEN
+    _assert_pvalues_match(stored, live)
+
+
+def test_pvalue_match_rejects_real_drift():
+    """The tolerance absorbs summation noise only: a 1e-9 p-value move,
+    a changed input fingerprint or a moved NaN must still fail."""
+    stored = pd.read_parquet(os.path.join(ARTIFACTS, "pvalue_expected.parquet"))
+    stored = stored[stored["sf_tag"] == stored["sf_tag"].iloc[0]]
+    stored = stored.reset_index(drop=True)
+    finite = stored.index[stored["pvalue"].notna()][0]
+    _assert_pvalues_match(stored, stored.copy())
+
+    noise = stored.copy()
+    noise.loc[finite, "pvalue"] += 1e-14
+    _assert_pvalues_match(stored, noise)
+
+    drifted = stored.copy()
+    drifted.loc[finite, "pvalue"] += 1e-9
+    with pytest.raises(AssertionError):
+        _assert_pvalues_match(stored, drifted)
+
+    refingered = stored.copy()
+    refingered["input_fp"] = "0" * 32
+    with pytest.raises(AssertionError):
+        _assert_pvalues_match(stored, refingered)
+
+    nan_moved = stored.copy()
+    nan_moved.loc[finite, "pvalue"] = np.nan
+    with pytest.raises(AssertionError):
+        _assert_pvalues_match(stored, nan_moved)

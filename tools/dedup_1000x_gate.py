@@ -88,7 +88,7 @@ def _queries():
 
     # (fn, gate kind, build_timed): CC runs its convergence probes while
     # BUILDING, so its leg times construction inside the timed region
-    # (bench DRIVER_LEGS contract)
+    # (the bench's build_timed contract)
     return {
         "exact_dedup": (entry_mod.q_exact_dedup, "exact", False),
         "text_stats_core": (entry_mod.q_text_stats_core, "exact", False),

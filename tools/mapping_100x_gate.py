@@ -146,8 +146,8 @@ def main() -> int:
             res = {k: v for k, v in prior.items() if v.get("count_ok")}
     # production_mapping runs with the mid-plan routed-table checkpoint
     # (VERDICT r10 #2): the staging write is part of the query's work,
-    # so its build runs INSIDE the timed region (bench DRIVER_LEGS
-    # contract) and the staged parquet lands in a per-gate scratch dir.
+    # so its build runs INSIDE the timed region (the bench's
+    # build_timed contract) and the staged parquet lands in a per-gate scratch dir.
     import shutil as _sh
     import tempfile
 

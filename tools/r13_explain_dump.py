@@ -22,34 +22,7 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
-import __spark_entry__ as entry_mod  # noqa: E402
 from mapping_timeseries_spark.session import get_spark  # noqa: E402
-
-
-def bench_query_map():
-    """The same name -> builder map bench.py times (HEADLINE + controls)."""
-    qs = dict(entry_mod.queries())
-    qs["skew_agg_plain"] = entry_mod.q_skew_agg_plain
-    qs["skew_median_buffered"] = entry_mod.q_skew_median_buffered
-    qs["skew_median_hist"] = entry_mod.q_skew_median_hist
-    qs["pack_export"] = entry_mod.q_pack_export
-    qs["pack_ffd"] = entry_mod.q_pack_ffd
-    qs["ivf_topk_indexed"] = entry_mod.q_ivf_topk_indexed
-    qs["bm25_topk"] = entry_mod.q_bm25_topk
-    qs["ann_topk"] = entry_mod.q_ann_lsh
-    qs["ivf_topk"] = entry_mod.q_ivf_assign
-    qs["embedding_near_dups"] = entry_mod.q_emb_neardup_pairs
-    qs["text_stats"] = entry_mod.q_text_stats_core
-    qs["minhash_dedup"] = entry_mod.q_minhash_full
-    qs["minhash_incr"] = entry_mod.q_minhash_incr
-    qs["semantic_decontam"] = entry_mod.q_semantic_decontam
-    qs["diversity_profile"] = entry_mod.q_diversity_profile
-    qs["normalize_text"] = entry_mod.q_normalize_fingerprint
-    qs["gopher_repetition"] = entry_mod.q_gopher_repetition
-    qs["dsir_select"] = entry_mod.q_dsir_select
-    qs["bpe_train"] = entry_mod.q_bpe_train
-    qs["unigram_train"] = entry_mod.q_unigram_train
-    return qs
 
 
 def main() -> None:
@@ -69,16 +42,14 @@ def main() -> None:
         shuffle_partitions=int(cpus),
         extra_conf={"spark.driver.memory": "16g"},
     )
-    names = bench.HEADLINE + sorted(bench.CONTROLS - set(bench.HEADLINE))
-    qs = bench_query_map()
+    qs = bench.leg_queries()
     from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
 
-    for name in names:
+    for leg in bench.LEGS:
+        name = leg.name
         if only and name not in only:
             continue
-        if name not in qs:
-            continue
-        if name in bench.DRIVER_LEGS:
+        if leg.build_timed:
             # tokenizer training runs Spark jobs at BUILD time; the plan
             # of the finished vocab frame is a driver-local scan, so the
             # dump would be noise. Skip with a stub note.

@@ -22,8 +22,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from r13_explain_dump import bench_query_map  # noqa: E402
-
+import __spark_entry__ as entry_mod  # noqa: E402
 import bench  # noqa: E402
 from mapping_timeseries_spark.session import get_spark  # noqa: E402
 
@@ -54,7 +53,8 @@ def main() -> None:
     sc = spark.sparkContext
     base = f"http://localhost:{sc.uiWebUrl.rsplit(':', 1)[1]}"
     app_id = sc.applicationId
-    qs = bench_query_map()
+    qs = {**entry_mod.queries(), **bench.leg_queries()}
+    build_timed_legs = {leg.name for leg in bench.LEGS if leg.build_timed}
     from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
 
     out: dict = {"sf_dir": sf_dir, "cpus": cpus, "legs": {}}
@@ -64,7 +64,7 @@ def main() -> None:
             continue
         walls = []
         with dedup_cache_scope():
-            build_timed = name in bench.DRIVER_LEGS
+            build_timed = name in build_timed_legs
             for rep in range(reps):
                 label = f"{name}#rep{rep}"
                 sc.setJobDescription(label)

@@ -24,7 +24,8 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from r13_explain_dump import bench_query_map  # noqa: E402
+import __spark_entry__ as entry_mod  # noqa: E402
+import bench  # noqa: E402
 
 from mapping_timeseries_spark.session import get_spark  # noqa: E402
 
@@ -62,7 +63,7 @@ def main() -> None:
     sc = spark.sparkContext
     base = f"http://localhost:{sc.uiWebUrl.rsplit(':', 1)[1]}"
     app_id = sc.applicationId
-    qs = bench_query_map()
+    qs = {**entry_mod.queries(), **bench.leg_queries()}
     from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
 
     for name in names:

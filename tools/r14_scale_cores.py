@@ -25,8 +25,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import __spark_entry__ as entry_mod  # noqa: E402
 import bench  # noqa: E402
-from r13_explain_dump import bench_query_map  # noqa: E402
 from scale_stress import SF_DIR, replicate  # noqa: E402
 
 from mapping_timeseries_spark.session import get_spark  # noqa: E402
@@ -99,7 +99,7 @@ def main() -> None:
                 extra_conf={"spark.driver.memory": "16g"},
             )
             spark.range(1000).selectExpr("sum(id)").collect()
-            qs = bench_query_map()
+            qs = {**entry_mod.queries(), **bench.leg_queries()}
             for name in legs:
                 rec = _timed(spark, qs[name], out_dir, REPS)
                 result["legs"].setdefault(name, {})[f"c{cpus}"] = rec
