@@ -662,6 +662,7 @@ def main() -> None:
     control_names = [leg.name for leg in LEGS if leg.control]
     controls = {k: times.pop(k) for k in control_names}
     controls_min = {k: mins.pop(k) for k in control_names}
+    controls_reps = {k: rep_lists.pop(k) for k in control_names}
     total = round(sum(times.values()), 3)
     min_total = round(sum(mins.values()), 3)
     post = box_calibration()
@@ -684,6 +685,7 @@ def main() -> None:
         "controls_min": controls_min,
         "min_total": min_total,
         "queries_reps": rep_lists,
+        "controls_reps": controls_reps,
         "leg_box": leg_box,
         "peak_scratch_bytes": scratch,
         "base_scratch_bytes": scratch_base,

@@ -670,3 +670,40 @@ def test_pipeline_supplied_model_not_staged(spark, pair, tmp_path, monkeypatch):
     )
     assert result.stats["total_mappings"] > 0
     assert not _os.path.exists(scratch) or _os.listdir(scratch) == []
+
+
+def test_pipeline_sinks_write_one_file_per_month(spark, pair, tmp_path):
+    """Both closes the benchmark drives — the inline correlation close
+    with versioned + partitioned sinks, and the routed close over a saved
+    recommendations table — leave one parquet file per time1 directory,
+    whatever the number of tasks upstream of the sink."""
+    t1, t2 = (t.repartition(4) for t in pair)
+    merged = merge_series(
+        canonicalize(t1, "cus_code", "month", "txn_amount", VALUE1),
+        canonicalize(t2, "cus_code", "month", "revenue", VALUE2),
+    )
+    recs = recommendation_table(
+        compare_methods(best_lag_correlation(merged, 6), dtw_summary(merged))
+    )
+    closes = {
+        "inline": (None, dict(
+            config=MappingConfig(method="correlation"),
+            versioned_root=str(tmp_path / "inline_vt"),
+        )),
+        "routed": (recs, {}),
+    }
+    for name, (recommendations, kwargs) in closes.items():
+        out = str(tmp_path / name)
+        result = run_pipeline(
+            spark, t1, t2, recommendations,
+            "cus_code", "month", "txn_amount", "revenue",
+            output_path=out, run_id=name, **kwargs,
+        )
+        sink = os.path.join(out, "mappings")
+        months = [d for d in os.listdir(sink) if d.startswith("time1=")]
+        assert months, name
+        for d in months:
+            parquet = [f for f in os.listdir(os.path.join(sink, d))
+                       if f.endswith(".parquet")]
+            assert len(parquet) == 1, (name, d, parquet)
+        assert spark.read.parquet(sink).count() == result.stats["total_mappings"]

@@ -436,3 +436,131 @@ def test_compact_parquet_partitioned_splits_large_partitions(spark, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == 300_000
     assert {r["month"] for r in back.select("month").distinct().collect()} == {"m1"}
+
+
+def _files_per_dir(path: str, col: str) -> dict[str, int]:
+    """``{partition value: data files in its directory}`` (hidden and
+    ``_``-prefixed bookkeeping files excluded)."""
+    return {
+        d.split("=", 1)[1]: sum(
+            not f.startswith((".", "_")) for f in os.listdir(os.path.join(path, d))
+        )
+        for d in os.listdir(path)
+        if d.startswith(f"{col}=")
+    }
+
+
+def _spread_months(spark, n: int = 6_000):
+    """Rows of four months spread over six Spark partitions, so every
+    write task holds rows of every month."""
+    return spark.range(0, n, numPartitions=6).selectExpr(
+        "id", "concat('2024-0', CAST(id % 4 + 1 AS STRING)) AS month",
+        "rand(3) AS v",
+    )
+
+
+def test_write_partitioned_one_file_per_month(spark, tmp_path):
+    df = _spread_months(spark)
+    assert df.rdd.getNumPartitions() >= 4
+    path = str(tmp_path / "one_per_month")
+    write_partitioned(df, path, "month")
+    assert _files_per_dir(path, "month") == {f"2024-0{m}": 1 for m in range(1, 5)}
+    back = spark.read.parquet(path).select(*df.columns)
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
+def test_write_partitioned_splits_month_above_advisory_size(spark, tmp_path):
+    """A month larger than AQE's advisory partition size is written as
+    several files, not one unsplittable task."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    df = spark.range(0, 200_000, numPartitions=6).selectExpr(
+        "id",
+        "CASE WHEN id % 10 < 8 THEN '2024-01' "
+        "ELSE concat('2024-0', CAST(id % 10 - 6 AS STRING)) END AS month",
+        "rand(5) AS v",
+    )
+    path = str(tmp_path / "split_big_month")
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "256k")
+    try:
+        write_partitioned(df, path, "month")
+    finally:
+        spark.conf.set(key, prev)
+    files = _files_per_dir(path, "month")
+    assert set(files) == {"2024-01", "2024-02", "2024-03"}
+    assert files["2024-01"] > 1
+    assert spark.read.parquet(path).count() == 200_000
+
+
+def test_write_partitioned_one_file_per_month_without_aqe(spark, tmp_path):
+    df = _spread_months(spark)
+    path = str(tmp_path / "no_aqe")
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        write_partitioned(df, path, "month")
+    finally:
+        spark.conf.set(key, prev)
+    assert _files_per_dir(path, "month") == {f"2024-0{m}": 1 for m in range(1, 5)}
+    back = spark.read.parquet(path).select(*df.columns)
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
+def test_merge_into_partitioned_one_file_per_rewritten_partition(spark, tmp_path):
+    path = str(tmp_path / "merge_files")
+    write_partitioned(_spread_months(spark), path, "month")
+    # updates to two months plus a new month, spread over six partitions
+    source = spark.range(0, 600, numPartitions=6).selectExpr(
+        "id * 2 AS id",
+        "CASE WHEN id % 3 = 0 THEN '2024-05' "
+        "ELSE concat('2024-0', CAST(((id * 2) % 4) + 1 AS STRING)) END AS month",
+        "-1.0D AS v",
+    )
+    assert source.rdd.getNumPartitions() >= 4
+    merge_into_partitioned(spark, path, source, keys=["id", "month"],
+                           partition_col="month")
+    files = _files_per_dir(path, "month")
+    assert files == {f"2024-0{m}": 1 for m in range(1, 6)}
+    after = spark.read.parquet(path)
+    assert after.count() == 6_000 + source.where("month = '2024-05'").count()
+    assert after.where("v = -1.0").count() == 600
+
+
+def test_partitioned_table_and_jsonl_one_file_per_month(spark, tmp_path):
+    from mapping_timeseries_spark.sources.readers import read_jsonl
+    from mapping_timeseries_spark.sources.writers import write_jsonl
+
+    df = _spread_months(spark)
+    months = {f"2024-0{m}": 1 for m in range(1, 5)}
+    tbl = str(tmp_path / "tbl_by_month")
+    save_as_table(df, "t_by_month", path=tbl, partition_col="month")
+    try:
+        assert _files_per_dir(tbl, "month") == months
+        assert spark.table("t_by_month").count() == df.count()
+    finally:
+        spark.sql("DROP TABLE t_by_month")
+    js = str(tmp_path / "jsonl_by_month")
+    write_jsonl(df, js, partition_col="month")
+    assert _files_per_dir(js, "month") == months
+    back = read_jsonl(spark, js, schema="id long, v double, month string")
+    assert back.count() == df.count()
+
+
+def test_merge_into_partitioned_null_partition_row_updated_not_duplicated(spark, tmp_path):
+    """A source row in the NULL partition replaces the target row with
+    the same keys: the NULL partition value matches like any other, so
+    the rewrite holds one row per key, not the old row beside the new."""
+    path = str(tmp_path / "null_upd")
+    target = spark.createDataFrame(
+        [(1, None, 1.0), (2, None, 2.0), (3, "2024-01", 3.0)],
+        "id long, month string, v double",
+    )
+    write_partitioned(target, path, "month")
+    source = spark.createDataFrame(
+        [(2, None, 20.0), (4, None, 4.0)], "id long, month string, v double"
+    )
+    merge_into_partitioned(spark, path, source, keys=["id", "month"],
+                           partition_col="month")
+    rows = sorted((r["id"], r["month"], r["v"]) for r in spark.read.parquet(path).collect())
+    assert rows == [(1, None, 1.0), (2, None, 20.0), (3, "2024-01", 3.0), (4, None, 4.0)]
