@@ -574,6 +574,12 @@ def q_production_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lattice-snapped series; the DTW-routed part comes from the numpy
     expected mapping table (per-entity independent => filtering IS the
     routed output).
+
+    The returned plan is one lazy action: model training, routing and
+    the routed build run together. ``plans.pipeline.run_pipeline`` runs
+    the same routed build but cuts the routing table with an eager
+    ``localCheckpoint`` first; this twin stays uncut so that building
+    it runs no Spark job and a timer sees the whole query in the action.
     """
     ensure_runtime_conf(spark)
     from mapping_timeseries_spark.plans.pipeline import _mappings_for_route
@@ -593,71 +599,22 @@ def q_production_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SAME t1/t2 the routing build consumes (snap on the inputs == snap
     # on the merge output: per-value, join keys untouched), so orders
     # aggregates once and lineitem joins once for the whole query.
-    # r13 (guide §2.4): in the single-action flow the reuse point is one
-    # entity-key exchange per frame (subtree computes once, consumers
-    # read its shuffle files, no cold-pin materialization race, no
-    # pinned executor memory — measured on the qa/corr/auto twins,
-    # artifacts/r13_shape_ab_results.json). The STAGED flow
-    # (SPARK_GRAFT_STAGE_DIR) keeps scoped_pin: it runs TWO actions (the
-    # routed-model build, then the mapping build), and shuffle files are
-    # not reused across actions — only a cache survives into the second
-    # action.
-    stage_dir = os.environ.get("SPARK_GRAFT_STAGE_DIR", "")
-    if stage_dir:
-        from mapping_timeseries_spark.operators.dedup import (
-            scoped_pin as _scope_pin,
-        )
-
-        t1 = _scope_pin(t1)
-        t2 = _scope_pin(t2)
-        merged = _scope_pin(merge_series(t1, t2))
-    else:
-        t1 = t1.repartition(F.col("cus_code"))
-        t2 = t2.repartition(F.col("cus_code"))
-        merged = merge_series(t1, t2).repartition(F.col("cus_code"))
+    # r13 (guide §2.4): the reuse point is one entity-key exchange per
+    # frame (subtree computes once, consumers read its shuffle files, no
+    # cold-pin materialization race, no pinned executor memory —
+    # measured on the qa/corr/auto twins,
+    # artifacts/r13_shape_ab_results.json).
+    t1 = t1.repartition(F.col("cus_code"))
+    t2 = t2.repartition(F.col("cus_code"))
+    merged = merge_series(t1, t2).repartition(F.col("cus_code"))
     corr = best_lag_correlation(merged, MAX_LAG)
     dtw = dtw_summary(merged)
     recs = recommendation_table(compare_methods(corr, dtw))
     routed = route_entities(t1.select("cus_code").distinct(), recs)
-    # Mid-plan checkpoint (r11, VERDICT r10 #2): under ONE action this
-    # query holds the corr grid, the DTW alignment AND the routed
-    # build's exchanges concurrently — the 1000x gate measured a 44 GB
-    # scratch high-water, 2x the family norm. With SPARK_GRAFT_STAGE_DIR
-    # set, the entity-sized routing table is staged to parquet first
-    # (that action runs the model-training half), the locals holding the
-    # model lineage are dropped so ContextCleaner can retire its
-    # shuffles, and the returned plan reads routed from disk — the final
-    # action holds only the routed build's exchanges. Results are
-    # bitwise identical either way (pytest-pinned); the scale gate times
-    # this leg with the staging INSIDE the timed region (build_timed).
-    # Lifetime contract (ADVICE r11): each staged build writes ONE
-    # routed_<uuid> dir under SPARK_GRAFT_STAGE_DIR. When the caller
-    # consumes inside dedup_cache_scope() (the pipeline/gate pattern),
-    # the dir is best-effort deleted on scope exit via scoped_cleanup —
-    # consuming the returned plan AFTER the scope then raises
-    # FileNotFoundError (the scope's consume-inside contract; see
-    # _stage_entity_table). OUTSIDE any scope the dir must outlive this
-    # function (the returned plan reads from it lazily), so it is the
-    # CALLER'S to vacuum — the gates (mapping_100x_gate) delete their
-    # stage dirs, and a long-lived service should wrap builds in the
-    # scope. The write/read-back/cleanup sequence is the SHARED
-    # pipeline helper (one definition, r12 review); only the lineage
-    # release below is entry-specific.
-    if stage_dir:
-        import gc
-
-        from mapping_timeseries_spark.plans.pipeline import (
-            _stage_entity_table,
-        )
-
-        routed = _stage_entity_table(spark, routed, stage_dir, "routed")
-        del corr, dtw, recs
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
     mapped = _mappings_for_route(
         t1, t2, merged, routed, MappingConfig(max_lag=MAX_LAG)
     )
-    out = mapped.select(
+    return mapped.select(
         "cus_code",
         "time1",
         F.round("value1", 6).alias("value1"),
@@ -666,16 +623,6 @@ def q_production_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lag_offset").cast("int").alias("lag_offset"),
         "method",
     )
-    if stage_dir:
-        # r13 (ADVICE r12 #3): the returned plan reads the staged
-        # routed_<uuid> dir transitively — wrap it so consuming it
-        # after the enclosing scope vacuumed the dir raises
-        # StagedScopeExpiredError (path + contract in the message)
-        # instead of the old bare executor FileNotFoundError
-        from mapping_timeseries_spark.plans.pipeline import guard_staged
-
-        out = guard_staged(out, routed._staged_path)
-    return out
 
 
 def q_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1359,23 +1306,11 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 100 TB it is 6x a full corpus tokenize). The shuffle-gate fix the
     # mapping legs use was measured and REJECTED here in r13 (fat
     # shingle-hash arrays: the gate exchange serialized ~1 GB and the
-    # leg regressed 6.3 -> 16.7 s). The scale answer is the SAME
-    # two-action staging contract q_production_mapping already has:
-    # with SPARK_GRAFT_STAGE_DIR set, hsets is written to parquet once
-    # (that action runs the tokenize+shingle pass exactly once) and
-    # every consumer reads the files — no pin, no race, no in-plan
-    # array shuffle. Results bitwise identical (pytest); the bench
-    # times the default unstaged plan as ever (it unsets the env var).
-    _stage_dir = os.environ.get("SPARK_GRAFT_STAGE_DIR", "")
-    _hsets_plan = _ngram_hsets(docs, "text", 2, keep_cols=("source",))
-    if _stage_dir:
-        from mapping_timeseries_spark.plans.pipeline import (
-            _stage_entity_table,
-        )
-
-        hsets = _stage_entity_table(spark, _hsets_plan, _stage_dir, "ngram_hsets")
-    else:
-        hsets = _scope_pin(_hsets_plan)
+    # leg regressed 6.3 -> 16.7 s). The candidate replacement is an
+    # eager localCheckpoint of hsets (one pass, then every consumer
+    # reads its blocks); it has to win a paired A/B with its build
+    # inside the timed region before it replaces this pin.
+    hsets = _scope_pin(_ngram_hsets(docs, "text", 2, keep_cols=("source",)))
     near = ngram_jaccard_pairs(
         docs, threshold=0.5, hsets=hsets
     ).select(
@@ -1396,16 +1331,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("holdout_doc").alias("doc_b"),
         F.round("overlap", 6).alias("score"),
     )
-    out = near.unionByName(contam)
-    if _stage_dir:
-        # same post-scope guard as q_production_mapping: consuming the
-        # returned plan after the enclosing dedup_cache_scope vacuumed
-        # the staged dir raises StagedScopeExpiredError, not a bare
-        # executor FileNotFoundError
-        from mapping_timeseries_spark.plans.pipeline import guard_staged
-
-        out = guard_staged(out, hsets._staged_path)
-    return out
+    return near.unionByName(contam)
 
 
 def _minhash_sel(p: DataFrame, tag: str) -> DataFrame:

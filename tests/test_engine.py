@@ -4,6 +4,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapping_timeseries_spark import MappingConfig, map_tables, map_tables_simple
+from mapping_timeseries_spark.operators.canonicalize import VALUE1, VALUE2, canonicalize
+from mapping_timeseries_spark.operators.correlation import best_lag_correlation
+from mapping_timeseries_spark.operators.dtw import dtw_summary
+from mapping_timeseries_spark.operators.merge import merge_series
+from mapping_timeseries_spark.operators.recommend import (
+    compare_methods,
+    recommendation_table,
+)
+from mapping_timeseries_spark.plans.pipeline import run_pipeline
 from mapping_timeseries_spark.sources.fixtures import synthetic_pair
 
 MAPPING_COLS = {
@@ -81,6 +90,41 @@ def test_forbid_broadcast_is_query_scoped(spark, pair):
     assert dplan.count("BroadcastHashJoin") > fplan.count("BroadcastHashJoin")
     # and the policy changes the plan only, never the result
     assert sorted(map(tuple, out_rows)) == sorted(map(tuple, default_rows))
+
+
+def test_pipeline_forbid_broadcast_is_query_scoped(spark, pair):
+    """run_pipeline honors broadcast_threshold <= 0 the same way
+    map_tables does, on both closes: the final adaptive plan keeps a
+    SortMergeJoin, the rows equal the default run's, and the session
+    conf is untouched."""
+    t1, t2 = pair
+    merged = merge_series(
+        canonicalize(t1, "cus_code", "month", "txn_amount", VALUE1),
+        canonicalize(t2, "cus_code", "month", "revenue", VALUE2),
+    )
+    recs = recommendation_table(
+        compare_methods(best_lag_correlation(merged, 6), dtw_summary(merged))
+    )
+    before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+
+    def run(recommendations, threshold):
+        result = run_pipeline(
+            spark, t1, t2, recommendations,
+            "cus_code", "month", "txn_amount", "revenue",
+            config=MappingConfig(broadcast_threshold=threshold),
+        )
+        out = result.mapped.drop("processed_at", "pipeline_run_id")
+        rows = sorted(map(tuple, out.collect()))
+        return rows, out._jdf.queryExecution().executedPlan().toString()
+
+    for recommendations in (None, recs):
+        frows, fplan = run(recommendations, -1)
+        assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before
+        drows, dplan = run(recommendations, MappingConfig().broadcast_threshold)
+        assert "isFinalPlan=true" in fplan
+        assert fplan.count("SortMergeJoin") >= 1
+        assert dplan.count("SortMergeJoin") < fplan.count("SortMergeJoin")
+        assert frows == drows
 
 
 def test_missing_column_raises(spark, pair):

@@ -73,85 +73,3 @@ def test_queries_survive_hostile_session_defaults(spark):
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
-
-
-def test_production_mapping_staged_equals_unstaged(spark, tmp_path, monkeypatch):
-    """VERDICT r10 #2: the mid-plan routed-table checkpoint
-    (SPARK_GRAFT_STAGE_DIR) exists to halve the 1000x scratch high-water;
-    it must be a pure execution-strategy change — results bitwise equal."""
-    monkeypatch.delenv("SPARK_GRAFT_STAGE_DIR", raising=False)
-    plain = entry_mod.q_production_mapping(spark, SF_DIR)
-    rows_plain = sorted(map(tuple, plain.collect()))
-    spark.catalog.clearCache()
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(tmp_path))
-    staged = entry_mod.q_production_mapping(spark, SF_DIR)
-    rows_staged = sorted(map(tuple, staged.collect()))
-    spark.catalog.clearCache()
-    assert staged.columns == plain.columns
-    assert rows_staged == rows_plain
-    # the staging actually wrote (the env path was honored)
-    import os as _os
-
-    assert any(d.startswith("routed_") for d in _os.listdir(tmp_path))
-
-
-def test_production_mapping_staged_guarded_after_scope(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r12 #3: a staged q_production_mapping plan consumed after
-    its enclosing dedup_cache_scope exits now raises
-    StagedScopeExpiredError naming the vacuumed path, instead of the
-    pre-r13 bare executor FileNotFoundError."""
-    import pytest as _pytest
-
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
-    from mapping_timeseries_spark.plans.pipeline import (
-        StagedScopeExpiredError,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(tmp_path))
-    with dedup_cache_scope():
-        staged = entry_mod.q_production_mapping(spark, SF_DIR)
-        assert staged.limit(1).count() >= 0  # live inside the scope
-    with _pytest.raises(StagedScopeExpiredError, match="vacuumed"):
-        staged.count()
-
-def test_ngram_jaccard_staged_equals_unstaged(spark, tmp_path, monkeypatch):
-    """VERDICT r13 #3: with SPARK_GRAFT_STAGE_DIR set, q_ngram_jaccard
-    stages the shared hsets frame to parquet (one tokenize+shingle pass,
-    no cold-pin materialization race) instead of scoped_pin. Pure
-    execution-strategy change — results bitwise equal."""
-    monkeypatch.delenv("SPARK_GRAFT_STAGE_DIR", raising=False)
-    plain = entry_mod.q_ngram_jaccard(spark, SF_DIR)
-    rows_plain = sorted(map(tuple, plain.collect()))
-    spark.catalog.clearCache()
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(tmp_path))
-    staged = entry_mod.q_ngram_jaccard(spark, SF_DIR)
-    rows_staged = sorted(map(tuple, staged.collect()))
-    spark.catalog.clearCache()
-    assert staged.columns == plain.columns
-    assert rows_staged == rows_plain
-    import os as _os
-
-    assert any(d.startswith("ngram_hsets_") for d in _os.listdir(tmp_path))
-
-
-def test_ngram_jaccard_staged_guarded_after_scope(
-    spark, tmp_path, monkeypatch
-):
-    """Same post-scope contract as production_mapping: a staged
-    q_ngram_jaccard plan consumed after its dedup_cache_scope exits
-    raises StagedScopeExpiredError, not a bare FileNotFoundError."""
-    import pytest as _pytest
-
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
-    from mapping_timeseries_spark.plans.pipeline import (
-        StagedScopeExpiredError,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_DIR", str(tmp_path))
-    with dedup_cache_scope():
-        staged = entry_mod.q_ngram_jaccard(spark, SF_DIR)
-        assert staged.limit(1).count() >= 0
-    with _pytest.raises(StagedScopeExpiredError, match="vacuumed"):
-        staged.count()

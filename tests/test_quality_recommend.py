@@ -518,158 +518,64 @@ def test_pipeline_alerts_on_result(spark, pair):
     assert result.alerts == []
 
 
-def test_pipeline_scratch_dir_stages_and_results_equal(spark, pair, tmp_path, monkeypatch):
-    """r12 (VERDICT r11 #6): staging is default-on under
-    run_pipeline(scratch_dir=...) — previously opt-in via the
-    SPARK_GRAFT_STAGE_DIR env var only. Pure execution-strategy change:
-    results bitwise equal on BOTH branches (supplied recommendations /
-    inline-trained model), the stage dir actually gets written, and the
-    dedup_cache_scope vacuums it."""
-    import os as _os
+def _checkpointed_rdds(df) -> set[int]:
+    """Ids of the checkpointed RDDs the analyzed plan reads: an eager
+    ``localCheckpoint`` becomes a LogicalRDD leaf over one."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    nodes = [leaves.apply(i) for i in range(leaves.size())]
+    return {
+        n.rdd().id()
+        for n in nodes
+        if n.nodeName() == "LogicalRDD" and n.rdd().isCheckpointed()
+    }
 
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
 
-    monkeypatch.delenv("SPARK_GRAFT_STAGE_DIR", raising=False)
+@pytest.mark.parametrize("close", ["inline", "routed", "model"])
+def test_pipeline_cuts_entity_table(spark, pair, close):
+    """Both closes cut their entity table (the inline-trained model, the
+    routing table) with an eager localCheckpoint; a caller-supplied
+    model is used as given. The cut changes the plan only: the result
+    equals the uncut composition row for row, and it stays consumable
+    after run_pipeline returns, across a JVM GC."""
+    import gc
+
+    from mapping_timeseries_spark.operators.canonicalize import KEY
+    from mapping_timeseries_spark.operators.lag_join import (
+        build_correlation_mappings,
+    )
+    from mapping_timeseries_spark.plans.pipeline import _mappings_for_route
+
     t1, t2 = pair
-    merged = merge_series(
-        canonicalize(t1, "cus_code", "month", "txn_amount", VALUE1),
-        canonicalize(t2, "cus_code", "month", "revenue", VALUE2),
-    )
-    recs = recommendation_table(
-        compare_methods(best_lag_correlation(merged, 6), dtw_summary(merged))
-    )
-    scratch = str(tmp_path / "scratch")
-
-    def rows(result):
-        # processed_at is a wall-clock stamp; run_id is pinned equal
-        return sorted(
-            map(tuple, result.mapped.drop("processed_at").collect())
+    cfg = MappingConfig()
+    c1 = canonicalize(t1, "cus_code", "month", "txn_amount", VALUE1)
+    c2 = canonicalize(t2, "cus_code", "month", "revenue", VALUE2)
+    merged = merge_series(c1, c2)
+    corr = best_lag_correlation(merged, cfg.max_lag)
+    cols = [KEY, "time1", "value1", "time2", "value2", "lag_offset", "method"]
+    recommendations = model = None
+    if close == "routed":
+        recommendations = recommendation_table(
+            compare_methods(corr, dtw_summary(merged))
         )
+        routed = route_entities(c1.select(KEY).distinct(), recommendations)
+        want = _mappings_for_route(c1, c2, merged, routed, cfg)
+    else:
+        want = build_correlation_mappings(c1, c2, corr, cfg.min_correlation)
+        model = corr if close == "model" else None
 
-    for recommendations in (recs, None):
-        plain = run_pipeline(
-            spark, t1, t2, recommendations,
-            "cus_code", "month", "txn_amount", "revenue", run_id="stagecmp",
-        )
-        with dedup_cache_scope():
-            staged = run_pipeline(
-                spark, t1, t2, recommendations,
-                "cus_code", "month", "txn_amount", "revenue",
-                run_id="stagecmp", scratch_dir=scratch,
-            )
-            label = "routed_" if recommendations is not None else "model_"
-            assert any(
-                d.startswith(label) for d in _os.listdir(scratch)
-            ), "scratch_dir was configured but nothing staged"
-            assert rows(staged) == rows(plain)
-        # scope exit vacuumed the staged dirs (best-effort delete)
-        assert _os.listdir(scratch) == []
-
-
-def test_staged_frame_expires_with_clear_error(spark, pair, tmp_path):
-    """VERDICT r12 #7: a scope-staged plan touched after its scope
-    vacuumed the dir raises StagedScopeExpiredError (path + contract in
-    the message) instead of the old bare executor FileNotFoundError —
-    and works normally while the scope is live."""
-    import pytest as _pytest
-
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
-    from mapping_timeseries_spark.plans.pipeline import (
-        StagedScopeExpiredError,
-        _stage_entity_table,
-    )
-
-    t1, _ = pair
-    with dedup_cache_scope():
-        staged = _stage_entity_table(
-            spark, t1.limit(5), str(tmp_path), "model"
-        )
-        n_inside = staged.count()  # live inside the scope
-        assert n_inside == 5
-    with _pytest.raises(StagedScopeExpiredError, match="vacuumed"):
-        staged.count()
-    with _pytest.raises(StagedScopeExpiredError, match="consume-inside|INSIDE"):
-        staged.select("cus_code")  # transformations fail fast too
-
-
-def test_pipeline_sink_branch_vacuums_scratch(spark, pair, tmp_path, monkeypatch):
-    """ADVICE r12: with a sink configured, run_pipeline re-points
-    result.mapped at the WRITTEN sink and vacuums its own staged dirs —
-    no scope needed, no leak, and the returned frame is byte-consistent
-    with the sink (same rows, same schema as the unstaged run)."""
-    import os as _os
-
-    monkeypatch.delenv("SPARK_GRAFT_STAGE_DIR", raising=False)
-    t1, t2 = pair
-    scratch = str(tmp_path / "scratch")
-    out = str(tmp_path / "out")
     result = run_pipeline(
-        spark, t1, t2, None,
+        spark, t1, t2, recommendations,
         "cus_code", "month", "txn_amount", "revenue",
-        output_path=out, run_id="sinkvac", scratch_dir=scratch,
+        config=cfg, model=model,
     )
-    # the pipeline vacuumed its own staging — nothing left to leak
-    assert not _os.path.exists(scratch) or _os.listdir(scratch) == []
-    sink = spark.read.parquet(_os.path.join(out, "mappings"))
-    got = sorted(map(tuple, result.mapped.collect()))
-    want_rows = sink.select(*result.mapped.columns).collect()
-    assert got == sorted(
-        tuple(r[c] for c in result.mapped.columns) for r in want_rows
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    got = sorted(map(tuple, result.mapped.select(*cols).collect()))
+    assert got
+    assert got == sorted(map(tuple, want.select(*cols).collect()))
+    assert len(_checkpointed_rdds(result.mapped)) == (
+        0 if close == "model" else 1
     )
-    plain = run_pipeline(
-        spark, t1, t2, None,
-        "cus_code", "month", "txn_amount", "revenue", run_id="sinkvac",
-    )
-    assert [
-        (f.name, f.dataType) for f in result.mapped.schema.fields
-    ] == [(f.name, f.dataType) for f in plain.mapped.schema.fields]
-
-
-def test_pipeline_sinkless_staged_result_guarded(spark, pair, tmp_path, monkeypatch):
-    """Sinkless + scratch_dir keeps the documented lazy-leak contract,
-    but the returned frame is now guarded: consuming it after the
-    enclosing scope vacuumed the staging raises StagedScopeExpiredError
-    instead of a bare FileNotFoundError."""
-    import pytest as _pytest
-
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
-    from mapping_timeseries_spark.plans.pipeline import StagedScopeExpiredError
-
-    monkeypatch.delenv("SPARK_GRAFT_STAGE_DIR", raising=False)
-    t1, t2 = pair
-    scratch = str(tmp_path / "scratch")
-    with dedup_cache_scope():
-        result = run_pipeline(
-            spark, t1, t2, None,
-            "cus_code", "month", "txn_amount", "revenue",
-            run_id="guardrun", scratch_dir=scratch,
-        )
-        assert result.mapped.count() > 0  # consume-inside path still fine
-    with _pytest.raises(StagedScopeExpiredError, match="vacuumed"):
-        result.mapped.count()
-
-
-def test_pipeline_supplied_model_not_staged(spark, pair, tmp_path, monkeypatch):
-    """A caller-supplied model is already detached from the training
-    exchanges — staging it would be a pointless extra write; the
-    scratch dir must stay empty on that path."""
-    import os as _os
-
-    monkeypatch.delenv("SPARK_GRAFT_STAGE_DIR", raising=False)
-    t1, t2 = pair
-    merged = merge_series(
-        canonicalize(t1, "cus_code", "month", "txn_amount", VALUE1),
-        canonicalize(t2, "cus_code", "month", "revenue", VALUE2),
-    )
-    model = best_lag_correlation(merged, 6)
-    scratch = str(tmp_path / "scratch2")
-    result = run_pipeline(
-        spark, t1, t2, None,
-        "cus_code", "month", "txn_amount", "revenue",
-        model=model, scratch_dir=scratch,
-    )
-    assert result.stats["total_mappings"] > 0
-    assert not _os.path.exists(scratch) or _os.listdir(scratch) == []
 
 
 def test_pipeline_sinks_write_one_file_per_month(spark, pair, tmp_path):

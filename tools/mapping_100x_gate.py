@@ -144,62 +144,37 @@ def main() -> int:
         if prior_doc.get("factor") == factor:
             prior = prior_doc.get("queries", {})
             res = {k: v for k, v in prior.items() if v.get("count_ok")}
-    # production_mapping runs with the mid-plan routed-table checkpoint
-    # (VERDICT r10 #2): the staging write is part of the query's work,
-    # so its build runs INSIDE the timed region (the bench's
-    # build_timed contract) and the staged parquet lands in a per-gate scratch dir.
-    import shutil as _sh
-    import tempfile
-
-    stage_root = tempfile.mkdtemp(prefix="routed_stage_")
-    os.environ["SPARK_GRAFT_STAGE_DIR"] = stage_root
-    build_timed = {"production_mapping"}
-    # env + tempdir cleanup must survive a mid-gate failure: a leaked
-    # SPARK_GRAFT_STAGE_DIR silently switches every later in-process
-    # q_production_mapping build onto the staging path
-    try:
-        for name in QUERIES:
-            if name in res:
-                print(name, "cached:", json.dumps(res[name]), flush=True)
-                continue
-            n1 = qs[name](spark, SF_1X).count()
-            wall1 = statistics.median(
-                time_query(
-                    spark, qs[name], SF_1X, REPS_1X,
-                    build_timed=name in build_timed,
-                )
-            )
-            _release()
-            m = ScratchMeter(spark).start()
-            nN = qs[name](spark, corpus_dir).count()
-            spark.catalog.clearCache()
-            wallN = statistics.median(
-                time_query(
-                    spark, qs[name], corpus_dir, REPS_NX,
-                    build_timed=name in build_timed,
-                )
-            )
-            scratchN = m.stop()
-            for d in os.listdir(stage_root):
-                _sh.rmtree(os.path.join(stage_root, d), ignore_errors=True)
-            res[name] = {
-                "rows_1x": n1,
-                f"rows_{factor}x": nN,
-                f"expected_{factor}x": n1 * factor,
-                "count_ok": nN == n1 * factor,
-                "wall_1x_sec": round(wall1, 2),
-                f"wall_{factor}x_sec": round(wallN, 1),
-                "wall_ratio": round(wallN / max(wall1, 1e-9), 1),
-                f"peak_scratch_bytes_{factor}x": scratchN,
-                f"base_scratch_bytes_{factor}x": m.base_bytes,
-            }
-            _release()
-            print(name, json.dumps(res[name]), flush=True)
-            with open(out_json, "w") as f:
-                json.dump({"factor": factor, "queries": res}, f, indent=1)
-    finally:
-        os.environ.pop("SPARK_GRAFT_STAGE_DIR", None)
-        _sh.rmtree(stage_root, ignore_errors=True)
+    for name in QUERIES:
+        if name in res:
+            print(name, "cached:", json.dumps(res[name]), flush=True)
+            continue
+        n1 = qs[name](spark, SF_1X).count()
+        wall1 = statistics.median(
+            time_query(spark, qs[name], SF_1X, REPS_1X)
+        )
+        _release()
+        m = ScratchMeter(spark).start()
+        nN = qs[name](spark, corpus_dir).count()
+        spark.catalog.clearCache()
+        wallN = statistics.median(
+            time_query(spark, qs[name], corpus_dir, REPS_NX)
+        )
+        scratchN = m.stop()
+        res[name] = {
+            "rows_1x": n1,
+            f"rows_{factor}x": nN,
+            f"expected_{factor}x": n1 * factor,
+            "count_ok": nN == n1 * factor,
+            "wall_1x_sec": round(wall1, 2),
+            f"wall_{factor}x_sec": round(wallN, 1),
+            "wall_ratio": round(wallN / max(wall1, 1e-9), 1),
+            f"peak_scratch_bytes_{factor}x": scratchN,
+            f"base_scratch_bytes_{factor}x": m.base_bytes,
+        }
+        _release()
+        print(name, json.dumps(res[name]), flush=True)
+        with open(out_json, "w") as f:
+            json.dump({"factor": factor, "queries": res}, f, indent=1)
     out = {
         "factor": factor,
         "corpus": corpus_dir,
