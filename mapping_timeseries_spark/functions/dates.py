@@ -15,11 +15,6 @@ from pyspark.sql import functions as F
 MONTH_FORMAT = "yyyy-MM"
 
 
-def month_to_date(month: Column | str) -> Column:
-    """``'yyyy-MM'`` string -> date (first of month)."""
-    return F.to_date(month)
-
-
 def shift_month(month: Column | str, offset: Column | int) -> Column:
     """Add ``offset`` months to a ``'yyyy-MM'`` string, returning a string.
 
@@ -43,20 +38,3 @@ def month_add(month: str, offset: int) -> str:
     total = y * 12 + (m - 1) + offset
     return f"{total // 12:04d}-{total % 12 + 1:02d}"
 
-
-# DuckDB oracle equivalents (FIXTURES.md §B5), used when composing oracle
-# SQL strings:
-#   to_date(month)            -> strptime(month || '-01', '%Y-%m-%d')
-#   add_months(d, n)          -> d + (n || ' months')::INTERVAL
-#   date_format(d, 'yyyy-MM') -> strftime(d, '%Y-%m')
-def duckdb_shift_month(month_expr: str, offset_expr: str) -> str:
-    """DuckDB SQL string mirroring :func:`shift_month`."""
-    return (
-        f"strftime(strptime({month_expr} || '-01', '%Y-%m-%d')"
-        f" + to_months(CAST({offset_expr} AS INT)), '%Y-%m')"
-    )
-
-
-def duckdb_month_of(ts_expr: str) -> str:
-    """DuckDB SQL string mirroring :func:`date_to_month` on a timestamp."""
-    return f"strftime({ts_expr}, '%Y-%m')"

@@ -3,7 +3,7 @@
 Each function is a thin, Catalyst-friendly DataFrame composition — the
 point is coverage of the reference's relational surface (CASE
 segmentation, top-k, conditional aggregation, distinct counts, quantiles,
-unions by name, semi/anti joins, window functions, date arithmetic) with
+unions by name, anti joins, window functions, date arithmetic) with
 DuckDB-checkable semantics. Reference sites cited per function.
 """
 
@@ -20,7 +20,6 @@ __all__ = [
     "group_quantiles",
     "union_by_name",
     "anti_join",
-    "semi_join",
     "series_window_features",
     "summary_stats",
     "join_distinct_dim",
@@ -114,16 +113,6 @@ def union_by_name(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
         F.avg("l_extendedprice").alias("avg_price"),
     )
     return a.unionByName(b, allowMissingColumns=True)
-
-
-def semi_join(customers: DataFrame, orders: DataFrame) -> DataFrame:
-    """J6 left-semi: customers having orders (mapping_engine.py:711-715
-    expressed as a proper semi-join instead of inner-on-deduped-keys)."""
-    return customers.join(
-        orders.select(F.col("o_custkey").alias("c_custkey")),
-        on="c_custkey",
-        how="left_semi",
-    )
 
 
 def anti_join(customers: DataFrame, orders: DataFrame) -> DataFrame:

@@ -280,46 +280,55 @@ def _run_pipeline_body(
     if cfg.cache_intermediate:
         mapped = mapped.persist()
 
-    written_version = None
-    if versioned_root:
-        from ..sources.versioned import publish_version, write_versioned
+    # released on every exit path: a failing sink write, qa_report or
+    # publish would otherwise leave the frame cached until the session
+    # dies
+    try:
+        written_version = None
+        if versioned_root:
+            from ..sources.versioned import publish_version, write_versioned
 
-        # two-phase publish: STAGE the snapshot (pointer untouched), QA
-        # the staged data, publish only on pass — readers never see a
-        # QA-failed table, not even transiently, and a FIRST run that
-        # fails QA leaves the table unpublished instead of live
-        # (a publish-then-rollback flow has both holes)
-        written_version = write_versioned(
-            mapped, versioned_root, note=f"pipeline run {run_id}",
-            publish=False,
-        )
-        total_mappings = obs.get["total_mappings"]
-    elif output_path:
-        write_partitioned(mapped, os.path.join(output_path, "mappings"), "time1")
-        total_mappings = obs.get["total_mappings"]
-    else:
-        total_mappings = mapped.count()
-
-    qa = qa_report(mapped, t1)
-    if versioned_root and qa["passed"]:
-        if output_path:
-            # both sinks requested: in the versioned (QA-gated) flow
-            # the partitioned path that feeds read_incremental consumers
-            # is gated the same way as the pointer flip — a QA-failed
-            # run must not expose data through EITHER sink (the staged
-            # snapshot stays on disk for forensics; the plain
-            # output_path-only branch above remains ungated by design,
-            # matching the reference's batch path). Ordered BEFORE the
-            # pointer flip: the flip is the one atomic step, so it goes
-            # last — a crash mid-partitioned-write leaves versioned
-            # readers on the previous version instead of publishing a
-            # run whose second sink is torn.
-            write_partitioned(
-                mapped, os.path.join(output_path, "mappings"), "time1"
+            # two-phase publish: STAGE the snapshot (pointer untouched), QA
+            # the staged data, publish only on pass — readers never see a
+            # QA-failed table, not even transiently, and a FIRST run that
+            # fails QA leaves the table unpublished instead of live
+            # (a publish-then-rollback flow has both holes)
+            written_version = write_versioned(
+                mapped, versioned_root, note=f"pipeline run {run_id}",
+                publish=False,
             )
-        publish_version(versioned_root, written_version)
-    if cfg.cache_intermediate:
-        mapped.unpersist()
+            total_mappings = obs.get["total_mappings"]
+        elif output_path:
+            write_partitioned(
+                mapped, os.path.join(output_path, "mappings"), "time1",
+                cluster_by=(KEY, "time2"),
+            )
+            total_mappings = obs.get["total_mappings"]
+        else:
+            total_mappings = mapped.count()
+
+        qa = qa_report(mapped, t1)
+        if versioned_root and qa["passed"]:
+            if output_path:
+                # both sinks requested: in the versioned (QA-gated) flow
+                # the partitioned path that feeds read_incremental consumers
+                # is gated the same way as the pointer flip — a QA-failed
+                # run must not expose data through EITHER sink (the staged
+                # snapshot stays on disk for forensics; the plain
+                # output_path-only branch above remains ungated by design,
+                # matching the reference's batch path). Ordered BEFORE the
+                # pointer flip: the flip is the one atomic step, so it goes
+                # last — a crash mid-partitioned-write leaves versioned
+                # readers on the previous version instead of publishing a
+                # run whose second sink is torn.
+                write_partitioned(
+                    mapped, os.path.join(output_path, "mappings"), "time1",
+                    cluster_by=(KEY, "time2"),
+                )
+            publish_version(versioned_root, written_version)
+    finally:
+        if cfg.cache_intermediate:
+            mapped.unpersist()
     duration = time.time() - t_start
 
     # SLA gates (05_prod_dev.py:703-745) via the structured monitor

@@ -28,25 +28,16 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # r13 note: spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
-    # (AQE re-optimizing CACHED plans) was trialled here mid-round. On
-    # the pre-rework operators it measured as a clear win (interleaved
-    # A/B min-of-8: corr_mapping -36%, bm25_topk -25%, auto_mapping
-    # -15% — the pinned frames materialized at the raw shuffle-partition
-    # count and AQE coalescing fixed that), but after the r13 operator
-    # restructures (un-exploded corr grid, bm25 dl-from-postings, shared
-    # ngram hsets) the same interleaved A/B on the SAME legs showed the
-    # default (off) faster almost everywhere: dsir_select -30%,
-    # bm25_topk -15%, dtw_summary -10%, ngram_jaccard -8%, auto_mapping
-    # -7%, corr_mapping -3%, only dtw_mapping +9% the other way. The
-    # mechanism inverted: AQE coalesces a cached frame by its BYTE size,
-    # and the round's reworked operators leave only small cached frames
-    # whose downstream work (shingle explode, Arrow-batched DP) is far
-    # more expensive per byte than a shuffle — coalescing them
-    # serializes that work. Left at the Spark default (false); the
-    # expansion-heavy consumers get their parallelism explicitly via
-    # ensure_parallel, which scales with input size instead of cached
-    # plan bytes.
+    # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning (AQE
+    # re-optimizing cached plans) stays at its default, off. With it on,
+    # AQE coalesces a cached frame by its byte size; the engine's cached
+    # frames are small while their downstream work (shingle explode,
+    # Arrow-batched DP) is costly per byte, so coalescing serializes that
+    # work. An interleaved A/B of the bench legs read the default faster
+    # almost everywhere (dsir_select -30%, bm25_topk -15%, dtw_summary
+    # -10%, ngram_jaccard -8%; only dtw_mapping +9% the other way).
+    # Expansion-heavy consumers get their parallelism from
+    # ensure_parallel, which scales with input size, not cached bytes.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.ansi.enabled": "false",
     # pandas-written parquet carries TIMESTAMP(NANOS), which the Spark
@@ -54,6 +45,16 @@ RUNTIME_CONF: dict[str, str] = {
     # (readers.read_table) — microsecond truncation matches DuckDB's
     # handling of the same files.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Zstd for every parquet file the engine writes: mapping sinks,
+    # versioned snapshots, training shards, indexes, compaction. At
+    # 100 TB each sink byte is written once and then scanned by every
+    # read_incremental consumer, and Zstd packs the sinks' doubles far
+    # tighter than Snappy at similar decode speed. One perfbench
+    # mapping_close operation (seed 1) wrote 2.27 MB with Snappy,
+    # 1.54 MB with Zstd, and 1.43 MB with Zstd plus write_partitioned's
+    # per-file entity clustering. Spark's own conf, so get_spark(extra_conf=...)
+    # or a per-write .option("compression", ...) still overrides it.
+    "spark.sql.parquet.compression.codec": "zstd",
 }
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Sequence
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,7 +33,12 @@ def _rebalanced(df: DataFrame, partition_col: str) -> DataFrame:
     return df.repartition(partition_col)
 
 
-def write_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
+def write_partitioned(
+    df: DataFrame,
+    path: str,
+    partition_col: str,
+    cluster_by: Sequence[str] = (),
+) -> None:
     """S6: month-partitioned sink (05_prod_dev.py:861-867) — enables
     partition pruning for the incremental scan (readers.read_incremental).
 
@@ -57,10 +63,23 @@ def write_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
     task. With AQE off it is a plain hash repartition on the column: one
     file per directory, however large. The mapping close of
     ``perfbench`` went from about 360 to 75 parquet files per operation.
+
+    ``cluster_by`` orders the rows inside each file by those columns —
+    the sort-within-partitions the reference approximates with ZORDER
+    after the fact (05_prod_dev.py:1228-1231). Rows of one entity then
+    sit together in key order, which compresses far better than shuffle
+    order (the routed mapping sink: 0.90 -> 0.79 MB under Zstd on one
+    perfbench operation); the mapping sinks pass ``(KEY, "time2")``.
+    It costs no extra sort: Spark's planned write already sorts each
+    task's rows on ``partition_col`` ahead of a dynamic-partition write,
+    and a sort on ``(partition_col, *cluster_by)`` satisfies that
+    requirement, so the executed plan keeps exactly one ``Sort`` node,
+    only with the longer key.
     """
-    _rebalanced(df, partition_col).write.mode("overwrite").partitionBy(
-        partition_col
-    ).parquet(path)
+    out = _rebalanced(df, partition_col)
+    if cluster_by:
+        out = out.sortWithinPartitions(partition_col, *cluster_by)
+    out.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
 def compact_parquet(

@@ -68,17 +68,19 @@ def test_forbid_broadcast_is_query_scoped(spark, pair):
     session and contradicted config.py's no-mutation contract)."""
     t1, t2 = pair
     before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    # keep a handle on the frame that is collected: only its query
+    # execution holds the final adaptive plan
     out = map_tables(
         t1, t2, "cus_code", "month", "txn_amount", "revenue",
         MappingConfig(method="correlation", broadcast_threshold=-1),
-    )
-    out_rows = out.drop("processed_at").collect()
+    ).drop("processed_at")
+    out_rows = out.collect()
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before
     default = map_tables(
         t1, t2, "cus_code", "month", "txn_amount", "revenue",
         MappingConfig(method="correlation"),
-    )
-    default_rows = default.drop("processed_at").collect()
+    ).drop("processed_at")
+    default_rows = default.collect()
     # compare the FINAL adaptive plans (AQE rewrites joins at runtime;
     # the static plan is all-SMJ before stats exist): at this tiny
     # scale AQE broadcast-converts every unhinted join, so the forbid
@@ -86,6 +88,7 @@ def test_forbid_broadcast_is_query_scoped(spark, pair):
     # than default — can only come from the query-scoped hint
     fplan = out._jdf.queryExecution().executedPlan().toString()
     dplan = default._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in fplan and "isFinalPlan=true" in dplan
     assert fplan.count("SortMergeJoin") >= 1
     assert dplan.count("BroadcastHashJoin") > fplan.count("BroadcastHashJoin")
     # and the policy changes the plan only, never the result

@@ -24,6 +24,8 @@ from mapping_timeseries_spark.operators.recommend import (
 from mapping_timeseries_spark.plans.pipeline import run_pipeline
 from mapping_timeseries_spark.sources.fixtures import synthetic_pair
 
+from .parquet_footers import parquet_codecs, parquet_files
+
 
 @pytest.fixture(scope="module")
 def pair(spark):
@@ -578,11 +580,14 @@ def test_pipeline_cuts_entity_table(spark, pair, close):
     )
 
 
-def test_pipeline_sinks_write_one_file_per_month(spark, pair, tmp_path):
-    """Both closes the benchmark drives — the inline correlation close
+@pytest.fixture(scope="module")
+def closes(spark, pair, tmp_path_factory):
+    """Both closes the benchmark drives, run once for the sink tests from
+    inputs spread over four partitions: the inline correlation close
     with versioned + partitioned sinks, and the routed close over a saved
-    recommendations table — leave one parquet file per time1 directory,
-    whatever the number of tasks upstream of the sink."""
+    recommendations table. ``{name: (output_path, versioned_root or
+    None, result)}``."""
+    root = tmp_path_factory.mktemp("closes")
     t1, t2 = (t.repartition(4) for t in pair)
     merged = merge_series(
         canonicalize(t1, "cus_code", "month", "txn_amount", VALUE1),
@@ -591,20 +596,29 @@ def test_pipeline_sinks_write_one_file_per_month(spark, pair, tmp_path):
     recs = recommendation_table(
         compare_methods(best_lag_correlation(merged, 6), dtw_summary(merged))
     )
-    closes = {
+    runs = {
         "inline": (None, dict(
             config=MappingConfig(method="correlation"),
-            versioned_root=str(tmp_path / "inline_vt"),
+            versioned_root=str(root / "inline_vt"),
         )),
         "routed": (recs, {}),
     }
-    for name, (recommendations, kwargs) in closes.items():
-        out = str(tmp_path / name)
+    out = {}
+    for name, (recommendations, kwargs) in runs.items():
+        path = str(root / name)
         result = run_pipeline(
             spark, t1, t2, recommendations,
             "cus_code", "month", "txn_amount", "revenue",
-            output_path=out, run_id=name, **kwargs,
+            output_path=path, run_id=name, **kwargs,
         )
+        out[name] = (path, kwargs.get("versioned_root"), result)
+    return out
+
+
+def test_pipeline_sinks_write_one_file_per_month(spark, closes):
+    """Both closes leave one parquet file per time1 directory, whatever
+    the number of tasks upstream of the sink."""
+    for name, (out, _, result) in closes.items():
         sink = os.path.join(out, "mappings")
         months = [d for d in os.listdir(sink) if d.startswith("time1=")]
         assert months, name
@@ -613,3 +627,59 @@ def test_pipeline_sinks_write_one_file_per_month(spark, pair, tmp_path):
                        if f.endswith(".parquet")]
             assert len(parquet) == 1, (name, d, parquet)
         assert spark.read.parquet(sink).count() == result.stats["total_mappings"]
+
+
+def test_pipeline_sinks_zstd_and_clustered_by_entity(spark, closes, tmp_path):
+    """Every parquet file of both closes' sinks, the versioned snapshot
+    included, is Zstd in its footer; each time1 file holds its rows in
+    (cus_code, time2) order; and the rows equal an unclustered write of
+    the same frame, i.e. the sink as it was written before clustering."""
+    import pyarrow.parquet as pq
+
+    from mapping_timeseries_spark.sources.writers import write_partitioned
+
+    for name, (out, versioned_root, result) in closes.items():
+        sink = os.path.join(out, "mappings")
+        assert parquet_codecs(sink) == {"ZSTD"}, name
+        if versioned_root:
+            assert parquet_files(versioned_root), name
+            assert parquet_codecs(versioned_root) == {"ZSTD"}, name
+        for path in parquet_files(sink):
+            cols = pq.read_table(path, columns=["cus_code", "time2"]).to_pydict()
+            keys = list(zip(cols["cus_code"], cols["time2"]))
+            assert keys and keys == sorted(keys), (name, path)
+        plain = str(tmp_path / name)
+        write_partitioned(result.mapped, plain, "time1")
+        got = spark.read.parquet(sink).drop("processed_at")
+        want = spark.read.parquet(plain).select(*got.columns)
+        assert got.count() == want.count() == result.stats["total_mappings"]
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
+def test_pipeline_releases_pin_when_qa_raises(spark, pair, tmp_path, monkeypatch):
+    """The mapping frame's persist pin is released on every exit path:
+    a qa_report that raises after the output_path sink is written leaves
+    nothing in the session's cache."""
+    from mapping_timeseries_spark.plans import pipeline
+
+    t1, t2 = pair
+    out = str(tmp_path / "qa_raises")
+
+    def failing_qa(mapped, t1):
+        assert os.path.isdir(os.path.join(out, "mappings"))
+        raise RuntimeError("qa store unreachable")
+
+    monkeypatch.setattr(pipeline, "qa_report", failing_qa)
+    spark.catalog.clearCache()
+    try:
+        with pytest.raises(RuntimeError, match="qa store unreachable"):
+            run_pipeline(
+                spark, t1, t2, None,
+                "cus_code", "month", "txn_amount", "revenue",
+                output_path=out, config=MappingConfig(method="correlation"),
+            )
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    finally:
+        # clearCache also dropped the module's cached inputs
+        t1.cache()
+        t2.cache()

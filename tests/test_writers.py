@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from mapping_timeseries_spark.sources.readers import read_incremental
 from mapping_timeseries_spark.operators.relational import merge_upsert
+from mapping_timeseries_spark.session import ensure_runtime_conf, get_spark
 from mapping_timeseries_spark.sources.writers import (
     create_view,
     merge_into_partitioned,
@@ -15,6 +16,10 @@ from mapping_timeseries_spark.sources.writers import (
     write_partitioned,
     write_run_metadata,
 )
+
+from .parquet_footers import parquet_codecs, parquet_files
+
+CODEC = "spark.sql.parquet.compression.codec"
 
 
 def test_analyze_table_feeds_cbo(spark, tmp_path):
@@ -469,6 +474,22 @@ def test_write_partitioned_one_file_per_month(spark, tmp_path):
     assert sorted(back.collect()) == sorted(df.collect())
 
 
+def test_write_partitioned_cluster_by_orders_each_file(spark, tmp_path):
+    """cluster_by orders the rows inside each file and changes neither
+    the file count nor the rows."""
+    import pyarrow.parquet as pq
+
+    df = _spread_months(spark)
+    path = str(tmp_path / "clustered")
+    write_partitioned(df, path, "month", cluster_by=("v",))
+    assert _files_per_dir(path, "month") == {f"2024-0{m}": 1 for m in range(1, 5)}
+    for p in parquet_files(path):
+        v = pq.read_table(p, columns=["v"]).column("v").to_pylist()
+        assert v == sorted(v), p
+    back = spark.read.parquet(path).select(*df.columns)
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
 def test_write_partitioned_splits_month_above_advisory_size(spark, tmp_path):
     """A month larger than AQE's advisory partition size is written as
     several files, not one unsplittable task."""
@@ -564,3 +585,59 @@ def test_merge_into_partitioned_null_partition_row_updated_not_duplicated(spark,
                            partition_col="month")
     rows = sorted((r["id"], r["month"], r["v"]) for r in spark.read.parquet(path).collect())
     assert rows == [(1, None, 1.0), (2, None, 20.0), (3, "2024-01", 3.0), (4, None, 4.0)]
+
+
+def test_training_shards_write_zstd(spark, tmp_path):
+    """RUNTIME_CONF makes Zstd the codec of every parquet file the
+    engine writes, training shards included."""
+    from mapping_timeseries_spark.sources.writers import write_training_shards
+
+    df = spark.createDataFrame(
+        [(i, f"doc text {i}") for i in range(200)], "doc_id long, text string"
+    )
+    path = str(tmp_path / "shards")
+    write_training_shards(df, path, "doc_id", n_shards=4)
+    assert parquet_codecs(path) == {"ZSTD"}
+
+
+def test_merge_into_snappy_sink_reads_back_mixed_codecs(spark, tmp_path):
+    """A sink written before the Zstd default (Snappy files) takes a
+    merge_into_partitioned upsert: the rewritten and new partitions come
+    out Zstd, the untouched one stays Snappy, and read_incremental over
+    the mixed table returns exactly the upsert."""
+    path = str(tmp_path / "snappy_sink")
+    target_rows = [(i, f"2024-0{i % 3 + 1}", float(i)) for i in range(30)]
+    target = spark.createDataFrame(target_rows, "id long, month string, v double")
+    target.write.option("compression", "snappy").partitionBy("month").parquet(path)
+    assert parquet_codecs(path) == {"SNAPPY"}
+    source_rows = [(1, "2024-02", 999.0), (100, "2024-04", 4.0)]
+    source = spark.createDataFrame(source_rows, "id long, month string, v double")
+    merge_into_partitioned(spark, path, source, keys=["id", "month"],
+                           partition_col="month")
+    assert parquet_codecs(os.path.join(path, "month=2024-01")) == {"SNAPPY"}
+    for month in ("2024-02", "2024-04"):
+        assert parquet_codecs(os.path.join(path, f"month={month}")) == {"ZSTD"}
+    want = {(i, m): v for i, m, v in target_rows}
+    want.update({(i, m): v for i, m, v in source_rows})
+    got = read_incremental(spark, path, "month", "2024-01", "2024-04")
+    assert sorted((r["id"], r["month"], r["v"]) for r in got.collect()) == sorted(
+        (i, m, v) for (i, m), v in want.items()
+    )
+
+
+def test_get_spark_extra_conf_overrides_codec(spark, tmp_path):
+    """The Zstd default is Spark's own conf, not an engine knob:
+    get_spark(extra_conf=...) overrides it like any other setting."""
+    assert spark.conf.get(CODEC) == "zstd"
+    try:
+        session = get_spark(
+            "tests", master="local[4]", shuffle_partitions=4,
+            extra_conf={CODEC: "snappy"},
+        )
+        assert session.conf.get(CODEC) == "snappy"
+        path = str(tmp_path / "snappy")
+        write_partitioned(_spread_months(session, 600), path, "month")
+        assert parquet_codecs(path) == {"SNAPPY"}
+    finally:
+        ensure_runtime_conf(spark)
+    assert spark.conf.get(CODEC) == "zstd"
