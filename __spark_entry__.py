@@ -3103,7 +3103,7 @@ lexical AS (
 -- DEFAULT clustering consumer uses star candidates (linear on hot
 -- cliques); this recomputes the whole star pipeline — star candidate
 -- edges, exact-Jaccard verify, recursive-CTE components — independently
--- of the Spark label-propagation path, so star clusters are cross-engine
+-- of the Spark connected-components operator, so star clusters are cross-engine
 -- gated and the star-vs-pairs agreement flag is pinned per document
 star_pairs AS (
   {_build_minhash_oracle(mode="star")}

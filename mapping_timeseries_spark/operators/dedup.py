@@ -33,12 +33,12 @@ scope):
 
 Materialize the result inside the scope: the pins back the lazy result,
 so consuming it after exit recomputes from scratch (correct, just slow)
-— EXCEPT results backed by iterative localCheckpoints (dedup_clusters /
-dedup_clusters_star), whose lineage is truncated: consuming those after
-exit raises instead of recomputing (the checkpoint blocks were the only
-copy). Same consume-inside contract, louder failure mode. Superseded
-per-round checkpoints are released eagerly inside the loops regardless
-of any scope (r8).
+— EXCEPT results backed by iterative localCheckpoints (dedup_clusters),
+whose lineage is truncated: consuming those after exit raises instead
+of recomputing (the checkpoint blocks were the only copy). Same
+consume-inside contract, louder failure mode. Superseded per-round
+checkpoints are released eagerly inside the loop regardless of any
+scope, so a long run never holds every round's edge set at once.
 """
 
 from __future__ import annotations
@@ -76,7 +76,6 @@ __all__ = [
     "simhash_fingerprints",
     "simhash_near_dups",
     "dedup_clusters",
-    "dedup_clusters_star",
     "dup_span_stats",
     "dup_spans",
     "remove_dup_spans",
@@ -96,8 +95,8 @@ _CACHE_SCOPES: list[list[DataFrame]] = []
 def scoped_pin(df: DataFrame) -> DataFrame:
     """persist() + register with the innermost dedup_cache_scope (no-op
     registration outside any scope — the documented bench/clearCache
-    contract applies there). PUBLIC (ADVICE r10 #3): entry queries that
-    pin reused frames must use this name, and their callers must consume
+    contract applies there). Public so that entry queries that
+    pin reused frames go through the scope too: they must use this name, and their callers must consume
     inside dedup_cache_scope() (or clearCache between actions, as the
     bench does) or the persisted frames live for the session."""
     df = df.persist()
@@ -207,7 +206,7 @@ def _verify_jaccard(
     )
 
 
-#: Auto narrow_verify threshold (r13, VERDICT r12 #3): narrow the
+#: Auto narrow_verify threshold: narrow the
 #: verifier iff the distinct candidate participants are at most this
 #: fraction of the shingled corpus. Rationale for 0.25: narrowing pays
 #: one extra map-side pass of the tokenize+shingle pipeline and one
@@ -253,7 +252,7 @@ def narrow_sets_to_participants(
     scale: the corpus-sized set frame is filtered MAP-SIDE (broadcast
     semi-join, no Exchange of the big side) before the verify joins, so
     their shuffles move |participants| rows instead of |corpus| rows.
-    The r12 x10000 gate measured the difference directly: at 50M docs
+    The x10000 composed gate measured the difference directly: at 50M docs
     the un-narrowed verify must shuffle all 50M string-shingle rows
     (tens of GB), while star-candidate participants are ~1% of the
     corpus. Boundary: the broadcast carries the distinct participant-id
@@ -276,7 +275,7 @@ def _verify_jaccard_hashed(
 
     Two deliberate scale choices vs :func:`_verify_jaccard` (the
     string-array form), driven by the measured 10x super-linearity
-    (artifacts/ppjoin_growth.json r6: candidates x10 but wall x19 —
+    (artifacts/ppjoin_growth.json: candidates x10 but wall x19 —
     the verification stage spilled):
 
     - rows carry ``array<long>`` (8 B/shingle) instead of string
@@ -324,12 +323,12 @@ def _ngram_hsets(
 ) -> DataFrame:
     """PPJoin stage 1: per-doc SORTED arrays of 64-bit shingle hashes
     ``(doc_id, n_shingles, __hset)`` — the compact frame both the
-    posting explode and the exact verifier read. Split out (r9, VERDICT
-    r8 #2) so the 100x staging harness (tools/text_100x_gate.py) can
+    posting explode and the exact verifier read. Split out so the
+    100x staging harness (tools/text_100x_gate.py) can
     checkpoint each stage to parquet once instead of re-paying the
     shingle pass per bucketed action.
 
-    ``keep_cols`` (r13): extra doc columns carried through unchanged —
+    ``keep_cols``: extra doc columns carried through unchanged —
     lets one shared hsets pass serve consumers that partition the
     corpus by a metadata column (q_ngram_jaccard splits on ``source``
     for the decontamination half) without a corpus-sized join to
@@ -494,7 +493,7 @@ def ngram_jaccard_pairs(
     (:func:`_verify_jaccard_hashed`). ``threshold`` must lie in (0, 1]:
     the prefix bound ``|A| - ceil(t*|A|) + 1`` goes non-positive for
     t > 1 and F.slice raises at runtime deep inside the plan, so the
-    contract is enforced here at build time (ADVICE r8 #2).
+    contract is enforced here at build time.
 
     The ENTIRE pipeline — df counting, prefix ordering, candidate join,
     verification — runs on xxhash64(shingle) rather than shingle
@@ -506,12 +505,11 @@ def ngram_jaccard_pairs(
     the DuckDB oracle stays the naive string formulation and the
     registry gate hash-compares against it.
 
-    Candidate-stage shape (r8, VERDICT r7 #3 — this stage was 93% of
-    the 10x wall): the per-doc hash set is computed MAP-SIDE as
+    Candidate-stage shape (this stage was 93% of the 10x wall when it
+    pinned string arrays): the per-doc hash set is computed MAP-SIDE as
     ``array_sort(transform(shingles, xxhash64))`` and pinned once —
     both the posting explode and the verification arrays read from it,
-    where r7 pinned the string arrays and re-ran explode+hash+regroup
-    twice. Prefix ranking is a groupBy(doc_id) that collect_lists the
+    so explode+hash+regroup runs once rather than once per reader. Prefix ranking is a groupBy(doc_id) that collect_lists the
     (df, hash) pairs, array_sorts the per-doc list and SLICEs it to the
     prefix bound before re-exploding — same (df asc, hash asc) global
     order as the old row_number window, but the sort is per-doc over
@@ -529,11 +527,11 @@ def ngram_jaccard_pairs(
     # cache was measured ~2.4x slower end-to-end than re-running the
     # (cheap) explode against the cached arrays (interleaved A/B at
     # sf0.1: 9.0 s vs 3.7 s min-of-4).
-    # ``hsets`` (r13): a caller that also runs decontamination over the
+    # ``hsets``: a caller that also runs decontamination over the
     # same corpus passes ONE shared (already-pinned) hsets frame so the
     # tokenize+shingle+hash pass runs once for both operators; the
     # caller then owns the pin's lifetime.
-    # NOTE (r13, measured and REJECTED): a cold pin here is materialized
+    # NOTE (measured and REJECTED): a cold pin here is materialized
     # concurrently by every consumer's first stage (profiled at sf0.1:
     # one cold action ran the tokenize+shingle+sort pass up to SIX times
     # in parallel, ~28 s of duplicated executor time). Routing all
@@ -555,8 +553,7 @@ def ngram_jaccard_pairs(
         # sub-quadratic candidate growth. Not a query surface.
         return cand
     # verification reads the SAME pinned per-doc hash arrays the prefix
-    # stage exploded — no re-derivation pass (r7 re-ran
-    # explode+hash+regroup here)
+    # stage exploded — no second explode+hash+regroup pass
     return _verify_jaccard_hashed(cand, hsets, threshold)
 
 
@@ -593,7 +590,7 @@ def _bloom_probe_sql(
     the ``words_col`` array<bigint> bitmap — same double-hashing as
     :func:`_bloom_words`. Built as a SQL string because PySpark's
     shiftright/getbit wrappers only take literal shift positions, while
-    the SQL forms accept full expressions (probed in SCALE.md r7).
+    the SQL forms accept full expressions (probe recorded in SCALE.md).
     ``m`` may be an int literal or the NAME of a bigint column carrying
     the bitmap size (the lazy distributed build broadcasts m alongside
     the words array on the same one-row frame)."""
@@ -700,7 +697,7 @@ def ngram_decontaminate(
     Holdout docs with fewer than ``n`` tokens have no shingles and cannot
     be flagged (they carry no matchable content).
 
-    Bloom pre-filter (r7, VERDICT r6 #6): before the exact broadcast
+    Bloom pre-filter: before the exact broadcast
     join, train postings are screened against a Bloom bitmap of the
     holdout's 60-bit shingle hashes (pure getbit/shiftright expressions
     over one broadcast array<bigint> row — Spark 4.1 does not register
@@ -716,7 +713,7 @@ def ngram_decontaminate(
     web-scale corpus shares far less vocabulary and filters
     correspondingly harder. ``bloom_bits_per_key=None`` disables it.
 
-    The bitmap is built LAZILY INSIDE THE PLAN (r8, ADVICE r7): probe
+    The bitmap is built LAZILY INSIDE THE PLAN: probe
     indices explode per holdout hash, a ``bit_or`` aggregation ors them
     into 64-bit words, and ``transform(sequence(...))`` densifies the
     word map into the broadcast array — bitwise identical to the old
@@ -735,7 +732,7 @@ def ngram_decontaminate(
     Output: (train_doc, holdout_doc, shared_ngrams, holdout_ngrams,
     overlap) for pairs with overlap >= min_overlap.
     """
-    # r8: the join key, broadcast relation and Bloom all run on
+    # the join key, broadcast relation and Bloom all run on
     # xxhash64(shingle) rather than shingle strings — the broadcast
     # carries 8-byte longs (~2-3x smaller than ~15-char grams), the
     # corpus-side probe hashes with the JVM-native xxhash64 instead of
@@ -745,7 +742,7 @@ def ngram_decontaminate(
     # shared_ngrams by 1 with probability ~V^2/2^65 — the DuckDB oracle
     # stays the exact string formulation and the registry gate
     # hash-compares against it.
-    # r13 (guide §1.2 "don't compute things twice"): callers that have
+    # don't compute things twice: callers that have
     # already paid the shingle pass (q_ngram_jaccard shares the PPJoin
     # half's pinned hsets) pass ``*_hsets`` frames in `_ngram_hsets`
     # shape; shingles are DISTINCT per doc (word_shingles_from_tokens
@@ -837,7 +834,7 @@ def _band_frame(
         sig = minhash_signature(F.col("shingles"), num_hashes)
 
         def bucket_key(band: int):
-            # xxhash64, NOT F.hash (r11): F.hash is 32-bit Murmur3, and
+            # xxhash64, NOT F.hash: F.hash is 32-bit Murmur3, and
             # the bucket-key space saturates by the birthday bound —
             # measured at the x10000 gate (50M docs): C(50M,2)*8/2^32
             # ~= 2.3M spurious candidates predicted, +2.1M observed
@@ -883,8 +880,8 @@ def _lsh_candidates(banded: DataFrame, mode: str = "pairs") -> DataFrame:
     they SURVIVE exact dedup) emits ~k²/2 candidates per band.
     k = 10⁶ boilerplate pages ⇒ 5·10¹¹ pairs ⇒ dead job at 100 TB.
 
-    ``mode="star"`` — the clustering-consumer candidate set (VERDICT r8
-    #1): within each (band, bucket), pair every member with the bucket
+    ``mode="star"`` — the clustering-consumer candidate set: within
+    each (band, bucket), pair every member with the bucket
     MINIMUM doc_id only. Candidates are bounded by |banded| = docs ×
     bands — exactly linear regardless of bucket skew — and every emitted
     edge still goes through the exact-Jaccard verifier, so no false
@@ -980,7 +977,7 @@ def minhash_lsh_pairs(
     recall semantics and :func:`dedup_clusters` / the corpus pipeline
     for the consumer wiring.
 
-    ``narrow_verify`` (r12; auto since r13, VERDICT r12 #3): restrict
+    ``narrow_verify``: restrict
     the verifier's shingle frame to the candidate participants via
     :func:`narrow_sets_to_participants` (broadcast semi-join) before
     the two verify joins — row-identical output (pytest). Two scale
@@ -1154,7 +1151,7 @@ def build_minhash_index(
         "bands": bands,
         "portable": portable,
         "text_col": text_col,
-        # bucket-key GENERATION (r11): the non-portable bucket hash
+        # bucket-key GENERATION: the non-portable bucket hash
         # changed 32-bit F.hash -> xxhash64 (saturation fix). Bucket
         # keys from different generations never collide, which a join
         # reads as "no duplicates" rather than an error — so the
@@ -1178,7 +1175,7 @@ def load_minhash_index(spark, path: str):
         )
     with open(meta_path) as f:
         meta = json.load(f)
-    # Non-portable bucket keys changed generation in r11 (32-bit F.hash
+    # Non-portable bucket keys changed generation once (32-bit F.hash
     # -> xxhash64): an index banded under the old generation would join
     # with ZERO candidates against newly-banded batches — silent
     # missed-duplicate ingestion, not an error. Refuse to load it.
@@ -1298,7 +1295,7 @@ def minhash_dedup_stream(
     watermark_col: str | None = None,
     watermark_delay: str = "1 hour",
 ) -> DataFrame:
-    """STREAMING near-dup detection against a persisted LSH index (r7):
+    """STREAMING near-dup detection against a persisted LSH index:
     for a Structured Streaming source of documents, emit verified pairs
     (doc_a < doc_b, jaccard) where the stream doc near-dups an INDEXED
     document — the continuous-ingestion gatekeeper ("reject the
@@ -1420,8 +1417,8 @@ def _band_frame_carrying(
         sig = minhash_signature(F.col("shingles"), num_hashes)
 
         def bucket_key(band: int):
-            # xxhash64 in lockstep with _band_frame (r11 32-bit
-            # saturation fix there) — the incremental new-vs-index join
+            # xxhash64 in lockstep with _band_frame (see its 32-bit
+            # saturation note) — the incremental new-vs-index join
             # requires identical band keys on both paths
             return F.xxhash64(
                 *[
@@ -1489,9 +1486,9 @@ def append_minhash_index(new_docs: DataFrame, path: str) -> None:
     spark = new_docs.sparkSession
     _, index_shingles, meta = load_minhash_index(spark, path)
     # pinned ONCE: the shingle pass feeds the clash check, the shingles
-    # write AND the band write. r12 (index_append_gate at 5M docs): the
-    # previous form wrote the batch, then RE-READ the whole shingles
-    # parquet and semi-joined it back down to the batch ids — an
+    # write AND the band write. Measured by index_append_gate at 5M
+    # docs: writing the batch, then RE-READING the whole shingles
+    # parquet and semi-joining it back down to the batch ids — an
     # O(index) scan+shuffle that made a 10% append 2.7x SLOWER than a
     # full rebuild (247 s vs 93 s); persist() gets the same
     # compute-tokenize-once guarantee at O(batch) cost (post-fix walls
@@ -1500,7 +1497,7 @@ def append_minhash_index(new_docs: DataFrame, path: str) -> None:
         F.col("n_shingles") > 0
     ).persist()
     try:
-        # no broadcast hint on the clash probe (r12 review): the batch
+        # no broadcast hint on the clash probe: the batch
         # id set has no size bound — a 10% batch of a 1B-doc index is
         # ~100M ids, past the broadcast cap — and the un-hinted
         # semi-join of two bare doc_id columns (8 B/row) is size-safe
@@ -1614,109 +1611,6 @@ def simhash_near_dups(
     )
 
 
-def dedup_clusters(
-    docs: DataFrame,
-    pairs: DataFrame,
-    doc_id_col: str = "doc_id",
-    max_iters: int = 25,
-) -> DataFrame:
-    """Connected components over near-duplicate pairs: the step a dedup
-    pipeline ends with — collapse pairwise matches (from any of the
-    pair-producing operators above) into clusters and pick one canonical
-    keeper per cluster.
-
-    Output: ``(doc_id, cluster_id, is_keeper:int)`` for EVERY document in
-    ``docs`` (unmatched docs are their own singleton cluster);
-    ``cluster_id`` is the minimum doc_id in the component, keeper =
-    (doc_id == cluster_id) — deterministic, so the whole operator is
-    oracle-checkable against a recursive-CTE twin.
-
-    Scale design: iterative min-label propagation over the symmetrized
-    pair graph — per iteration ONE aggregation shuffle (neighbor-min) and
-    one label join; converges in O(component diameter) rounds, and
-    near-dup components are shallow (mutual near-copies), so 2-4 rounds in
-    practice with ``max_iters`` as the safety bound. The per-round
-    convergence probe reads a single-row aggregate; iterative algorithms
-    are the documented exception to the no-driver-action rule (same as
-    ivf_refine_centroids' Lloyd loop). For deep/chain-shaped components
-    use :func:`dedup_clusters_star` — same output contract, O(log n)
-    rounds independent of diameter.
-    """
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    edges = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    labels = (
-        docs.select(F.col(doc_id_col).alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iters):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        # localCheckpoint (not persist): each round's plan would otherwise
-        # NEST the previous round's joins — lineage depth grows linearly
-        # and analysis/codegen cost superlinearly (measured: driver OOM at
-        # ~11 rounds on a path graph). Checkpointing truncates the lineage
-        # so every round plans against materialized partitions. On a
-        # cluster with flaky executors use reliable checkpoint()
-        # (setCheckpointDir) — same shape, storage-backed.
-        new_labels = (
-            labels.join(nbr_min, labels.id == nbr_min.src, "left")
-            .select(
-                F.col("id"),
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", "label")
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.id") == F.col("o.id"))
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        # r8: the superseded round's checkpoint blocks are dead the
-        # moment new_labels is materialized AND compared — release them
-        # eagerly instead of letting O(rounds) checkpoint RDDs sit in
-        # executor storage until driver GC (a long CC run on a big
-        # graph otherwise holds every intermediate labelling at once)
-        _release_checkpoint(labels)
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # returning truncated propagation would silently split one true
-        # component into several clusters (and several keepers)
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iters} rounds — a "
-            "component's diameter exceeds max_iters; raise max_iters or "
-            "switch to large-star/small-star for deep graphs"
-        )
-    # edges' checkpoint only feeds the loop; the returned frame reads
-    # labels alone. The FINAL labels checkpoint backs the result — it
-    # registers with any active dedup_cache_scope (note on the scope:
-    # a checkpointed result consumed AFTER scope exit errors rather
-    # than recomputes, because unpersisting a localCheckpoint discards
-    # the only copy — same consume-inside contract, louder failure).
-    _release_checkpoint(edges)
-    if _CACHE_SCOPES:
-        _CACHE_SCOPES[-1].append(labels)
-    return labels.select(
-        F.col("id").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-        (F.col("id") == F.col("label")).cast("int").alias("is_keeper"),
-    )
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round: every neighbor of u LARGER than u re-hangs
     onto min(N(u) ∪ {u}). Input/output: directed edge list (src, dst)
@@ -1737,7 +1631,8 @@ def _large_star(edges: DataFrame) -> DataFrame:
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """One small-star round: orient each edge max→min, then u and all its
-    ≤-neighbors re-hang onto the minimum."""
+    ≤-neighbors re-hang onto the minimum. Every output edge has
+    src > dst."""
     e = edges.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     ).distinct()
@@ -1751,69 +1646,110 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def dedup_clusters_star(
+def _is_star_forest(edges: DataFrame) -> bool:
+    """One action: True when no src has two out-edges and no dst is
+    itself a src, i.e. every component of the max→min oriented edge set
+    is a star hung on its minimum."""
+    multi = edges.groupBy("src").count().where(F.col("count") > 1).select("src")
+    chained = edges.join(
+        edges.select(F.col("src").alias("dst")), "dst", "left_semi"
+    ).select("src")
+    return multi.unionByName(chained).limit(1).count() == 0
+
+
+def dedup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     doc_id_col: str = "doc_id",
     max_rounds: int = 20,
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the deep-graph twin of :func:`dedup_clusters`.
+    """Connected components over near-duplicate pairs: the step a dedup
+    pipeline ends with — collapse pairwise matches (from any of the
+    pair-producing operators above) into clusters and pick one canonical
+    keeper per cluster.
 
-    Min-label propagation converges in O(component diameter) rounds:
-    right for near-dup graphs (mutual near-copies, diameter 2-4), hopeless
-    for chain-shaped components (transcription chains, version histories —
-    a 1000-doc chain is 1000 rounds). Star rounds contract whole
-    subtrees at once and converge in O(log n) rounds INDEPENDENT of
-    diameter; each round is the same two primitives as propagation (one
-    min-aggregate, one join), so the per-round cost is identical and the
-    round count is the only difference. Same output contract as
-    dedup_clusters: (doc_id, cluster_id = component-min, is_keeper), so
-    the two are drop-in interchangeable (asserted equal in pytest).
+    Output: ``(doc_id, cluster_id, is_keeper:int)`` for EVERY document in
+    ``docs`` (unmatched docs are their own singleton cluster);
+    ``cluster_id`` is the minimum doc_id in the component, keeper =
+    (doc_id == cluster_id) — deterministic, so the whole operator is
+    oracle-checkable against a recursive-CTE twin.
 
-    Convergence: the edge set is a fixed point of large∘small — checked
-    with a 1-row anti-join probe per round (the documented iterative
-    exception); non-convergence raises, never returns a split component.
+    Rounds: alternating large-star / small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14). Each round
+    is two min-aggregates and two joins over the edge list and contracts
+    whole subtrees at once, so the round count is O(log n) whatever the
+    component diameter: one round for a clique or a mutual near-copy
+    group, seven for a 120-node chain. Min-label propagation would need
+    one round per unit of diameter, which a chain of version histories
+    or transcriptions exhausts.
+
+    Convergence probe: one action per round on the round's own
+    checkpoint — no src with two out-edges, and no dst that is itself a
+    src. Small-star orients every edge from the larger id to the
+    smaller, so that state means every component is a star whose centre
+    is the component minimum: exactly what the final ``roots`` select
+    reads. Both halves are needed: the path 2–5–6–9–3 leaves
+    {5→3, 5→2, 6→2, 9→3} after one round, which has no chained edge but
+    is not yet one star. Any edge set that is not star-form changes in the
+    next large-star round, so the probe stops no later than a
+    fixed-point test would, and it never compares with the previous
+    round, so that round's checkpoint is released as soon as the new
+    one is materialized.
+
+    Bound: when ``max_rounds`` rounds end without star form, the call
+    raises ``RuntimeError`` — a truncated run would split one true
+    component into several clusters and keepers. On that path, and when
+    a Spark action inside the loop raises, the live checkpoint is
+    released before the exception propagates.
     """
     # checkpoint the DEDUPLICATED DIRECTED pairs only: every round
     # (including the first) builds the symmetric closure itself, so a
     # pre-loop symmetrize+distinct would pay an extra full shuffle over
-    # the largest frame just to have round 1 re-symmetrize its output
+    # the largest frame just to have round 1 re-symmetrize its output.
+    # localCheckpoint (not persist): each round's plan would otherwise
+    # nest the previous round's joins, and analysis/codegen cost grows
+    # superlinearly with that depth (driver OOM at ~11 rounds on a path
+    # graph). On a cluster with flaky executors use reliable
+    # checkpoint() (setCheckpointDir) — same shape, storage-backed.
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
-        # large-star consumes the symmetric view; its output is directed
-        ls = _large_star(
-            edges.unionByName(
-                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            ).distinct()
-        )
-        new_edges = _small_star(ls).localCheckpoint(eager=True)
-        changed = (
-            new_edges.exceptAll(edges).limit(1).count()
-            + edges.exceptAll(new_edges).limit(1).count()
-        )
-        # release the superseded round's checkpoint (r8 — same eager
-        # cleanup as dedup_clusters: dead the moment the convergence
-        # probe has compared against it)
+    try:
+        for _ in range(max_rounds):
+            # large-star consumes the symmetric view; its output is directed
+            ls = _large_star(
+                edges.unionByName(
+                    edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+                ).distinct()
+            )
+            new_edges = _small_star(ls).localCheckpoint(eager=True)
+            # the probe reads only the new round, so the superseded
+            # checkpoint is dead once the new one is materialized;
+            # release it eagerly instead of holding O(rounds) edge sets
+            # in executor storage until driver GC
+            _release_checkpoint(edges)
+            edges = new_edges
+            if _is_star_forest(edges):
+                break
+        else:
+            raise RuntimeError(
+                f"dedup_clusters did not converge in {max_rounds} rounds; "
+                "raise max_rounds"
+            )
+    except BaseException:
         _release_checkpoint(edges)
-        edges = new_edges
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"dedup_clusters_star did not converge in {max_rounds} rounds"
-        )
-    # the FINAL edges checkpoint backs the result — scope-register it
-    # (consume-inside contract; see dedup_clusters note)
+        raise
+    # the FINAL edges checkpoint backs the result — it registers with
+    # any active dedup_cache_scope (a checkpointed result consumed AFTER
+    # scope exit errors rather than recomputes, because releasing a
+    # localCheckpoint discards the only copy — same consume-inside
+    # contract, louder failure)
     if _CACHE_SCOPES:
         _CACHE_SCOPES[-1].append(edges)
-    # fixed point is a star per component: src -> component-min
+    # star form: src -> component minimum
     roots = edges.select(
         F.col("src").alias("id"), F.col("dst").alias("label")
     )
@@ -1861,7 +1797,7 @@ def _dup_spans_from_toked(
     # codegen'd slice+array_join (the gopher_repetition pattern) — a
     # transform(sequence, i -> element_at(...)) array under explode
     # re-evaluates per output row, O(grams²) per doc (same finding as
-    # word_shingles_from_tokens r8).
+    # word_shingles_from_tokens).
     positions = F.when(
         F.size("__toks") >= k, F.sequence(F.lit(0), F.size("__toks") - k)
     ).otherwise(F.array().cast("array<int>"))
@@ -2063,7 +1999,7 @@ def line_dedup(
     whole hot partitions. Reconstruction is one groupBy(doc_id) with an
     array_sort — the doc's own lines, bounded by doc size.
 
-    Hash collisions do NOT cause false drops (ADVICE r6): dedup
+    Hash collisions do NOT cause false drops: dedup
     decisions are verified on the actual line string in a SECOND
     aggregation restricted to lines whose hash count > 1 — two distinct
     lines colliding in the 60-bit space each get a string-level count

@@ -720,11 +720,11 @@ def semantic_dedup(
     partial-distance prefilter before the full dot
     (``cos >= t  <=>  ||a-b||^2 <= 2-2t`` on unit vectors — same bound
     and slack as embedding_near_dups). Grouping is
-    :func:`~.dedup.dedup_clusters_star` — O(log n) rounds independent
-    of component diameter.
+    :func:`~.dedup.dedup_clusters` (large-star/small-star) — O(log n)
+    rounds independent of component diameter.
     """
     from ..sources.readers import ensure_parallel as _ensure_parallel
-    from .dedup import dedup_clusters_star
+    from .dedup import dedup_clusters
 
     if nlist == "auto":
         import math
@@ -768,7 +768,7 @@ def semantic_dedup(
             F.col("a.vec_id").alias("doc_a"), F.col("b.vec_id").alias("doc_b")
         )
     )
-    groups = dedup_clusters_star(
+    groups = dedup_clusters(
         unit.select("vec_id"), edges, doc_id_col="vec_id"
     ).select(
         F.col("doc_id").alias("vec_id"), F.col("cluster_id").alias("group_id")

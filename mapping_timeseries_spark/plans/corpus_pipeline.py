@@ -15,8 +15,9 @@ rows passing every flag are written. Per-stage work:
 
 - exact:   one window over sha2(text) — keeper = min doc_id per digest
            (shuffles 32-byte digests).
-- neardup: MinHash band join + min-label propagation
-           (operators.dedup.minhash_lsh_pairs / dedup_clusters).
+- neardup: MinHash band join + large-star/small-star connected
+           components (operators.dedup.minhash_lsh_pairs /
+           dedup_clusters).
 - clean:   broadcast inverted-index containment join vs the holdout
            suite (operators.dedup.ngram_decontaminate) — the corpus side
            never shuffles.

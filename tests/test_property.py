@@ -90,28 +90,38 @@ def _union_find_components(n_docs, pairs):
 
 def test_dedup_clusters_fuzz_vs_union_find(spark):
     """Random pair graphs (dense, sparse, self-loop-free) in one Spark
-    pass each vs a pure-python union-find oracle."""
+    pass each vs a pure-python union-find oracle, plus an 80-node sparse
+    graph of mixed component shapes, the edge set {(7,5), (5,2), (7,1)},
+    and the path 2-5-6-9-3, which after one star round has no chained
+    edge but one src with two out-edges (a probe that checked only
+    chains would stop there with a split component)."""
     from mapping_timeseries_spark.operators.dedup import dedup_clusters
 
     rng = np.random.default_rng(43)
-    for trial, (n_docs, n_pairs) in enumerate([(30, 50), (40, 12), (25, 0)]):
+    graphs = []
+    for n_docs, n_pairs in [(30, 50), (40, 12), (25, 0)]:
         pairs = set()
         while len(pairs) < n_pairs:
             a, b = rng.integers(0, n_docs, 2)
             if a != b:
                 pairs.add((int(min(a, b)), int(max(a, b))))
+        graphs.append((n_docs, pairs))
+    mixed = np.random.default_rng(53).integers(0, 80, size=(60, 2))
+    graphs.append((80, {(int(a), int(b)) for a, b in mixed if a != b}))
+    graphs.append((8, {(7, 5), (5, 2), (7, 1)}))
+    graphs.append((10, {(2, 5), (5, 6), (6, 9), (3, 9)}))
+    for trial, (n_docs, pairs) in enumerate(graphs):
         docs = spark.createDataFrame([(i,) for i in range(n_docs)], "doc_id long")
         pdf = spark.createDataFrame(
             list(pairs) or [(0, 0)], "doc_a long, doc_b long"
         )
         if not pairs:  # empty-pairs edge: every doc its own cluster
             pdf = pdf.where("doc_a != doc_a")
-        got = {
-            r["doc_id"]: r["cluster_id"]
-            for r in dedup_clusters(docs, pdf).collect()
-        }
+        rows = dedup_clusters(docs, pdf).collect()
+        got = {r["doc_id"]: r["cluster_id"] for r in rows}
         want = _union_find_components(n_docs, pairs)
         assert got == want, (trial, got, want)
+        assert all(r["is_keeper"] == (r["doc_id"] == r["cluster_id"]) for r in rows)
 
 
 @settings(max_examples=120, deadline=None)

@@ -75,16 +75,14 @@ def _queries():
         # is stochastic — the gate proves convergence + linear cost at
         # 5M docs; membership/purity checks live in
         # tools/neardup_composed_gate.py.
-        from mapping_timeseries_spark.operators.dedup import (
-            dedup_clusters_star,
-        )
+        from mapping_timeseries_spark.operators.dedup import dedup_clusters
 
         ensure_runtime_conf(spark)
         docs = read_table(spark, sf_dir, "documents")
         pairs = minhash_lsh_pairs(
             docs, threshold=0.5, portable=False, mode="star"
         )
-        return dedup_clusters_star(docs, pairs)
+        return dedup_clusters(docs, pairs)
 
     # (fn, gate kind, build_timed): CC runs its convergence probes while
     # BUILDING, so its leg times construction inside the timed region

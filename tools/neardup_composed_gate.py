@@ -75,7 +75,7 @@ def _pipeline_frames(docs, threshold=THRESHOLD, narrow=False):
     (tools/lsh_stages — one definition for all three scale gates):
     returns (shingled, banded, star_edges_fn) where star_edges_fn
     closes over the pinned upstreams; CC runs on its result via
-    dedup_clusters_star at the call site.
+    dedup_clusters at the call site.
 
     ``narrow=True`` (r12, VERDICT r11 #4 — the x10000 run): the shingle
     frame is NOT pinned corpus-wide; the verifier gets the
@@ -201,7 +201,7 @@ def main() -> int:
         sh1, banded1, star1 = _pipeline_frames(docs_1x, narrow=narrow)
         edges_1x = star1()
         n_edges_1x = edges_1x.count()
-        clusters_1x = D.dedup_clusters_star(docs_1x, edges_1x)
+        clusters_1x = D.dedup_clusters(docs_1x, edges_1x)
         ref_rows = sorted(
             (r["doc_id"], r["cluster_id"], r["is_keeper"])
             for r in clusters_1x.collect()
@@ -242,7 +242,7 @@ def main() -> int:
 
         m = ScratchMeter(spark).start()
         t0 = time.monotonic()
-        clusters = D.dedup_clusters_star(docs_nx, edges)
+        clusters = D.dedup_clusters(docs_nx, edges)
         cstats = clusters.groupBy("cluster_id").agg(
             F.count(F.lit(1)).alias("n"),
             F.countDistinct(
