@@ -1070,6 +1070,60 @@ def test_dedup_clusters_raises_on_non_convergence(spark):
     assert _persisted_rdd_ids(spark) == before
 
 
+def test_dedup_clusters_star_matches_propagation(spark):
+    """The star loop gives the labels min-label propagation gave:
+    cluster_id is the component minimum and the keeper is that doc, on a
+    random sparse graph with components of mixed shapes + singletons
+    (union-find ground truth)."""
+    from mapping_timeseries_spark.operators.dedup import dedup_clusters
+
+    rng = np.random.default_rng(53)
+    n = 80
+    edges = [
+        (int(a), int(b))
+        for a, b in rng.integers(0, n, size=(60, 2))
+        if a != b
+    ]
+    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+
+    # union-find ground truth
+    parent = list(range(n))
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+    for a, b in edges:
+        parent[find(a)] = find(b)
+    want = {i: min(j for j in range(n) if find(j) == find(i)) for i in range(n)}
+
+    got = {
+        r["doc_id"]: (r["cluster_id"], r["is_keeper"])
+        for r in dedup_clusters(docs, pairs).collect()
+    }
+    assert got == {i: (c, int(i == c)) for i, c in want.items()}
+
+
+def test_dedup_clusters_star_handles_deep_chain(spark):
+    """A 120-node path graph (diameter 119) converges within 12 rounds,
+    far fewer than the one round per unit of diameter min-label
+    propagation needed; a bound below the rounds it takes still raises."""
+    from mapping_timeseries_spark.operators.dedup import dedup_clusters
+
+    n = 120
+    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup_clusters(docs, pairs, max_rounds=2)
+    rows = dedup_clusters(docs, pairs, max_rounds=12).collect()
+    assert len(rows) == n
+    assert all(r["cluster_id"] == 0 for r in rows)
+    assert sum(r["is_keeper"] for r in rows) == 1
+
+
 #: Spark jobs one dedup_clusters call and the collect of its result may
 #: start on the clique fixture below (local[4], 4 shuffle partitions,
 #: AQE on). Measured 20 in one star round; under AQE each query stage of
