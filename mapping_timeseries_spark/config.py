@@ -44,8 +44,13 @@ class MappingConfig:
         value — a fixed repartition immediately before a groupBy is a
         redundant extra shuffle (SURVEY §4).
     cache_intermediate:
-        Cache the merged frame when it is consumed more than once
-        (auto mode); reference caches unconditionally (mapping_engine.py:77).
+        Gates ``engine.map_tables``' reuse exchanges only: a frame that
+        is consumed more than once (the canonical series; in auto mode
+        also the merged and correlation frames) is hash-partitioned once
+        on the entity key, so its consumers read one shuffle instead of
+        recomputing it. Nothing is cached in executor storage, and
+        ``run_pipeline`` does not read the flag. The reference caches
+        unconditionally (mapping_engine.py:77).
     broadcast_threshold:
         Reference-parity knob (mapping_engine.py:78 sets
         autoBroadcastJoinThreshold on the live session). This engine

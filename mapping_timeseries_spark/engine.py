@@ -66,7 +66,7 @@ def map_tables(
     if cfg.cache_intermediate and cfg.method != "dtw":
         # correlation/auto consume each canonical series twice: once
         # through the merged frame feeding the correlation grid, once as
-        # a side of the lag join. r13 (guide §2.4): the reuse point is
+        # a side of the lag join. The reuse point is
         # ONE hash exchange on the entity key, not a persist — a cold
         # persist is materialized CONCURRENTLY by every consumer's
         # first stage (duplicate upstream scans, "Block already exists"

@@ -11,7 +11,7 @@ DataFrame ops:
     ... explode(lags) ... GROUP BY cus_code, lag
     ... GROUP BY cus_code: max(struct(corr, -lag)) picks the winner
 
-(one linear plan — the r10 one-pass refactor replaced the earlier
+(one linear plan — a one-pass form replaced the earlier
 row_number window + self-join argmax; tests/test_scale_evidence.py
 asserts the plan shape so the two-pass form cannot silently return).
 
@@ -34,7 +34,7 @@ Semantics matched to the reference exactly:
 
 Scale notes
 -----------
-ONE shuffle and ONE pass for the whole computation (r10 shape, plan-
+ONE shuffle and ONE pass for the whole computation (plan-
 asserted): the lead window's exchange hash-partitions by cus_code; the
 exploded lag-grid groupBy(cus_code, lag) and the per-entity argmax
 groupBy(cus_code) — a lexicographic max(struct(corr, -lag)) with the
@@ -92,11 +92,11 @@ def lag_correlation_grid(merged: DataFrame, max_lag: int = 6) -> DataFrame:
     real pairs than corr itself saw (a bare ``count(rev)`` would
     overcount when the x side carries nulls).
 
-    Shape (r13, guide §2.3 "aggregate before you shuffle/explode"): the
+    Shape ("aggregate before you shuffle/explode"): the
     grid aggregates the UN-EXPLODED windowed frame — one ``corr(x,
     __rev_lag_j)`` + one pair count per lag as (max_lag+1) aggregate
     expression pairs over groupBy(entity) — and explodes the per-entity
-    7-struct array AFTER aggregation. The pre-r13 shape exploded every
+    7-struct array AFTER aggregation. The earlier shape exploded every
     merged row (max_lag+1)x BEFORE aggregating, pushing 7x the rows
     through the aggregation hash map (measured: the explode+agg stage
     was 8-11 s of executor time in every corr-family leg at sf0.1).
@@ -184,8 +184,8 @@ def corr_moment_state(
     it with :func:`merge_moment_states`, finish with
     :func:`corr_from_moments`.
 
-    Numerics (r10 — found by the first sf0.1 run of the cross-engine
-    state gate): raw DOUBLE moments suffer catastrophic cancellation in
+    Numerics (found by the first sf0.1 run of the cross-engine state
+    gate): raw DOUBLE moments suffer catastrophic cancellation in
     ``n*sxy - sx*sy`` / ``n*sxx - sx²`` whenever |corr| ≈ 1 or the
     series mean dwarfs its variance — a perfectly anti-correlated
     entity finished at -0.999985 from double moments where the grid's
@@ -204,8 +204,8 @@ def corr_moment_state(
     (decimal(18,0) multiplicands keep the product type at
     decimal(37,0), under Spark's 38-digit cap, so nothing silently
     loses precision). States merged together must share one scale.
-    STATE-FORMAT note: sums are decimal columns since r10 — a state
-    persisted by the pre-r10 double format fails the merge loudly
+    STATE-FORMAT note: sums are decimal columns — a state persisted by
+    the earlier double format fails the merge loudly
     (unionByName type mismatch); re-bootstrap with init_corr_state.
     """
     pairs = _aligned_pairs(merged, max_lag)
@@ -426,10 +426,10 @@ def best_lag_correlation(
     decimals with portable integer half-up arithmetic (requires
     ``mean_lattice_scale``) — see ``_lattice_mean_rounded``.
     """
-    # ONE linear pass over `merged` (r10; r13 shape): merged -> lead
+    # ONE linear pass over `merged`: merged -> lead
     # window -> ONE groupBy(entity) computing every lag's corr and pair
     # count as column aggregates over the UN-EXPLODED windowed frame
-    # (see lag_correlation_grid's r13 note — the old explode pushed 7x
+    # (see lag_correlation_grid's shape note — the old explode pushed 7x
     # the rows through the aggregation), plus num_months and the means
     # directly (the lag-0 pair stream IS the merged frame, so no lag==0
     # guards are needed any more). The per-lag argmax then happens

@@ -29,7 +29,7 @@ reference-style sequential recurrence and backtrack tie decisions land
 on the same side. An earlier min-plus prefix-scan formulation
 (``C[j] + running_min(entered - C)``) was ulp-inexact and broke the
 tie preference on symmetric series — equal-cost but different paths,
-first exposed at sf0.1 (r5 fix).
+first exposed by the sf0.1 cross-engine check, and replaced.
 
 Scale notes
 -----------

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .recommend import _range_offsets
+
 
 def _ordered_token_offsets(
     df: DataFrame,
@@ -59,28 +61,22 @@ def _ordered_token_offsets(
 
     The running total uses the two-phase pattern (range-partition by the
     order key → per-partition window cumsum → broadcast cumulative
-    partition offsets), NOT a global ``Window.orderBy`` — the latter
-    plans a single-partition WindowExec that moves the whole corpus
-    through one task. The ``localCheckpoint`` pins the sampled range
-    partitioning so the cumsum branch and the offsets branch see the
-    same ``__pid`` assignment (same reasoning as
-    ``recommend.avg_rank_distributed``).
+    partition offsets, ``recommend._range_offsets``), NOT a global
+    ``Window.orderBy`` — the latter plans a single-partition WindowExec
+    that moves the whole corpus through one task.
     """
     from ..functions.text import portable_hash64
 
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
     h = portable_hash64(
         F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string"))
     )
-    r = (
-        df.withColumn("__h", h)
-        .withColumn("__tok", F.col(token_col).cast("bigint"))
-        .repartitionByRange(num_partitions, F.col("__h"), F.col(key_col))
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    r, offsets = _range_offsets(
+        df.withColumn("__h", h).withColumn(
+            "__tok", F.col(token_col).cast("bigint")
+        ),
+        [F.col("__h"), F.col(key_col)],
+        F.sum("__tok"),
+        num_partitions,
     )
     w = (
         Window.partitionBy("__pid")
@@ -88,17 +84,6 @@ def _ordered_token_offsets(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     local = r.withColumn("__run", F.sum("__tok").over(w))
-    counts = r.groupBy("__pid").agg(F.sum("__tok").alias("__ptok"))
-    prior = counts.select(
-        F.col("__pid").alias("__ppid"), F.col("__ptok").alias("__pn")
-    )
-    offsets = (
-        counts.join(
-            F.broadcast(prior), F.col("__ppid") < F.col("__pid"), "left"
-        )
-        .groupBy("__pid")
-        .agg(F.coalesce(F.sum("__pn"), F.lit(0)).cast("bigint").alias("__off"))
-    )
     return (
         local.join(F.broadcast(offsets), "__pid")
         .withColumn("tok_end", (F.col("__off") + F.col("__run")).cast("bigint"))

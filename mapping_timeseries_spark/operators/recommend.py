@@ -10,7 +10,7 @@ seen.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .canonicalize import KEY
@@ -53,6 +53,61 @@ def compare_methods(corr_results: DataFrame, dtw_results: DataFrame) -> DataFram
     )
 
 
+def _range_offsets(
+    df: DataFrame,
+    order: list[Column],
+    weight: Column,
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Range partitions of ``df`` on ``order`` and each partition's
+    global offset: the two-phase skeleton of a distributed running total
+    (:func:`avg_rank_distributed`, ``packing._ordered_token_offsets``).
+
+    Returns ``(r, offsets)``. ``r`` is ``df`` range-partitioned into
+    ``num_partitions`` (default: the session's shuffle partitions) and
+    stamped with ``__pid``; ``offsets`` is ``(__pid, __off)``, where
+    ``__off`` is the sum of the aggregate ``weight`` over every lower
+    ``__pid`` (bigint, 0 for the first). Callers compute their local
+    running value per ``__pid`` window over ``r`` and add ``__off``.
+
+    ``r`` is an eager ``localCheckpoint``: it feeds both the caller's
+    local branch and the offsets branch, and without materialization
+    those two branches can re-execute the range exchange independently
+    (exchange reuse off, AQE replan, eviction). RangePartitioner
+    boundaries come from sampling, so the two evaluations could assign
+    different ``__pid``s and the offsets would be added to values from
+    a DIFFERENT partitioning: silently wrong totals. Checkpointing makes
+    ``__pid`` a fact, not a plan. The RDD is freed by the ContextCleaner
+    once the result goes out of scope.
+
+    The offsets are a triangular broadcast self-join over the
+    ``num_partitions``-row totals frame (P² pairs — trivial), not a
+    global window: a window would be a real single-partition WindowExec
+    (a foldable ``partitionBy(lit)`` is optimized away).
+    """
+    if num_partitions is None:
+        num_partitions = int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        )
+    r = (
+        df.repartitionByRange(num_partitions, *order)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+    totals = r.groupBy("__pid").agg(weight.alias("__n"))
+    prior = totals.select(
+        F.col("__pid").alias("__ppid"), F.col("__n").alias("__pn")
+    )
+    offsets = (
+        totals.join(
+            F.broadcast(prior), F.col("__ppid") < F.col("__pid"), "left"
+        )
+        .groupBy("__pid")
+        .agg(F.coalesce(F.sum("__pn"), F.lit(0)).cast("bigint").alias("__off"))
+    )
+    return r, offsets
+
+
 def avg_rank_distributed(
     df: DataFrame, col: str, out_col: str, num_partitions: int | None = None
 ) -> DataFrame:
@@ -69,51 +124,19 @@ def avg_rank_distributed(
        distinct keys), so tie groups never straddle partitions;
     2. rank + tie count inside each partition (window partitioned by
        ``spark_partition_id()`` — bounded by partition size);
-    3. global offset = cumulative partition row counts: a P-row aggregate
-       windowed over P rows and broadcast back.
+    3. global offset = cumulative row count of the lower partitions
+       (:func:`_range_offsets`), broadcast back.
 
     avg_rank = offset + local_min_rank + (ties-1)/2, identical values to
     the single-window formulation (engine-portable: exact half-integers).
     """
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    # localCheckpoint pins the range partitioning: the pid-stamped frame
-    # feeds BOTH the local-rank branch and the counts/offsets branch, and
-    # without materialization those two branches can re-execute the range
-    # exchange independently (exchange reuse off, AQE replan, eviction) —
-    # RangePartitioner boundaries come from sampling, so the two
-    # evaluations could assign different __pids and the offsets would be
-    # added to ranks from a DIFFERENT partitioning: silently wrong global
-    # ranks. Checkpointing makes __pid a fact, not a plan. (Eager: one
-    # small job on the pre-aggregated per-entity frame; the RDD is GC'd
-    # by the ContextCleaner when the result goes out of scope.)
-    r = (
-        df.repartitionByRange(num_partitions, F.col(col))
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    r, offsets = _range_offsets(
+        df, [F.col(col)], F.count(F.lit(1)), num_partitions
     )
     w_rank = Window.partitionBy("__pid").orderBy(col)
     w_ties = Window.partitionBy("__pid", col)
     local = r.withColumn("__lrank", F.rank().over(w_rank)).withColumn(
         "__ties", F.count(F.lit(1)).over(w_ties)
-    )
-    # cumulative offsets over <= num_partitions rows via a triangular
-    # self-join (P² pairs of a P-row frame — trivial), NOT a global
-    # window: a window would be a real single-partition WindowExec (a
-    # foldable partitionBy(lit) is optimized away), and this tiny frame
-    # doesn't need one
-    counts = r.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-    prior = counts.select(
-        F.col("__pid").alias("__ppid"), F.col("__n").alias("__pn")
-    )
-    offsets = (
-        counts.join(
-            F.broadcast(prior), F.col("__ppid") < F.col("__pid"), "left"
-        )
-        .groupBy("__pid")
-        .agg(F.coalesce(F.sum("__pn"), F.lit(0)).alias("__off"))
     )
     return (
         local.join(F.broadcast(offsets), "__pid")

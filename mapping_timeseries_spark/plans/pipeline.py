@@ -8,7 +8,8 @@ design:
   per metric;
 - segment routing computed once (operators/recommend.route_entities)
   instead of three filtered frames each forced with .count();
-- stats collected via ``observe`` on the one write, not extra counts;
+- QA runs once, on what the close wrote (the staged snapshot or the
+  sink read back), and its one collect also gives the mapping count;
 - results unioned by NAME (reference uses positional union,
   05_prod_dev.py:417-421 — a silent-corruption hazard the engine rejects).
 """
@@ -21,7 +22,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import MappingConfig
@@ -144,7 +145,15 @@ def run_pipeline(
     FAILED FIRST run published). When ``output_path`` is ALSO set, the
     partitioned mappings sink under it is gated by the same QA pass —
     the "readers never consume a QA-failed table" guarantee covers both
-    sinks, not just the version pointer.
+    sinks, not just the version pointer; that second sink is written
+    from the staged snapshot.
+
+    QA reads what the close wrote, never a pinned copy of the mapping:
+    the staged snapshot when ``versioned_root`` is set, else the
+    ``output_path`` mappings sink read back with the mapping's schema
+    (so an empty run still reads as zero rows), else, with no sink, the
+    lazy mapping frame itself, so a sinkless run is one action.
+    ``stats["total_mappings"]`` is QA's row count.
 
     Lineage cut: on both closes the entity-sized table the mapping
     build reads (the inline-trained model, or the routing table) is
@@ -219,6 +228,7 @@ def _run_pipeline_body(
     merged = merge_series(t1, t2)
 
     route_counts: dict[str, int] | None = None
+    entities = t1  # QA's coverage denominator
     if recommendations is None:
         # a caller-supplied model (stateful incremental: full-history
         # best lags finished from persisted moment state) replaces the
@@ -247,12 +257,14 @@ def _run_pipeline_body(
             KEY, "time1", "value1", "time2", "value2", "lag_offset", "method"
         )
     else:
-        # same cut as the inline close: the route counts below and the
-        # three routed consumers read the checkpoint instead of each
-        # recomputing the routing join
+        # same cut as the inline close: the route counts below, the
+        # three routed consumers and QA read the checkpoint instead of
+        # each recomputing the routing join. It holds exactly the
+        # distinct table1 entities, so QA counts them without a rescan.
         routed = route_entities(
             t1.select(KEY).distinct(), recommendations
         ).localCheckpoint(eager=True)
+        entities = routed
         # one tiny agg over the per-entity routed frame: the
         # manual_review bucket produces ZERO mapping rows by design, and
         # an unexplained coverage dip is the alternative to counting it
@@ -268,67 +280,54 @@ def _run_pipeline_body(
         "processed_at", F.current_timestamp()
     )
 
-    obs = Observation("pipeline")
-    mapped = mapped.observe(
-        obs, F.count(F.lit(1)).alias("total_mappings")
-    )
+    # QA reads what the close wrote: the staged snapshot, else the
+    # partitioned sink read back (the explicit schema lets an empty sink
+    # be read), else the lazy mapping itself. So the mapping is computed
+    # once, by the first sink, with no pin: a pin would hold a full copy
+    # of the output in executor storage.
+    spark = mapped.sparkSession
+    sink = os.path.join(output_path, "mappings") if output_path else None
+    if versioned_root:
+        from ..sources.versioned import (
+            publish_version,
+            read_versioned,
+            write_versioned,
+        )
 
-    # persist: the mapping frame feeds the sink AND qa_report — without
-    # the pin, QA re-executes the whole mapping computation (correlation
-    # windows/joins or the DTW mapInPandas) a second time after the
-    # write. Same cfg flag the engine facade honors.
-    if cfg.cache_intermediate:
-        mapped = mapped.persist()
+        # two-phase publish: STAGE the snapshot (pointer untouched), QA
+        # the staged data, publish only on pass — readers never see a
+        # QA-failed table, not even transiently, and a FIRST run that
+        # fails QA leaves the table unpublished instead of live
+        # (a publish-then-rollback flow has both holes)
+        written_version = write_versioned(
+            mapped, versioned_root, note=f"pipeline run {run_id}",
+            publish=False,
+        )
+        staged = read_versioned(spark, versioned_root, version=written_version)
+    elif sink:
+        write_partitioned(mapped, sink, "time1", cluster_by=(KEY, "time2"))
+        staged = spark.read.schema(mapped.schema).parquet(sink)
+    else:
+        staged = mapped
 
-    # released on every exit path: a failing sink write, qa_report or
-    # publish would otherwise leave the frame cached until the session
-    # dies
-    try:
-        written_version = None
-        if versioned_root:
-            from ..sources.versioned import publish_version, write_versioned
-
-            # two-phase publish: STAGE the snapshot (pointer untouched), QA
-            # the staged data, publish only on pass — readers never see a
-            # QA-failed table, not even transiently, and a FIRST run that
-            # fails QA leaves the table unpublished instead of live
-            # (a publish-then-rollback flow has both holes)
-            written_version = write_versioned(
-                mapped, versioned_root, note=f"pipeline run {run_id}",
-                publish=False,
-            )
-            total_mappings = obs.get["total_mappings"]
-        elif output_path:
-            write_partitioned(
-                mapped, os.path.join(output_path, "mappings"), "time1",
-                cluster_by=(KEY, "time2"),
-            )
-            total_mappings = obs.get["total_mappings"]
-        else:
-            total_mappings = mapped.count()
-
-        qa = qa_report(mapped, t1)
-        if versioned_root and qa["passed"]:
-            if output_path:
-                # both sinks requested: in the versioned (QA-gated) flow
-                # the partitioned path that feeds read_incremental consumers
-                # is gated the same way as the pointer flip — a QA-failed
-                # run must not expose data through EITHER sink (the staged
-                # snapshot stays on disk for forensics; the plain
-                # output_path-only branch above remains ungated by design,
-                # matching the reference's batch path). Ordered BEFORE the
-                # pointer flip: the flip is the one atomic step, so it goes
-                # last — a crash mid-partitioned-write leaves versioned
-                # readers on the previous version instead of publishing a
-                # run whose second sink is torn.
-                write_partitioned(
-                    mapped, os.path.join(output_path, "mappings"), "time1",
-                    cluster_by=(KEY, "time2"),
-                )
-            publish_version(versioned_root, written_version)
-    finally:
-        if cfg.cache_intermediate:
-            mapped.unpersist()
+    qa = qa_report(staged, entities)
+    total_mappings = qa["checks"]["duplicates"]["total_mappings"]
+    if versioned_root and qa["passed"]:
+        if sink:
+            # both sinks requested: in the versioned (QA-gated) flow the
+            # partitioned path that feeds read_incremental consumers is
+            # gated the same way as the pointer flip — a QA-failed run
+            # must not expose data through EITHER sink (the staged
+            # snapshot stays on disk for forensics; the plain
+            # output_path-only branch above remains ungated by design,
+            # matching the reference's batch path). Written from the
+            # staged snapshot, and ordered BEFORE the pointer flip: the
+            # flip is the one atomic step, so it goes last — a crash
+            # mid-partitioned-write leaves versioned readers on the
+            # previous version instead of publishing a run whose second
+            # sink is torn.
+            write_partitioned(staged, sink, "time1", cluster_by=(KEY, "time2"))
+        publish_version(versioned_root, written_version)
     duration = time.time() - t_start
 
     # SLA gates (05_prod_dev.py:703-745) via the structured monitor

@@ -167,7 +167,7 @@ def release_checkpoint(df: DataFrame) -> None:
     again: its lineage was truncated at the checkpoint, so a later
     action raises instead of recomputing.
 
-    Error contract (ADVICE r8 #3): only the missing-method/plan-shape
+    Error contract: only the missing-method/plan-shape
     py4j error (``Py4JError`` raised when a non-LogicalRDD plan node has
     no ``rdd()``) is the documented no-op; Java-side failures
     (``Py4JJavaError`` — stopped session, executor loss) and anything

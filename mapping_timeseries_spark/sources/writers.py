@@ -152,7 +152,7 @@ def compact_in_place(
     partition_col: str | None = None,
 ) -> int:
     """:func:`compact_parquet` plus the directory swap, with a row-count
-    identity check before the old data is dropped (r7 — the maintenance
+    identity check before the old data is dropped (the maintenance
     op every append-maintained index needs: repeated appends fragment
     postings/bands/lists into one file per batch-task, and at 100 TB
     file-COUNT kills planning long before bytes do).
@@ -167,7 +167,7 @@ def compact_in_place(
     operator resolves by renaming one copy back — never a silent
     half-compacted state. Returns the output file count.
 
-    FILESYSTEM CONTRACT (r8, VERDICT r7 #4): the swap's crash story
+    FILESYSTEM CONTRACT: the swap's crash story
     rests on directory ``rename`` being ATOMIC — true on a local POSIX
     filesystem and on HDFS, NOT on object stores (S3/GCS "rename" is a
     per-object copy+delete: a crash mid-copy leaves a PARTIAL directory
@@ -302,7 +302,7 @@ def _shard_summary(df: DataFrame) -> DataFrame:
 
 def write_shard_manifest(spark: SparkSession, path: str) -> dict:
     """Write ``path/_manifest.json``: per-shard row counts + content
-    fingerprints (r7) — the audit artifact that makes the export's
+    fingerprints — the audit artifact that makes the export's
     byte-reproducibility claim CHECKABLE instead of asserted. A re-run
     of the same export produces an identical manifest; a training job
     can call :func:`verify_shard_manifest` before consuming shards to
@@ -503,8 +503,8 @@ def merge_into_partitioned(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         # the pinned pre-overwrite slice is dead once the rewrite is
         # over (committed or failed) — release its checkpoint blocks
-        # eagerly instead of waiting for driver GC (r8; unpersist()
-        # cannot reach a checkpoint RDD, see readers.release_checkpoint)
+        # eagerly instead of waiting for driver GC (unpersist() cannot
+        # reach a checkpoint RDD, see readers.release_checkpoint)
         from .readers import release_checkpoint
 
         release_checkpoint(affected)

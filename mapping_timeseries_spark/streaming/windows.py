@@ -215,8 +215,9 @@ def stream_to_versioned(
     per-batch slices, not table states — use ``stream_to_parquet`` for
     those.
 
-    ``qa_check``: callable(batch_df) -> bool, evaluated on the staged
-    snapshot before the pointer flip (e.g. a check_sla wrapper).
+    ``qa_check``: callable(df) -> bool, evaluated on the staged
+    snapshot read back from disk before the pointer flip (e.g. a
+    check_sla wrapper).
 
     Honest delivery contract: foreachBatch is at-least-once — a retry
     after a crash between the snapshot write and the checkpoint commit
@@ -244,6 +245,7 @@ def stream_to_versioned(
     injected failures in tools/versioned_refresh_soak_gate.py)."""
     from ..sources.versioned import (
         publish_version,
+        read_versioned,
         vacuum_versions,
         write_versioned,
     )
@@ -257,7 +259,11 @@ def stream_to_versioned(
             note=f"{note_prefix} batch={batch_id}",
             publish=False,
         )
-        if qa_check is None or qa_check(batch_df):
+        # the check reads the staged files, not a third execution of
+        # the micro-batch
+        if qa_check is None or qa_check(
+            read_versioned(batch_df.sparkSession, root, version)
+        ):
             publish_version(root, version)
 
     writer = (

@@ -34,18 +34,25 @@ def spans(docs):
     return concat_pack_spans(docs, "doc_id", "tokens", BUDGET).cache()
 
 
-def test_concat_offsets_tile_exactly(spans):
-    pdf = spans.orderBy("tok_start").toPandas()
-    total = pdf["tokens"].sum()
-    # offsets are an exact exclusive/inclusive tiling of [0, total)
-    assert pdf["tok_start"].iloc[0] == 0
-    assert pdf["tok_end"].iloc[-1] == total
-    assert (pdf["tok_end"] - pdf["tok_start"] == pdf["tokens"]).all()
-    assert (pdf["tok_start"].values[1:] == pdf["tok_end"].values[:-1]).all()
-    # span arithmetic
-    nonzero = pdf[pdf["tokens"] > 0]
-    assert (nonzero["pack_first"] == nonzero["tok_start"] // BUDGET).all()
-    assert (nonzero["pack_last"] == (nonzero["tok_end"] - 1) // BUDGET).all()
+def test_concat_offsets_tile_exactly(docs, spans):
+    """Exact tiling at the session's partition count and at 1 and 7
+    range partitions: the offsets must not depend on the layout."""
+    layouts = [spans] + [
+        concat_pack_spans(docs, "doc_id", "tokens", BUDGET, num_partitions=p)
+        for p in (1, 7)
+    ]
+    for frame in layouts:
+        pdf = frame.orderBy("tok_start").toPandas()
+        total = pdf["tokens"].sum()
+        # offsets are an exact exclusive/inclusive tiling of [0, total)
+        assert pdf["tok_start"].iloc[0] == 0
+        assert pdf["tok_end"].iloc[-1] == total
+        assert (pdf["tok_end"] - pdf["tok_start"] == pdf["tokens"]).all()
+        assert (pdf["tok_start"].values[1:] == pdf["tok_end"].values[:-1]).all()
+        # span arithmetic
+        nonzero = pdf[pdf["tokens"] > 0]
+        assert (nonzero["pack_first"] == nonzero["tok_start"] // BUDGET).all()
+        assert (nonzero["pack_last"] == (nonzero["tok_end"] - 1) // BUDGET).all()
 
 
 def test_concat_matches_duckdb_twin(spark, docs, spans):

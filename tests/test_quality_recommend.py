@@ -410,7 +410,8 @@ def test_check_sla_gates():
 def test_avg_rank_distributed_matches_pandas(spark):
     """Range-partitioned two-phase rank == pandas rank(method='average')
     (scipy's spearman convention), including a tie block bigger than a
-    partition's share — ties must land in ONE range partition."""
+    partition's share — ties must land in ONE range partition — at 1
+    and at 7 range partitions."""
     import numpy as np
     import pandas as pd
 
@@ -424,13 +425,14 @@ def test_avg_rank_distributed_matches_pandas(spark):
     df = spark.createDataFrame(
         [(i, float(v)) for i, v in enumerate(vals)], "i long, v double"
     ).repartition(6)
-    got = {
-        r["i"]: r["rk"]
-        for r in avg_rank_distributed(df, "v", "rk", num_partitions=7).collect()
-    }
-    assert len(got) == len(vals)
-    for i, want in enumerate(expected):
-        assert got[i] == want, (i, got[i], want)
+    for p in (1, 7):
+        got = {
+            r["i"]: r["rk"]
+            for r in avg_rank_distributed(df, "v", "rk", num_partitions=p).collect()
+        }
+        assert len(got) == len(vals), p
+        for i, want in enumerate(expected):
+            assert got[i] == want, (p, i, got[i], want)
 
 
 def test_monitoring_view_roundtrip(spark):
@@ -585,17 +587,21 @@ def closes(spark, pair, tmp_path_factory):
     """Both closes the benchmark drives, run once for the sink tests from
     inputs spread over four partitions: the inline correlation close
     with versioned + partitioned sinks, and the routed close over a saved
-    recommendations table. ``{name: (output_path, versioned_root or
-    None, result)}``."""
+    recommendations table. Each close runs under its own job group.
+    ``{name: (output_path, versioned_root or None, result, jobs)}``."""
     root = tmp_path_factory.mktemp("closes")
     t1, t2 = (t.repartition(4) for t in pair)
     merged = merge_series(
         canonicalize(t1, "cus_code", "month", "txn_amount", VALUE1),
         canonicalize(t2, "cus_code", "month", "revenue", VALUE2),
     )
+    # materialized here, so the jobs that build the inputs and the
+    # recommendations fall outside the closes' job groups
     recs = recommendation_table(
         compare_methods(best_lag_correlation(merged, 6), dtw_summary(merged))
-    )
+    ).localCheckpoint(eager=True)
+    for t in pair:
+        t.count()
     runs = {
         "inline": (None, dict(
             config=MappingConfig(method="correlation"),
@@ -603,22 +609,40 @@ def closes(spark, pair, tmp_path_factory):
         )),
         "routed": (recs, {}),
     }
+    sc = spark.sparkContext
     out = {}
     for name, (recommendations, kwargs) in runs.items():
         path = str(root / name)
-        result = run_pipeline(
-            spark, t1, t2, recommendations,
-            "cus_code", "month", "txn_amount", "revenue",
-            output_path=path, run_id=name, **kwargs,
-        )
-        out[name] = (path, kwargs.get("versioned_root"), result)
+        group = f"pipeline-close-{name}"
+        sc.setJobGroup(group, f"the {name} close")
+        try:
+            result = run_pipeline(
+                spark, t1, t2, recommendations,
+                "cus_code", "month", "txn_amount", "revenue",
+                output_path=path, run_id=name, **kwargs,
+            )
+        finally:
+            sc.setJobGroup(f"{group}-done", "reset")
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        out[name] = (path, kwargs.get("versioned_root"), result, jobs)
     return out
+
+
+# Spark jobs per close on the ``closes`` fixture, under AQE (each query
+# stage is submitted as its own job, so the count covers exchanges as
+# well as driver actions).
+PIPELINE_JOB_BUDGET = {"inline": 20, "routed": 28}
+
+
+def test_pipeline_job_budget(closes):
+    for name, (*_, jobs) in closes.items():
+        assert jobs <= PIPELINE_JOB_BUDGET[name], (name, jobs)
 
 
 def test_pipeline_sinks_write_one_file_per_month(spark, closes):
     """Both closes leave one parquet file per time1 directory, whatever
     the number of tasks upstream of the sink."""
-    for name, (out, _, result) in closes.items():
+    for name, (out, _, result, _) in closes.items():
         sink = os.path.join(out, "mappings")
         months = [d for d in os.listdir(sink) if d.startswith("time1=")]
         assert months, name
@@ -638,7 +662,7 @@ def test_pipeline_sinks_zstd_and_clustered_by_entity(spark, closes, tmp_path):
 
     from mapping_timeseries_spark.sources.writers import write_partitioned
 
-    for name, (out, versioned_root, result) in closes.items():
+    for name, (out, versioned_root, result, _) in closes.items():
         sink = os.path.join(out, "mappings")
         assert parquet_codecs(sink) == {"ZSTD"}, name
         if versioned_root:
@@ -656,29 +680,108 @@ def test_pipeline_sinks_zstd_and_clustered_by_entity(spark, closes, tmp_path):
         assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
 
-def test_pipeline_releases_pin_when_qa_raises(spark, pair, tmp_path, monkeypatch):
-    """The mapping frame's persist pin is released on every exit path:
-    a qa_report that raises after the output_path sink is written leaves
-    nothing in the session's cache."""
+def test_pipeline_qa_equals_qa_on_computed_mapping(spark, pair, closes):
+    """Both closes QA what they wrote (the staged snapshot, the sink read
+    back), and that report equals qa_report over the computed mapping
+    frame: counts, minima and maxima exactly, means and deviations up to
+    summation order."""
+    t1c = canonicalize(pair[0], "cus_code", "month", "txn_amount", VALUE1)
+    for name, (_, _, result, _) in closes.items():
+        want = qa_report(result.mapped, t1c)
+        assert result.qa["passed"] == want["passed"], name
+        assert result.qa["checks"].keys() == want["checks"].keys(), name
+        for check, fields in want["checks"].items():
+            got = result.qa["checks"][check]
+            assert got.keys() == fields.keys(), (name, check)
+            for k, v in fields.items():
+                if k.startswith(("avg_", "std_")):
+                    assert got[k] == pytest.approx(v, rel=1e-12), (name, k)
+                else:
+                    assert got[k] == v, (name, k)
+        assert result.stats["total_mappings"] == want["checks"]["duplicates"][
+            "total_mappings"
+        ]
+
+
+@pytest.mark.parametrize(
+    "close,sink",
+    [
+        ("inline", "output_path"),
+        ("inline", "versioned_root"),
+        ("inline", None),
+        ("routed", "output_path"),
+    ],
+)
+def test_pipeline_empty_mapping(spark, pair, tmp_path, close, sink):
+    """A close that maps nothing reports zero mappings and fails QA with
+    the low_coverage and empty_output alerts, in every sink mode. Inline:
+    table1 holds only one entity and table2 only another, so no lag-join
+    row matches. Routed: every entity is routed to manual review, which
+    maps nothing by design. A row count observed on the sink write would
+    crash here: AQE drops the metrics node of an empty plan."""
+    t1, t2 = pair
+    first, second = (
+        r["cus_code"]
+        for r in t1.select("cus_code").distinct().orderBy("cus_code").take(2)
+    )
+    recommendations = None
+    if close == "inline":
+        t1 = t1.where(F.col("cus_code") == first)
+        t2 = t2.where(F.col("cus_code") == second)
+    else:
+        recommendations = t1.select(
+            "cus_code",
+            F.lit("Complex - Manual Review").alias("recommended_method"),
+            F.lit(1).alias("optimal_lag"),
+        ).distinct()
+    kwargs = {sink: str(tmp_path / sink)} if sink else {}
+    result = run_pipeline(
+        spark, t1, t2, recommendations,
+        "cus_code", "month", "txn_amount", "revenue",
+        run_id="empty", **kwargs,
+    )
+    assert result.stats["total_mappings"] == 0
+    assert not result.qa["passed"]
+    assert {a.code for a in result.alerts} == {"low_coverage", "empty_output"}
+    if sink == "output_path":
+        assert os.path.isfile(os.path.join(kwargs[sink], "run_empty.json"))
+    if close == "routed":
+        assert result.stats["route_counts"] == {"manual_review": 15}
+
+
+def test_pipeline_pins_nothing(spark, pair, tmp_path, monkeypatch):
+    """run_pipeline caches nothing in the session: QA reads the sink the
+    close wrote. Neither a successful close nor one whose qa_report
+    raises after the output_path sink is written leaves an entry in the
+    session's cache."""
     from mapping_timeseries_spark.plans import pipeline
 
     t1, t2 = pair
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cfg = MappingConfig(method="correlation")
     out = str(tmp_path / "qa_raises")
 
-    def failing_qa(mapped, t1):
+    def failing_qa(mapped, entities):
         assert os.path.isdir(os.path.join(out, "mappings"))
         raise RuntimeError("qa store unreachable")
 
-    monkeypatch.setattr(pipeline, "qa_report", failing_qa)
     spark.catalog.clearCache()
     try:
+        ok = run_pipeline(
+            spark, t1, t2, None,
+            "cus_code", "month", "txn_amount", "revenue",
+            output_path=str(tmp_path / "ok"), config=cfg,
+        )
+        assert ok.qa["passed"]
+        assert cache.isEmpty()
+        monkeypatch.setattr(pipeline, "qa_report", failing_qa)
         with pytest.raises(RuntimeError, match="qa store unreachable"):
             run_pipeline(
                 spark, t1, t2, None,
                 "cus_code", "month", "txn_amount", "revenue",
-                output_path=out, config=MappingConfig(method="correlation"),
+                output_path=out, config=cfg,
             )
-        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        assert cache.isEmpty()
     finally:
         # clearCache also dropped the module's cached inputs
         t1.cache()

@@ -444,10 +444,13 @@ def test_stream_quality_heuristics_native(spark, tmp_path):
 
 def test_stream_to_versioned_qa_gated_publish(spark, tmp_path):
     """Continuous refresh of a versioned table: each micro-batch of a
-    complete-mode aggregate stages one immutable snapshot, the pointer
-    flips only on QA pass, and earlier published versions stay readable
-    (time travel across refreshes)."""
+    complete-mode aggregate stages one immutable snapshot, the QA check
+    reads that staged snapshot, the pointer flips only on QA pass, and
+    earlier published versions stay readable (time travel across
+    refreshes)."""
+    import os
     import shutil
+    from urllib.parse import urlparse
 
     from mapping_timeseries_spark.sources.versioned import (
         current_version,
@@ -495,13 +498,27 @@ def test_stream_to_versioned_qa_gated_publish(spark, tmp_path):
     shutil.copy(
         next((tmp_path / "b2").glob("part-*.parquet")), src / "f2.parquet"
     )
+    checked = []
+
+    def record_files(df):
+        checked.append(df.inputFiles())
+        return True
+
     stream_to_versioned(
         agg(spark.readStream.schema(schema).parquet(str(src))),
         root,
         str(tmp_path / "ckpt"),
+        qa_check=record_files,
     )
     v2 = current_version(root)
     assert v2 is not None and v2 > v1
+    # the QA gate read the batch's staged snapshot, not the micro-batch
+    vdir = os.path.realpath(os.path.join(root, f"v={v2:06d}")) + os.sep
+    [files] = checked
+    assert files
+    assert all(
+        os.path.realpath(urlparse(f).path).startswith(vdir) for f in files
+    ), files
     want2 = sorted(
         (r["grp"], r["total"])
         for r in agg(spark.read.parquet(str(src))).collect()
