@@ -1352,7 +1352,7 @@ def q_minhash_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_runtime_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     return _minhash_sel(
-        minhash_lsh_pairs(docs, threshold=0.5, portable=True), "full"
+        minhash_lsh_pairs(docs, threshold=0.5), "full"
     )
 
 
@@ -1364,22 +1364,20 @@ def q_minhash_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     old = docs.where(F.col("doc_id") % 5 != 0)
     new = docs.where(F.col("doc_id") % 5 == 0)
-    bands_df, sh_df = minhash_index_frames(old, portable=True)
+    bands_df, sh_df = minhash_index_frames(old)
     return _minhash_sel(
-        minhash_dedup_incremental(
-            new, bands_df, sh_df, threshold=0.5, portable=True
-        ),
+        minhash_dedup_incremental(new, bands_df, sh_df, threshold=0.5),
         "incr",
     )
 
 
 def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidates, Jaccard-verified. Runs the engine-portable
-    hash variant (md5-derived universal hashing) so the ENTIRE
+    """MinHash-LSH candidates, Jaccard-verified, at the operators'
+    defaults: the engine's one MinHash family (md5-derived universal
+    hashing, band-value bucket keys) is engine-portable, so the ENTIRE
     signature->band->bucket-join->verify pipeline hash-compares against a
-    DuckDB twin generated from the same coefficients. The xxhash64 scale
-    variant (portable=False) shares every other code path and is pinned by
-    pytest recall tests.
+    DuckDB twin generated from the same coefficients — and the path this
+    entry checks is the one run_corpus_pipeline and the scale gates run.
 
     Folded r5: the incremental leg beside the full batch. Exactness
     contract: incremental == full pairs with >= 1 new side, which is
@@ -1395,7 +1393,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash near-dup pairs -> per-doc
     cluster id + canonical keeper (the final step of a corpus dedup
     pipeline), hash-gated against a DuckDB recursive-CTE twin over the
-    same portable-hash pair set.
+    same MinHash pair set.
 
     Folded r5 (registry at the 50-entry driver cap): the SemDeDup
     semantic verdict (similarity.semantic_dedup — IVF coarse clusters,
@@ -1417,9 +1415,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine hash-gated end-to-end (candidates, verify, components)."""
     ensure_runtime_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.5, portable=True)
+    pairs = minhash_lsh_pairs(docs, threshold=0.5)
     cl = dedup_clusters(docs, pairs)
-    star_pairs = minhash_lsh_pairs(docs, threshold=0.5, portable=True, mode="star")
+    star_pairs = minhash_lsh_pairs(docs, threshold=0.5, mode="star")
     cl_star = dedup_clusters(docs, star_pairs).select(
         "doc_id",
         F.col("cluster_id").cast("bigint").alias("star_cluster_id"),
@@ -1449,13 +1447,12 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs. Runs the engine-portable 60-bit variant
-    (md5-derived token hashes), so fingerprint -> prefix-block ->
-    Hamming-join hash-compares against the DuckDB twin bit for bit. The
-    64-bit xxhash64 variant shares every other code path and is pinned by
-    pytest (planted-twin recall)."""
+    """SimHash near-dup pairs at the operator's defaults. Its 60-bit
+    fingerprints come from md5-derived token hashes, so fingerprint ->
+    prefix-block -> Hamming-join hash-compares against the DuckDB twin
+    bit for bit; planted-twin recall is pinned by pytest."""
     ensure_runtime_conf(spark)
-    p = simhash_near_dups(read_table(spark, sf_dir, "documents"), portable=True)
+    p = simhash_near_dups(read_table(spark, sf_dir, "documents"))
     return p.select("doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming"))
 
 
@@ -2992,7 +2989,7 @@ HAVING count(*) * 1.0 / any_value(h.n_shingles) >= 0.2
 def _build_minhash_oracle(num_hashes: int = 32, bands: int = 8,
                           threshold: float = 0.5,
                           mode: str = "pairs") -> str:
-    """DuckDB twin of minhash_lsh_pairs(portable=True), generated from the
+    """DuckDB twin of minhash_lsh_pairs, generated from the
     SAME universal-hash coefficients the Spark expression uses — identical
     integer arithmetic on both engines, so candidate sets match exactly.
     ``mode`` mirrors dedup._lsh_candidates (r10, VERDICT r9 #8): "pairs" =
@@ -3190,7 +3187,7 @@ JOIN star_lex st ON st.doc_id = l.doc_id
 LEFT JOIN sem s ON s.vec_id = l.doc_id
 """
 
-# DuckDB twin of simhash_near_dups(portable=True): 60-bit md5-derived
+# DuckDB twin of simhash_near_dups: 60-bit md5-derived
 # token hashes, per-bit majority vote, top-12-bit blocking, Hamming <= 8.
 ORACLE_SIMHASH = r"""
 WITH tok AS (

@@ -142,7 +142,7 @@ def main(spark=None, out_root: str | None = None, show: bool = True) -> dict:
 
     # ── 2. MinHash-LSH dedup index: probe the batch, fold it in ────────
     lsh_root = os.path.join(out_root, "lsh_index")
-    build_minhash_index(standing_docs, lsh_root, portable=True)
+    build_minhash_index(standing_docs, lsh_root)
     dup_pairs = minhash_dedup_incremental_path(
         spark, batch_docs, lsh_root, threshold=0.5
     )

@@ -69,7 +69,7 @@ def main(spark=None, out_root: str | None = None, show: bool = True) -> dict:
 
     # ── 1: near-dup dedup of the batch against the standing index ──────
     lsh_root = os.path.join(out_root, "lsh_index")
-    build_minhash_index(standing, lsh_root, portable=True)
+    build_minhash_index(standing, lsh_root)
     dup_pairs = minhash_dedup_incremental_path(
         spark, batch, lsh_root, threshold=0.5
     )

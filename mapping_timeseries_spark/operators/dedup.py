@@ -11,7 +11,7 @@ Scale design
   (band, bucket-hash) -> candidate pairs -> Jaccard verify. The band join
   only pairs documents agreeing on a full band, so the join fan-out is the
   collision count, not n^2.
-- SimHash gives a 64-bit fingerprint; near-dup = small Hamming distance.
+- SimHash gives a 60-bit fingerprint; near-dup = small Hamming distance.
   The block-join by fingerprint prefix bounds the pair space.
 - Embedding near-dup reuses the cosine machinery from similarity.py.
 
@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import (
     hamming64,
-    minhash_signature,
+    minhash_base_hashes,
     minhash_signature_portable,
     portable_hash64,
     tokens,
@@ -807,64 +807,56 @@ def ngram_decontaminate(
 
 
 def _band_frame(
-    sh: DataFrame, num_hashes: int, bands: int, portable: bool
+    sh: DataFrame, num_hashes: int, bands: int, carry=()
 ) -> DataFrame:
-    """LSH banding of a shingled frame: (doc_id, band, bucket:string) —
-    the shared candidate-key generator for the batch self-join
-    (:func:`minhash_lsh_pairs`) and the incremental new-vs-index join
-    (:func:`minhash_dedup_incremental`). Both sides of any join MUST use
-    identical (num_hashes, bands, portable): bucket strings from
+    """LSH banding of a shingled frame: (doc_id, *carry, band,
+    bucket:string), one row per (doc, band) — the one candidate-key
+    generator for the batch self-join (:func:`minhash_lsh_pairs`), the
+    persisted index and its incremental join
+    (:func:`minhash_dedup_incremental`), and the stream
+    (:func:`minhash_dedup_stream`, which passes its shingle set and
+    watermark through as ``carry``; a falsy ``carry`` passes nothing).
+
+    The signature is :func:`minhash_signature_portable` over the
+    projected :func:`minhash_base_hashes`, and a band's
+    bucket key is its ``num_hashes // bands`` values joined with ``,``.
+    Each value is below 2^31, so the key is exact — two docs share a
+    bucket only if they agree on the whole band, at any corpus size —
+    and it is the key the DuckDB twin computes. Both sides of any join
+    MUST use identical (num_hashes, bands): bucket strings from
     different parameters never collide, which reads as 'no duplicates'
     rather than an error — the meta.json guard in the index functions
     exists for exactly this."""
     rows_per_band = num_hashes // bands
-    if portable:
-        sig = minhash_signature_portable(F.col("shingles"), num_hashes)
+    carry = list(carry or ())
+    sig = minhash_signature_portable("__base", num_hashes)
 
-        def bucket_key(band: int):
-            return F.concat_ws(
-                ",",
-                *[
-                    F.col("sig")[band * rows_per_band + r]
-                    for r in range(rows_per_band)
-                ],
-            )
+    def bucket_key(band: int):
+        return F.concat_ws(
+            ",",
+            *[
+                F.col("sig")[band * rows_per_band + r]
+                for r in range(rows_per_band)
+            ],
+        )
 
-    else:
-        sig = minhash_signature(F.col("shingles"), num_hashes)
-
-        def bucket_key(band: int):
-            # xxhash64, NOT F.hash: F.hash is 32-bit Murmur3, and
-            # the bucket-key space saturates by the birthday bound —
-            # measured at the x10000 gate (50M docs): C(50M,2)*8/2^32
-            # ~= 2.3M spurious candidates predicted, +2.1M observed
-            # (7.87M vs ~5.8M true; map_stage_10000x_gate.json). All
-            # verification-killed (Jaccard ~0), so correctness never
-            # moved — but at 5B docs the spurious volume would be ~1e15
-            # pairs, a dead job. 64-bit keys push the birthday bound to
-            # ~0.7 spurious pairs at 5B docs/band. MUST stay in lockstep
-            # with _band_frame_carrying (index/batch band-key parity).
-            return F.xxhash64(
-                *[
-                    F.col("sig")[band * rows_per_band + r]
-                    for r in range(rows_per_band)
-                ]
-            )
-
-    return sh.withColumn("sig", sig).select(
+    return sh.withColumn(
+        "__base", minhash_base_hashes(F.col("shingles"))
+    ).withColumn("sig", sig).select(
         "doc_id",
+        *carry,
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(band).alias("band"),
-                        bucket_key(band).cast("string").alias("bucket"),
+                        bucket_key(band).alias("bucket"),
                     )
                     for band in range(bands)
                 ]
             )
         ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+    ).select("doc_id", *carry, "bb.band", "bb.bucket")
 
 
 def _lsh_candidates(banded: DataFrame, mode: str = "pairs") -> DataFrame:
@@ -941,32 +933,28 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    portable: bool = False,
     mode: str = "pairs",
     narrow_verify: bool | None = None,
 ) -> DataFrame:
     """MinHash + LSH near-dup candidates, Jaccard-verified.
 
-    signature (num_hashes minima of seeded hashes over shingles)
-    -> split into ``bands`` bands of ``num_hashes/bands`` rows
-    -> bucket key = band values; docs agreeing on any band meet in a
-       bucket -> candidate pair -> verify with exact Jaccard >= threshold.
+    signature (num_hashes minima of universal hashes over each
+    shingle's md5-derived base hash) -> split into ``bands`` bands of
+    ``num_hashes/bands`` rows -> bucket key = band values; docs agreeing
+    on any band meet in a bucket -> candidate pair -> verify with exact
+    Jaccard >= threshold.
 
     Probability a pair with Jaccard J becomes a candidate:
     1 - (1 - J^r)^b with r = rows/band — the standard S-curve; with
     r=4, b=8 the 50% knee sits near J=0.55.
 
     Output matches :func:`ngram_jaccard_pairs` (its subset, by
-    construction). ``portable=True`` uses md5-derived universal hashing
-    (functions.text.minhash_signature_portable: ONE md5 per shingle +
-    integer permutations in a single-pass aggregate) and string band
-    keys, whose DuckDB twin is generated from the SAME coefficients —
-    the full signature->band->verify pipeline is hash-compared
-    end-to-end, and it is also the FASTER variant (1.05 s vs 1.33 s at
-    sf0.1: one md5 pass beats 32 seeded xxhash64 passes).
-    ``portable=False`` keeps the seeded-xxhash64 formulation (recall vs
-    the exact operator asserted in pytest) for parity with
-    xxhash64-sketch ecosystems.
+    construction; recall against it is asserted in pytest). The
+    signature is functions.text.minhash_signature_portable — ONE md5
+    per shingle, then one integer permutation per hash — and the band
+    keys are the band values themselves (:func:`_band_frame`).
+    The DuckDB twin is generated from the SAME coefficients, so the
+    full signature->band->verify pipeline is hash-compared end-to-end.
 
     ``mode``: ``"pairs"`` (default) emits every verified within-bucket
     pair — the operator's published output contract. ``"star"`` emits
@@ -1031,7 +1019,7 @@ def minhash_lsh_pairs(
     if narrow_verify is False:
         sh = _pin(sh)
     sh = sh.where(F.col("n_shingles") > 0)
-    banded = _pin(_band_frame(sh, num_hashes, bands, portable))
+    banded = _pin(_band_frame(sh, num_hashes, bands))
     # persisted: the self-join (or hub join) would otherwise recompute
     # the full signature pipeline once per side
     cand = _lsh_candidates(banded, mode)
@@ -1086,8 +1074,8 @@ def minhash_lsh_pairs(
 # Exactness contract (pytest-pinned):
 #   minhash_dedup_incremental(new, index(old))
 #     == minhash_lsh_pairs(old ∪ new) restricted to pairs with >= 1 new side
-# — bit-for-bit, because banding/verification run the identical portable
-# expressions on both paths.
+# — bit-for-bit, because banding/verification run the identical
+# expressions (_band_frame, _verify_jaccard) on both paths.
 #
 # 100 TB posture: the index's bands table is (doc_id, band, bucket) —
 # tiny next to the corpus — and the incremental candidate join touches
@@ -1098,7 +1086,10 @@ def minhash_lsh_pairs(
 # write it bucketed by doc_id (sources.writers.write_bucketed_table) to
 # make the candidate join shuffle-free. Appends are atomic via the
 # meta.json commit marker: readers require it, and append_minhash_index
-# rewrites it LAST.
+# rewrites it LAST. meta.json also names the hash family: every index
+# is md5-family ("portable": true, band-value bucket keys), and
+# load_minhash_index refuses one from the removed seeded-xxhash64
+# family ("portable": false) with a rebuild message.
 
 
 def minhash_index_frames(
@@ -1107,7 +1098,6 @@ def minhash_index_frames(
     n: int = 2,
     num_hashes: int = 32,
     bands: int = 8,
-    portable: bool = True,
 ):
     """The disk-free form of the LSH index -> (bands_df, shingles_df):
     for composing an old-vs-new dedup inside one job (the driver query
@@ -1116,7 +1106,7 @@ def minhash_index_frames(
     frames."""
     sh = _pin(_shingled(docs, text_col, n))
     sh = sh.where(F.col("n_shingles") > 0)
-    return _band_frame(sh, num_hashes, bands, portable), sh
+    return _band_frame(sh, num_hashes, bands), sh
 
 
 def build_minhash_index(
@@ -1126,7 +1116,6 @@ def build_minhash_index(
     n: int = 2,
     num_hashes: int = 32,
     bands: int = 8,
-    portable: bool = True,
 ) -> None:
     """Build the persisted LSH index for :func:`minhash_dedup_incremental`:
     ``path/bands`` (doc_id, band, bucket), ``path/shingles`` (doc_id,
@@ -1142,21 +1131,18 @@ def build_minhash_index(
     # tokenize+shingle pipeline a second time for the band pass
     spark = docs.sparkSession
     sh_stored = spark.read.parquet(os.path.join(path, "shingles"))
-    _band_frame(sh_stored, num_hashes, bands, portable).write.mode(
+    _band_frame(sh_stored, num_hashes, bands).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "bands"))
     meta = {
         "n": n,
         "num_hashes": num_hashes,
         "bands": bands,
-        "portable": portable,
         "text_col": text_col,
-        # bucket-key GENERATION: the non-portable bucket hash
-        # changed 32-bit F.hash -> xxhash64 (saturation fix). Bucket
-        # keys from different generations never collide, which a join
-        # reads as "no duplicates" rather than an error — so the
-        # generation is committed with the index and enforced on load.
-        "bucket_hash": "band-values" if portable else "xxhash64",
+        # the hash family, committed with the index and checked on load
+        # (load_minhash_index): keys from another family never collide
+        "portable": True,
+        "bucket_hash": "band-values",
     }
     with open(os.path.join(path, "meta.json"), "w") as f:
         json.dump(meta, f)
@@ -1175,20 +1161,20 @@ def load_minhash_index(spark, path: str):
         )
     with open(meta_path) as f:
         meta = json.load(f)
-    # Non-portable bucket keys changed generation once (32-bit F.hash
-    # -> xxhash64): an index banded under the old generation would join
-    # with ZERO candidates against newly-banded batches — silent
-    # missed-duplicate ingestion, not an error. Refuse to load it.
-    # Portable indexes are exempt: their keys are the band VALUES
-    # themselves (concat), which never changed derivation.
+    # An index whose meta says portable: false was banded by the
+    # removed seeded-xxhash64 family. Its keys never collide with the
+    # keys _band_frame makes now, so every new batch would join it with
+    # ZERO candidates — silent missed-duplicate ingestion, not an error.
+    # Refuse to load it. md5-family indexes load whatever their
+    # bucket_hash field says (older ones have none): their keys are the
+    # band values themselves, which never changed derivation.
     if not meta.get("portable", True):
-        if meta.get("bucket_hash") != "xxhash64":
-            raise ValueError(
-                f"index at {path} was built with a previous non-portable "
-                f"bucket-key generation ({meta.get('bucket_hash', '32-bit F.hash')!r}); "
-                "its keys cannot collide with xxhash64-banded batches — "
-                "rebuild the index (build_minhash_index)"
-            )
+        raise ValueError(
+            f"index at {path} was built by the removed seeded-xxhash64 "
+            f"MinHash family (bucket_hash={meta.get('bucket_hash')!r}); "
+            "its bucket keys cannot collide with new batches — rebuild "
+            "the index with build_minhash_index"
+        )
     return (
         spark.read.parquet(os.path.join(path, "bands")),
         spark.read.parquet(os.path.join(path, "shingles")),
@@ -1205,7 +1191,6 @@ def minhash_dedup_incremental(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    portable: bool = True,
 ) -> DataFrame:
     """Near-dup pairs (doc_a < doc_b, jaccard >= threshold) where at
     least one side is in ``new_docs``: new-vs-index candidates from the
@@ -1220,7 +1205,7 @@ def minhash_dedup_incremental(
     documents under one vertex."""
     new_sh = _pin(_shingled(new_docs, text_col, n))
     new_sh = new_sh.where(F.col("n_shingles") > 0)
-    new_banded = _pin(_band_frame(new_sh, num_hashes, bands, portable))
+    new_banded = _pin(_band_frame(new_sh, num_hashes, bands))
     # new-vs-index: each pair keyed once per colliding band -> distinct;
     # orientation by least/greatest so output keeps the doc_a < doc_b
     # convention regardless of id interleaving across batches
@@ -1291,7 +1276,6 @@ def minhash_dedup_stream(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    portable: bool = True,
     watermark_col: str | None = None,
     watermark_delay: str = "1 hour",
 ) -> DataFrame:
@@ -1346,9 +1330,8 @@ def minhash_dedup_stream(
     )
     # band rows CARRY the doc's shingle set (re-joining it from the
     # stream would be a stream-stream self-join)
-    banded = _band_frame_carrying(
-        sh.select("doc_id", *wm, "shingles", "n_shingles"),
-        num_hashes, bands, portable,
+    banded = _band_frame(
+        sh, num_hashes, bands, carry=(*wm, "shingles", "n_shingles")
     )
     cand = banded.alias("x").join(
         index_bands.alias("y"),
@@ -1391,64 +1374,6 @@ def minhash_dedup_stream(
     return verified.dropDuplicates(["doc_a", "doc_b"])
 
 
-def _band_frame_carrying(
-    sh: DataFrame, num_hashes: int, bands: int, portable: bool
-) -> DataFrame:
-    """:func:`_band_frame` variant that keeps the per-doc shingle set
-    (and count) on every band row — the streaming path needs them
-    carried through, because re-joining them from the stream would be a
-    stream-stream self-join. Band keys are IDENTICAL to _band_frame's
-    (same signature expressions), which the stream==batch pin depends
-    on."""
-    rows_per_band = num_hashes // bands
-    if portable:
-        sig = minhash_signature_portable(F.col("shingles"), num_hashes)
-
-        def bucket_key(band: int):
-            return F.concat_ws(
-                ",",
-                *[
-                    F.col("sig")[band * rows_per_band + r]
-                    for r in range(rows_per_band)
-                ],
-            )
-
-    else:
-        sig = minhash_signature(F.col("shingles"), num_hashes)
-
-        def bucket_key(band: int):
-            # xxhash64 in lockstep with _band_frame (see its 32-bit
-            # saturation note) — the incremental new-vs-index join
-            # requires identical band keys on both paths
-            return F.xxhash64(
-                *[
-                    F.col("sig")[band * rows_per_band + r]
-                    for r in range(rows_per_band)
-                ]
-            )
-
-    in_cols = list(sh.columns)  # passthrough: doc_id, shingles,
-    # n_shingles (+ the caller's watermark column when bounding state)
-    return (
-        sh.withColumn("sig", sig)
-        .select(
-            *in_cols,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(band).alias("band"),
-                            bucket_key(band).cast("string").alias("bucket"),
-                        )
-                        for band in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        )
-        .select(*in_cols, "bb.band", "bb.bucket")
-    )
-
-
 def minhash_dedup_incremental_path(
     spark,
     new_docs: DataFrame,
@@ -1467,7 +1392,6 @@ def minhash_dedup_incremental_path(
         num_hashes=meta["num_hashes"],
         bands=meta["bands"],
         threshold=threshold,
-        portable=meta["portable"],
     )
 
 
@@ -1515,30 +1439,28 @@ def append_minhash_index(new_docs: DataFrame, path: str) -> None:
                 f"in the index at {path}"
             )
         sh.write.mode("append").parquet(os.path.join(path, "shingles"))
-        _band_frame(
-            sh, meta["num_hashes"], meta["bands"], meta["portable"]
-        ).write.mode("append").parquet(os.path.join(path, "bands"))
+        _band_frame(sh, meta["num_hashes"], meta["bands"]).write.mode(
+            "append"
+        ).parquet(os.path.join(path, "bands"))
     finally:
         sh.unpersist()
 
 
-def simhash_fingerprints(
-    docs: DataFrame, text_col: str = "text", portable: bool = False
-) -> DataFrame:
-    """SimHash per document via explode + one hash aggregation.
+#: SimHash fingerprint width: portable_hash64 yields 60 bits.
+SIMHASH_BITS = 60
 
-    Exploding tokens and summing each bit of the token hash in per-bit
-    aggregate buffers is one shuffle and stays in codegen — far cheaper
-    than the per-row array formulation (functions.text.simhash64), which
-    re-walks the token array 64 times per document. Bit b of the result is
-    set when at least half the token hashes have bit b set (same majority
-    rule as simhash64).
 
-    ``portable=False``: 64-bit fingerprints from xxhash64 (rows-only at
-    the driver gate). ``portable=True``: 60-bit fingerprints from the
-    md5-derived engine-portable hash (functions.text.portable_hash64) —
-    bit-identical in DuckDB, so the whole fingerprint->block->Hamming
-    pipeline hash-verifies end-to-end.
+def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """60-bit SimHash per document via explode + one hash aggregation.
+
+    Each token is hashed with functions.text.portable_hash64 (the first
+    60 bits of its md5), and bit b of the fingerprint is set when at
+    least half the token hashes have bit b set. Exploding tokens and
+    summing each bit in per-bit aggregate buffers is one shuffle and
+    stays in codegen — far cheaper than re-walking each document's
+    token array once per bit. The hash is bit-identical in DuckDB, so
+    the whole fingerprint->block->Hamming pipeline hash-verifies
+    end-to-end, and the fingerprint is a non-negative bigint.
 
     Docs with NULL text carry no tokens and therefore NO fingerprint
     row — stated contract, filtered EXPLICITLY below rather than left to
@@ -1546,25 +1468,18 @@ def simhash_fingerprints(
     0 would be worse: every empty doc would Hamming-0 "near-dup" every
     other empty doc).
     """
-    nbits = 60 if portable else 64
     tok = _ensure_parallel(docs).where(F.col(text_col).isNotNull()).select(
         "doc_id", F.explode(tokens(F.col(text_col))).alias("tk")
-    ).withColumn(
-        "h", portable_hash64(F.col("tk")) if portable else F.xxhash64("tk")
-    )
+    ).withColumn("h", portable_hash64(F.col("tk")))
     aggs = [F.count(F.lit(1)).alias("__n")] + [
         F.sum(F.shiftright("h", b).bitwiseAND(F.lit(1))).alias(f"__b{b}")
-        for b in range(nbits)
+        for b in range(SIMHASH_BITS)
     ]
     per_doc = tok.groupBy("doc_id").agg(*aggs)
     fingerprint = None
-    for b in range(nbits):
+    for b in range(SIMHASH_BITS):
         bit = (F.col(f"__b{b}") * 2 >= F.col("__n")).cast("bigint")
-        # bit 63 (non-portable only) contributes the two's-complement sign
-        # bit: adding -(2^63) sets it without int64 overflow
-        term = bit * F.lit(2**b if b < nbits - 1 or portable else -(2**63)).cast(
-            "bigint"
-        )
+        term = bit * F.lit(2**b).cast("bigint")
         fingerprint = term if fingerprint is None else fingerprint + term
     return per_doc.select("doc_id", fingerprint.alias("fingerprint"))
 
@@ -1574,11 +1489,10 @@ def simhash_near_dups(
     text_col: str = "text",
     max_hamming: int = 8,
     prefix_bits: int = 12,
-    portable: bool = False,
 ) -> DataFrame:
-    """SimHash near-dup pairs: token-majority fingerprints (64-bit, or
-    60-bit portable — see :func:`simhash_fingerprints`), paired when
-    Hamming distance <= max_hamming.
+    """SimHash near-dup pairs: 60-bit token-majority fingerprints (see
+    :func:`simhash_fingerprints`), paired when Hamming distance <=
+    max_hamming.
 
     Blocking: candidates must share the top ``prefix_bits`` of the
     fingerprint (single-probe multi-index blocking) — bounds the self-join
@@ -1587,9 +1501,8 @@ def simhash_near_dups(
     SimHash-blocking recall trade; multiple rotated tables fix it at
     scale).
     """
-    nbits = 60 if portable else 64
-    fp = simhash_fingerprints(docs, text_col, portable=portable).withColumn(
-        "block", F.shiftrightunsigned("fingerprint", nbits - prefix_bits)
+    fp = simhash_fingerprints(docs, text_col).withColumn(
+        "block", F.shiftrightunsigned("fingerprint", SIMHASH_BITS - prefix_bits)
     )
     fp = _pin(fp)
     a = fp.alias("a")

@@ -58,7 +58,7 @@ def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     corpus is the natural input for quality_score and the corpus
     pipeline, which would otherwise fail resolving an incidental
     column)."""
-    # r13: widen a one-file local scan before the per-row token work —
+    # Widen a one-file local scan before the per-row token work —
     # four tokenizations per row serialized on a single scan partition
     # (profiled: 1-task 0.7 s stages inside the text_stats leg).
     # ensure_parallel is a no-op on wide cluster scans and on streams.
@@ -132,14 +132,16 @@ def boilerplate_signals(
     """
     from ..functions.text import portable_hash64, word_shingles_from_tokens
     from ..sources.readers import ensure_parallel
+    from .dedup import scoped_pin
 
-    # persist the exploded gram-hash frame: it feeds BOTH the frequency
+    # pin the exploded gram-hash frame: it feeds BOTH the frequency
     # aggregate and the join probe, whose exchanges differ (partial agg
-    # vs raw rows) so exchange reuse cannot kick in — without the
-    # persist the whole-corpus tokenize -> shingle -> md5 map (the
-    # dominant cost) executes twice (same pattern as
-    # dedup.ngram_jaccard_pairs)
-    g = (
+    # vs raw rows) so exchange reuse cannot kick in — without the pin
+    # the whole-corpus tokenize -> shingle -> md5 map (the dominant
+    # cost) executes twice (same pattern as dedup.ngram_jaccard_pairs).
+    # scoped_pin registers it with the caller's dedup_cache_scope, which
+    # releases it on exit.
+    g = scoped_pin(
         ensure_parallel(docs)
         .select("doc_id", tokens(F.col(text_col)).alias("__toks"))
         .select(
@@ -149,7 +151,7 @@ def boilerplate_signals(
             ).alias("gram"),
         )
         .select("doc_id", portable_hash64(F.col("gram")).alias("gh"))
-    ).persist()
+    )
     freq = (
         g.where(F.col("gh").isNotNull())
         .groupBy("gh")
@@ -435,7 +437,7 @@ def gopher_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # codegen inside a LambdaFunction), which measured ~50 core-µs per
     # gram — 2x the whole rest of the operator. explode(positions) ×
     # explode(n) × slice+array_join are all ordinary codegen'd
-    # expressions. r8 order: positions explode FIRST, carrying only the
+    # expressions. Order: positions explode FIRST, carrying only the
     # max_n-token WINDOW at each position instead of the whole token
     # array per (n, pos) row — the n-explode then fans out rows whose
     # payload is ~10 tokens, and each n-gram is a prefix slice of its
@@ -444,8 +446,8 @@ def gopher_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # empty-token doc survives as one null-position row (its "" grams
     # carry zero char length, so every fraction still reads 0); docs
     # shorter than n simply have no (n, pos) rows — frac() coalesces
-    # the absent n to 0, same result as the r7 null-gram rows.
-    # r13 (guide §2.5 input skew / §1.2 algorithm first): the 9-n gram
+    # the absent n to 0, the same result as emitting null-gram rows.
+    # Input skew: the 9-n gram
     # expansion below is the most expression-heavy per-row pass in the
     # suite, and a small local parquet arrives as ONE scan partition —
     # profiled at sf0.1, the whole tokenize+explode+hash stage ran as a
@@ -563,7 +565,7 @@ def gopher_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def gopher_repetition_map(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Map-only twin of :func:`gopher_repetition` for STREAMING and
-    other aggregation-free contexts (VERDICT r6 #3): the statistic is
+    other aggregation-free contexts: the statistic is
     per-document with no corpus state, so one Arrow-batched
     ``mapInPandas`` computes it with zero shuffles and runs unchanged
     on a Structured Streaming source in append mode — where the batch
@@ -659,7 +661,7 @@ def wrap_tokens(
     separated paragraphs of ``lines_per_para`` lines. Replaces
     ``text_col``; every other column is preserved.
 
-    Purpose (VERDICT r6 #2): the synthetic sf corpora are single-line,
+    Purpose: the synthetic sf corpora are single-line,
     so the line/paragraph operators (:func:`line_repetition_stats`,
     ``dedup.line_dedup``) would pass their registry hash gates
     VACUOUSLY. Deriving a multi-line corpus *inside* the gated query —

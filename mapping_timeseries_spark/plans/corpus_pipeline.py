@@ -28,7 +28,7 @@ All flag joins are keyed on doc_id, so AQE collapses them onto one
 hash-partitioning of the corpus. No collect() anywhere; the stats dict
 comes from the Observation attached to the flagged frame.
 
-Streaming posture (r7): every per-doc FILTER stage of this stack now
+Streaming posture: every per-doc FILTER stage of this stack now
 has a stream==batch-pinned twin — canonicalization (normalize_text,
 map-only), PII redaction (redact_pii, map-only expressions), quality
 heuristics (expressions), Gopher repetition
@@ -67,7 +67,7 @@ __all__ = ["CorpusPipelineResult", "run_corpus_pipeline"]
 class CorpusPipelineResult:
     out_path: str
     stats: dict[str, Any]
-    #: r13: which near-dup verify path ran — the auto decision record
+    #: Which near-dup verify path ran — the auto decision record
     #: (participants/docs/fraction/narrow) or {"narrow": <override>,
     #: "override": True} when the caller forced it. Not a stats entry:
     #: stats values are integer counts by contract.
@@ -81,7 +81,6 @@ def flag_corpus(
     minhash_threshold: float = 0.5,
     contam_overlap: float = 0.2,
     min_quality: float = 0.4,
-    portable_hashes: bool = False,
     max_top_bigram_share: float | None = None,
     max_pii_hits: int | None = None,
     max_boilerplate_frac: float | None = None,
@@ -111,9 +110,9 @@ def flag_corpus(
     what to do with it (the pipeline filters AND observes; audits can
     inspect rejects).
 
-    **Output-semantics change (r9, flagged per ADVICE r9 #1):**
-    ``neardup_mode`` defaults to ``"star"``, which changed
-    ``pass_neardup`` for pre-r9 callers. Star mode feeds connected
+    **Output semantics of the default:**
+    ``neardup_mode`` defaults to ``"star"``, whose ``pass_neardup`` can
+    differ from the all-pairs one. Star mode feeds connected
     components only (bucket-min, member) candidate edges — O(k) on a
     hot near-identical clique where all-pairs is O(k²) and measured to
     die at k=10⁴ (artifacts/hot_clique_gate.json). Every candidate is
@@ -123,7 +122,7 @@ def flag_corpus(
     verification against BOTH now stay separate keepers (input-
     dependent; on transitively-similar corpora clusters are pytest- and
     oracle-pinned equal, tests/test_llm_ops.py + the dedup_clusters
-    star fold). Callers needing the pre-r9 exact-recall pair semantics
+    star fold). Callers needing the exact-recall all-pairs semantics
     pass ``neardup_mode="pairs"`` and accept the quadratic hot-clique
     cost; downstream consumers of ``pass_neardup`` should re-baseline.
 
@@ -183,7 +182,7 @@ def flag_corpus(
     ``neardup_narrow_verify``: restrict the near-dup verifier's
     shingle frame to candidate participants before its joins
     (dedup.narrow_sets_to_participants — broadcast semi-join,
-    row-identical by pytest). Default ``None`` = AUTO (r13): the
+    row-identical by pytest). Default ``None`` = AUTO: the
     operator counts candidate participants against the shingled
     corpus from frames it pins anyway and narrows iff the fraction is
     <= dedup.NARROW_VERIFY_MAX_FRACTION — see minhash_lsh_pairs. Pass
@@ -194,7 +193,7 @@ def flag_corpus(
     for the near-dup clustering stage. 'star' verifies only
     (bucket-min, member) edges — linear candidates even on a hot
     near-identical template clique (the input shape where 'pairs' goes
-    O(k²) and dies at 100 TB; VERDICT r8 #1) — and is sufficient for
+    O(k²) and dies at 100 TB) — and is sufficient for
     the connected-components consumer here. 'pairs' restores the full
     verified-all-pairs edge set (marginally higher recall on buckets
     whose min is dissimilar to similar members; semantics on
@@ -276,7 +275,7 @@ def flag_corpus(
         (F.col("doc_id") == F.min("doc_id").over(digest_w)).cast("int"),
     )
 
-    # mode="star" (VERDICT r8 #1): the consumer here is connected
+    # mode="star": the consumer here is connected
     # components, which needs a SPANNING edge set, not the full pair
     # list — all-pairs candidates are O(k²) on a hot near-identical
     # clique (boilerplate pages differing by a timestamp survive the
@@ -289,7 +288,6 @@ def flag_corpus(
         docs,
         text_col,
         threshold=minhash_threshold,
-        portable=portable_hashes,
         mode=neardup_mode,
         narrow_verify=neardup_narrow_verify,
     )
@@ -423,7 +421,6 @@ def run_corpus_pipeline(
     contam_overlap: float = 0.2,
     min_quality: float = 0.4,
     n_shards: int = 16,
-    portable_hashes: bool = False,
     max_top_bigram_share: float | None = None,
     max_pii_hits: int | None = None,
     max_boilerplate_frac: float | None = None,
@@ -454,7 +451,7 @@ def run_corpus_pipeline(
     produced (optional repetition/PII stages included when their
     thresholds are set); stats keys follow the flag names.
 
-    Cache hygiene (r8): the whole build-write-observe cycle runs inside
+    Cache hygiene: the whole build-write-observe cycle runs inside
     a :func:`~..operators.dedup.dedup_cache_scope` — every intermediate
     the stages pin (canonicalized corpus, line-deduped text, shingle/
     band tables) is unpersisted before this returns, because nothing
@@ -468,24 +465,23 @@ def run_corpus_pipeline(
         flagged = flag_corpus(
             docs,
             holdout,
-            text_col,
-            minhash_threshold,
-            contam_overlap,
-            min_quality,
-            portable_hashes,
-            max_top_bigram_share,
-            max_pii_hits,
-            max_boilerplate_frac,
-            max_dup_frac,
-            lm_ref,
-            max_ppl,
-            nb_model,
-            min_nb_log_odds,
-            corpus_vecs,
-            holdout_vecs,
-            semantic_contam_threshold,
-            canonicalize,
-            line_dedup_mode,
+            text_col=text_col,
+            minhash_threshold=minhash_threshold,
+            contam_overlap=contam_overlap,
+            min_quality=min_quality,
+            max_top_bigram_share=max_top_bigram_share,
+            max_pii_hits=max_pii_hits,
+            max_boilerplate_frac=max_boilerplate_frac,
+            max_dup_frac=max_dup_frac,
+            lm_ref=lm_ref,
+            max_ppl=max_ppl,
+            nb_model=nb_model,
+            min_nb_log_odds=min_nb_log_odds,
+            corpus_vecs=corpus_vecs,
+            holdout_vecs=holdout_vecs,
+            semantic_contam_threshold=semantic_contam_threshold,
+            canonicalize=canonicalize,
+            line_dedup_mode=line_dedup_mode,
             redact=redact,
             gopher_filter=gopher_filter,
             dsir_target=dsir_target,
@@ -527,7 +523,7 @@ def run_corpus_pipeline(
                 .asDict()
             )
             stats = {k: (0 if v is None else v) for k, v in row.items()}
-        # r13 observability: which verify path the near-dup stage actually
+        # Observability: which verify path the near-dup stage actually
         # took. The auto decision (narrow_verify=None) runs its counts at
         # flag-plan BUILD time (minhash_lsh_pairs body), so by now the
         # module-level record is this run's decision; an explicit True/False

@@ -73,3 +73,26 @@ def test_queries_survive_hostile_session_defaults(spark):
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
+
+
+@pytest.mark.parametrize("name", ["minhash_dedup", "dedup_clusters", "simhash_dedup"])
+def test_sketch_entries_match_duckdb_oracle(spark, name):
+    """The near-duplicate sketch entries call their operators at the
+    defaults, so this DuckDB comparison (the one tools/compare_oracle.py
+    runs) fails if the default hash family ever stops being the one the
+    oracle twin computes."""
+    import os
+
+    import duckdb
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+    )
+    from compare_oracle import compare_query, register_tables
+
+    con = duckdb.connect()
+    register_tables(con, SF_DIR)
+    result = compare_query(spark, con, SF_DIR, name)
+    con.close()
+    assert result["rows_match"] and result["schema_match"], result
+    assert result["hash_match"], result

@@ -84,6 +84,18 @@ def test_dedup_cache_scope_releases_pins(spark, noisy_docs):
     spark.catalog.clearCache()  # release the bare run's pins
 
 
+def test_cache_scope_releases_boilerplate_pin(spark, noisy_docs):
+    """boilerplate_signals pins its gram-hash frame through the dedup
+    cache scope, so nothing it persisted outlives the scope."""
+    from mapping_timeseries_spark.operators.textstats import boilerplate_signals
+
+    before = _persisted_rdd_ids(spark)
+    with dedup_cache_scope():
+        assert boilerplate_signals(noisy_docs).count() == 60
+        assert _persisted_rdd_ids(spark) - before  # the pin is live inside
+    assert _persisted_rdd_ids(spark) - before == set()
+
+
 def test_cache_scope_teardown_survives_failed_release(spark):
     """One failed unpersist must not abort the rest of the scope
     teardown — every remaining pin is still released."""
@@ -1815,7 +1827,7 @@ def test_minhash_incremental_index_roundtrip(spark, tmp_path):
     }
     full = {
         (r["doc_a"], r["doc_b"], round(r["jaccard"], 6))
-        for r in minhash_lsh_pairs(docs, threshold=0.5, portable=True).collect()
+        for r in minhash_lsh_pairs(docs, threshold=0.5).collect()
         if r["doc_a"] % 5 == 0 or r["doc_b"] % 5 == 0
     }
     assert incr == full and incr  # non-vacuous: the fixture has new-side dups
@@ -2348,7 +2360,7 @@ def test_lsh_star_candidates_linear_on_hot_clique(spark):
     k = 120
     docs = _hot_clique_corpus(spark, k)
     sh = _shingled(docs, "text", 2).where(F.col("n_shingles") > 0).persist()
-    banded = _band_frame(sh, 32, 8, False).persist()
+    banded = _band_frame(sh, 32, 8).persist()
     n_banded = banded.count()
     n_pairs = _lsh_candidates(banded, "pairs").count()
     n_star = _lsh_candidates(banded, "star").count()
@@ -2400,51 +2412,56 @@ def test_lsh_star_edges_are_verified_subset(spark, noisy_docs):
     assert star  # non-trivial on the planted-twin fixture
 
 
-def test_band_keys_lockstep_and_64bit(spark):
-    """r11 bucket-saturation fix guards: (1) _band_frame and
-    _band_frame_carrying produce IDENTICAL (doc_id, band, bucket) sets
-    — the incremental new-vs-index join and the stream==batch pin both
-    depend on band-key parity, so the two bucket_key expressions must
-    never drift apart; (2) the non-portable bucket key is 64-bit (a
-    32-bit key saturates by the birthday bound at ~50M docs — measured,
-    map_stage_10000x_gate.json)."""
-    from mapping_timeseries_spark.operators.dedup import (
-        _band_frame,
-        _band_frame_carrying,
-        _shingled,
+def test_band_keys_exact_with_and_without_carry(spark):
+    """_band_frame's bucket key is the band's signature values joined
+    with ',' — exact, so no corpus size can saturate the key space —
+    and passing columns through (``carry``, the stream's path) leaves
+    every (doc_id, band, bucket) row unchanged."""
+    from mapping_timeseries_spark.functions.text import (
+        MINHASH_PRIME,
+        minhash_base_hashes,
+        minhash_signature_portable,
     )
+    from mapping_timeseries_spark.operators.dedup import _band_frame, _shingled
 
     docs = _hot_clique_corpus(spark, 30)
     sh = _shingled(docs, "text", 2).where(F.col("n_shingles") > 0).persist()
-    for portable in (False, True):
-        a = {
-            (r["doc_id"], r["band"], r["bucket"])
-            for r in _band_frame(sh, 32, 8, portable).collect()
-        }
-        b = {
-            (r["doc_id"], r["band"], r["bucket"])
-            for r in _band_frame_carrying(sh, 32, 8, portable)
-            .select("doc_id", "band", "bucket")
-            .collect()
-        }
-        assert a == b, f"band-key drift (portable={portable})"
-    # 64-bit check: with 55 docs x 8 bands the xxhash64 bucket strings
-    # must leave the 32-bit range somewhere (P(all 440 draws inside
-    # 2^32 of a 2^64 space) ~ 0); a regression to F.hash cannot pass
-    buckets = [
-        int(r["bucket"])
-        for r in _band_frame(sh, 32, 8, False).select("bucket").collect()
+    plain = {
+        (r["doc_id"], r["band"], r["bucket"])
+        for r in _band_frame(sh, 32, 8).collect()
+    }
+    carried = _band_frame(sh, 32, 8, carry=("shingles", "n_shingles"))
+    assert carried.columns == [
+        "doc_id", "shingles", "n_shingles", "band", "bucket"
     ]
-    assert any(abs(v) > 2**31 for v in buckets), "bucket keys look 32-bit"
+    assert plain == {
+        (r["doc_id"], r["band"], r["bucket"])
+        for r in carried.select("doc_id", "band", "bucket").collect()
+    }
+    sigs = {
+        r["doc_id"]: r["sig"]
+        for r in sh.withColumn("base", minhash_base_hashes(F.col("shingles")))
+        .select(
+            "doc_id", minhash_signature_portable("base", 32).alias("sig")
+        )
+        .collect()
+    }
+    assert len(plain) == 8 * len(sigs)
+    for doc_id, band, bucket in plain:
+        values = [int(v) for v in bucket.split(",")]
+        assert values == sigs[doc_id][band * 4 : band * 4 + 4]
+        assert all(0 <= v < MINHASH_PRIME for v in values)
     sh.unpersist()
 
 
 def test_index_refuses_previous_bucket_key_generation(spark, tmp_path, noisy_docs):
-    """r11 bucket-saturation fix: a non-portable index banded under the
-    old 32-bit F.hash generation joins with ZERO candidates against
-    xxhash64-banded batches — silent missed duplicates, not an error.
-    meta.json now commits the generation and load refuses a mismatch;
-    portable indexes (band-value keys, derivation unchanged) are exempt."""
+    """An index of the removed seeded-xxhash64 MinHash family
+    (meta.json ``portable: false``) has bucket keys that never collide
+    with the keys new batches get, so deduping against it would join
+    ZERO candidates — silent missed duplicates, not an error. Loading it
+    raises with a rebuild message. An index built now loads, and so
+    does an older md5-family index whose meta.json has no
+    ``bucket_hash`` (its keys are the band values, never re-derived)."""
     import json as _json
 
     from mapping_timeseries_spark.operators.dedup import (
@@ -2453,31 +2470,20 @@ def test_index_refuses_previous_bucket_key_generation(spark, tmp_path, noisy_doc
     )
 
     path = str(tmp_path / "idx")
-    build_minhash_index(noisy_docs, path, portable=False)
-    # fresh index carries the generation and loads fine
-    _, _, meta = load_minhash_index(spark, path)
-    assert meta["bucket_hash"] == "xxhash64"
+    build_minhash_index(noisy_docs, path)
+    _, _, meta = load_minhash_index(spark, path)  # built now: loads
+    assert meta["portable"] is True
 
-    # simulate a pre-fix index: old meta had no bucket_hash field
     mp = f"{path}/meta.json"
-    with open(mp) as f:
-        old_meta = _json.load(f)
-    del old_meta["bucket_hash"]
+    old_md5 = {k: v for k, v in meta.items() if k != "bucket_hash"}
     with open(mp, "w") as f:
-        _json.dump(old_meta, f)
-    with pytest.raises(ValueError, match="bucket-key generation"):
-        load_minhash_index(spark, path)
+        _json.dump(old_md5, f)
+    load_minhash_index(spark, path)  # older md5-family meta: no raise
 
-    # portable index: exempt even without the field (keys never changed)
-    ppath = str(tmp_path / "pidx")
-    build_minhash_index(noisy_docs, ppath, portable=True)
-    mp = f"{ppath}/meta.json"
-    with open(mp) as f:
-        pm = _json.load(f)
-    del pm["bucket_hash"]
     with open(mp, "w") as f:
-        _json.dump(pm, f)
-    load_minhash_index(spark, ppath)  # no raise
+        _json.dump({**meta, "portable": False, "bucket_hash": "xxhash64"}, f)
+    with pytest.raises(ValueError, match="rebuild"):
+        load_minhash_index(spark, path)
 
 
 def test_narrowed_verify_row_identical(spark):
@@ -2498,7 +2504,7 @@ def test_narrowed_verify_row_identical(spark):
 
     docs = read_table(spark, "/root/testdata/sf0.001", "documents").limit(200)
     sh = _shingled(docs, "text", 2).where(F.col("n_shingles") > 0).persist()
-    banded = _band_frame(sh, 32, 8, False).persist()
+    banded = _band_frame(sh, 32, 8).persist()
     cand = _lsh_candidates(banded, "star").persist()
     try:
         full = sorted(map(tuple, _verify_jaccard(cand, sh, 0.5).collect()))

@@ -756,7 +756,7 @@ def test_stream_minhash_dedup_vs_index_matches_batch(spark, tmp_path):
     standing = docs.where(F.col("doc_id") % 5 != 0)
     batch = docs.where(F.col("doc_id") % 5 == 0)
     idx = str(tmp_path / "lsh_idx")
-    build_minhash_index(standing, idx, portable=True)
+    build_minhash_index(standing, idx)
 
     batch_ids = {r["doc_id"] for r in batch.select("doc_id").collect()}
     ref = {
@@ -787,7 +787,6 @@ def test_stream_minhash_dedup_vs_index_matches_batch(spark, tmp_path):
             num_hashes=meta["num_hashes"],
             bands=meta["bands"],
             threshold=0.5,
-            portable=meta["portable"],
         ),
         "t_minhash_stream",
         output_mode="append",
@@ -815,7 +814,6 @@ def test_stream_minhash_dedup_vs_index_matches_batch(spark, tmp_path):
             num_hashes=meta["num_hashes"],
             bands=meta["bands"],
             threshold=0.5,
-            portable=meta["portable"],
             watermark_col="arrived",
         ),
         "t_minhash_stream_wm",

@@ -217,7 +217,6 @@ def evaluate_checks(
 def _pipeline_kwargs(docs, lm_ref_1x, scale: int, nb_model: dict) -> dict:
     return dict(
         min_quality=MIN_QUALITY,
-        portable_hashes=True,
         lm_ref=lm_ref_1x,
         max_ppl=MAX_PPL,
         nb_model=nb_model,

@@ -102,7 +102,6 @@ def _pipeline_kwargs(docs, scale: int, nb_model: dict) -> dict:
     run (run_corpus_pipeline) and the replica-0 gate (flag_corpus)."""
     return dict(
         min_quality=MIN_QUALITY,
-        portable_hashes=True,
         lm_ref=docs.where(F.col("source") != "src0"),
         max_ppl=MAX_PPL,
         nb_model=nb_model,

@@ -14,8 +14,8 @@ Gate semantics differ per query and are recorded per entry:
 - ``exact_dedup`` / ``text_stats_core`` — EXACT: output grain is
   per-distinct-text / per-doc and the algorithms are deterministic and
   rename-invariant, so rows_Nx == N * rows_1x is an identity.
-- ``minhash_pairs_scale`` (the xxhash64 scale-path
-  minhash_lsh_pairs(portable=False)) — BAND (±10%): LSH recall is
+- ``minhash_pairs_scale`` (minhash_lsh_pairs at its defaults) —
+  BAND (±10%): LSH recall is
   per-pair stochastic (catch prob 1-(1-J^r)^b), and each replica's
   renamed shingles are a fresh draw, so replica 0's realized catch
   (== the 1x count) is itself one sample of the per-replica
@@ -63,7 +63,7 @@ def _queries():
     def q_minhash_scale(spark, sf_dir):
         ensure_runtime_conf(spark)
         docs = read_table(spark, sf_dir, "documents")
-        return minhash_lsh_pairs(docs, threshold=0.5, portable=False).select(
+        return minhash_lsh_pairs(docs, threshold=0.5).select(
             "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
         )
 
@@ -79,9 +79,7 @@ def _queries():
 
         ensure_runtime_conf(spark)
         docs = read_table(spark, sf_dir, "documents")
-        pairs = minhash_lsh_pairs(
-            docs, threshold=0.5, portable=False, mode="star"
-        )
+        pairs = minhash_lsh_pairs(docs, threshold=0.5, mode="star")
         return dedup_clusters(docs, pairs)
 
     # (fn, gate kind, build_timed): CC runs its convergence probes while

@@ -112,7 +112,7 @@ def main(out_path: str) -> None:
         docs = clique_corpus(spark, k).persist()
         n_docs = docs.count()
         sh = _shingled(docs, "text", 2).where(F.col("n_shingles") > 0).persist()
-        banded = _band_frame(sh, 32, 8, False).persist()
+        banded = _band_frame(sh, 32, 8).persist()
         n_banded = banded.count()
         # analytic all-pairs join output: one aggregation, no join
         join_volume = int(
@@ -230,7 +230,7 @@ def pairs_count(k: int) -> None:
     spark = get_spark()
     docs = clique_corpus(spark, k)
     sh = _shingled(docs, "text", 2).where(F.col("n_shingles") > 0)
-    banded = _band_frame(sh, 32, 8, False).persist()
+    banded = _band_frame(sh, 32, 8).persist()
     print(f"PAIRS_COUNT={_lsh_candidates(banded, 'pairs').count()}")
     spark.stop()
 

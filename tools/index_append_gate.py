@@ -21,9 +21,8 @@ the rest of the dedup family is gated at:
   re-quantizes), equality = per-row hash-sum + count over
   (vec_id, centroid_id) plus the committed meta row counts.
 
-Non-portable (xxhash64) banding — the at-scale generation; the r11
-index-meta guard is exercised implicitly (build commits the generation,
-the append loads it).
+Banding is the engine's one MinHash family; the index-meta guard is
+exercised implicitly (build commits the family, the append loads it).
 
 Expectations are EXACT (not banded): assignment and banding are
 deterministic given the inputs, and append vs rebuild see identical
@@ -173,7 +172,7 @@ def main() -> int:
     mh_app = os.path.join(work, "mh_append")
     mh_reb = os.path.join(work, "mh_rebuild")
     t0 = time.monotonic()
-    D.build_minhash_index(base, mh_app, portable=False)
+    D.build_minhash_index(base, mh_app)
     out["minhash_build_base_wall_sec"] = round(time.monotonic() - t0, 1)
     _release()
     t0 = time.monotonic()
@@ -181,7 +180,7 @@ def main() -> int:
     out["minhash_append_wall_sec"] = round(time.monotonic() - t0, 1)
     _release()
     t0 = time.monotonic()
-    D.build_minhash_index(docs, mh_reb, portable=False)
+    D.build_minhash_index(docs, mh_reb)
     out["minhash_rebuild_wall_sec"] = round(time.monotonic() - t0, 1)
     _release()
 

@@ -4,11 +4,9 @@ Three gates time the same staged decomposition of the near-dup
 pipeline — dedup_1000x_gate's per-stage breakdown,
 map_stage_10000x_gate's fourth-decade probe, and
 neardup_composed_gate's end-to-end composition. The stage expressions
-and parameters (word-2-gram shingles, 32 hashes, 8 bands,
-non-portable xxhash64 keys, Jaccard 0.5) MUST be byte-identical across
-them or the gates measure different pipelines; the r11 bucket-key fix
-had to touch two banding paths and is exactly the drift this module
-exists to prevent. The frames are built from the production operator
+and parameters (word-2-gram shingles, 32 hashes, 8 bands, Jaccard 0.5)
+MUST be byte-identical across them or the gates measure different
+pipelines; this module exists to prevent that drift. The frames are built from the production operator
 internals (operators.dedup) — no gate-only reimplementation.
 """
 
@@ -17,7 +15,6 @@ from __future__ import annotations
 NGRAM_N = 2
 NUM_HASHES = 32
 BANDS = 8
-PORTABLE = False
 THRESHOLD = 0.5
 
 
@@ -34,7 +31,7 @@ def staged_frames(docs, pin_shingles: bool = True):
     if pin_shingles:
         sh = D.scoped_pin(sh)
     sh = sh.where(sh.n_shingles > 0)
-    banded = D.scoped_pin(D._band_frame(sh, NUM_HASHES, BANDS, PORTABLE))
+    banded = D.scoped_pin(D._band_frame(sh, NUM_HASHES, BANDS))
     return sh, banded
 
 

@@ -11,9 +11,9 @@ Scope is deliberately the two corpus-sized stages only:
   peak scratch 0 for this stage), so band_rows = 8 x docs-with-shingles
   is an identity: 400,000,000 expected.
 - STAGE B candidates (banded ±10%): the LSH band self-join pair volume.
-  Stochastic per replica (renamed shingles re-roll the S-curve); 64-bit
-  band buckets make cross-replica collisions negligible, so volume
-  concentrates at factor x the 1x draw.
+  Stochastic per replica (renamed shingles re-roll the S-curve); exact
+  band-value buckets keep cross-replica collisions to real band
+  agreements, so volume concentrates at factor x the 1x draw.
 
 Exact-Jaccard verification and CC are NOT re-run here: both are
 candidate-sized (three-decade evidence at x1000, wall 20 s + 12 s of a
