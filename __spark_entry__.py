@@ -1364,9 +1364,9 @@ def q_minhash_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     old = docs.where(F.col("doc_id") % 5 != 0)
     new = docs.where(F.col("doc_id") % 5 == 0)
-    bands_df, sh_df = minhash_index_frames(old)
+    bands_df, hsets_df = minhash_index_frames(old)
     return _minhash_sel(
-        minhash_dedup_incremental(new, bands_df, sh_df, threshold=0.5),
+        minhash_dedup_incremental(new, bands_df, hsets_df, threshold=0.5),
         "incr",
     )
 

@@ -10,12 +10,14 @@ Scale design
 - MinHash LSH is the scale path: signature -> band buckets -> self-join on
   (band, bucket-hash) -> candidate pairs -> Jaccard verify. The band join
   only pairs documents agreeing on a full band, so the join fan-out is the
-  collision count, not n^2.
+  collision count, not n^2. Every MinHash path pins, stores and verifies
+  one per-doc form, the sorted xxhash64 shingle set (:func:`_minhash_sets`);
+  string shingles exist only inside the projection that hashes them.
 - SimHash gives a 60-bit fingerprint; near-dup = small Hamming distance.
   The block-join by fingerprint prefix bounds the pair space.
 - Embedding near-dup reuses the cosine machinery from similarity.py.
 
-Caching note: the multi-consumer intermediates (shingle tables, band
+Caching note: the multi-consumer intermediates (hash-set tables, band
 tables, fingerprints) are ``persist()``-ed inside the operators and NOT
 unpersisted — they back the lazily-returned result, so releasing them
 here would defeat the reuse. In a long-lived session that invokes these
@@ -163,102 +165,63 @@ def content_hash_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
 _ensure_parallel = ensure_parallel
 
 
-def _shingled(docs: DataFrame, text_col: str, n: int) -> DataFrame:
+def _shingled(
+    docs: DataFrame, text_col: str, n: int, keep_cols: tuple = ()
+) -> DataFrame:
+    """``(doc_id, *keep_cols, shingles, n_shingles)``: each doc's
+    distinct word n-grams as strings — the one tokenize+shingle body.
+    Operators hash the strings in the next projection
+    (:func:`_ngram_hsets`, :func:`_minhash_sets`) and never pin, store
+    or join them."""
     # two-step projection: bind the token array, THEN shingle from it —
     # an unbound tokens(text) inside the gram lambda re-splits the text
     # per element (see word_shingles_from_tokens)
+    extra = [F.col(c) for c in keep_cols]
     return (
         _ensure_parallel(docs)
-        .select("doc_id", tokens(F.col(text_col)).alias("__toks"))
+        .select("doc_id", *extra, tokens(F.col(text_col)).alias("__toks"))
         .select(
             "doc_id",
+            *extra,
             word_shingles_from_tokens(F.col("__toks"), n).alias("shingles"),
         )
         .withColumn("n_shingles", F.size("shingles"))
     )
 
 
-def _verify_jaccard(
-    candidates: DataFrame, sh: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact Jaccard for candidate (doc_a, doc_b) pairs via
-    array_intersect against the persisted shingle sets."""
-    sets_a = sh.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("__sh_a"),
-        F.col("n_shingles").alias("__na"),
-    )
-    sets_b = sh.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("__sh_b"),
-        F.col("n_shingles").alias("__nb"),
-    )
-    return (
-        candidates.join(sets_a, "doc_a")
-        .join(sets_b, "doc_b")
-        .withColumn("__common", F.size(F.array_intersect("__sh_a", "__sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("__common") / (F.col("__na") + F.col("__nb") - F.col("__common")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+def _sorted_hashes(shingles: str):
+    """The per-doc set form: xxhash64 of each shingle, sorted. Shingles
+    are distinct per doc (word_shingles_from_tokens ends in
+    array_distinct), so the array is the doc's shingle set up to a
+    64-bit collision (see :func:`_verify_jaccard_hashed`)."""
+    return F.array_sort(F.transform(shingles, lambda s: F.xxhash64(s)))
 
 
-#: Auto narrow_verify threshold: narrow the
-#: verifier iff the distinct candidate participants are at most this
-#: fraction of the shingled corpus. Rationale for 0.25: narrowing pays
-#: one extra map-side pass of the tokenize+shingle pipeline and one
-#: broadcast of the participant-id list, and buys verify shuffles of
-#: |participants| rows instead of |corpus| rows plus never building the
-#: corpus-wide shingle pin — at <=25% participation the shuffle saving
-#: is >=4x and the broadcast is bounded by a quarter of the corpus ids
-#: (~8 B each), while past it the saving shrinks toward parity and the
-#: broadcast grows toward the corpus-sized list the helper's boundary
-#: note warns about.
-NARROW_VERIFY_MAX_FRACTION = 0.25
-
-#: Observability for the auto decision (tests + operators read it):
-#: set by minhash_lsh_pairs whenever narrow_verify=None resolved itself.
-LAST_NARROW_VERIFY_DECISION: dict | None = None
-
-
-def should_narrow_verify(
-    n_participants: int,
-    n_docs: int,
-    max_fraction: float = NARROW_VERIFY_MAX_FRACTION,
-) -> bool:
-    """Pure auto-narrow decision (pytest-pinned): narrow iff candidate
-    participants are at most ``max_fraction`` of the shingled corpus.
-    Both counts may be approx_count_distinct readings (~2% rsd) — fine
-    for a 4x-margin threshold decision, never used for results."""
-    if n_docs <= 0:
-        return False
-    return n_participants <= max_fraction * n_docs
+#: What a verifier joins and an index stores: the per-doc hash set.
+_SET_COLS = ("doc_id", "n_shingles", "__hset")
 
 
 def narrow_sets_to_participants(
     sets_df: DataFrame, candidates: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Restrict a per-doc set frame (string shingles or hashed sets) to
-    the docs that actually appear in a candidate pair list, via a
-    BROADCAST left-semi join over the distinct participant ids.
+    """Restrict a per-doc set frame to the docs that actually appear in
+    a candidate pair list, via a BROADCAST left-semi join over the
+    distinct participant ids.
 
     The verifier only ever reads set rows for docs present in
     ``candidates`` (both its joins are inner on doc_a/doc_b), so this is
-    candidate-removing-only — verify(narrow(sh, cand), cand) is
-    row-identical to verify(sh, cand) (pytest-pinned). What it buys at
+    candidate-removing-only — verify(narrow(sets, cand), cand) is
+    row-identical to verify(sets, cand) (pytest-pinned). What it buys at
     scale: the corpus-sized set frame is filtered MAP-SIDE (broadcast
     semi-join, no Exchange of the big side) before the verify joins, so
     their shuffles move |participants| rows instead of |corpus| rows.
-    The x10000 composed gate measured the difference directly: at 50M docs
-    the un-narrowed verify must shuffle all 50M string-shingle rows
-    (tens of GB), while star-candidate participants are ~1% of the
-    corpus. Boundary: the broadcast carries the distinct participant-id
-    list (~8 B each, ~80 MB at 10M participants); past ~100M
-    participants switch to a Bloom-filter semi-join or let AQE pick the
-    strategy by dropping the explicit broadcast hint."""
+    The x10000 composed gate measured the difference directly: at 50M
+    docs the un-narrowed verify must shuffle all 50M set rows, while
+    star-candidate participants are ~1% of the corpus. Boundary: the
+    broadcast carries the distinct participant-id list (~8 B each,
+    ~80 MB at 10M participants); past ~100M participants switch to a
+    Bloom-filter semi-join or let AQE pick the strategy by dropping the
+    explicit broadcast hint."""
     ids = (
         candidates.select(F.col("doc_a").alias(id_col))
         .unionByName(candidates.select(F.col("doc_b").alias(id_col)))
@@ -267,16 +230,34 @@ def narrow_sets_to_participants(
     return sets_df.join(F.broadcast(ids), id_col, "left_semi")
 
 
+def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Rows of ``pairs`` whose two joined sets ``(__h_a, __na)`` and
+    ``(__h_b, __nb)`` have Jaccard >= threshold, with ``jaccard`` added
+    — the one verify expression of the batch verifier and the stream."""
+    return (
+        pairs.withColumn(
+            "__common", F.size(F.array_intersect("__h_a", "__h_b"))
+        )
+        .withColumn(
+            "jaccard",
+            F.col("__common")
+            / (F.col("__na") + F.col("__nb") - F.col("__common")),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def _verify_jaccard_hashed(
     candidates: DataFrame, hsets: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact-by-hash Jaccard verification for candidate (doc_a, doc_b)
-    pairs against per-doc SORTED arrays of 64-bit shingle hashes.
+    pairs against per-doc SORTED arrays of 64-bit shingle hashes — the
+    one verifier of MinHash and n-gram Jaccard.
 
-    Two deliberate scale choices vs :func:`_verify_jaccard` (the
-    string-array form), driven by the measured 10x super-linearity
-    (artifacts/ppjoin_growth.json: candidates x10 but wall x19 —
-    the verification stage spilled):
+    Two deliberate scale choices, driven by the measured 10x
+    super-linearity (artifacts/ppjoin_growth.json: candidates x10 but
+    wall x19 — the verification stage spilled while it joined string
+    shingle arrays):
 
     - rows carry ``array<long>`` (8 B/shingle) instead of string
       shingles (~1 KB/doc with JVM object overhead), shrinking the
@@ -287,70 +268,70 @@ def _verify_jaccard_hashed(
       stream is never SORTED — sort-merge-join was what spilled when
       15M candidate rows each carrying a ~1 KB array hit the sorter.
 
-    |A| and |B| come from the ORIGINAL string-shingle counts; the hash
-    arrays are used only for the intersection count. A 64-bit collision
-    (two distinct shingles, same xxhash64) can overcount the overlap by
-    1 — expected colliding shingle pairs ~ V^2/2^65, i.e. ~1e-9 at 256k
+    |A| and |B| come from the string-shingle counts; the hash arrays
+    are used only for the intersection count. A 64-bit collision (two
+    distinct shingles, same xxhash64) can overcount the overlap by 1 —
+    expected colliding shingle pairs ~ V^2/2^65, i.e. ~1e-9 at 256k
     distinct shingles and still <0.003 at 1e8 — a documented
     approximation, same contract as the module's other hash-keyed
     operators (gopher repetition, dup_spans, line_dedup)."""
     sets_a = hsets.select(
         F.col("doc_id").alias("doc_a"),
         F.col("__hset").alias("__h_a"),
-        F.col("n_shingles").alias("__vna"),
+        F.col("n_shingles").alias("__na"),
     )
     sets_b = hsets.select(
         F.col("doc_id").alias("doc_b"),
         F.col("__hset").alias("__h_b"),
-        F.col("n_shingles").alias("__vnb"),
+        F.col("n_shingles").alias("__nb"),
     )
-    return (
-        candidates.join(sets_a.hint("shuffle_hash"), "doc_a")
-        .join(sets_b.hint("shuffle_hash"), "doc_b")
-        .withColumn("__common", F.size(F.array_intersect("__h_a", "__h_b")))
-        .withColumn(
-            "jaccard",
-            F.col("__common")
-            / (F.col("__vna") + F.col("__vnb") - F.col("__common")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_at_least(
+        candidates.join(sets_a.hint("shuffle_hash"), "doc_a").join(
+            sets_b.hint("shuffle_hash"), "doc_b"
+        ),
+        threshold,
+    ).select("doc_a", "doc_b", "jaccard")
 
 
 def _ngram_hsets(
     docs: DataFrame, text_col: str, n: int, keep_cols: tuple = ()
 ) -> DataFrame:
     """PPJoin stage 1: per-doc SORTED arrays of 64-bit shingle hashes
-    ``(doc_id, n_shingles, __hset)`` — the compact frame both the
-    posting explode and the exact verifier read. Split out so the
-    100x staging harness (tools/text_100x_gate.py) can
-    checkpoint each stage to parquet once instead of re-paying the
-    shingle pass per bucketed action.
+    ``(doc_id, *keep_cols, n_shingles, __hset)`` — the compact frame
+    both the posting explode and the exact verifier read. Split out so
+    the 100x staging harness (tools/text_100x_gate.py) can checkpoint
+    each stage to parquet once instead of re-paying the shingle pass
+    per bucketed action.
 
     ``keep_cols``: extra doc columns carried through unchanged —
     lets one shared hsets pass serve consumers that partition the
     corpus by a metadata column (q_ngram_jaccard splits on ``source``
     for the decontamination half) without a corpus-sized join to
     re-attach it."""
-    extra = [F.col(c) for c in keep_cols]
-    sh = (
-        _ensure_parallel(docs)
-        .select("doc_id", *extra, tokens(F.col(text_col)).alias("__toks"))
-        .select(
-            "doc_id",
-            *extra,
-            word_shingles_from_tokens(F.col("__toks"), n).alias("shingles"),
-        )
-        .withColumn("n_shingles", F.size("shingles"))
-    )
-    return sh.select(
+    return _shingled(docs, text_col, n, keep_cols).select(
         "doc_id",
-        *extra,
+        *keep_cols,
         "n_shingles",
-        F.array_sort(
-            F.transform("shingles", lambda s: F.xxhash64(s))
-        ).alias("__hset"),
+        _sorted_hashes("shingles").alias("__hset"),
+    )
+
+
+def _minhash_sets(
+    docs: DataFrame, text_col: str, n: int, keep_cols: tuple = ()
+) -> DataFrame:
+    """The one per-doc MinHash form: :func:`_ngram_hsets`'s columns plus
+    ``__base``, each shingle's md5-derived base hash
+    (:func:`minhash_base_hashes`), which the signature reads. Both
+    arrays come out of one tokenize+shingle projection: banding reads
+    ``__base`` and verification reads ``__hset``, so a caller that pins
+    this frame runs the shingle pass once. Indexes store only
+    ``_SET_COLS``."""
+    return _shingled(docs, text_col, n, keep_cols).select(
+        "doc_id",
+        *keep_cols,
+        "n_shingles",
+        _sorted_hashes("shingles").alias("__hset"),
+        minhash_base_hashes(F.col("shingles")).alias("__base"),
     )
 
 
@@ -742,38 +723,24 @@ def ngram_decontaminate(
     # shared_ngrams by 1 with probability ~V^2/2^65 — the DuckDB oracle
     # stays the exact string formulation and the registry gate
     # hash-compares against it.
-    # don't compute things twice: callers that have
-    # already paid the shingle pass (q_ngram_jaccard shares the PPJoin
-    # half's pinned hsets) pass ``*_hsets`` frames in `_ngram_hsets`
-    # shape; shingles are DISTINCT per doc (word_shingles_from_tokens
-    # ends in array_distinct), so exploding the sorted-hash array
-    # yields exactly the xxhash64 stream the string path computes —
-    # one tokenize+shingle+hash pass over the corpus instead of two.
-    if train_hsets is not None:
-        tr = train_hsets.select(
-            F.col("doc_id").alias("train_doc"),
-            F.explode("__hset").alias("shingle"),
-        )
-    else:
-        tr = _shingled(train, text_col, n).select(
-            F.col("doc_id").alias("train_doc"),
-            F.explode("shingles").alias("__s"),
-        ).select("train_doc", F.xxhash64("__s").alias("shingle"))
-    if holdout_hsets is not None:
-        ho = holdout_hsets.select(
-            F.col("doc_id").alias("holdout_doc"),
-            F.col("n_shingles").alias("holdout_ngrams"),
-            F.explode("__hset").alias("shingle"),
-        )
-    else:
-        ho_sh = _pin(_shingled(holdout, text_col, n))
-        ho = ho_sh.select(
-            F.col("doc_id").alias("holdout_doc"),
-            F.col("n_shingles").alias("holdout_ngrams"),
-            F.explode("shingles").alias("__s"),
-        ).select(
-            "holdout_doc", "holdout_ngrams", F.xxhash64("__s").alias("shingle")
-        )
+    # don't compute things twice: callers that have already paid the
+    # shingle pass (q_ngram_jaccard shares the PPJoin half's pinned
+    # hsets) pass ``*_hsets`` frames in `_ngram_hsets` shape. Exploding
+    # a sorted-hash array yields each distinct shingle's hash once.
+    if train_hsets is None:
+        train_hsets = _ngram_hsets(train, text_col, n)
+    if holdout_hsets is None:
+        # pinned: the Bloom build and the broadcast join both read it
+        holdout_hsets = _pin(_ngram_hsets(holdout, text_col, n))
+    tr = train_hsets.select(
+        F.col("doc_id").alias("train_doc"),
+        F.explode("__hset").alias("shingle"),
+    )
+    ho = holdout_hsets.select(
+        F.col("doc_id").alias("holdout_doc"),
+        F.col("n_shingles").alias("holdout_ngrams"),
+        F.explode("__hset").alias("shingle"),
+    )
     if bloom_bits_per_key is not None:
         bloom_row, k = _bloom_frame(
             ho.select(F.col("shingle").alias("__h")).distinct(),
@@ -809,16 +776,17 @@ def ngram_decontaminate(
 def _band_frame(
     sh: DataFrame, num_hashes: int, bands: int, carry=()
 ) -> DataFrame:
-    """LSH banding of a shingled frame: (doc_id, *carry, band,
-    bucket:string), one row per (doc, band) — the one candidate-key
-    generator for the batch self-join (:func:`minhash_lsh_pairs`), the
-    persisted index and its incremental join
-    (:func:`minhash_dedup_incremental`), and the stream
-    (:func:`minhash_dedup_stream`, which passes its shingle set and
+    """LSH banding of a :func:`_minhash_sets` frame: (doc_id, *carry,
+    band, bucket:string), one row per (doc, band) — the one
+    candidate-key generator for the batch self-join
+    (:func:`minhash_lsh_pairs`), the persisted index and its
+    incremental join (:func:`minhash_dedup_incremental`), and the
+    stream (:func:`minhash_dedup_stream`, which passes its hash set and
     watermark through as ``carry``; a falsy ``carry`` passes nothing).
+    A :func:`_shingled` frame (no ``__base``) is hashed here instead.
 
     The signature is :func:`minhash_signature_portable` over the
-    projected :func:`minhash_base_hashes`, and a band's
+    ``__base`` array of :func:`minhash_base_hashes`, and a band's
     bucket key is its ``num_hashes // bands`` values joined with ``,``.
     Each value is below 2^31, so the key is exact — two docs share a
     bucket only if they agree on the whole band, at any corpus size —
@@ -840,9 +808,9 @@ def _band_frame(
             ],
         )
 
-    return sh.withColumn(
-        "__base", minhash_base_hashes(F.col("shingles"))
-    ).withColumn("sig", sig).select(
+    if "__base" not in sh.columns:
+        sh = sh.withColumn("__base", minhash_base_hashes(F.col("shingles")))
+    return sh.withColumn("sig", sig).select(
         "doc_id",
         *carry,
         F.explode(
@@ -934,7 +902,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     mode: str = "pairs",
-    narrow_verify: bool | None = None,
 ) -> DataFrame:
     """MinHash + LSH near-dup candidates, Jaccard-verified.
 
@@ -953,6 +920,9 @@ def minhash_lsh_pairs(
     signature is functions.text.minhash_signature_portable — ONE md5
     per shingle, then one integer permutation per hash — and the band
     keys are the band values themselves (:func:`_band_frame`).
+    Each doc's shingles are projected once, into its hash set and base
+    hashes (:func:`_minhash_sets`); banding and the verifier
+    (:func:`_verify_jaccard_hashed`) both read that one pin.
     The DuckDB twin is generated from the SAME coefficients, so the
     full signature->band->verify pipeline is hash-compared end-to-end.
 
@@ -964,30 +934,6 @@ def minhash_lsh_pairs(
     than the pair list itself; see :func:`_lsh_candidates` for the exact
     recall semantics and :func:`dedup_clusters` / the corpus pipeline
     for the consumer wiring.
-
-    ``narrow_verify``: restrict
-    the verifier's shingle frame to the candidate participants via
-    :func:`narrow_sets_to_participants` (broadcast semi-join) before
-    the two verify joins — row-identical output (pytest). Two scale
-    effects, both matching the x10000 gate path exactly (lsh_stages
-    pin_shingles=False + narrowed_verify): the verify shuffles move
-    |participants| rows instead of |corpus| rows, AND the corpus-wide
-    shingle pin is never built — only the participant-narrowed frame
-    is cached, at the cost of a second map-side evaluation of the
-    tokenize+shingle pipeline (body comment). Wrong on corpora where
-    candidates span most of the corpus: the broadcast id list would be
-    corpus-sized (boundary documented on the helper). The default
-    ``None`` therefore AUTO-selects: the candidate frame is pinned
-    before the decision anyway, so two approx-distinct counts read
-    from cache (participants; shingled docs from the banded pin) pick
-    the narrow path iff participants <= NARROW_VERIFY_MAX_FRACTION of
-    the corpus (:func:`should_narrow_verify`; decision recorded in
-    LAST_NARROW_VERIFY_DECISION). Pass True/False to override — e.g.
-    the x10000 gate passes True because its planted duplication rate
-    is known up front. Auto-wide pays one extra map pass of the
-    shingle pipeline vs explicit False (the corpus pin is built only
-    after the decision, so banding ran uncached); auto-narrow costs
-    the two cached counts only.
     """
     if bands < 1 or num_hashes % bands != 0:
         # a silent truncation changes the S-curve 1-(1-J^r)^b the
@@ -1006,58 +952,17 @@ def minhash_lsh_pairs(
     # scan, evaluating the whole tokenize+shingle expression serially
     # there and AGAIN in the projection (measured 0.55 s -> 7 s at
     # sf0.1 before this ordering).
-    # narrow_verify: the corpus-wide shingle frame is deliberately NOT
-    # pinned — avoiding that pin (tens of GB at 50M docs, mostly rows
-    # the verifier never reads) is the knob's whole point, and matches
-    # the x10000 gate path (lsh_stages.staged_frames pin_shingles=False)
-    # exactly. The trade: the tokenize+shingle pipeline evaluates twice
-    # (once under the banding action, once map-side under the narrowing
-    # filter) instead of once-from-cache — a second pure map pass, paid
-    # so executors never hold the corpus-wide cache.
-    auto = narrow_verify is None
-    sh = _shingled(docs, text_col, n)
-    if narrow_verify is False:
-        sh = _pin(sh)
-    sh = sh.where(F.col("n_shingles") > 0)
-    banded = _pin(_band_frame(sh, num_hashes, bands))
+    # One pin, one shingle pass: banding reads its __base, the
+    # verifier its __hset.
+    sets = _pin(_minhash_sets(docs, text_col, n)).where(
+        F.col("n_shingles") > 0
+    )
     # persisted: the self-join (or hub join) would otherwise recompute
     # the full signature pipeline once per side
-    cand = _lsh_candidates(banded, mode)
-    if auto or narrow_verify:
-        # pinned either way: the auto counts AND the verify joins both
-        # consume the candidate frame
-        cand = _pin(cand)
-    if auto:
-        # both counts are cache-served (cand pin; banded pin for the
-        # shingled-corpus denominator — docs with zero shingles can
-        # never be verify rows, so they belong in neither count)
-        n_docs = int(
-            banded.agg(
-                F.approx_count_distinct("doc_id").alias("n")
-            ).collect()[0]["n"]
-        )
-        n_part = int(
-            cand.select(F.explode(F.array("doc_a", "doc_b")).alias("id"))
-            .agg(F.approx_count_distinct("id").alias("n"))
-            .collect()[0]["n"]
-        )
-        narrow_verify = should_narrow_verify(n_part, n_docs)
-        global LAST_NARROW_VERIFY_DECISION
-        LAST_NARROW_VERIFY_DECISION = {
-            "n_participants": n_part,
-            "n_docs": n_docs,
-            "fraction": round(n_part / n_docs, 4) if n_docs else None,
-            "max_fraction": NARROW_VERIFY_MAX_FRACTION,
-            "narrow": narrow_verify,
-        }
-        if not narrow_verify:
-            # wide decision: build the corpus-set pin NOW for the two
-            # verify joins (banding already ran uncached — the one
-            # extra map pass auto mode pays on this side)
-            sh = _pin(sh)
-    if narrow_verify:
-        sh = _pin(narrow_sets_to_participants(sh, cand))
-    return _verify_jaccard(cand, sh, threshold)
+    banded = _pin(_band_frame(sets, num_hashes, bands))
+    return _verify_jaccard_hashed(
+        _lsh_candidates(banded, mode), sets, threshold
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1067,29 +972,35 @@ def minhash_lsh_pairs(
 # Continuous-ingestion dedup: a production corpus is not deduped once — a
 # new crawl batch must be deduped against EVERYTHING ingested so far
 # without re-running LSH over the full corpus. The persisted index holds
-# the banded bucket keys (the candidate generator) and the shingle sets
-# (the exact verifier) of every indexed document; deduping a new batch
-# reads the new docs + the index, never the original corpus text.
+# the banded bucket keys (the candidate generator) and the sorted
+# xxhash64 shingle sets (the exact verifier) of every indexed document;
+# deduping a new batch reads the new docs + the index, never the
+# original corpus text.
 #
 # Exactness contract (pytest-pinned):
 #   minhash_dedup_incremental(new, index(old))
 #     == minhash_lsh_pairs(old ∪ new) restricted to pairs with >= 1 new side
 # — bit-for-bit, because banding/verification run the identical
-# expressions (_band_frame, _verify_jaccard) on both paths.
+# expressions (_band_frame, _verify_jaccard_hashed) on both paths.
 #
 # 100 TB posture: the index's bands table is (doc_id, band, bucket) —
 # tiny next to the corpus — and the incremental candidate join touches
 # only buckets the NEW batch occupies (a broadcast of the new batch's
 # bands when the batch is small, an ordinary shuffle join otherwise).
-# Verification joins shingle sets for candidate doc_ids only; the
-# shingle table is the heavy store (≈ tokenized corpus), so at scale
-# write it bucketed by doc_id (sources.writers.write_bucketed_table) to
-# make the candidate join shuffle-free. Appends are atomic via the
-# meta.json commit marker: readers require it, and append_minhash_index
-# rewrites it LAST. meta.json also names the hash family: every index
-# is md5-family ("portable": true, band-value bucket keys), and
-# load_minhash_index refuses one from the removed seeded-xxhash64
-# family ("portable": false) with a rebuild message.
+# Verification joins hash sets for candidate doc_ids only; the hset
+# table is the heavy store (8 B per shingle), so at scale write it
+# bucketed by doc_id (sources.writers.write_bucketed_table) to make the
+# candidate join shuffle-free. meta.json is the commit marker: build
+# writes it LAST and readers require it. It also names the hash family
+# and the set format: every index is md5-family ("portable": true,
+# band-value bucket keys) and stores sorted xxhash64 sets ("sets"), and
+# load_minhash_index refuses an index of the removed seeded-xxhash64
+# family ("portable": false) or one that stores string shingles (no
+# "sets") with a rebuild message.
+
+#: meta.json "sets" value of an index whose hset table holds
+#: _SET_COLS rows (sorted xxhash64 arrays).
+_SET_FORMAT = "xxhash64-sorted"
 
 
 def minhash_index_frames(
@@ -1099,14 +1010,68 @@ def minhash_index_frames(
     num_hashes: int = 32,
     bands: int = 8,
 ):
-    """The disk-free form of the LSH index -> (bands_df, shingles_df):
+    """The disk-free form of the LSH index -> (bands_df, hsets_df):
     for composing an old-vs-new dedup inside one job (the driver query
     does this), or for unit-testing the join logic without a filesystem.
     :func:`build_minhash_index` is the persisted form with the same
     frames."""
-    sh = _pin(_shingled(docs, text_col, n))
-    sh = sh.where(F.col("n_shingles") > 0)
-    return _band_frame(sh, num_hashes, bands), sh
+    sets = _pin(_minhash_sets(docs, text_col, n)).where(
+        F.col("n_shingles") > 0
+    )
+    return _band_frame(sets, num_hashes, bands), sets.select(*_SET_COLS)
+
+
+def _write_index_batch(
+    docs: DataFrame,
+    path: str,
+    meta: dict,
+    index_sets: DataFrame | None = None,
+) -> None:
+    """The writer body of :func:`build_minhash_index` (``index_sets``
+    None: overwrite) and :func:`append_minhash_index` (``index_sets``
+    the stored sets: refuse ids already indexed, then append): one
+    shingle pass over ``docs`` into ``path/hsets`` and ``path/bands``.
+
+    The sets are persisted ONCE: the clash check, the hset write and the
+    band write all read them. Measured by index_append_gate at 5M docs:
+    writing the batch, then RE-READING the whole stored parquet and
+    semi-joining it back down to the batch ids — an O(index)
+    scan+shuffle that made a 10% append 2.7x SLOWER than a full rebuild
+    (247 s vs 93 s); persist() gets the same compute-tokenize-once
+    guarantee at O(batch) cost (post-fix walls and the unchanged
+    hash-sums: artifacts/index_append_gate.json)."""
+    import os
+
+    mode = "overwrite" if index_sets is None else "append"
+    sets = _minhash_sets(docs, meta["text_col"], meta["n"]).persist()
+    try:
+        live = sets.where(F.col("n_shingles") > 0)
+        if index_sets is not None:
+            # no broadcast hint on the clash probe: the batch id set
+            # has no size bound — a 10% batch of a 1B-doc index is
+            # ~100M ids, past the broadcast cap — and the un-hinted
+            # semi-join of two bare doc_id columns (8 B/row) is
+            # size-safe at any scale; AQE may still pick broadcast when
+            # the batch is genuinely small
+            clash = (
+                index_sets.select("doc_id")
+                .join(live.select("doc_id"), "doc_id", "left_semi")
+                .limit(1)
+                .count()
+            )
+            if clash:
+                raise ValueError(
+                    f"append_minhash_index: batch contains doc_ids "
+                    f"already in the index at {path}"
+                )
+        live.select(*_SET_COLS).write.mode(mode).parquet(
+            os.path.join(path, "hsets")
+        )
+        _band_frame(live, meta["num_hashes"], meta["bands"]).write.mode(
+            mode
+        ).parquet(os.path.join(path, "bands"))
+    finally:
+        sets.unpersist()
 
 
 def build_minhash_index(
@@ -1118,38 +1083,32 @@ def build_minhash_index(
     bands: int = 8,
 ) -> None:
     """Build the persisted LSH index for :func:`minhash_dedup_incremental`:
-    ``path/bands`` (doc_id, band, bucket), ``path/shingles`` (doc_id,
-    shingles, n_shingles), and ``path/meta.json`` (the LSH parameters,
+    ``path/bands`` (doc_id, band, bucket), ``path/hsets`` (doc_id,
+    n_shingles, __hset), and ``path/meta.json`` (the LSH parameters,
     written last as the commit marker — a partially-written index is
     unloadable, not silently wrong)."""
     import json
     import os
 
-    sh = _shingled(docs, text_col, n).where(F.col("n_shingles") > 0)
-    sh.write.mode("overwrite").parquet(os.path.join(path, "shingles"))
-    # re-read the committed shingles rather than recomputing the
-    # tokenize+shingle pipeline a second time for the band pass
-    spark = docs.sparkSession
-    sh_stored = spark.read.parquet(os.path.join(path, "shingles"))
-    _band_frame(sh_stored, num_hashes, bands).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "bands"))
     meta = {
         "n": n,
         "num_hashes": num_hashes,
         "bands": bands,
         "text_col": text_col,
-        # the hash family, committed with the index and checked on load
-        # (load_minhash_index): keys from another family never collide
+        # the hash family and the set format, committed with the index
+        # and checked on load (load_minhash_index): keys from another
+        # family never collide, and string sets cannot be verified
         "portable": True,
         "bucket_hash": "band-values",
+        "sets": _SET_FORMAT,
     }
+    _write_index_batch(docs, path, meta)
     with open(os.path.join(path, "meta.json"), "w") as f:
         json.dump(meta, f)
 
 
 def load_minhash_index(spark, path: str):
-    """Load a persisted LSH index -> (bands_df, shingles_df, meta dict).
+    """Load a persisted LSH index -> (bands_df, hsets_df, meta dict).
     Raises if the commit marker is missing (interrupted build/append)."""
     import json
     import os
@@ -1175,9 +1134,17 @@ def load_minhash_index(spark, path: str):
             "its bucket keys cannot collide with new batches — rebuild "
             "the index with build_minhash_index"
         )
+    # An index without "sets" stores string shingle arrays, which the
+    # hashed verifier cannot read.
+    if meta.get("sets") != _SET_FORMAT:
+        raise ValueError(
+            f"index at {path} stores {meta.get('sets') or 'string'} "
+            f"shingle sets, not {_SET_FORMAT!r} hash sets — rebuild the "
+            "index with build_minhash_index"
+        )
     return (
         spark.read.parquet(os.path.join(path, "bands")),
-        spark.read.parquet(os.path.join(path, "shingles")),
+        spark.read.parquet(os.path.join(path, "hsets")),
         meta,
     )
 
@@ -1185,7 +1152,7 @@ def load_minhash_index(spark, path: str):
 def minhash_dedup_incremental(
     new_docs: DataFrame,
     index_bands: DataFrame,
-    index_shingles: DataFrame,
+    index_sets: DataFrame,
     text_col: str = "text",
     n: int = 2,
     num_hashes: int = 32,
@@ -1196,16 +1163,17 @@ def minhash_dedup_incremental(
     least one side is in ``new_docs``: new-vs-index candidates from the
     bucket join against the persisted bands, new-vs-new from the batch
     self-join — both verified with exact Jaccard against the stored +
-    fresh shingle sets. Parameters MUST match the index's (see
+    fresh hash sets. Parameters MUST match the index's (see
     :func:`_band_frame`); use :func:`minhash_dedup_incremental_path` to
     have meta.json enforce that.
 
     doc_ids must be globally unique across the index and every batch
     (the standard ingestion contract); a reused id would alias two
     documents under one vertex."""
-    new_sh = _pin(_shingled(new_docs, text_col, n))
-    new_sh = new_sh.where(F.col("n_shingles") > 0)
-    new_banded = _pin(_band_frame(new_sh, num_hashes, bands))
+    new_sets = _pin(_minhash_sets(new_docs, text_col, n)).where(
+        F.col("n_shingles") > 0
+    )
+    new_banded = _pin(_band_frame(new_sets, num_hashes, bands))
     # new-vs-index: each pair keyed once per colliding band -> distinct;
     # orientation by least/greatest so output keeps the doc_a < doc_b
     # convention regardless of id interleaving across batches
@@ -1235,19 +1203,19 @@ def minhash_dedup_incremental(
         )
     )
     cand = cross.unionByName(within).distinct()
-    # the verifier's shingle universe: stored sets for indexed docs,
-    # fresh sets for the batch. An id present in both would alias —
-    # excluded by the unique-id contract above (and by the append guard).
-    all_sh = index_shingles.select(
-        "doc_id", "shingles", "n_shingles"
-    ).unionByName(new_sh.select("doc_id", "shingles", "n_shingles"))
-    return _verify_jaccard(cand, all_sh, threshold)
+    # the verifier's set universe: stored sets for indexed docs, fresh
+    # sets for the batch. An id present in both would alias — excluded
+    # by the unique-id contract above (and by the append guard).
+    all_sets = index_sets.select(*_SET_COLS).unionByName(
+        new_sets.select(*_SET_COLS)
+    )
+    return _verify_jaccard_hashed(cand, all_sets, threshold)
 
 
 def minhash_index_compact(
     spark, path: str, target_file_mb: int = 128
 ) -> dict:
-    """Rewrite the LSH index's bands/shingles into ~``target_file_mb``
+    """Rewrite the LSH index's bands/hsets into ~``target_file_mb``
     files (the append-fragmentation maintenance pass; row-count
     identity checked by compact_in_place, meta.json — parameters only —
     untouched). OFFLINE op; crash contract on
@@ -1258,19 +1226,15 @@ def minhash_index_compact(
 
     load_minhash_index(spark, path)  # commit marker must be present
     return {
-        "bands": compact_in_place(
-            spark, os.path.join(path, "bands"), target_file_mb
-        ),
-        "shingles": compact_in_place(
-            spark, os.path.join(path, "shingles"), target_file_mb
-        ),
+        name: compact_in_place(spark, os.path.join(path, name), target_file_mb)
+        for name in ("bands", "hsets")
     }
 
 
 def minhash_dedup_stream(
     stream_docs: DataFrame,
     index_bands: DataFrame,
-    index_shingles: DataFrame,
+    index_sets: DataFrame,
     text_col: str = "text",
     n: int = 2,
     num_hashes: int = 32,
@@ -1287,12 +1251,12 @@ def minhash_dedup_stream(
 
     Streaming-legal by construction, pinned stream==batch in pytest:
 
-    - shingling/banding are map-only expressions on the stream (no
-      ensure_parallel/persist — both touch batch-only APIs; micro-batch
-      parallelism comes from the source);
-    - the stream side CARRIES its shingle set through the band explode,
+    - shingling/banding are map-only expressions on the stream
+      (ensure_parallel is a no-op on a stream and nothing is persisted;
+      micro-batch parallelism comes from the source);
+    - the stream side CARRIES its hash set through the band explode,
       so both the candidate join (on band+bucket) and the verification
-      join (stored shingles by doc_id) are stream-STATIC inner joins —
+      join (stored hash sets by doc_id) are stream-STATIC inner joins —
       at no point do two derivatives of the stream join each other
       (that would be a stream-stream self-join needing watermarks);
     - a colliding pair surfaces once per agreeing band, so the final
@@ -1316,22 +1280,13 @@ def minhash_dedup_stream(
         stream_docs = stream_docs.withWatermark(
             watermark_col, watermark_delay
         )
-    toks = stream_docs.select(
-        "doc_id", *wm, tokens(F.col(text_col)).alias("__toks")
+    sets = _minhash_sets(stream_docs, text_col, n, keep_cols=tuple(wm)).where(
+        F.col("n_shingles") > 0
     )
-    sh = (
-        toks.select(
-            "doc_id",
-            *wm,
-            word_shingles_from_tokens(F.col("__toks"), n).alias("shingles"),
-        )
-        .withColumn("n_shingles", F.size("shingles"))
-        .where(F.col("n_shingles") > 0)
-    )
-    # band rows CARRY the doc's shingle set (re-joining it from the
-    # stream would be a stream-stream self-join)
+    # band rows CARRY the doc's hash set (re-joining it from the stream
+    # would be a stream-stream self-join)
     banded = _band_frame(
-        sh, num_hashes, bands, carry=(*wm, "shingles", "n_shingles")
+        sets, num_hashes, bands, carry=(*wm, "__hset", "n_shingles")
     )
     cand = banded.alias("x").join(
         index_bands.alias("y"),
@@ -1339,33 +1294,25 @@ def minhash_dedup_stream(
         & (F.col("x.bucket") == F.col("y.bucket"))
         & (F.col("x.doc_id") != F.col("y.doc_id")),
     )
-    stored = index_shingles.select(
+    stored = index_sets.select(
         F.col("doc_id").alias("__ydoc"),
-        F.col("shingles").alias("__ysh"),
-        F.col("n_shingles").alias("__yn"),
+        F.col("__hset").alias("__h_b"),
+        F.col("n_shingles").alias("__nb"),
     )
-    verified = (
+    verified = _jaccard_at_least(
         cand.select(
             F.col("x.doc_id").alias("__xdoc"),
             *[F.col(f"x.{c}") for c in wm],
-            F.col("x.shingles").alias("__xsh"),
-            F.col("x.n_shingles").alias("__xn"),
+            F.col("x.__hset").alias("__h_a"),
+            F.col("x.n_shingles").alias("__na"),
             F.col("y.doc_id").alias("__ydoc"),
-        )
-        .join(stored, "__ydoc")
-        .withColumn("__common", F.size(F.array_intersect("__xsh", "__ysh")))
-        .withColumn(
-            "jaccard",
-            F.col("__common")
-            / (F.col("__xn") + F.col("__yn") - F.col("__common")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select(
-            F.least("__xdoc", "__ydoc").alias("doc_a"),
-            F.greatest("__xdoc", "__ydoc").alias("doc_b"),
-            "jaccard",
-            *wm,
-        )
+        ).join(stored, "__ydoc"),
+        threshold,
+    ).select(
+        F.least("__xdoc", "__ydoc").alias("doc_a"),
+        F.greatest("__xdoc", "__ydoc").alias("doc_b"),
+        "jaccard",
+        *wm,
     )
     if watermark_col:
         return verified.dropDuplicatesWithinWatermark(
@@ -1382,11 +1329,11 @@ def minhash_dedup_incremental_path(
 ) -> DataFrame:
     """:func:`minhash_dedup_incremental` with parameters read from the
     index's meta.json — the mismatch-proof entry point."""
-    bands_df, shingles_df, meta = load_minhash_index(spark, path)
+    bands_df, hsets_df, meta = load_minhash_index(spark, path)
     return minhash_dedup_incremental(
         new_docs,
         bands_df,
-        shingles_df,
+        hsets_df,
         text_col=meta["text_col"],
         n=meta["n"],
         num_hashes=meta["num_hashes"],
@@ -1397,7 +1344,7 @@ def minhash_dedup_incremental_path(
 
 def append_minhash_index(new_docs: DataFrame, path: str) -> None:
     """Fold a new batch into a persisted index (after deduping against
-    it): appends the batch's shingles and bands with the index's own
+    it): appends the batch's hash sets and bands with the index's own
     parameters, refusing ids already present (an id collision would
     silently alias two documents). meta.json is untouched — parameters
     are immutable for the index's lifetime, which is what keeps every
@@ -1405,45 +1352,8 @@ def append_minhash_index(new_docs: DataFrame, path: str) -> None:
 
     Invariant (pytest-pinned): build(old) + append(new) reads equal to
     build(old ∪ new) row-for-row."""
-    import os
-
-    spark = new_docs.sparkSession
-    _, index_shingles, meta = load_minhash_index(spark, path)
-    # pinned ONCE: the shingle pass feeds the clash check, the shingles
-    # write AND the band write. Measured by index_append_gate at 5M
-    # docs: writing the batch, then RE-READING the whole shingles
-    # parquet and semi-joining it back down to the batch ids — an
-    # O(index) scan+shuffle that made a 10% append 2.7x SLOWER than a
-    # full rebuild (247 s vs 93 s); persist() gets the same
-    # compute-tokenize-once guarantee at O(batch) cost (post-fix walls
-    # and the unchanged hash-sums: artifacts/index_append_gate.json).
-    sh = _shingled(new_docs, meta["text_col"], meta["n"]).where(
-        F.col("n_shingles") > 0
-    ).persist()
-    try:
-        # no broadcast hint on the clash probe: the batch
-        # id set has no size bound — a 10% batch of a 1B-doc index is
-        # ~100M ids, past the broadcast cap — and the un-hinted
-        # semi-join of two bare doc_id columns (8 B/row) is size-safe
-        # at any scale; AQE may still pick broadcast when the batch is
-        # genuinely small
-        clash = (
-            index_shingles.select("doc_id")
-            .join(sh.select("doc_id"), "doc_id", "left_semi")
-            .limit(1)
-            .count()
-        )
-        if clash:
-            raise ValueError(
-                f"append_minhash_index: batch contains doc_ids already "
-                f"in the index at {path}"
-            )
-        sh.write.mode("append").parquet(os.path.join(path, "shingles"))
-        _band_frame(sh, meta["num_hashes"], meta["bands"]).write.mode(
-            "append"
-        ).parquet(os.path.join(path, "bands"))
-    finally:
-        sh.unpersist()
+    _, index_sets, meta = load_minhash_index(new_docs.sparkSession, path)
+    _write_index_batch(new_docs, path, meta, index_sets)
 
 
 #: SimHash fingerprint width: portable_hash64 yields 60 bits.

@@ -55,7 +55,7 @@ def dsir_feature_counts(
     codegen'd ``slice``/``array_join`` — no higher-order-function
     lambdas, which evaluate interpreted (the measured 6x of the Gopher
     operator, SCALE.md); counts collapse map-side."""
-    # r13: same single-scan-partition fix as gopher_repetition (guide
+    # same single-scan-partition fix as gopher_repetition (guide
     # §2.5) — the unigram+bigram explode is expression-heavy per-row
     # work that a one-partition local scan serializes onto one core;
     # round-robin the docs across cores first (no-op on a wide scan).
@@ -169,8 +169,8 @@ def dsir_weights_map(
     text_col: str = "text",
     n_buckets: int = 4096,
 ) -> DataFrame:
-    """Map-only twin of :func:`dsir_weights` for STREAMING scoring
-    (VERDICT r6 #3): the dense bucket table is collected once
+    """Map-only twin of :func:`dsir_weights` for STREAMING scoring,
+    where no shuffle or state may run: the dense bucket table is collected once
     (``n_buckets`` rows — KBs) and broadcast into one Arrow-batched
     ``mapInPandas``; each document's unigram+bigram buckets are hashed
     in Python (md5 reduction == ``portable_hash64``) and the integer
@@ -250,7 +250,7 @@ def dsir_gumbel_topk(
     to EVERY row via a global ``row_number`` window — a
     single-partition sort of (doc, score) pairs, opt-in only because a
     scale-first library must not default to a plan that funnels the
-    corpus through one partition (VERDICT r6 #5)."""
+    corpus through one partition."""
     h = portable_hash64(
         F.concat(F.col("doc_id").cast("string"), F.lit(f":{seed}"))
     )

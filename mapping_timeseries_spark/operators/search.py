@@ -74,7 +74,7 @@ def bm25_index(docs: DataFrame, text_col: str = "text") -> dict:
     postings = words.groupBy("wh", "doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
-    # r13 vocab-key gate (guide §2.4): postings has FOUR consumers in a
+    # vocab-key gate: postings has FOUR consumers in a
     # cold scoring plan (dl, df, totals via dl, and the probe join), and
     # Spark materializes a cold cache CONCURRENTLY from every consumer's
     # first stage — profiled at sf0.1, one cold bm25_topk action ran the
@@ -90,7 +90,7 @@ def bm25_index(docs: DataFrame, text_col: str = "text") -> dict:
     # artifacts/r13_shape_ab_results.json) — never worse, and at scale the
     # three redundant corpus passes it removes dominate.
     postings = _pin(postings).repartition(F.col("wh"))
-    # r13 (guide §2.3 "aggregate before you shuffle"): dl derives from
+    # aggregate before you shuffle: dl derives from
     # POSTINGS (sum of per-term tf per doc == the doc's token count —
     # identical bigint arithmetic), not from the raw token stream. The
     # exploded corpus-token frame then has exactly ONE consumer, so its

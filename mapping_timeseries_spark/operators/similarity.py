@@ -523,7 +523,7 @@ def ivf_index_append(
     path: str,
     vec_col: str = "embedding",
 ) -> None:
-    """Fold a new embedding batch into a persisted IVF index (r7 — the
+    """Fold a new embedding batch into a persisted IVF index (the
     fifth incremental-state family): assign against the FROZEN
     centroids (map-only broadcast pass), append into the partitioned
     lists, rewrite meta.json LAST. Because assignment is per-row and

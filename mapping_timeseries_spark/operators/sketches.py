@@ -143,7 +143,7 @@ def advance_distinct_state(
 #   two libms may legally floor(log(x)/log(b)) differently. Leading-digit
 #   truncation sidesteps the whole class.
 #
-# Accuracy (ADVICE r6 — the bound below is conditional, read all of it):
+# Accuracy (the bound below is conditional, read all of it):
 #
 # - v >= 10^(digits-1) (default digits=3: v >= 100) lands in a bucket of
 #   width 10^(d-digits) starting at its floor-to-digits value, so the
@@ -259,7 +259,7 @@ def histogram_quantiles(
     quantiles closer than a percent (or straddling a banker's-rounding
     tie, e.g. 0.125 and 0.115 both naming ``{prefix}12``) would emit
     DUPLICATE columns; that is rejected here rather than silently
-    produced (ADVICE r8 #4)."""
+    produced."""
     names = [quantile_col(prefix, q) for q in qs]
     if len(set(names)) != len(names):
         dupes = sorted({c for c in names if names.count(c) > 1})

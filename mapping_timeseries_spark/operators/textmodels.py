@@ -298,7 +298,7 @@ def ppl_buckets(
       (pytest pins agreement on the sf corpus); ties at a threshold
       all take the lower bucket, so the split is still deterministic.
       With ``thresholds=None`` the cuts are derived LAZILY inside the
-      plan (r8): the histogram-quantile frame is forced to one row
+      plan: the histogram-quantile frame is forced to one row
       with a global aggregate and broadcast-crossJoined onto the
       corpus, so building this DataFrame runs no jobs and a cluster
       computes the cuts where the data lives. Pass pre-computed

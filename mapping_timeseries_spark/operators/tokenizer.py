@@ -299,8 +299,9 @@ def _train_distributed(
             # plan before Catalyst analysis cost compounds (same
             # pattern as dedup_clusters' per-round localCheckpoint).
             # The superseded checkpoint is dead once the new one is
-            # materialized — release it eagerly (r8; unpersist() cannot
-            # reach a checkpoint RDD, see readers.release_checkpoint)
+            # materialized — release it eagerly so the rounds never
+            # hold every checkpoint at once (unpersist() cannot reach a
+            # checkpoint RDD, see readers.release_checkpoint)
             words = words.localCheckpoint(eager=True)
             if prev_ckpt is not None:
                 release_checkpoint(prev_ckpt)

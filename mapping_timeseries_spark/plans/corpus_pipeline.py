@@ -67,11 +67,6 @@ __all__ = ["CorpusPipelineResult", "run_corpus_pipeline"]
 class CorpusPipelineResult:
     out_path: str
     stats: dict[str, Any]
-    #: Which near-dup verify path ran — the auto decision record
-    #: (participants/docs/fraction/narrow) or {"narrow": <override>,
-    #: "override": True} when the caller forced it. Not a stats entry:
-    #: stats values are integer counts by contract.
-    narrow_verify_decision: dict[str, Any] | None = None
 
 
 def flag_corpus(
@@ -99,16 +94,19 @@ def flag_corpus(
     dsir_target: DataFrame | None = None,
     dsir_keep: int | None = None,
     neardup_mode: str = "star",
-    neardup_narrow_verify: bool | None = None,
 ) -> DataFrame:
     """The lazy flagged-corpus frame: input columns + one int flag per
     stage (`pass_exact`, `pass_neardup`, `pass_clean`, `pass_quality`,
     and — when their thresholds are set — `pass_repetition` /
     `pass_pii` / `pass_boilerplate` / `pass_dupspan` / `pass_ppl` /
     `pass_classifier` / `pass_semclean` / `pass_gopher` /
-    `pass_dsir`) plus `quality_score`. Pure plan — callers decide
+    `pass_dsir`) plus `quality_score`. A lazy plan — callers decide
     what to do with it (the pipeline filters AND observes; audits can
-    inspect rejects).
+    inspect rejects). The one stage that runs Spark jobs while the
+    frame is built is the near-dup clustering: dedup_clusters
+    checkpoints each connected-components round and probes it for
+    convergence. Every other stage, the MinHash pairs included, starts
+    no job before the caller's action (pytest-pinned).
 
     **Output semantics of the default:**
     ``neardup_mode`` defaults to ``"star"``, whose ``pass_neardup`` can
@@ -179,16 +177,6 @@ def flag_corpus(
     on the full corpus, not a cascade over prior survivors — the
     retained count can therefore be below ``dsir_keep`` when other
     stages reject selected docs.
-    ``neardup_narrow_verify``: restrict the near-dup verifier's
-    shingle frame to candidate participants before its joins
-    (dedup.narrow_sets_to_participants — broadcast semi-join,
-    row-identical by pytest). Default ``None`` = AUTO: the
-    operator counts candidate participants against the shingled
-    corpus from frames it pins anyway and narrows iff the fraction is
-    <= dedup.NARROW_VERIFY_MAX_FRACTION — see minhash_lsh_pairs. Pass
-    True (the x10000 composed gate's setting — known ~1%
-    participation at 50M docs) or False (candidates span most of the
-    corpus: the broadcast id list would be corpus-sized) to override.
     ``neardup_mode`` ('star' default | 'pairs'): candidate generator
     for the near-dup clustering stage. 'star' verifies only
     (bucket-min, member) edges — linear candidates even on a hot
@@ -289,7 +277,6 @@ def flag_corpus(
         text_col,
         threshold=minhash_threshold,
         mode=neardup_mode,
-        narrow_verify=neardup_narrow_verify,
     )
     clusters = dedup_clusters(docs, pairs).select(
         "doc_id", F.col("is_keeper").alias("pass_neardup")
@@ -439,7 +426,6 @@ def run_corpus_pipeline(
     dsir_target: DataFrame | None = None,
     dsir_keep: int | None = None,
     neardup_mode: str = "star",
-    neardup_narrow_verify: bool | None = None,
 ) -> CorpusPipelineResult:
     """Run the full preprocessing pipeline and export training shards.
 
@@ -453,7 +439,7 @@ def run_corpus_pipeline(
 
     Cache hygiene: the whole build-write-observe cycle runs inside
     a :func:`~..operators.dedup.dedup_cache_scope` — every intermediate
-    the stages pin (canonicalized corpus, line-deduped text, shingle/
+    the stages pin (canonicalized corpus, line-deduped text, hash-set/
     band tables) is unpersisted before this returns, because nothing
     lazy escapes: the export is written and the stats dict is
     materialized in here. Callers composing :func:`flag_corpus`
@@ -487,7 +473,6 @@ def run_corpus_pipeline(
             dsir_target=dsir_target,
             dsir_keep=dsir_keep,
             neardup_mode=neardup_mode,
-            neardup_narrow_verify=neardup_narrow_verify,
         )
         flag_cols = [c for c in flagged.columns if c.startswith("pass_")]
         keep_all = None
@@ -523,21 +508,4 @@ def run_corpus_pipeline(
                 .asDict()
             )
             stats = {k: (0 if v is None else v) for k, v in row.items()}
-        # Observability: which verify path the near-dup stage actually
-        # took. The auto decision (narrow_verify=None) runs its counts at
-        # flag-plan BUILD time (minhash_lsh_pairs body), so by now the
-        # module-level record is this run's decision; an explicit True/False
-        # never writes one, so report the override instead. A separate
-        # result field, NOT a stats entry — stats values are integer counts
-        # by contract (gates int()-coerce every one).
-        from ..operators import dedup as _dd
-
-        decision = (
-            dict(_dd.LAST_NARROW_VERIFY_DECISION)
-            if neardup_narrow_verify is None
-            and _dd.LAST_NARROW_VERIFY_DECISION is not None
-            else {"narrow": neardup_narrow_verify, "override": True}
-        )
-        return CorpusPipelineResult(
-            out_path=out_path, stats=stats, narrow_verify_decision=decision
-        )
+        return CorpusPipelineResult(out_path=out_path, stats=stats)

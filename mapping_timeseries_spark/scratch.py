@@ -1,6 +1,6 @@
 """Local-scratch (shuffle/spill) disk high-water meter.
 
-Why this exists (r9, VERDICT r8 #4): Spark keeps every exchange's
+Why this exists: Spark keeps every exchange's
 shuffle files on local disk until the ContextCleaner sees their JVM
 shuffle dependencies garbage-collected — NOT until the action ends —
 so a query's disk high-water is the SUM of its exchanges, and
@@ -79,14 +79,14 @@ def drain(
     ``floor_bytes``, OR stop shrinking for ``stable_secs``, OR
     ``timeout`` elapses. Returns the settled byte count.
 
-    Why (r10, VERDICT r9 "wrong" #2): ContextCleaner file deletion is
-    ASYNCHRONOUS — it runs after System.gc() on its own threads — so a
-    region started immediately after a GC kick can begin with gigabytes
-    of the PREVIOUS region's dying residue as its base. A high dying
-    base deflates peak_delta_bytes (the residue is deleted mid-region
-    while the region's own files grow into the freed space), which is
-    exactly how the r9 100x ngram gate recorded 18.7 GB for bucket 0
-    but 86-287 MB for the identically-shaped buckets 1-3: bucket 0
+    Why: ContextCleaner file deletion is ASYNCHRONOUS — it runs after
+    System.gc() on its own threads — so a region started immediately
+    after a GC kick can begin with gigabytes of the PREVIOUS region's
+    dying residue as its base. A high dying base deflates
+    peak_delta_bytes (the residue is deleted mid-region while the
+    region's own files grow into the freed space), which is exactly how
+    an earlier 100x ngram gate run recorded 18.7 GB for bucket 0 but
+    86-287 MB for the identically-shaped buckets 1-3: bucket 0
     started on a clean base, the rest started on top of their
     predecessor's dying files. Draining between regions gives every
     region an honest near-zero base."""

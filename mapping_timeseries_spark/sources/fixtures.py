@@ -137,7 +137,7 @@ def synthetic_pair(
             rev[:lag] = 0.0
 
         rev = np.clip(rev + rng.normal(0, 3, num_months), 0, None)
-        # money lattice (r10): the engine's data model is money — the
+        # money lattice: the engine's data model is money — the
         # production tables (TPC-H totals, extendedprice*(1-discount)
         # sums) live exactly on a 1e-2/1e-4 lattice, and the moment-state
         # operators REQUIRE lattice inputs (corr_moment_state numerics).

@@ -491,32 +491,3 @@ def test_corpus_pipeline_dsir_stage(spark, tmp_path):
     # half-specified stage fails loudly
     with _pytest.raises(ValueError, match="BOTH dsir_target and dsir_keep"):
         flag_corpus(docs, _holdout(spark), dsir_target=target)
-
-
-def test_corpus_pipeline_reports_narrow_verify_decision(spark, tmp_path):
-    """r13 observability: the result records which near-dup verify path
-    ran — the auto decision (counts + fraction + threshold) under the
-    default, or an override marker when the caller forced it."""
-    rows = [(i, BASE if i % 2 else OTHER, "en") for i in range(6)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-
-    res = run_corpus_pipeline(
-        docs, _holdout(spark), str(tmp_path / "s_auto"), n_shards=1
-    )
-    d = res.narrow_verify_decision
-    assert d is not None and "override" not in d
-    assert {"n_participants", "n_docs", "fraction", "narrow"} <= set(d)
-    assert isinstance(d["narrow"], bool)
-
-    res2 = run_corpus_pipeline(
-        docs,
-        _holdout(spark),
-        str(tmp_path / "s_forced"),
-        n_shards=1,
-        neardup_narrow_verify=True,
-    )
-    assert res2.narrow_verify_decision == {"narrow": True, "override": True}
-    # stats stay integer-count-only (gates int()-coerce every value)
-    assert all(
-        isinstance(v, int) for v in res2.stats.values()
-    ), res2.stats

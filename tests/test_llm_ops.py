@@ -1834,18 +1834,23 @@ def test_minhash_incremental_index_roundtrip(spark, tmp_path):
 
     # append invariant: build(old) + append(new) == build(old ∪ new)
     append_minhash_index(new, path)
-    bands_df, shingles_df, meta = load_minhash_index(spark, path)
+    bands_df, hsets_df, meta = load_minhash_index(spark, path)
     ref_path = str(tmp_path / "lsh_index_ref")
     build_minhash_index(docs, ref_path)
-    ref_bands, ref_shingles, _ = load_minhash_index(spark, ref_path)
+    ref_bands, ref_hsets, _ = load_minhash_index(spark, ref_path)
     assert sorted(map(tuple, bands_df.collect())) == sorted(
         map(tuple, ref_bands.collect())
     )
-    assert sorted(
-        (r["doc_id"], r["n_shingles"]) for r in shingles_df.collect()
-    ) == sorted((r["doc_id"], r["n_shingles"]) for r in ref_shingles.collect())
 
-    # compaction (r7): fragmented bands/shingles rewritten in place,
+    def set_rows(df):
+        return sorted(
+            (r["doc_id"], r["n_shingles"], tuple(r["__hset"]))
+            for r in df.collect()
+        )
+
+    assert set_rows(hsets_df) == set_rows(ref_hsets)
+
+    # compaction: fragmented bands/hsets rewritten in place,
     # loaded content identical
     from mapping_timeseries_spark.operators.dedup import minhash_index_compact
 
@@ -1854,7 +1859,7 @@ def test_minhash_incremental_index_roundtrip(spark, tmp_path):
     assert sorted(map(tuple, cb.collect())) == sorted(
         map(tuple, ref_bands.collect())
     )
-    assert cs.count() == ref_shingles.count()
+    assert cs.count() == ref_hsets.count()
 
     # a reused doc_id would alias two documents under one vertex
     with pytest.raises(ValueError, match="already in the index"):
@@ -2459,8 +2464,9 @@ def test_index_refuses_previous_bucket_key_generation(spark, tmp_path, noisy_doc
     (meta.json ``portable: false``) has bucket keys that never collide
     with the keys new batches get, so deduping against it would join
     ZERO candidates — silent missed duplicates, not an error. Loading it
-    raises with a rebuild message. An index built now loads, and so
-    does an older md5-family index whose meta.json has no
+    raises with a rebuild message, and so does an index that stores
+    string shingles (no ``sets`` in meta.json). An index built now
+    loads, and so does a hash-set index whose meta.json has no
     ``bucket_hash`` (its keys are the band values, never re-derived)."""
     import json as _json
 
@@ -2478,42 +2484,52 @@ def test_index_refuses_previous_bucket_key_generation(spark, tmp_path, noisy_doc
     old_md5 = {k: v for k, v in meta.items() if k != "bucket_hash"}
     with open(mp, "w") as f:
         _json.dump(old_md5, f)
-    load_minhash_index(spark, path)  # older md5-family meta: no raise
+    load_minhash_index(spark, path)  # no bucket_hash: no raise
 
     with open(mp, "w") as f:
         _json.dump({**meta, "portable": False, "bucket_hash": "xxhash64"}, f)
     with pytest.raises(ValueError, match="rebuild"):
         load_minhash_index(spark, path)
 
+    # an index that stores string shingles (meta.json names no set
+    # format) cannot feed the hashed verifier
+    with open(mp, "w") as f:
+        _json.dump({k: v for k, v in meta.items() if k != "sets"}, f)
+    with pytest.raises(ValueError, match="rebuild"):
+        load_minhash_index(spark, path)
+
 
 def test_narrowed_verify_row_identical(spark):
-    """r12 (VERDICT r11 #4): narrow_sets_to_participants is
-    candidate-removing-only — the verifier joins inner on doc_a/doc_b,
-    so restricting the shingle frame to candidate participants (the
-    broadcast map-side filter the x10000 gate runs) must leave the
-    verified edge set row-identical, while actually narrowing (the
-    fixture has non-candidate docs)."""
+    """narrow_sets_to_participants is candidate-removing-only — the
+    hashed verifier joins inner on doc_a/doc_b, so restricting the
+    hash-set frame to candidate participants (the broadcast map-side
+    filter the x10000 gate runs) must leave the verified edge set
+    row-identical, while actually narrowing (the fixture has
+    non-candidate docs)."""
     from mapping_timeseries_spark.operators.dedup import (
         _band_frame,
         _lsh_candidates,
-        _shingled,
-        _verify_jaccard,
+        _minhash_sets,
+        _verify_jaccard_hashed,
         narrow_sets_to_participants,
     )
     from mapping_timeseries_spark.sources.readers import read_table
 
     docs = read_table(spark, "/root/testdata/sf0.001", "documents").limit(200)
-    sh = _shingled(docs, "text", 2).where(F.col("n_shingles") > 0).persist()
-    banded = _band_frame(sh, 32, 8).persist()
+    sets = _minhash_sets(docs, "text", 2).persist()
+    live = sets.where(F.col("n_shingles") > 0)
+    banded = _band_frame(live, 32, 8).persist()
     cand = _lsh_candidates(banded, "star").persist()
     try:
-        full = sorted(map(tuple, _verify_jaccard(cand, sh, 0.5).collect()))
-        narrowed = narrow_sets_to_participants(sh, cand)
+        full = sorted(
+            map(tuple, _verify_jaccard_hashed(cand, live, 0.5).collect())
+        )
+        narrowed = narrow_sets_to_participants(live, cand)
         nv = sorted(
-            map(tuple, _verify_jaccard(cand, narrowed, 0.5).collect())
+            map(tuple, _verify_jaccard_hashed(cand, narrowed, 0.5).collect())
         )
         assert nv == full and full, "narrowed verify changed the edge set"
-        n_narrow, n_full = narrowed.count(), sh.count()
+        n_narrow, n_full = narrowed.count(), live.count()
         assert n_narrow < n_full, "fixture must have non-candidate docs"
         # the narrowed frame is exactly the participant set
         participants = {
@@ -2524,116 +2540,130 @@ def test_narrowed_verify_row_identical(spark):
         }
         assert n_narrow == len(participants)
     finally:
-        sh.unpersist()
+        sets.unpersist()
         banded.unpersist()
         cand.unpersist()
 
 
-def test_minhash_lsh_pairs_narrow_verify_row_identical(spark):
-    """The production narrow_verify knob is a pure execution-strategy
-    change: same verified pair set, both modes."""
-    from mapping_timeseries_spark.operators.dedup import (
-        dedup_cache_scope,
-        minhash_lsh_pairs,
-    )
-    from mapping_timeseries_spark.sources.readers import read_table
-
-    docs = read_table(spark, "/root/testdata/sf0.001", "documents").limit(200)
-    for mode in ("star", "pairs"):
-        with dedup_cache_scope():
-            plain = sorted(
-                map(tuple, minhash_lsh_pairs(docs, mode=mode).collect())
-            )
-        with dedup_cache_scope():
-            narrowed = sorted(
-                map(
-                    tuple,
-                    minhash_lsh_pairs(
-                        docs, mode=mode, narrow_verify=True
-                    ).collect(),
-                )
-            )
-        assert narrowed == plain and plain, mode
-
-
-def test_flag_corpus_narrow_verify_flags_identical(spark):
-    """The pipeline-surface neardup_narrow_verify knob must not move a
-    single flag (the narrowing is candidate-removing-only) — across
-    explicit True, explicit False, AND the r13 auto default."""
+def test_flag_corpus_plan_starts_no_jobs(spark, noisy_docs, monkeypatch):
+    """flag_corpus builds its plan without starting a Spark job outside
+    dedup_clusters, whose connected-components rounds must run actions
+    to converge. A lazy stand-in replaces dedup_clusters (it still
+    reads the pairs), so the job group sees the build of every other
+    stage, the MinHash pairs included."""
     from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
-    from mapping_timeseries_spark.plans.corpus_pipeline import flag_corpus
-    from mapping_timeseries_spark.sources.readers import read_table
+    from mapping_timeseries_spark.plans import corpus_pipeline
 
-    docs = read_table(spark, "/root/testdata/sf0.001", "documents").limit(300)
-    holdout = docs.limit(10).select("doc_id", "text")
+    def lazy_clusters(docs, pairs):
+        dup = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+        return docs.select("doc_id").join(
+            dup.withColumn("__dup", F.lit(1)), "doc_id", "left"
+        ).select(
+            "doc_id",
+            F.lit(0).alias("cluster_id"),
+            F.col("__dup").isNull().cast("int").alias("is_keeper"),
+        )
 
-    def flags(narrow):
-        with dedup_cache_scope():
-            f = flag_corpus(
-                docs, holdout, neardup_narrow_verify=narrow
-            )
-            cols = ["doc_id"] + sorted(
-                c for c in f.columns if c.startswith("pass_")
-            )
-            return sorted(map(tuple, f.select(*cols).collect()))
-
-    assert flags(True) == flags(False) == flags(None)
-
-
-def test_should_narrow_verify_pure_decision():
-    """Pure auto-narrow arithmetic (VERDICT r12 #3)."""
-    from mapping_timeseries_spark.operators.dedup import (
-        NARROW_VERIFY_MAX_FRACTION,
-        should_narrow_verify,
+    monkeypatch.setattr(corpus_pipeline, "dedup_clusters", lazy_clusters)
+    holdout = noisy_docs.where(F.col("doc_id") < 4).select(
+        (F.col("doc_id") + 1000).alias("doc_id"), "text"
     )
+    sc = spark.sparkContext
+    with dedup_cache_scope():
+        sc.setJobGroup("flag-corpus-build", "plan build must run no jobs")
+        try:
+            flagged = corpus_pipeline.flag_corpus(noisy_docs, holdout)
+        finally:
+            sc.setJobGroup("flag-corpus-build-done", "reset")
+        assert sc.statusTracker().getJobIdsForGroup("flag-corpus-build") == []
+        # the plan still evaluates: planted twins lose their neardup flag
+        rows = flagged.select("doc_id", "pass_neardup").collect()
+    assert len(rows) == 60
+    assert 0 < sum(r["pass_neardup"] for r in rows) < 60
 
-    assert NARROW_VERIFY_MAX_FRACTION == 0.25
-    assert should_narrow_verify(10, 100)           # 10% -> narrow
-    assert should_narrow_verify(25, 100)           # boundary inclusive
-    assert not should_narrow_verify(26, 100)       # 26% -> wide
-    assert not should_narrow_verify(0, 0)          # degenerate corpus
-    assert should_narrow_verify(40, 100, max_fraction=0.5)  # override
+
+#: Spark jobs one minhash_lsh_pairs(mode="star") call and the collect
+#: of its result may start on noisy_docs (local[4], 4 shuffle
+#: partitions, AQE on). Measured 12: under AQE each query stage of the
+#: star candidates and of the two shuffle-hash verify joins is its own
+#: job. The auto narrow/wide path it replaced started 14, two of them
+#: approx-distinct counts collected while the plan was built. A rise
+#: fails here before it shows in a benchmark.
+MINHASH_LSH_PAIRS_JOB_BUDGET = 12
 
 
-def test_minhash_narrow_verify_auto_both_sides(spark):
-    """The r13 auto default picks narrow on a low-participation corpus
-    and wide on a high-duplication one, and BOTH auto outcomes are
-    row-identical to both explicit settings."""
-    from mapping_timeseries_spark import operators
-    from mapping_timeseries_spark.operators import dedup as dd
+def test_minhash_lsh_pairs_job_budget(spark, noisy_docs):
+    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
 
-    rng = np.random.default_rng(23)
+    sc = spark.sparkContext
+    with dedup_cache_scope():
+        sc.setJobGroup("minhash-pairs-budget", "minhash_lsh_pairs budget")
+        try:
+            rows = minhash_lsh_pairs(noisy_docs, mode="star").collect()
+        finally:
+            sc.setJobGroup("minhash-pairs-budget-done", "reset")
+    jobs = sc.statusTracker().getJobIdsForGroup("minhash-pairs-budget")
+    assert rows
+    assert len(jobs) <= MINHASH_LSH_PAIRS_JOB_BUDGET, len(jobs)
 
-    def mkdocs(n_distinct, dup_pairs):
-        rows, doc_id = [], 0
-        for _ in range(n_distinct):
-            rows.append((doc_id, " ".join(rng.choice(WORDS, 30))))
-            doc_id += 1
-        for i in range(dup_pairs):  # exact twins -> guaranteed bucket hits
-            rows.append((doc_id, rows[i][1]))
-            doc_id += 1
-        return spark.createDataFrame(rows, "doc_id long, text string")
 
-    # 4 participants-ish out of ~104 docs -> ~4% <= 25% -> narrow
-    sparse = mkdocs(100, 2)
-    # every doc has a twin -> ~100% participation -> wide
-    dense = mkdocs(20, 20)
+def test_minhash_paths_jaccard_equals_string_sets(spark, noisy_docs, tmp_path):
+    """Bound on the 64-bit collision approximation of the hashed
+    verifier: every pair the MinHash paths emit carries exactly the
+    Jaccard of the two docs' STRING shingle sets, computed in Python
+    from _shingled rows — batch pairs and star, incremental against a
+    stored index, and a stream drain against the same index."""
+    import shutil
 
-    for docs, expect_narrow in ((sparse, True), (dense, False)):
-        runs = {}
-        for knob in (None, True, False):
-            with dd.dedup_cache_scope():
-                runs[knob] = sorted(
-                    map(
-                        tuple,
-                        dd.minhash_lsh_pairs(
-                            docs, mode="star", narrow_verify=knob
-                        ).collect(),
-                    )
-                )
-            if knob is None:
-                decision = dd.LAST_NARROW_VERIFY_DECISION
-                assert decision is not None
-                assert decision["narrow"] is expect_narrow, decision
-        assert runs[None] == runs[True] == runs[False]
-        assert runs[None], "fixture must produce verified pairs"
+    from mapping_timeseries_spark.operators.dedup import (
+        _shingled,
+        build_minhash_index,
+        dedup_cache_scope,
+        load_minhash_index,
+        minhash_dedup_incremental,
+        minhash_dedup_stream,
+    )
+    from mapping_timeseries_spark.streaming.windows import run_to_memory
+
+    sets = {
+        r["doc_id"]: set(r["shingles"])
+        for r in _shingled(noisy_docs, "text", 2).collect()
+    }
+
+    def check(rows):
+        assert rows
+        for r in rows:
+            a, b = sets[r["doc_a"]], sets[r["doc_b"]]
+            assert r["jaccard"] == len(a & b) / len(a | b), r
+
+    # planted twins are consecutive ids: even bases indexed, odd twins new
+    old = noisy_docs.where(F.col("doc_id") % 2 == 0)
+    new = noisy_docs.where(F.col("doc_id") % 2 == 1)
+    path = str(tmp_path / "idx")
+    build_minhash_index(old, path)
+    bands_df, hsets_df, meta = load_minhash_index(spark, path)
+    with dedup_cache_scope():
+        for mode in ("pairs", "star"):
+            check(minhash_lsh_pairs(noisy_docs, mode=mode).collect())
+        check(minhash_dedup_incremental(new, bands_df, hsets_df).collect())
+
+    src = tmp_path / "stream_src"
+    src.mkdir()
+    new.coalesce(1).write.parquet(str(tmp_path / "b0"))
+    shutil.copy(
+        next((tmp_path / "b0").glob("part-*.parquet")), src / "part-0.parquet"
+    )
+    stream = spark.readStream.schema(new.schema).parquet(str(src))
+    out = run_to_memory(
+        minhash_dedup_stream(
+            stream,
+            bands_df,
+            hsets_df,
+            n=meta["n"],
+            num_hashes=meta["num_hashes"],
+            bands=meta["bands"],
+        ),
+        "t_minhash_stream_exact",
+        output_mode="append",
+    )
+    check(out.collect())

@@ -776,13 +776,13 @@ def test_stream_minhash_dedup_vs_index_matches_batch(spark, tmp_path):
     shutil.copy(
         next((tmp_path / "b0").glob("part-*.parquet")), d / "part-0.parquet"
     )
-    bands_df, shingles_df, meta = load_minhash_index(spark, idx)
+    bands_df, hsets_df, meta = load_minhash_index(spark, idx)
     stream_docs = spark.readStream.schema(batch.schema).parquet(str(d))
     out = run_to_memory(
         minhash_dedup_stream(
             stream_docs,
             bands_df,
-            shingles_df,
+            hsets_df,
             n=meta["n"],
             num_hashes=meta["num_hashes"],
             bands=meta["bands"],
@@ -809,7 +809,7 @@ def test_stream_minhash_dedup_vs_index_matches_batch(spark, tmp_path):
         minhash_dedup_stream(
             spark.readStream.schema(schema2).parquet(str(d2)),
             bands_df,
-            shingles_df,
+            hsets_df,
             n=meta["n"],
             num_hashes=meta["num_hashes"],
             bands=meta["bands"],

@@ -52,7 +52,6 @@ from mapping_timeseries_spark.operators.dedup import (  # noqa: E402
     _band_frame,
     _lsh_candidates,
     _shingled,
-    _verify_jaccard,
     dedup_clusters,
     dedup_cache_scope,
     minhash_lsh_pairs,

@@ -10,7 +10,9 @@ the rest of the dedup family is gated at:
   REBUILD from the full corpus. The appended index must equal the
   rebuilt one EXACTLY — row counts and an order-free decimal hash-sum
   over both stored frames (bands: xxhash64(doc_id, band, bucket);
-  shingles: xxhash64(doc_id, n_shingles, concat_ws(US, shingles))) —
+  hash sets: xxhash64(doc_id, n_shingles, __hset); the committed
+  artifact predates the hash-set index and hashed the string shingles
+  under the same "minhash_shingles" key) —
   and the append wall must beat the rebuild wall (the operator exists
   so a 10% ingest does not pay a 100% re-index).
 - IVF index at 2M vectors (factor 1000 embeddings corpus, its own dir:
@@ -194,11 +196,7 @@ def main() -> int:
             sh.count(),
             dec_sum(
                 sh,
-                F.xxhash64(
-                    "doc_id",
-                    "n_shingles",
-                    F.concat_ws("\x1f", F.col("shingles")),
-                ),
+                F.xxhash64("doc_id", "n_shingles", "__hset"),
             ),
         )
         return b, s

@@ -18,21 +18,23 @@ BANDS = 8
 THRESHOLD = 0.5
 
 
-def staged_frames(docs, pin_shingles: bool = True):
-    """(shingled_filtered, banded_pinned) — stage A of the pipeline,
-    pinned via the dedup cache-scope registry so callers consume inside
-    dedup_cache_scope(). ``pin_shingles=False`` is for gates that never
-    run the verifier (map_stage_10000x_gate): pinning 50M docs' shingle
-    sets is tens of GB of cache for a frame read once, and the pin is
-    only load-bearing when _verify_jaccard re-joins the shingles."""
+def staged_frames(docs, pin_sets: bool = True):
+    """(sets_filtered, banded_pinned) — stage A of the pipeline: the
+    per-doc hash sets and base hashes (operators.dedup._minhash_sets)
+    and their bands, pinned via the dedup cache-scope registry so
+    callers consume inside dedup_cache_scope(). ``pin_sets=False`` is
+    for gates that never run the verifier (map_stage_10000x_gate) or
+    narrow the sets first (neardup_composed_gate): pinning 50M docs'
+    sets is a large cache for a frame read once, and the pin is only
+    load-bearing when the verifier re-joins the sets."""
     from mapping_timeseries_spark.operators import dedup as D
 
-    sh = D._shingled(docs, "text", NGRAM_N)
-    if pin_shingles:
-        sh = D.scoped_pin(sh)
-    sh = sh.where(sh.n_shingles > 0)
-    banded = D.scoped_pin(D._band_frame(sh, NUM_HASHES, BANDS))
-    return sh, banded
+    sets = D._minhash_sets(docs, "text", NGRAM_N)
+    if pin_sets:
+        sets = D.scoped_pin(sets)
+    sets = sets.where(sets.n_shingles > 0)
+    banded = D.scoped_pin(D._band_frame(sets, NUM_HASHES, BANDS))
+    return sets, banded
 
 
 def candidates(banded, mode: str):
@@ -42,28 +44,28 @@ def candidates(banded, mode: str):
     return D._lsh_candidates(banded, mode)
 
 
-def verify(cand, sh, threshold: float = THRESHOLD):
-    """Stage B second half: exact-Jaccard verification."""
+def verify(cand, sets, threshold: float = THRESHOLD):
+    """Stage B second half: exact-by-hash Jaccard verification."""
     from mapping_timeseries_spark.operators import dedup as D
 
-    return D._verify_jaccard(cand, sh, threshold)
+    return D._verify_jaccard_hashed(cand, sets, threshold)
 
 
-def narrowed_verify(cand, sh_unpinned, threshold: float = THRESHOLD):
-    """Stage B second half, participant-narrowed form (r12, VERDICT r11
-    #4): the UN-pinned shingle frame is broadcast-semi-joined down to
-    the candidate participants (map-side filter — no Exchange of the
-    corpus-sized side), the narrowed frame is pinned, and the same
-    production verifier runs against it. Row-identical to
-    verify(cand, sh) by the candidate-removing-only argument on
-    narrow_sets_to_participants (pytest-pinned); exists because pinning
-    50M docs' string shingle sets for a verifier that reads ~1% of them
-    is the x10000 scale wall. Returns (verified_edges, narrowed_pinned)
-    so the caller's scope can account for the pin."""
+def narrowed_verify(cand, sets_unpinned, threshold: float = THRESHOLD):
+    """Stage B second half, participant-narrowed form: the UN-pinned
+    set frame is broadcast-semi-joined down to the candidate
+    participants (map-side filter — no Exchange of the corpus-sized
+    side), the narrowed frame is pinned, and the same production
+    verifier runs against it. Row-identical to verify(cand, sets) by
+    the candidate-removing-only argument on narrow_sets_to_participants
+    (pytest-pinned); exists because pinning 50M docs' sets for a
+    verifier that reads ~1% of them is the x10000 scale wall. Returns
+    (verified_edges, narrowed_pinned) so the caller's scope can account
+    for the pin."""
     from mapping_timeseries_spark.operators import dedup as D
 
     cand = D.scoped_pin(cand)
     narrowed = D.scoped_pin(
-        D.narrow_sets_to_participants(sh_unpinned, cand)
+        D.narrow_sets_to_participants(sets_unpinned, cand)
     )
-    return D._verify_jaccard(cand, narrowed, threshold), narrowed
+    return D._verify_jaccard_hashed(cand, narrowed, threshold), narrowed

@@ -116,10 +116,10 @@ def main() -> int:
         with D.dedup_cache_scope():
             m = ScratchMeter(spark).start()
             t0 = time.monotonic()
-            # pin_shingles=False: this gate never runs the verifier, and
-            # 50M docs' shingle sets are tens of GB of cache for a frame
-            # read once (see lsh_stages.staged_frames)
-            _sh, banded = lsh_stages.staged_frames(docs, pin_shingles=False)
+            # pin_sets=False: this gate never runs the verifier, and
+            # 50M docs' sets are a large cache for a frame read once
+            # (see lsh_stages.staged_frames)
+            _sets, banded = lsh_stages.staged_frames(docs, pin_sets=False)
             out["band_rows"] = banded.count()
             out["stage_a_wall_sec"] = round(time.monotonic() - t0, 1)
             out["stage_a_peak_scratch_bytes"] = m.stop()

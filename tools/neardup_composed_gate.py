@@ -49,7 +49,7 @@ Usage: python tools/neardup_composed_gate.py [--factor N] [--narrow]
 r12 flags (VERDICT r11 #4 — the x10000 run): ``--narrow`` switches the
 verify stage to the participant-narrowed form (row-identical, pytest:
 test_narrowed_verify_row_identical; recorded as "narrowed_verify" in
-the artifact) so the corpus-wide string-shingle pin is never built;
+the artifact) so the corpus-wide hash-set pin is never built;
 ``--rm-corpus`` deletes the replicated corpus afterwards (the x10000
 corpus is ~8 GB the box cannot keep between rounds).
 """
@@ -73,20 +73,21 @@ THRESHOLD = 0.5
 def _pipeline_frames(docs, threshold=THRESHOLD, narrow=False):
     """The composed pipeline's stage frames via the SHARED stage module
     (tools/lsh_stages — one definition for all three scale gates):
-    returns (shingled, banded, star_edges_fn) where star_edges_fn
+    returns (sets, banded, star_edges_fn) where star_edges_fn
     closes over the pinned upstreams; CC runs on its result via
     dedup_clusters at the call site.
 
-    ``narrow=True`` (r12, VERDICT r11 #4 — the x10000 run): the shingle
+    ``narrow=True`` (the x10000 run): the hash-set
     frame is NOT pinned corpus-wide; the verifier gets the
     participant-narrowed pinned frame instead (lsh_stages.
     narrowed_verify — broadcast semi-join, row-identical by pytest).
-    Pinning 50M docs' string shingle sets for a verifier that touches
-    ~1% of them is the fourth decade's memory wall; at 100 TB the same
+    Pinning 50M docs' sets for a verifier that touches ~1% of them was
+    the fourth decade's memory wall (measured on string shingle sets,
+    before the hash-set form); at 100 TB the same
     narrowing is how the verify stage avoids shuffling the corpus."""
     import lsh_stages
 
-    sh, banded = lsh_stages.staged_frames(docs, pin_shingles=not narrow)
+    sh, banded = lsh_stages.staged_frames(docs, pin_sets=not narrow)
 
     def star_edges():
         cand = lsh_stages.candidates(banded, "star")
