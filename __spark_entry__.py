@@ -9,14 +9,6 @@ All double outputs are rounded identically on both sides (all at 6dp: the money 
 value sits within float error of a 6dp midpoint) so the driver's order-insensitive value-hash is
 stable across engines; counts are cast to BIGINT and lags to INT on both
 sides for schema parity.
-
-Cache-scope contract (ADVICE r10 #3): several queries pin reused frames
-via ``operators.dedup.scoped_pin`` (the merged series, the mapping t1/t2
-inputs, the LM-scored corpus). Consumers must run each query's action
-inside ``dedup_cache_scope()`` (as tools/compare_oracle.py does) or call
-``spark.catalog.clearCache()`` between actions (as bench.py does per
-rep); otherwise the persisted frames live for the session and accumulate
-across a 50-query run.
 """
 
 from __future__ import annotations
@@ -202,7 +194,7 @@ def q_merged_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_corr_lag_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 grid: per (entity, lag) Pearson correlation, positional
-    alignment — PLUS (r9, VERDICT r8 #6) the incremental-state twin of
+    alignment — PLUS the incremental-state twin of
     the same grid as its own gated columns: the history is split at a
     fixed month, the pre-split slice is bootstrapped into the moment
     state (correlation.corr_moment_state), the post-split months are
@@ -222,7 +214,7 @@ def q_corr_lag_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from mapping_timeseries_spark.plans.incremental import _tail
 
-    # r13 (guide §2.4, replacing the r9 pin): the grid, the bootstrap
+    # One entity-key exchange, not a pin: the grid, the bootstrap
     # state, the tail, and the delta all read `merged` — a naked frame
     # re-executes the monthly_spend/monthly_revenue join subtree ~4x per
     # action, and a cold PIN is still materialized concurrently by those
@@ -357,7 +349,7 @@ def q_dtw_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_corr_pvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D2: lag grid with two-sided Pearson p-values.
 
-    Hash-gated since r3: DuckDB has no Student-t CDF, so the p column
+    Hash-gated: DuckDB has no Student-t CDF, so the p column
     joins a pre-computed expected table built by an INDEPENDENT Student-t
     tail quadrature (``tools/gen_pvalue_expected.py`` — Gauss-Legendre,
     not the engine's betainc continued fraction; measured agreement
@@ -382,7 +374,7 @@ def q_qa_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagship mapping: coverage, duplicates, lag stats, ratio stats,
     temporal violations."""
     ensure_runtime_conf(spark)
-    # r13 (guide §2.4, replacing the r10 pins): t1 feeds the merge, the
+    # One entity-key exchange, not a pin: t1 feeds the merge, the
     # mapping join AND the QA totals (three consumers), t2 the merge and
     # the mapping join. The reuse point is one hash exchange on the
     # entity key instead of a scoped_pin: a cold pin was materialized
@@ -508,7 +500,7 @@ def q_recommendation_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE model. Lattice-snapped input on both sides.
     """
     ensure_runtime_conf(spark)
-    # r13 (guide §2.4, replacing the r10 pin): merged feeds both the corr
+    # One entity-key exchange, not a pin: merged feeds both the corr
     # grid and the DTW summary — one entity-key exchange is the shared
     # reuse point (merge subtree computes once, both consumers are
     # entity-keyed), no cache race, no pinned memory
@@ -591,7 +583,7 @@ def q_production_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     t2 = monthly_revenue(spark, sf_dir).withColumn(
         "revenue", lattice_snap("revenue")
     )
-    # Shared-intermediate reuse (r10 lesson, r13 mechanism): merged feeds
+    # Shared-intermediate reuse: merged feeds
     # the corr grid, the DTW summary AND the routed mapping build; a
     # naked frame re-executes the full spend/revenue merge join per
     # consumer (the measured 57M-row-join overhead that made pre-fix
@@ -599,7 +591,7 @@ def q_production_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SAME t1/t2 the routing build consumes (snap on the inputs == snap
     # on the merge output: per-value, join keys untouched), so orders
     # aggregates once and lineitem joins once for the whole query.
-    # r13 (guide §2.4): the reuse point is one entity-key exchange per
+    # The reuse point is one entity-key exchange per
     # frame (subtree computes once, consumers read its shuffle files, no
     # cold-pin materialization race, no pinned executor memory —
     # measured on the qa/corr/auto twins,
@@ -636,8 +628,8 @@ def q_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats rounded to 6 dp as usual.
     """
     ensure_runtime_conf(spark)
-    # r13 (guide §2.4, replacing the r10 pin): same entity-key exchange
-    # reuse point as q_recommendation_table — see that query's comment
+    # One entity-key exchange, not a pin: the same reuse point as
+    # q_recommendation_table — see that query's comment
     merged = _merged_lattice(spark, sf_dir).repartition(F.col("cus_code"))
     corr = best_lag_correlation(merged, MAX_LAG)
     dtw = dtw_summary(merged)
@@ -679,7 +671,7 @@ def q_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1 top-k: 20 most active customers by order count (deterministic
     tie-break on key; TakeOrderedAndProject, no global sort), annotated
-    with the mergeable Misra-Gries heavy-hitter summary (r6 fold): each
+    with the mergeable Misra-Gries heavy-hitter summary (folded in): each
     top-20 row carries its MG counter (NULL when the all-ties prune
     dropped it) and the summary's accumulated decrement ``mg_err`` — the
     100 TB skew diagnostic (counter <= true <= counter + err) hash-gated
@@ -746,7 +738,7 @@ def q_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 exact percentiles (linear interpolation) per return flag,
     beside the deterministic log-decade histogram sketch's estimates
-    (r6 fold): hp25/hp50/hp75 are the bucket lower bounds at the same
+    (folded in): hp25/hp50/hp75 are the bucket lower bounds at the same
     ranks — pure integer arithmetic (floor to 3 leading digits, <1%
     relative undershoot), so the mergeable-sketch path is hash-gated
     against an exact SQL replay rather than a tolerance check."""
@@ -1140,7 +1132,7 @@ def q_pack_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only (r7, VERDICT r6 #4): BPE tokenizer training at a fixed
+    """Bench-only: BPE tokenizer training at a fixed
     200-merge budget (min_pair_count=2, histogram mode — one corpus
     pass into the Heaps-bounded driver histogram, then driver-side
     merges). Training is an ITERATIVE DRIVER LOOP, so its Spark work
@@ -1154,7 +1146,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only (r7): unigram-LM (SentencePiece-style) training at a
+    """Bench-only: unigram-LM (SentencePiece-style) training at a
     fixed 512-piece budget (seed 2000, max piece len 6, histogram
     mode). Same build_timed timing note as q_bpe_train — EM iterations
     run Spark jobs at construction."""
@@ -1202,7 +1194,7 @@ def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     span (packing.concat_pack_spans over ws_tokens, budget 256: the
     distributed two-phase cumsum vs the twin's single ORDER BY window —
     same md5 order key, same integer arithmetic) AND the duplicate-
-    passage spans (dedup.dup_span_stats, folded r5 — word 5-grams shared
+    passage spans (dedup.dup_span_stats, folded in — word 5-grams shared
     by >= 2 distinct docs, hashed to 60-bit ints pre-shuffle, merged to
     maximal per-doc intervals in one doc-partitioned window pass; the
     Lee-et-al-2022 substring-dedup proxy) — five operators in one frame
@@ -1283,13 +1275,11 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-side/corpus doc, doc_b the matched doc; score is Jaccard or
     holdout-containment respectively."""
     ensure_runtime_conf(spark)
-    from mapping_timeseries_spark.operators.dedup import (
-        _ngram_hsets,
-        scoped_pin as _scope_pin,
-    )
+    from mapping_timeseries_spark.materialize import scoped_pin
+    from mapping_timeseries_spark.operators.dedup import _ngram_hsets
 
     docs = read_table(spark, sf_dir, "documents")
-    # r13 (guide §1.2): ONE shared tokenize+shingle+hash pass for both
+    # ONE shared tokenize+shingle+hash pass for both
     # halves. The PPJoin near-dup half and the decontamination half both
     # start from per-doc shingle-hash sets over the same corpus; before,
     # each built its own (the contam side re-tokenized 98% of the corpus
@@ -1299,18 +1289,18 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are distinct per doc, so exploding the sorted-hash array is the
     # same multiset the string path hashes row by row (hash-gate
     # re-verified vs the unchanged DuckDB oracle).
-    # r14 (VERDICT r13 #3): a COLD pin is materialized concurrently by
+    # Known cost: a COLD pin is materialized concurrently by
     # every consumer's first stage — profiled at sf0.1, one cold action
     # ran the tokenize+shingle+sort pass up to SIX times in parallel
     # (~28 s duplicated executor time; locally idle cores absorb it, at
     # 100 TB it is 6x a full corpus tokenize). The shuffle-gate fix the
-    # mapping legs use was measured and REJECTED here in r13 (fat
+    # mapping legs use was measured and REJECTED here (fat
     # shingle-hash arrays: the gate exchange serialized ~1 GB and the
     # leg regressed 6.3 -> 16.7 s). The candidate replacement is an
     # eager localCheckpoint of hsets (one pass, then every consumer
     # reads its blocks); it has to win a paired A/B with its build
     # inside the timed region before it replaces this pin.
-    hsets = _scope_pin(_ngram_hsets(docs, "text", 2, keep_cols=("source",)))
+    hsets = scoped_pin(_ngram_hsets(docs, "text", 2, keep_cols=("source",)))
     near = ngram_jaccard_pairs(
         docs, threshold=0.5, hsets=hsets
     ).select(
@@ -1345,10 +1335,9 @@ def _minhash_sel(p: DataFrame, tag: str) -> DataFrame:
 
 def q_minhash_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-batch MinHash-LSH leg — benched standalone under the
-    historical 'minhash_dedup' bench key so round-over-round numbers
-    compare the same work (r5 verdict item #8: the r5 fold made the
-    benched query additionally run the incremental leg, which read as a
-    2x 'regression')."""
+    historical 'minhash_dedup' bench key so numbers across commits
+    compare the same work (the registry entry also runs the incremental
+    leg, which read as a 2x 'regression' when benched under this key)."""
     ensure_runtime_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     return _minhash_sel(
@@ -1359,7 +1348,7 @@ def q_minhash_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MinHash leg — index the 80% "already ingested" slice
     (doc_id % 5 != 0), dedup the 20% "new batch" against it. Benched as
-    its own metric from r6 on."""
+    its own metric."""
     ensure_runtime_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     old = docs.where(F.col("doc_id") % 5 != 0)
@@ -1379,7 +1368,7 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin generated from the same coefficients — and the path this
     entry checks is the one run_corpus_pipeline and the scale gates run.
 
-    Folded r5: the incremental leg beside the full batch. Exactness
+    Folded in: the incremental leg beside the full batch. Exactness
     contract: incremental == full pairs with >= 1 new side, which is
     exactly what the oracle's filtered arm selects — so the hash gate
     proves the new-vs-index bucket join + stored-shingle verification
@@ -1395,7 +1384,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline), hash-gated against a DuckDB recursive-CTE twin over the
     same MinHash pair set.
 
-    Folded r5 (registry at the 50-entry driver cap): the SemDeDup
+    Folded in (registry at the 50-entry driver cap): the SemDeDup
     semantic verdict (similarity.semantic_dedup — IVF coarse clusters,
     in-cluster cosine edges at 0.4, CC groups, farthest-from-centroid
     keeper) rides the same frame via a left join on doc_id = vec_id —
@@ -1404,7 +1393,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The sem_* columns are hash-gated against an independent recursive-CTE
     + list_dot_product DuckDB twin.
 
-    Folded r10 (VERDICT r9 #8): the STAR-mode cluster twin. The corpus
+    Folded in: the STAR-mode cluster twin. The corpus
     pipeline's default clustering consumer runs star candidates
     (mode="star" — linear on hot cliques where all-pairs dies, see
     artifacts/hot_clique_gate.json), but until now star clusters were
@@ -1506,8 +1495,7 @@ def q_normalize_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark has no built-in Unicode normalizer) + ASCII-whitespace
     collapse, then fingerprint the canonical text. The fingerprint is
     what the dedup stages key on, so hash-gating it on the sf corpus
-    (DuckDB nfc_normalize twin) proves the pre-dedup stage end-to-end
-    (r5 verdict item #6)."""
+    (DuckDB nfc_normalize twin) proves the pre-dedup stage end-to-end."""
     ensure_runtime_conf(spark)
     docs = read_table(spark, sf_dir, "documents")
     norm = normalize_text(docs.select("doc_id", "text"), form="NFC")
@@ -1528,7 +1516,7 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_line_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Line/paragraph leg (r7 — VERDICT r6 #2): the sf corpus is
+    """Line/paragraph leg: the sf corpus is
     single-line, so the line-family operators previously hash-gated
     VACUOUSLY. Derive a deterministic multi-line corpus inside the
     query (textstats.wrap_tokens: 13-token lines, 5-line blank-
@@ -1572,11 +1560,11 @@ def q_line_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry fold (r6): the heuristic per-doc stats frame widened
+    """Registry fold: the heuristic per-doc stats frame widened
     with the canonicalization fingerprint columns — one row per doc,
     stats + the canonical-text identity the dedup stages consume — and
     the Gopher repetition-filter signals (top/dup n-gram character
-    coverage + threshold pass flag); (r7) plus the line-family leg
+    coverage + threshold pass flag); plus the line-family leg
     over the token-wrapped multi-line derivation (corpus-wide line
     dedup + line/paragraph repetition), making those gates
     non-vacuous."""
@@ -1596,14 +1584,14 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_training_shards export), and the corpus-frequency boilerplate
     signal (textstats.boilerplate_signals: share of a doc's distinct
     3-grams occurring in >= 4 docs, hashed before the shuffle) — five
-    operators verified in one frame (registry capped at 50), PLUS (r5)
+    operators verified in one frame (registry capped at 50), PLUS
     the two model-based quality signals from operators/textmodels.py:
     bigram-LM perplexity (trained on the non-src0 corpus, add-0.5
     smoothing, scored over everything — the CCNet-style signal) and the
     multinomial Naive-Bayes classifier (label = source=='src0',
     integer micro-nat log-odds so the per-doc sums are order-independent
     and the predicted class comes from an integer comparison) — PLUS
-    (r6) DSIR importance resampling (Xie et al. 2023: hashed-n-gram
+    DSIR importance resampling (Xie et al. 2023: hashed-n-gram
     log-ratio weights toward the src0 target domain, integer-nat sums,
     seeded Gumbel-top-k selection) — eight operators, one frame."""
     ensure_runtime_conf(spark)
@@ -1623,13 +1611,13 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tri = lang_trigram_scores(docs).select("doc_id", "trigram_lang")
     lm_model = bigram_lm_counts(docs.where(F.col("source") != "src0"))
-    # r7 fold: the CCNet head/middle/tail split (Wenzek et al. 2020)
-    # over the same reference-LM scores — exact-rank mode, PLUS (r8,
-    # VERDICT r7 #4) the sketch-mode scale path as its own gated column:
+    # the CCNet head/middle/tail split (Wenzek et al. 2020) over the
+    # same reference-LM scores — exact-rank mode, PLUS the sketch-mode
+    # scale path as its own gated column:
     # ppl_bucket_sketch cuts at the log-decade-histogram quantile
     # thresholds (pure bigint bucketing + one IEEE double rank product,
     # so the DuckDB twin recomputes identical thresholds)
-    # r13 (guide §2.4, replacing the r8 pin): the rank+sketch bucket
+    # One doc-key exchange, not a pin: the rank+sketch bucket
     # join reads lm_scored twice. One doc-key exchange is the reuse
     # point — the expensive subtree (corpus tokenization + LM scoring)
     # computes exactly once while the exchange moves only the narrow
@@ -1664,7 +1652,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("log_odds").alias("nb_log_odds"),
         F.col("predicted").alias("nb_predicted"),
     )
-    # r6 fold: DSIR importance resampling (operators/dsir.py) — hashed
+    # DSIR importance resampling (operators/dsir.py) — hashed
     # unigram+bigram features, target = src0, integer-nat log-ratio
     # weights, seeded Gumbel-top-100 selection
     dsir_model = dsir_logratio(
@@ -1773,11 +1761,11 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry fold (r6): approximate retrieval, both modalities in one
+    """Registry fold: approximate retrieval, both modalities in one
     method-tagged frame — the sign-LSH embedding leg beside the BM25
     lexical leg on the SAME output grain (query, hit, rank), which is
     how a retrieval stack actually serves them. The fold gives BM25 its
-    sf-corpus hash gate (r5 verdict item #1): the DuckDB twin recomputes
+    sf-corpus hash gate: the DuckDB twin recomputes
     postings/df/dl, the non-negative idf, tf saturation and the integer
     micro-score accumulation from scratch.
 
@@ -1821,13 +1809,13 @@ def q_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry fold (r6): BOTH IVF serving paths, path-tagged — the
+    """Registry fold: BOTH IVF serving paths, path-tagged — the
     full-corpus assignment pass ('assign') and the pre-built
     partitionBy(centroid_id) index with static partition pruning
     ('indexed'). Same seed centroids/k/nprobe, so the two legs must
     produce identical rows; the oracle emits the one IVF result under
     both tags, which hash-proves the DPP/static-prune index path
-    end-to-end on the sf corpus (r5 verdict item #3) instead of only
+    end-to-end on the sf corpus instead of only
     the inputFiles() plan assertion in pytest."""
     assign = q_ivf_assign(spark, sf_dir)
     indexed = q_ivf_topk_indexed(spark, sf_dir)
@@ -1848,7 +1836,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     between reps, so the timed number is the TRUE cold cost: corpus
     scan + tokenize + hash + postings/df/dl + probe. Amortized-index
     serving reuses the pinned frames and is correspondingly cheaper.
-    Since r6 this leg is hash-gated on the sf corpus through the
+    This leg is hash-gated on the sf corpus through the
     ann_topk registry fold (plus the bitwise DuckDB twin in
     tests/test_search.py)."""
     ensure_runtime_conf(spark)
@@ -1945,10 +1933,10 @@ def q_diversity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry fold (r6): the embedding-hygiene family in one
+    """Registry fold: the embedding-hygiene family in one
     kind-tagged frame on the (id_a, id_b, similarity) grain —
-    near-duplicate pairs, semantic benchmark decontamination (r5
-    verdict item #7: previously pytest-only) and the cluster diversity
+    near-duplicate pairs, semantic benchmark decontamination (gated
+    here, not only in pytest) and the cluster diversity
     audit. Leg mapping: decontam is (corpus vec, best holdout item,
     best sim); diversity is (centroid_id, n_vecs, mean 6dp cosine
     cohesion) — n_vecs rides the integer id_b slot, NULL cohesion for
@@ -2389,7 +2377,7 @@ SELECT cus_code, time1, round(value1, 6) AS value1,
 FROM mapping
 """
 
-# Residual portability note (r4 review): avg_ratio/std_ratio compare
+# Residual portability note: avg_ratio/std_ratio compare
 # engine-native float avg()/stddev() over ~45k unrounded quotients,
 # guarded only by round(.,6) — the one gate NOT on the lattice-integer
 # path (quotients are not lattice values; rounding each ratio before
@@ -2992,7 +2980,7 @@ def _build_minhash_oracle(num_hashes: int = 32, bands: int = 8,
     """DuckDB twin of minhash_lsh_pairs, generated from the
     SAME universal-hash coefficients the Spark expression uses — identical
     integer arithmetic on both engines, so candidate sets match exactly.
-    ``mode`` mirrors dedup._lsh_candidates (r10, VERDICT r9 #8): "pairs" =
+    ``mode`` mirrors dedup._lsh_candidates: "pairs" =
     all-pairs bucket self-join; "star" = only (bucket-min, member) edges
     per non-singleton (band, bucket) — the clustering consumer's linear
     candidate set. Both feed the same exact-Jaccard verifier."""
@@ -3096,7 +3084,7 @@ lexical AS (
          CAST(CASE WHEN id = min(lbl) THEN 1 ELSE 0 END AS INT) AS is_keeper
   FROM reach GROUP BY id
 ),
--- star-mode twin (folded r10, VERDICT r9 #8): the corpus pipeline's
+-- star-mode twin: the corpus pipeline's
 -- DEFAULT clustering consumer uses star candidates (linear on hot
 -- cliques); this recomputes the whole star pipeline — star candidate
 -- edges, exact-Jaccard verify, recursive-CTE components — independently
@@ -3118,7 +3106,7 @@ star_reach(id, lbl) AS (
 star_lex AS (
   SELECT id AS doc_id, min(lbl) AS star_cluster_id FROM star_reach GROUP BY id
 ),
--- SemDeDup twin (folded r5): IVF seed assignment + in-cluster cosine
+-- SemDeDup twin: IVF seed assignment + in-cluster cosine
 -- edges at 0.4 + recursive-CTE components + farthest-from-centroid keeper
 vecs AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -3313,7 +3301,7 @@ pii AS (
              '\\+?[0-9][0-9()\\-\\s]{{7,}}[0-9]')) AS n_phoneish
   FROM documents
 ),
--- r6 fold: NFC canonicalization (engine: Arrow mapInPandas over
+-- NFC canonicalization (engine: Arrow mapInPandas over
 -- unicodedata) + ASCII-whitespace collapse, fingerprinted — the
 -- identity the dedup stages key on. The regex class matches the
 -- engine's Java \\s exactly ([ \\t\\n\\x0B\\f\\r]); DuckDB's
@@ -3327,7 +3315,7 @@ norm AS (
              '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')))::BIGINT AS n_norm_chars
   FROM documents
 ),
--- r6 fold: Gopher repetition signals (n-gram family). Same
+-- Gopher repetition signals (n-gram family). Same
 -- definitions as operators/textstats.py::gopher_repetition — top =
 -- n-gram maximizing count*char_len, dup = chars covered by n-grams
 -- occurring >=2 times, both over the space-joined gram string, clamped
@@ -3362,7 +3350,7 @@ gop AS (
   LEFT JOIN gop_pern p ON b.doc_id = p.doc_id
   GROUP BY b.doc_id, b.chars
 ),
--- r7 fold: the line family over the token-wrapped multi-line
+-- the line family over the token-wrapped multi-line
 -- derivation (wrap_tokens: 13-token lines, 5-line paragraphs joined
 -- with blank lines). The whole twin recomputes from line STRINGS —
 -- no hashes — so the engine's 60-bit-keyed two-phase line_dedup
@@ -3627,7 +3615,7 @@ lm0 AS (
               THEN round(exp(round(-nats / (1e9 * n_trans), 6)), 6) END AS ppl
   FROM lmtok LEFT JOIN lmsc USING (doc_id)
 ),
--- r8 fold: the ppl_buckets SKETCH path's thresholds, recomputed
+-- the ppl_buckets SKETCH path's thresholds, recomputed
 -- exactly — log-decade histogram buckets (floor to 3 leading digits,
 -- pure bigint: sketches._bucket_expr) over round(avg_nll*1e6), then
 -- the rank-in-histogram cut floor(q*(n-1))+1 with q CAST AS DOUBLE
@@ -3660,9 +3648,9 @@ pt AS (
              THEN b END) AS t2
   FROM pc, pn
 ),
--- r7 fold: CCNet head/middle/tail by exact rank over (avg_nll ASC
+-- CCNet head/middle/tail by exact rank over (avg_nll ASC
 -- NULLS LAST, doc_id); NULL-scored docs always tail; integer cuts
--- floor(n/3) / floor(2n/3) (textmodels.ppl_buckets rank mode); r8:
+-- floor(n/3) / floor(2n/3) (textmodels.ppl_buckets rank mode);
 -- plus the sketch-mode assignment against the pt thresholds
 lm AS (
   SELECT ranked.*, CASE
@@ -3720,7 +3708,7 @@ nb AS (
          ((coalesce(nbsc.wsum, 0) + nbpri.p) > 0)::INT AS nb_predicted
   FROM lmtok LEFT JOIN nbsc USING (doc_id) CROSS JOIN nbpri
 ),
--- r6 fold: DSIR importance resampling (operators/dsir.py). Features =
+-- DSIR importance resampling (operators/dsir.py). Features =
 -- word unigrams + bigrams bucketed by the portable 60-bit hash % 2048;
 -- bucket log-ratio (target = src0) as round(ln * 1e9) bigints (the
 -- integer-nat contract); Gumbel noise a pure function of
@@ -3911,7 +3899,7 @@ from mapping_timeseries_spark.operators.search import SCORE_SCALE as _BM25_SCALE
 # Multi-probe twin (nprobe=2): own bucket plus the one-bit-flip neighbor
 # with the smallest hyperplane margin |v[i]| — mirrors
 # similarity._probe_buckets' (margin, bucket)-ascending probe order.
-# r6 fold: the BM25 lexical leg rides the same (query, hit, rank) grain
+# the BM25 lexical leg rides the same (query, hit, rank) grain
 # ('bm25' method tag; doc_id->vec_id, n_hit_terms->label,
 # score->similarity) — the twin recomputes postings/df/dl, the
 # non-negative idf ln(1+(N-df+0.5)/(df+0.5)), tf saturation with
@@ -4043,7 +4031,7 @@ final AS (
   SELECT query_id, vec_id, label, similarity, rank
   FROM ranked WHERE rank <= 5
 )
--- r6 fold: the partitioned-index serving path must produce the SAME
+-- the partitioned-index serving path must produce the SAME
 -- rows as the assignment pass (same seeds/k/nprobe) — the oracle emits
 -- one result under both path tags, so any divergence in the
 -- DPP/static-pruned scan hash-fails the 'indexed' leg.
@@ -4052,7 +4040,7 @@ UNION ALL
 SELECT 'indexed' AS path, * FROM final
 """
 
-# r6 fold legs: 'decontam' = best holdout match >= 0.35 per corpus
+# folded legs: 'decontam' = best holdout match >= 0.35 per corpus
 # vector (holdout = vec_id % 40 == 0, broadcast side; zero-norm vectors
 # excluded on BOTH sides — cosine undefined); 'diversity' = per-seed-
 # centroid cluster size + integer micro-sim cohesion (seeds = 16 lowest

@@ -284,7 +284,7 @@ def gate_decision(
                         f"medians to {new_pin}, inside the measured "
                         f"quiet span [{_span_lo:.3f}, {_span_hi:.3f}]: "
                         "baseline re-pinned UPWARD (the original pin "
-                        "was a transient-fast reading — ADVICE r12)"
+                        "was a transient-fast reading)"
                     )
                 else:
                     invalid.append(
@@ -327,8 +327,7 @@ def gate_decision(
                         f"py_loop {probe1} significantly FASTER than "
                         f"this boot's pin {boot_baseline}: baseline "
                         f"re-pinned downward to {new_pin} (the original "
-                        "pin was taken on a loaded first run — ADVICE "
-                        "r11)"
+                        "pin was taken on a loaded first run)"
                     )
     else:
         assert probe2 is not None, "self-pin path needs a second probe"

@@ -17,35 +17,12 @@ Scale design
   The block-join by fingerprint prefix bounds the pair space.
 - Embedding near-dup reuses the cosine machinery from similarity.py.
 
-Caching note: the multi-consumer intermediates (hash-set tables, band
-tables, fingerprints) are ``persist()``-ed inside the operators and NOT
-unpersisted — they back the lazily-returned result, so releasing them
-here would defeat the reuse. In a long-lived session that invokes these
-operators repeatedly, either clear them between corpora
-(``spark.catalog.clearCache()`` — what bench.py does between reps) or —
-the ENFORCEABLE form of this contract — wrap each
-build-consume-discard cycle in :func:`dedup_cache_scope`, which
-unpersists every intermediate these operators pinned when the scope
-exits (the textmodels/search model frames register with the same
-scope):
-
-    with dedup_cache_scope():
-        pairs = minhash_lsh_pairs(docs).collect()   # consume INSIDE
-    # zero dedup-pinned RDDs remain cached here
-
-Materialize the result inside the scope: the pins back the lazy result,
-so consuming it after exit recomputes from scratch (correct, just slow)
-— EXCEPT results backed by iterative localCheckpoints (dedup_clusters),
-whose lineage is truncated: consuming those after exit raises instead
-of recomputing (the checkpoint blocks were the only copy). Same
-consume-inside contract, louder failure mode. Superseded per-round
-checkpoints are released eagerly inside the loop regardless of any
-scope, so a long run never holds every round's edge set at once.
+Every intermediate these operators materialize goes through
+:mod:`mapping_timeseries_spark.materialize`, whose docstring states the
+one lifetime rule.
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -58,11 +35,16 @@ from ..functions.text import (
     tokens,
     word_shingles_from_tokens,
 )
-from ..sources.readers import ensure_parallel, release_checkpoint
+from ..materialize import (
+    dedup_cache_scope,
+    release,
+    scoped_checkpoint,
+    scoped_pin,
+)
+from ..sources.readers import ensure_parallel
 
 __all__ = [
     "dedup_cache_scope",
-    "scoped_pin",
     "exact_dedup",
     "content_hash_dedup",
     "ngram_jaccard_pairs",
@@ -85,61 +67,6 @@ __all__ = [
     "minhash_dedup_stream",
     "minhash_index_compact",
 ]
-
-#: Stack of active cache scopes; _pin registers every persist into the
-#: innermost one so dedup_cache_scope can release them on exit. A plain
-#: module-level stack (not a ContextVar): Spark drivers are
-#: single-threaded per session in this engine's usage, and a stack keeps
-#: nested scopes correct.
-_CACHE_SCOPES: list[list[DataFrame]] = []
-
-
-def scoped_pin(df: DataFrame) -> DataFrame:
-    """persist() + register with the innermost dedup_cache_scope (no-op
-    registration outside any scope — the documented bench/clearCache
-    contract applies there). Public so that entry queries that
-    pin reused frames go through the scope too: they must use this name, and their callers must consume
-    inside dedup_cache_scope() (or clearCache between actions, as the
-    bench does) or the persisted frames live for the session."""
-    df = df.persist()
-    if _CACHE_SCOPES:
-        _CACHE_SCOPES[-1].append(df)
-    return df
-
-
-# internal shorthand used throughout this module
-_pin = scoped_pin
-
-
-# shared with the sources layer (writers retire their pre-overwrite
-# checkpoint the same way); see the full contract on the source function
-_release_checkpoint = release_checkpoint
-
-
-@contextmanager
-def dedup_cache_scope():
-    """Scope that unpersists every intermediate the dedup operators
-    pinned inside it — the enforceable form of the module's caching
-    contract (a long-lived service wraps each corpus pass; see module
-    docstring). Consume results INSIDE the scope."""
-    pinned: list[DataFrame] = []
-    _CACHE_SCOPES.append(pinned)
-    try:
-        yield
-    finally:
-        _CACHE_SCOPES.pop()
-        for df in pinned:
-            # per-frame guard: one failed unpersist (e.g. a torn-down
-            # session's py4j gateway) must not abort the rest of the
-            # teardown and leak every remaining pin
-            try:
-                df.unpersist()
-                # checkpoint-backed frames (dedup_clusters results) need
-                # the raw-RDD release; no-op for ordinary persisted frames
-                _release_checkpoint(df)
-            except Exception:
-                pass
-
 
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact dedup by full text: keep the smallest doc_id per distinct
@@ -524,8 +451,8 @@ def ngram_jaccard_pairs(
     # duplicated map work that idle cores absorb. Keep the duplicate
     # materialization; it is bounded by consumer count, not data size.
     if hsets is None:
-        hsets = _pin(_ngram_hsets(docs, text_col, n))
-    prefix = _pin(_ngram_prefix(hsets, threshold))
+        hsets = scoped_pin(_ngram_hsets(docs, text_col, n))
+    prefix = scoped_pin(_ngram_prefix(hsets, threshold))
     cand = _ngram_candidates(prefix, threshold)
     if candidates_only:
         # measurement hook (tools/ppjoin_growth.py): the post-filter
@@ -731,7 +658,7 @@ def ngram_decontaminate(
         train_hsets = _ngram_hsets(train, text_col, n)
     if holdout_hsets is None:
         # pinned: the Bloom build and the broadcast join both read it
-        holdout_hsets = _pin(_ngram_hsets(holdout, text_col, n))
+        holdout_hsets = scoped_pin(_ngram_hsets(holdout, text_col, n))
     tr = train_hsets.select(
         F.col("doc_id").alias("train_doc"),
         F.explode("__hset").alias("shingle"),
@@ -954,12 +881,12 @@ def minhash_lsh_pairs(
     # sf0.1 before this ordering).
     # One pin, one shingle pass: banding reads its __base, the
     # verifier its __hset.
-    sets = _pin(_minhash_sets(docs, text_col, n)).where(
+    sets = scoped_pin(_minhash_sets(docs, text_col, n)).where(
         F.col("n_shingles") > 0
     )
     # persisted: the self-join (or hub join) would otherwise recompute
     # the full signature pipeline once per side
-    banded = _pin(_band_frame(sets, num_hashes, bands))
+    banded = scoped_pin(_band_frame(sets, num_hashes, bands))
     return _verify_jaccard_hashed(
         _lsh_candidates(banded, mode), sets, threshold
     )
@@ -1015,7 +942,7 @@ def minhash_index_frames(
     does this), or for unit-testing the join logic without a filesystem.
     :func:`build_minhash_index` is the persisted form with the same
     frames."""
-    sets = _pin(_minhash_sets(docs, text_col, n)).where(
+    sets = scoped_pin(_minhash_sets(docs, text_col, n)).where(
         F.col("n_shingles") > 0
     )
     return _band_frame(sets, num_hashes, bands), sets.select(*_SET_COLS)
@@ -1043,8 +970,8 @@ def _write_index_batch(
     import os
 
     mode = "overwrite" if index_sets is None else "append"
-    sets = _minhash_sets(docs, meta["text_col"], meta["n"]).persist()
-    try:
+    with dedup_cache_scope():
+        sets = scoped_pin(_minhash_sets(docs, meta["text_col"], meta["n"]))
         live = sets.where(F.col("n_shingles") > 0)
         if index_sets is not None:
             # no broadcast hint on the clash probe: the batch id set
@@ -1070,8 +997,6 @@ def _write_index_batch(
         _band_frame(live, meta["num_hashes"], meta["bands"]).write.mode(
             mode
         ).parquet(os.path.join(path, "bands"))
-    finally:
-        sets.unpersist()
 
 
 def build_minhash_index(
@@ -1170,10 +1095,10 @@ def minhash_dedup_incremental(
     doc_ids must be globally unique across the index and every batch
     (the standard ingestion contract); a reused id would alias two
     documents under one vertex."""
-    new_sets = _pin(_minhash_sets(new_docs, text_col, n)).where(
+    new_sets = scoped_pin(_minhash_sets(new_docs, text_col, n)).where(
         F.col("n_shingles") > 0
     )
-    new_banded = _pin(_band_frame(new_sets, num_hashes, bands))
+    new_banded = scoped_pin(_band_frame(new_sets, num_hashes, bands))
     # new-vs-index: each pair keyed once per colliding band -> distinct;
     # orientation by least/greatest so output keeps the doc_a < doc_b
     # convention regardless of id interleaving across batches
@@ -1414,7 +1339,7 @@ def simhash_near_dups(
     fp = simhash_fingerprints(docs, text_col).withColumn(
         "block", F.shiftrightunsigned("fingerprint", SIMHASH_BITS - prefix_bits)
     )
-    fp = _pin(fp)
+    fp = scoped_pin(fp)
     a = fp.alias("a")
     b = fp.alias("b")
     return (
@@ -1534,11 +1459,10 @@ def dedup_clusters(
     # superlinearly with that depth (driver OOM at ~11 rounds on a path
     # graph). On a cluster with flaky executors use reliable
     # checkpoint() (setCheckpointDir) — same shape, storage-backed.
-    edges = (
+    edges = scoped_checkpoint(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     try:
         for _ in range(max_rounds):
@@ -1548,12 +1472,10 @@ def dedup_clusters(
                     edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
                 ).distinct()
             )
-            new_edges = _small_star(ls).localCheckpoint(eager=True)
+            new_edges = scoped_checkpoint(_small_star(ls))
             # the probe reads only the new round, so the superseded
-            # checkpoint is dead once the new one is materialized;
-            # release it eagerly instead of holding O(rounds) edge sets
-            # in executor storage until driver GC
-            _release_checkpoint(edges)
+            # checkpoint is dead once the new one is materialized
+            release(edges)
             edges = new_edges
             if _is_star_forest(edges):
                 break
@@ -1563,16 +1485,10 @@ def dedup_clusters(
                 "raise max_rounds"
             )
     except BaseException:
-        _release_checkpoint(edges)
+        release(edges)
         raise
-    # the FINAL edges checkpoint backs the result — it registers with
-    # any active dedup_cache_scope (a checkpointed result consumed AFTER
-    # scope exit errors rather than recomputes, because releasing a
-    # localCheckpoint discards the only copy — same consume-inside
-    # contract, louder failure)
-    if _CACHE_SCOPES:
-        _CACHE_SCOPES[-1].append(edges)
-    # star form: src -> component minimum
+    # star form: src -> component minimum. The final edges checkpoint
+    # backs the result, so the caller's scope owns it.
     roots = edges.select(
         F.col("src").alias("id"), F.col("dst").alias("label")
     )
@@ -1624,7 +1540,7 @@ def _dup_spans_from_toked(
     positions = F.when(
         F.size("__toks") >= k, F.sequence(F.lit(0), F.size("__toks") - k)
     ).otherwise(F.array().cast("array<int>"))
-    g = _pin(
+    g = scoped_pin(
         toked.select("doc_id", "__toks", F.explode(positions).alias("pos"))
         .select(
             "doc_id",
@@ -1858,7 +1774,7 @@ def line_dedup(
         # verification (real 60-bit collisions can't be staged)
         .withColumn("lh", (_hash_fn or portable_hash64)(F.col("line")))
     )
-    lines = _pin(lines)
+    lines = scoped_pin(lines)
     owners = lines.where(~F.col("__blank") if ignore_blank else F.lit(True))
     # phase 1 — int-only corpus count per hash: finds REPEATED hashes
     hstats = owners.groupBy("lh").agg(F.count(F.lit(1)).alias("__hn"))

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import scoped_checkpoint
 from .canonicalize import KEY
 
 __all__ = [
@@ -77,8 +78,8 @@ def _range_offsets(
     boundaries come from sampling, so the two evaluations could assign
     different ``__pid``s and the offsets would be added to values from
     a DIFFERENT partitioning: silently wrong totals. Checkpointing makes
-    ``__pid`` a fact, not a plan. The RDD is freed by the ContextCleaner
-    once the result goes out of scope.
+    ``__pid`` a fact, not a plan. The caller's scope owns the checkpoint
+    (:mod:`mapping_timeseries_spark.materialize`).
 
     The offsets are a triangular broadcast self-join over the
     ``num_partitions``-row totals frame (P² pairs — trivial), not a
@@ -89,10 +90,10 @@ def _range_offsets(
         num_partitions = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
         )
-    r = (
-        df.repartitionByRange(num_partitions, *order)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    r = scoped_checkpoint(
+        df.repartitionByRange(num_partitions, *order).withColumn(
+            "__pid", F.spark_partition_id()
+        )
     )
     totals = r.groupBy("__pid").agg(weight.alias("__n"))
     prior = totals.select(
@@ -223,10 +224,7 @@ def method_agreement(
     # doubles as the reuse barrier here: the upstream comparison pipeline
     # (correlation + DTW mapInPandas) is computed exactly once into the
     # first checkpoint instead of re-running per plan branch (previously
-    # measured 10 MapInPandas / 68 scans uncached vs 2 / 18). Unlike the
-    # persist() this replaces, checkpointed RDDs are released by the
-    # ContextCleaner when the result is GC'd — repeated method_agreement
-    # calls don't accumulate pinned storage for the session's lifetime.
+    # measured 10 MapInPandas / 68 scans uncached vs 2 / 18).
     ranked = comparison.select(
         "correlation", "optimal_lag", "total_cost", "num_mappings"
     )

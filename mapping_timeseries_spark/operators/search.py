@@ -36,8 +36,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import portable_hash64, tokens
+from ..materialize import scoped_pin
 from ..sources.readers import ensure_parallel
-from .dedup import _pin
 
 __all__ = [
     "bm25_index",
@@ -89,7 +89,7 @@ def bm25_index(docs: DataFrame, text_col: str = "text") -> dict:
     # medians 2.57 -> 2.35 s with tied quiet-floor mins (2.10/2.12,
     # artifacts/r13_shape_ab_results.json) — never worse, and at scale the
     # three redundant corpus passes it removes dominate.
-    postings = _pin(postings).repartition(F.col("wh"))
+    postings = scoped_pin(postings).repartition(F.col("wh"))
     # aggregate before you shuffle: dl derives from
     # POSTINGS (sum of per-term tf per doc == the doc's token count —
     # identical bigint arithmetic), not from the raw token stream. The

@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import portable_hash64, tokens
+from ..materialize import scoped_pin
 from ..sources.readers import ensure_parallel
-from .dedup import _pin
 
 __all__ = [
     "bigram_lm_counts",
@@ -152,7 +152,7 @@ def bigram_lm_counts(train: DataFrame, text_col: str = "text") -> dict:
     toked = ensure_parallel(train).select(
         "doc_id", tokens(F.col(text_col)).alias("__t")
     )
-    pairs = _pin(_transitions(toked))
+    pairs = scoped_pin(_transitions(toked))
     uni = pairs.groupBy("w1h").agg(
         F.count(F.lit(1)).cast("bigint").alias("c1")
     )
@@ -412,7 +412,7 @@ def nb_train(
     words = toked.select(
         "__y", F.explode("__t").alias("__w")
     ).select("__y", portable_hash64(F.col("__w")).alias("wh"))
-    words = _pin(words)
+    words = scoped_pin(words)
     cw = words.groupBy("wh").agg(
         F.sum(F.col("__y")).cast("bigint").alias("c1"),
         F.sum(F.lit(1) - F.col("__y")).cast("bigint").alias("c0"),

@@ -132,7 +132,7 @@ def boilerplate_signals(
     """
     from ..functions.text import portable_hash64, word_shingles_from_tokens
     from ..sources.readers import ensure_parallel
-    from .dedup import scoped_pin
+    from ..materialize import scoped_pin
 
     # pin the exploded gram-hash frame: it feeds BOTH the frequency
     # aggregate and the join probe, whose exchanges differ (partial agg

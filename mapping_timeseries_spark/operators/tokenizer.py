@@ -46,7 +46,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import tokens
-from ..sources.readers import ensure_parallel, release_checkpoint
+from ..materialize import dedup_cache_scope, release, scoped_checkpoint
+from ..sources.readers import ensure_parallel
 
 __all__ = [
     "bpe_word_histogram",
@@ -229,9 +230,12 @@ def train_bpe(
         hist = [(r["word"], r["freq"]) for r in hist_df.collect()]
         merges = _train_on_histogram(hist, num_merges, min_pair_count)
     elif mode == "distributed":
-        merges = _train_distributed(
-            spark, hist_df, num_merges, min_pair_count, checkpoint_every
-        )
+        # merges is a plain list, so no round's checkpoint outlives the
+        # loop: the scope frees the live one on return and on a raise
+        with dedup_cache_scope():
+            merges = _train_distributed(
+                spark, hist_df, num_merges, min_pair_count, checkpoint_every
+            )
     else:
         raise ValueError("mode must be 'histogram' or 'distributed'")
 
@@ -300,16 +304,11 @@ def _train_distributed(
             # pattern as dedup_clusters' per-round localCheckpoint).
             # The superseded checkpoint is dead once the new one is
             # materialized — release it eagerly so the rounds never
-            # hold every checkpoint at once (unpersist() cannot reach a
-            # checkpoint RDD, see readers.release_checkpoint)
-            words = words.localCheckpoint(eager=True)
+            # hold every checkpoint at once
+            words = scoped_checkpoint(words)
             if prev_ckpt is not None:
-                release_checkpoint(prev_ckpt)
+                release(prev_ckpt)
             prev_ckpt = words
-    # merges is a plain list — the last checkpoint backs nothing after
-    # return, release it too
-    if prev_ckpt is not None:
-        release_checkpoint(prev_ckpt)
     return merges
 
 

@@ -52,6 +52,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..materialize import dedup_cache_scope, scoped_pin
 from ..operators.dedup import (
     dedup_clusters,
     minhash_lsh_pairs,
@@ -217,20 +218,19 @@ def flag_corpus(
         )
 
     if canonicalize is not None:
-        from ..operators.dedup import _pin
         from ..operators.textstats import normalize_text
 
-        # _pin: every flag stage re-scans the docs subtree; without the
+        # pinned: every flag stage re-scans the docs subtree; without the
         # pin the Arrow/unicodedata pass would re-run once PER STAGE in
         # the single export action (O(stages x corpus) Python-boundary
         # work). persist() is lazy, so flag_corpus stays pure-plan; the
         # pin registers with dedup_cache_scope like every other
         # multi-consumer intermediate
-        docs = _pin(normalize_text(docs, text_col, form=canonicalize))
+        docs = scoped_pin(normalize_text(docs, text_col, form=canonicalize))
         holdout = normalize_text(holdout, text_col, form=canonicalize)
 
     if line_dedup_mode is not None:
-        from ..operators.dedup import _pin, line_dedup
+        from ..operators.dedup import line_dedup
 
         # rewrite, not flag: replace the corpus text with the
         # line-deduped text, preserving every other column via a
@@ -240,7 +240,7 @@ def flag_corpus(
         cleaned = line_dedup(docs, text_col, mode=line_dedup_mode).select(
             "doc_id", F.col(text_col).alias("__ld_text")
         )
-        docs = _pin(
+        docs = scoped_pin(
             docs.drop(text_col)
             .join(cleaned, "doc_id")
             .withColumnRenamed("__ld_text", text_col)
@@ -438,15 +438,13 @@ def run_corpus_pipeline(
     thresholds are set); stats keys follow the flag names.
 
     Cache hygiene: the whole build-write-observe cycle runs inside
-    a :func:`~..operators.dedup.dedup_cache_scope` — every intermediate
+    a :func:`~..materialize.dedup_cache_scope` — every intermediate
     the stages pin (canonicalized corpus, line-deduped text, hash-set/
     band tables) is unpersisted before this returns, because nothing
     lazy escapes: the export is written and the stats dict is
     materialized in here. Callers composing :func:`flag_corpus`
     directly still manage their own scope (its result IS lazy).
     """
-    from ..operators.dedup import dedup_cache_scope
-
     with dedup_cache_scope():
         flagged = flag_corpus(
             docs,

@@ -50,6 +50,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..materialize import dedup_cache_scope, scoped_pin
 from ..operators.canonicalize import KEY, TIME
 from ..operators.correlation import (
     corr_from_moments,
@@ -126,8 +127,8 @@ def init_corr_state(
     os.makedirs(state_root, exist_ok=True)
     # one pass over history feeds three aggregates; pin it so the three
     # writes don't re-scan upstream three times
-    merged = merged.persist()
-    try:
+    with dedup_cache_scope():
+        merged = scoped_pin(merged)
         versions = {
             "moments": write_versioned(
                 corr_moment_state(merged, max_lag),
@@ -146,8 +147,6 @@ def init_corr_state(
             ),
         }
         max_month = merged.agg(F.max(TIME).alias("m")).first()["m"]
-    finally:
-        merged.unpersist()
     meta = {
         "max_lag": max_lag,
         "through_month": max_month,
@@ -176,8 +175,8 @@ def advance_corr_state(
     staged snapshots are dead weight until a vacuum, never read)."""
     meta = _read_meta(state_root)
     max_lag = meta["max_lag"]
-    new_rows = new_rows.persist()
-    try:
+    with dedup_cache_scope():
+        new_rows = scoped_pin(new_rows)
         bounds = new_rows.agg(
             F.min(TIME).alias("lo"), F.max(TIME).alias("hi"),
             F.count(F.lit(1)).alias("n"),
@@ -219,8 +218,6 @@ def advance_corr_state(
                 note=note, publish=False,
             ),
         }
-    finally:
-        new_rows.unpersist()
     meta = {
         "max_lag": max_lag,
         "through_month": bounds["hi"],

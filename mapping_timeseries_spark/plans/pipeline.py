@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import MappingConfig
+from ..materialize import scoped_checkpoint
 from ..operators.canonicalize import KEY, VALUE1, VALUE2, canonicalize
 from ..operators.correlation import best_lag_correlation
 from ..operators.dtw import build_dtw_mappings
@@ -159,10 +160,10 @@ def run_pipeline(
     build reads (the inline-trained model, or the routing table) is
     materialized with an eager ``localCheckpoint`` first, so the final
     mapping action does not also hold the training exchanges. A
-    caller-supplied ``model`` is used as given. The checkpoint blocks
-    are freed by Spark's ContextCleaner once nothing references the
-    returned plan, so ``result.mapped`` stays consumable after this
-    returns and there is no scratch directory to clean up.
+    caller-supplied ``model`` is used as given. The caller's scope owns
+    the checkpoints (:mod:`mapping_timeseries_spark.materialize`), so
+    ``result.mapped`` stays consumable after this returns and there is
+    no scratch directory to clean up.
 
     ``config.broadcast_threshold <= 0`` pins sort-merge joins against
     the entity table (the lag joins, and the routed close's DTW
@@ -243,13 +244,9 @@ def _run_pipeline_body(
             # exchanges and the lag joins' at once (the routed entry
             # twin at 1000x peaked at 30-44 GB of shuffle scratch uncut,
             # 20.9 GB with its entity table cut by a parquet stage;
-            # artifacts/mapping_1000x_gate.json). No release_checkpoint
-            # here: result.mapped reads these blocks lazily, so the
-            # ContextCleaner frees them once it is dropped (the
-            # operators/recommend.py avg_rank pattern).
-            corr = best_lag_correlation(merged, cfg.max_lag).localCheckpoint(
-                eager=True
-            )
+            # artifacts/mapping_1000x_gate.json). result.mapped reads
+            # these blocks lazily, so the caller's scope owns them.
+            corr = scoped_checkpoint(best_lag_correlation(merged, cfg.max_lag))
         mapped = build_correlation_mappings(
             t1, t2, corr, cfg.min_correlation,
             forbid_broadcast=cfg.broadcast_threshold <= 0,
@@ -261,9 +258,9 @@ def _run_pipeline_body(
         # three routed consumers and QA read the checkpoint instead of
         # each recomputing the routing join. It holds exactly the
         # distinct table1 entities, so QA counts them without a rescan.
-        routed = route_entities(
-            t1.select(KEY).distinct(), recommendations
-        ).localCheckpoint(eager=True)
+        routed = scoped_checkpoint(
+            route_entities(t1.select(KEY).distinct(), recommendations)
+        )
         entities = routed
         # one tiny agg over the per-entity routed frame: the
         # manual_review bucket produces ZERO mapping rows by design, and

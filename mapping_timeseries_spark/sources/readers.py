@@ -8,13 +8,10 @@ storage is parquet. Filters passed to :func:`read_table` land in the scan's
 
 from __future__ import annotations
 
-import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-_LOG = logging.getLogger(__name__)
 
 TPCH_TABLES = (
     "region",
@@ -149,47 +146,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Temp views over the fixture tables for the SQL surface (S3/S8)."""
     for name in TPCH_TABLES:
         read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def release_checkpoint(df: DataFrame) -> None:
-    """Release the storage behind a ``localCheckpoint``-ed DataFrame.
-
-    ``DataFrame.unpersist()`` only clears SQL-cache entries; a local
-    checkpoint lives as a raw persisted RDD under a ``LogicalRDD`` plan
-    node that the cache manager never sees (probed on Spark 4.1:
-    unpersist() leaves getPersistentRDDs unchanged, while
-    ``analyzed().rdd().unpersist(true)`` removes the entry — the only
-    other release path is waiting for driver GC + ContextCleaner, whose
-    cadence is unbounded). No-ops on any other plan shape, so callers
-    (iterative loops retiring a superseded round's checkpoint, writers
-    done with a pinned pre-overwrite slice, dedup_cache_scope teardown)
-    can call it unconditionally. The released frame must not be read
-    again: its lineage was truncated at the checkpoint, so a later
-    action raises instead of recomputing.
-
-    Error contract: only the missing-method/plan-shape
-    py4j error (``Py4JError`` raised when a non-LogicalRDD plan node has
-    no ``rdd()``) is the documented no-op; Java-side failures
-    (``Py4JJavaError`` — stopped session, executor loss) and anything
-    else are logged at debug level instead of silently discarded, so an
-    O(rounds) checkpoint accumulation the caller relies on this to
-    prevent leaves a signal when release genuinely fails."""
-    from py4j.protocol import Py4JError, Py4JJavaError
-
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(True)
-    except Py4JJavaError:
-        _LOG.debug(
-            "release_checkpoint: JVM-side release failed", exc_info=True
-        )
-    except Py4JError:
-        # plan is not checkpoint-backed (no rdd() on the analyzed node) —
-        # the unconditional-call contract above
-        pass
-    except Exception:
-        _LOG.debug(
-            "release_checkpoint: unexpected failure", exc_info=True
-        )
 
 
 def ensure_parallel(df: DataFrame) -> DataFrame:

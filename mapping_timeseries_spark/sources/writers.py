@@ -16,6 +16,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..materialize import dedup_cache_scope, scoped_checkpoint
+
 
 def write_overwrite(df: DataFrame, path: str) -> None:
     """S5: plain overwrite sink."""
@@ -483,32 +485,27 @@ def merge_into_partitioned(
     if len(non_null) < len(parts):
         pred = pred | F.col(partition_col).isNull()
     target = spark.read.parquet(target_path)
-    affected = target.where(pred).localCheckpoint(eager=True)
-    # merge_upsert's `source UNION (target LEFT ANTI source)`, but with
-    # `<=>` on the keys: a NULL partition value is a partition like any
-    # other, and SQL `=` never matches it, so a source row would land
-    # beside the target row it updates instead of replacing it
-    src_keys = source.select(keys).distinct().alias("__src")
-    on = [F.col(f"__tgt.{k}").eqNullSafe(F.col(f"__src.{k}")) for k in keys]
-    keep = affected.alias("__tgt").join(src_keys, on, "left_anti")
-    # rebalanced like write_partitioned: one file per rewritten partition
-    merged = _rebalanced(source.unionByName(keep), partition_col)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(
-            target_path
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        # the pinned pre-overwrite slice is dead once the rewrite is
-        # over (committed or failed) — release its checkpoint blocks
-        # eagerly instead of waiting for driver GC (unpersist() cannot
-        # reach a checkpoint RDD, see readers.release_checkpoint)
-        from .readers import release_checkpoint
-
-        release_checkpoint(affected)
-
+    # the pre-overwrite slice is dead once the rewrite is over
+    # (committed or failed): the scope frees its checkpoint blocks
+    with dedup_cache_scope():
+        affected = scoped_checkpoint(target.where(pred))
+        # merge_upsert's `source UNION (target LEFT ANTI source)`, but with
+        # `<=>` on the keys: a NULL partition value is a partition like any
+        # other, and SQL `=` never matches it, so a source row would land
+        # beside the target row it updates instead of replacing it
+        src_keys = source.select(keys).distinct().alias("__src")
+        on = [F.col(f"__tgt.{k}").eqNullSafe(F.col(f"__src.{k}")) for k in keys]
+        keep = affected.alias("__tgt").join(src_keys, on, "left_anti")
+        # rebalanced like write_partitioned: one file per rewritten partition
+        merged = _rebalanced(source.unionByName(keep), partition_col)
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            merged.write.mode("overwrite").partitionBy(partition_col).parquet(
+                target_path
+            )
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 def analyze_table(
     spark: SparkSession, table: str, columns: tuple[str, ...] = ()

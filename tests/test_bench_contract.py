@@ -3,6 +3,9 @@
 - Every ``bench.<attr>`` and ``from bench import X`` in tools/*.py must
   resolve on the module, so removing a bench instrument cannot silently
   break a gate or stress script that still imports it.
+- Every name tools/*.py and perfbench/*.py take from the engine package
+  must resolve too, so moving a helper cannot break a gate script or
+  the benchmark.
 - The leg table must time the same legs, in the same order, with the
   same reps, build-timed set and control set as the pinned list below,
   and every leg must name a real builder in ``__spark_entry__``.
@@ -10,6 +13,7 @@
 
 import ast
 import glob
+import importlib
 import os
 import sys
 
@@ -114,6 +118,117 @@ def test_bench_uses_scan_catches_both_forms(tmp_path):
     assert {n for n in used if not hasattr(bench, n)} == {
         "gone_helper",
         "NOT_THERE",
+    }
+
+
+PACKAGE = "mapping_timeseries_spark"
+
+
+def _package_uses(path: str) -> set:
+    """``(module, name)`` pairs a script reads off the engine package:
+    ``from mapping_timeseries_spark.m import X`` gives ``(m, X)``, and a
+    module bound to a name (``from mapping_timeseries_spark.ops import
+    dedup as D``, ``import mapping_timeseries_spark.m as D``) gives one
+    pair per ``D.X``. A name that is not a module binds no attributes
+    (see :func:`_unresolved`)."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), filename=path)
+    bound = {}
+    used = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.level == 0 and (
+            node.module == PACKAGE or str(node.module).startswith(PACKAGE + ".")
+        ):
+            for alias in node.names:
+                used.add((node.module, alias.name))
+                bound[alias.asname or alias.name] = f"{node.module}.{alias.name}"
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.asname and alias.name.startswith(PACKAGE + "."):
+                    bound[alias.asname] = alias.name
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in bound
+        ):
+            used.add((bound[node.value.id], node.attr))
+    return used
+
+
+def _unresolved(uses: set) -> set:
+    """The pairs whose module imports but lacks the name (as attribute
+    or submodule), or whose module does not import. A pair whose
+    "module" is a function or class, from ``from m import f`` then
+    ``f.x``, is skipped: only modules bind names here."""
+    missing = set()
+    for module, name in uses:
+        try:
+            mod = importlib.import_module(module)
+        except ModuleNotFoundError:
+            parent, _, leaf = module.rpartition(".")
+            try:
+                if hasattr(importlib.import_module(parent), leaf):
+                    continue
+            except ModuleNotFoundError:
+                pass
+            missing.add((module, name))
+            continue
+        if hasattr(mod, name):
+            continue
+        try:
+            importlib.import_module(f"{module}.{name}")
+        except ModuleNotFoundError:
+            missing.add((module, name))
+    return missing
+
+
+def test_tools_and_perfbench_package_references_resolve():
+    seen = {}
+    scripts = glob.glob(os.path.join(ROOT, "tools", "*.py")) + glob.glob(
+        os.path.join(ROOT, "perfbench", "*.py")
+    )
+    for path in sorted(scripts):
+        for use in _package_uses(path):
+            seen.setdefault(use, []).append(os.path.relpath(path, ROOT))
+    # the scan must see both import forms the benchmark uses, or it is
+    # scanning nothing
+    assert {
+        (f"{PACKAGE}.operators.dedup", "dedup_cache_scope"),
+        (f"{PACKAGE}.operators.dedup", "_band_frame"),
+        (f"{PACKAGE}.materialize", "scoped_pin"),
+    } <= set(seen)
+    missing = {use: seen[use] for use in _unresolved(set(seen))}
+    assert missing == {}
+
+
+def test_package_uses_scan_catches_both_forms(tmp_path):
+    p = tmp_path / "tool.py"
+    p.write_text(
+        "from mapping_timeseries_spark.operators.dedup import _shingled, gone\n"
+        "from mapping_timeseries_spark.operators import dedup as D\n"
+        "import mapping_timeseries_spark.materialize as M\n"
+        "D._band_frame(None, 1, 1)\n"
+        "M.scoped_pin(D.NOT_THERE)\n"
+        "from mapping_timeseries_spark.gone_module import helper\n"
+        "_shingled.__name__\n"
+    )
+    used = _package_uses(str(p))
+    dedup = f"{PACKAGE}.operators.dedup"
+    assert used == {
+        (dedup, "_shingled"),
+        (dedup, "gone"),
+        (f"{PACKAGE}.operators", "dedup"),
+        (dedup, "_band_frame"),
+        (dedup, "NOT_THERE"),
+        (f"{PACKAGE}.materialize", "scoped_pin"),
+        (f"{PACKAGE}.gone_module", "helper"),
+        (f"{dedup}._shingled", "__name__"),
+    }
+    assert _unresolved(used) == {
+        (dedup, "gone"),
+        (dedup, "NOT_THERE"),
+        (f"{PACKAGE}.gone_module", "helper"),
     }
 
 

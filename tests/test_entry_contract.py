@@ -7,6 +7,9 @@ import pytest
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entry_mod
+from mapping_timeseries_spark.materialize import dedup_cache_scope
+
+from .conftest import new_persisted_rdds, persisted_rdd_ids
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -46,13 +49,33 @@ def test_engine_rng_sample_pinned(spark):
     assert 0.02 * total < n_a < 0.25 * total  # fraction=0.1
 
 
+class _ConsumerFailed(RuntimeError):
+    pass
+
+
 def test_all_queries_plan_and_return_rows(spark):
-    # planning + a 1-row touch per query at the smallest sf: catches schema
-    # errors and missing columns without the cost of full collects
+    """Every registry entry plans and returns a row at the smallest sf,
+    and leaves nothing materialized behind it: built and consumed inside
+    a scope, then built again inside a scope whose consumer raises, each
+    pass ends with an empty cache manager and no RDD persisted that was
+    not persisted before the sweep."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    before = persisted_rdd_ids(spark)
     for name, fn in entry_mod.queries().items():
-        df = fn(spark, SF_DIR)
-        assert df.columns, name
-        df.limit(1).collect()
+        with dedup_cache_scope():
+            df = fn(spark, SF_DIR)
+            assert df.columns, name
+            df.limit(1).collect()
+        assert cache.isEmpty(), (name, "consumed")
+        assert new_persisted_rdds(spark, before) == set(), (name, "consumed")
+
+        with pytest.raises(_ConsumerFailed):
+            with dedup_cache_scope():
+                fn(spark, SF_DIR)
+                raise _ConsumerFailed(name)
+        assert cache.isEmpty(), (name, "raised")
+        assert new_persisted_rdds(spark, before) == set(), (name, "raised")
 
 
 def test_queries_survive_hostile_session_defaults(spark):

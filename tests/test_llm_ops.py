@@ -4,9 +4,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from mapping_timeseries_spark.materialize import dedup_cache_scope, scoped_pin
 from mapping_timeseries_spark.operators.dedup import (
     content_hash_dedup,
-    dedup_cache_scope,
     exact_dedup,
     line_dedup,
     minhash_lsh_pairs,
@@ -28,6 +28,8 @@ from mapping_timeseries_spark.operators.similarity import (
 )
 from mapping_timeseries_spark.sources.readers import read_table
 from mapping_timeseries_spark.operators.textstats import quality_score, text_stats
+
+from .conftest import job_group, persisted_rdd_ids
 
 WORDS = [
     "data", "table", "row", "batch", "query", "spark", "join", "merge",
@@ -52,10 +54,6 @@ def noisy_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string, lang string")
 
 
-def _persisted_rdd_ids(spark) -> set[int]:
-    return set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
-
-
 def test_dedup_cache_scope_releases_pins(spark, noisy_docs):
     """The enforceable cache contract (r4 verdict wart): inside a
     dedup_cache_scope the operators' persisted intermediates are live;
@@ -65,17 +63,17 @@ def test_dedup_cache_scope_releases_pins(spark, noisy_docs):
     the ContextCleaner may retire localCheckpoint RDDs of earlier tests
     while this one runs."""
     spark.catalog.clearCache()
-    before = _persisted_rdd_ids(spark)
+    before = persisted_rdd_ids(spark)
     with dedup_cache_scope():
         scoped = sorted(
             (r["doc_a"], r["doc_b"])
             for r in minhash_lsh_pairs(noisy_docs, threshold=0.6).collect()
         )
-        assert _persisted_rdd_ids(spark) - before  # pins live inside
+        assert persisted_rdd_ids(spark) - before  # pins live inside
         # nested scope: inner pins release at inner exit only
         with dedup_cache_scope():
             simhash_near_dups(noisy_docs, max_hamming=6).collect()
-    assert _persisted_rdd_ids(spark) - before == set()
+    assert persisted_rdd_ids(spark) - before == set()
     bare = sorted(
         (r["doc_a"], r["doc_b"])
         for r in minhash_lsh_pairs(noisy_docs, threshold=0.6).collect()
@@ -89,21 +87,16 @@ def test_cache_scope_releases_boilerplate_pin(spark, noisy_docs):
     cache scope, so nothing it persisted outlives the scope."""
     from mapping_timeseries_spark.operators.textstats import boilerplate_signals
 
-    before = _persisted_rdd_ids(spark)
+    before = persisted_rdd_ids(spark)
     with dedup_cache_scope():
         assert boilerplate_signals(noisy_docs).count() == 60
-        assert _persisted_rdd_ids(spark) - before  # the pin is live inside
-    assert _persisted_rdd_ids(spark) - before == set()
+        assert persisted_rdd_ids(spark) - before  # the pin is live inside
+    assert persisted_rdd_ids(spark) - before == set()
 
 
 def test_cache_scope_teardown_survives_failed_release(spark):
     """One failed unpersist must not abort the rest of the scope
     teardown — every remaining pin is still released."""
-    from mapping_timeseries_spark.operators.dedup import (
-        dedup_cache_scope,
-        scoped_pin,
-    )
-
     events = []
 
     class FakeFrame:
@@ -129,21 +122,16 @@ def test_cache_scope_releases_pins_when_consumer_raises(spark):
     """A consumer that raises inside dedup_cache_scope still gets every
     pin released on the way out: the frame is no longer cached and no
     RDD persisted inside the scope is left."""
-    from mapping_timeseries_spark.operators.dedup import (
-        dedup_cache_scope,
-        scoped_pin,
-    )
-
-    before = _persisted_rdd_ids(spark)
+    before = persisted_rdd_ids(spark)
     with pytest.raises(RuntimeError, match="consumer failed"):
         with dedup_cache_scope():
             df = scoped_pin(spark.range(1000).selectExpr("id", "id * id AS sq"))
             assert df.count() == 1000
             assert df.is_cached
-            assert _persisted_rdd_ids(spark) - before
+            assert persisted_rdd_ids(spark) - before
             raise RuntimeError("consumer failed")
     assert not df.is_cached
-    assert _persisted_rdd_ids(spark) - before == set()
+    assert persisted_rdd_ids(spark) - before == set()
 
 
 def test_ngram_decontaminate_planted_containment(spark):
@@ -283,13 +271,9 @@ def test_bloom_frame_lazy_and_bitwise_identical(spark):
     holdout = spark.createDataFrame(
         [(9, "alpha beta gamma")], "doc_id long, text string"
     )
-    sc = spark.sparkContext
-    sc.setJobGroup("bloom-lazy-probe", "construction must run no jobs")
-    try:
+    with job_group(spark.sparkContext, "bloom-lazy-probe") as jobs:
         df = ngram_decontaminate(docs, holdout, min_overlap=0.2)
-    finally:
-        sc.setJobGroup("bloom-lazy-probe-done", "reset")
-    assert sc.statusTracker().getJobIdsForGroup("bloom-lazy-probe") == []
+    assert jobs == []
     # and the plan still evaluates correctly when consumed
     got = {(r["train_doc"], r["holdout_doc"]) for r in df.collect()}
     assert got == {(1, 9)}
@@ -1076,10 +1060,10 @@ def test_dedup_clusters_raises_on_non_convergence(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
     )
-    before = _persisted_rdd_ids(spark)
+    before = persisted_rdd_ids(spark)
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup_clusters(docs, pairs, max_rounds=1)
-    assert _persisted_rdd_ids(spark) == before
+    assert persisted_rdd_ids(spark) == before
 
 
 def test_dedup_clusters_star_matches_propagation(spark):
@@ -1156,13 +1140,8 @@ def test_dedup_clusters_job_budget(spark):
     n = start + 5
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    sc = spark.sparkContext
-    sc.setJobGroup("dedup-clusters-budget", "job budget of dedup_clusters")
-    try:
+    with job_group(spark.sparkContext, "dedup-clusters-budget") as jobs:
         rows = dedup_clusters(docs, pairs).collect()
-    finally:
-        sc.setJobGroup("dedup-clusters-budget-done", "reset")
-    jobs = sc.statusTracker().getJobIdsForGroup("dedup-clusters-budget")
     assert len(rows) == n
     assert sum(r["is_keeper"] for r in rows) == 4 + 5
     assert len(jobs) <= DEDUP_CLUSTERS_JOB_BUDGET, len(jobs)
@@ -2038,7 +2017,6 @@ def test_cache_scope_covers_model_operators(spark):
     extra cached RDDs."""
     from pyspark.sql import functions as F
 
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
     from mapping_timeseries_spark.operators.search import bm25_index, bm25_topk
     from mapping_timeseries_spark.operators.textmodels import (
         bigram_lm_counts,
@@ -2551,7 +2529,6 @@ def test_flag_corpus_plan_starts_no_jobs(spark, noisy_docs, monkeypatch):
     to converge. A lazy stand-in replaces dedup_clusters (it still
     reads the pairs), so the job group sees the build of every other
     stage, the MinHash pairs included."""
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
     from mapping_timeseries_spark.plans import corpus_pipeline
 
     def lazy_clusters(docs, pairs):
@@ -2568,14 +2545,10 @@ def test_flag_corpus_plan_starts_no_jobs(spark, noisy_docs, monkeypatch):
     holdout = noisy_docs.where(F.col("doc_id") < 4).select(
         (F.col("doc_id") + 1000).alias("doc_id"), "text"
     )
-    sc = spark.sparkContext
     with dedup_cache_scope():
-        sc.setJobGroup("flag-corpus-build", "plan build must run no jobs")
-        try:
+        with job_group(spark.sparkContext, "flag-corpus-build") as jobs:
             flagged = corpus_pipeline.flag_corpus(noisy_docs, holdout)
-        finally:
-            sc.setJobGroup("flag-corpus-build-done", "reset")
-        assert sc.statusTracker().getJobIdsForGroup("flag-corpus-build") == []
+        assert jobs == []
         # the plan still evaluates: planted twins lose their neardup flag
         rows = flagged.select("doc_id", "pass_neardup").collect()
     assert len(rows) == 60
@@ -2593,16 +2566,9 @@ MINHASH_LSH_PAIRS_JOB_BUDGET = 12
 
 
 def test_minhash_lsh_pairs_job_budget(spark, noisy_docs):
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
-
-    sc = spark.sparkContext
     with dedup_cache_scope():
-        sc.setJobGroup("minhash-pairs-budget", "minhash_lsh_pairs budget")
-        try:
+        with job_group(spark.sparkContext, "minhash-pairs-budget") as jobs:
             rows = minhash_lsh_pairs(noisy_docs, mode="star").collect()
-        finally:
-            sc.setJobGroup("minhash-pairs-budget-done", "reset")
-    jobs = sc.statusTracker().getJobIdsForGroup("minhash-pairs-budget")
     assert rows
     assert len(jobs) <= MINHASH_LSH_PAIRS_JOB_BUDGET, len(jobs)
 
@@ -2618,7 +2584,6 @@ def test_minhash_paths_jaccard_equals_string_sets(spark, noisy_docs, tmp_path):
     from mapping_timeseries_spark.operators.dedup import (
         _shingled,
         build_minhash_index,
-        dedup_cache_scope,
         load_minhash_index,
         minhash_dedup_incremental,
         minhash_dedup_stream,

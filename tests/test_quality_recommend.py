@@ -24,6 +24,7 @@ from mapping_timeseries_spark.operators.recommend import (
 from mapping_timeseries_spark.plans.pipeline import run_pipeline
 from mapping_timeseries_spark.sources.fixtures import synthetic_pair
 
+from .conftest import job_group
 from .parquet_footers import parquet_codecs, parquet_files
 
 
@@ -609,22 +610,16 @@ def closes(spark, pair, tmp_path_factory):
         )),
         "routed": (recs, {}),
     }
-    sc = spark.sparkContext
     out = {}
     for name, (recommendations, kwargs) in runs.items():
         path = str(root / name)
-        group = f"pipeline-close-{name}"
-        sc.setJobGroup(group, f"the {name} close")
-        try:
+        with job_group(spark.sparkContext, f"pipeline-close-{name}") as jobs:
             result = run_pipeline(
                 spark, t1, t2, recommendations,
                 "cus_code", "month", "txn_amount", "revenue",
                 output_path=path, run_id=name, **kwargs,
             )
-        finally:
-            sc.setJobGroup(f"{group}-done", "reset")
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        out[name] = (path, kwargs.get("versioned_root"), result, jobs)
+        out[name] = (path, kwargs.get("versioned_root"), result, len(jobs))
     return out
 
 

@@ -74,14 +74,13 @@ def compare_query(spark, con, sf_dir: str, name: str) -> dict:
     oracle gets the rows-only record. Prints one status line, plus up
     to three rows from each side when only the value hash differs."""
     import __spark_entry__ as entry_mod
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
+    from mapping_timeseries_spark.materialize import dedup_cache_scope
 
     t0 = time.time()
     try:
-        # scope-release every _pin the query build registers
-        # (quality_score's scored corpus, corr_lag_grid's merged
-        # frame) so 50 back-to-back queries don't accumulate pinned
-        # frames for the session lifetime
+        # release every pin and checkpoint the query build registers, so
+        # 50 back-to-back queries don't accumulate materialized frames
+        # for the session lifetime
         with dedup_cache_scope():
             sdf = entry_mod.queries()[name](spark, sf_dir).toPandas()
     except Exception as exc:  # noqa: BLE001 — recorded, not swallowed

@@ -245,7 +245,7 @@ def main() -> int:
     corpus_dir = os.path.join(REPO, "artifacts", f"scale_stress_{factor}x_dedup")
 
     from bench import box_calibration
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
+    from mapping_timeseries_spark.materialize import dedup_cache_scope
     from mapping_timeseries_spark.operators.textmodels import nb_train
     from mapping_timeseries_spark.plans.corpus_pipeline import (
         flag_corpus,

@@ -125,7 +125,7 @@ def _nb(docs) -> dict:
 
 
 def run_once(spark, sf_dir: str, scale: int, out_path: str) -> dict:
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
+    from mapping_timeseries_spark.materialize import dedup_cache_scope
     from mapping_timeseries_spark.plans.corpus_pipeline import (
         run_corpus_pipeline,
     )
@@ -165,7 +165,7 @@ def replica0_counts(spark, sf_dir: str, scale: int, offset: int) -> dict:
     the 1x counts exactly for every per-doc stage. Untimed (the gate
     re-evaluates the flag plan once; the wall measurement above is the
     user-facing number)."""
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
+    from mapping_timeseries_spark.materialize import dedup_cache_scope
     from mapping_timeseries_spark.plans.corpus_pipeline import flag_corpus
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))

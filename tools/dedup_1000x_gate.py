@@ -206,12 +206,12 @@ def main() -> int:
     ]:
         import lsh_stages
 
-        from mapping_timeseries_spark.operators import dedup as D
+        from mapping_timeseries_spark import materialize as M
         from mapping_timeseries_spark.sources.readers import read_table
 
         docs_nx = read_table(spark, corpus_dir, "documents")
         stages = {}
-        with D.dedup_cache_scope():
+        with M.dedup_cache_scope():
             t0 = time.monotonic()
             sh, banded = lsh_stages.staged_frames(docs_nx)
             n_banded = banded.count()
@@ -220,7 +220,7 @@ def main() -> int:
                 "band_rows": n_banded,
             }
             t0 = time.monotonic()
-            cand = D.scoped_pin(lsh_stages.candidates(banded, "pairs"))
+            cand = M.scoped_pin(lsh_stages.candidates(banded, "pairs"))
             n_cand = cand.count()
             stages["band_join_candidates"] = {
                 "wall_sec": round(time.monotonic() - t0, 1),

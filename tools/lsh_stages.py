@@ -21,19 +21,20 @@ THRESHOLD = 0.5
 def staged_frames(docs, pin_sets: bool = True):
     """(sets_filtered, banded_pinned) — stage A of the pipeline: the
     per-doc hash sets and base hashes (operators.dedup._minhash_sets)
-    and their bands, pinned via the dedup cache-scope registry so
-    callers consume inside dedup_cache_scope(). ``pin_sets=False`` is
+    and their bands, pinned with materialize.scoped_pin so callers
+    consume inside dedup_cache_scope(). ``pin_sets=False`` is
     for gates that never run the verifier (map_stage_10000x_gate) or
     narrow the sets first (neardup_composed_gate): pinning 50M docs'
     sets is a large cache for a frame read once, and the pin is only
     load-bearing when the verifier re-joins the sets."""
+    from mapping_timeseries_spark import materialize as M
     from mapping_timeseries_spark.operators import dedup as D
 
     sets = D._minhash_sets(docs, "text", NGRAM_N)
     if pin_sets:
-        sets = D.scoped_pin(sets)
+        sets = M.scoped_pin(sets)
     sets = sets.where(sets.n_shingles > 0)
-    banded = D.scoped_pin(D._band_frame(sets, NUM_HASHES, BANDS))
+    banded = M.scoped_pin(D._band_frame(sets, NUM_HASHES, BANDS))
     return sets, banded
 
 
@@ -62,10 +63,11 @@ def narrowed_verify(cand, sets_unpinned, threshold: float = THRESHOLD):
     verifier that reads ~1% of them is the x10000 scale wall. Returns
     (verified_edges, narrowed_pinned) so the caller's scope can account
     for the pin."""
+    from mapping_timeseries_spark import materialize as M
     from mapping_timeseries_spark.operators import dedup as D
 
-    cand = D.scoped_pin(cand)
-    narrowed = D.scoped_pin(
+    cand = M.scoped_pin(cand)
+    narrowed = M.scoped_pin(
         D.narrow_sets_to_participants(sets_unpinned, cand)
     )
     return D._verify_jaccard_hashed(cand, narrowed, threshold), narrowed

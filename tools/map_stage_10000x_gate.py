@@ -64,7 +64,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from bench import box_calibration
-    from mapping_timeseries_spark.operators import dedup as D
+    from mapping_timeseries_spark import materialize as M
     from mapping_timeseries_spark.scratch import (
         ScratchMeter,
         drain,
@@ -113,7 +113,7 @@ def main() -> int:
 
         docs = read_table(spark, sf_dir, "documents")
         out = {}
-        with D.dedup_cache_scope():
+        with M.dedup_cache_scope():
             m = ScratchMeter(spark).start()
             t0 = time.monotonic()
             # pin_sets=False: this gate never runs the verifier, and

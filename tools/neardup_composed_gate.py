@@ -153,6 +153,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from bench import box_calibration
+    from mapping_timeseries_spark import materialize as M
     from mapping_timeseries_spark.operators import dedup as D
     from mapping_timeseries_spark.scratch import (
         ScratchMeter,
@@ -198,7 +199,7 @@ def main() -> int:
     offset = docs_1x.agg(F.max("doc_id")).first()[0] + 1
 
     # ---- 1x reference run (composed, single scope) -----------------------
-    with D.dedup_cache_scope():
+    with M.dedup_cache_scope():
         sh1, banded1, star1 = _pipeline_frames(docs_1x, narrow=narrow)
         edges_1x = star1()
         n_edges_1x = edges_1x.count()
@@ -217,7 +218,7 @@ def main() -> int:
     # ---- Nx composed run with per-stage walls/scratch ---------------------
     docs_nx = read_table(spark, corpus_dir, "documents")
     stages = {}
-    with D.dedup_cache_scope():
+    with M.dedup_cache_scope():
         m = ScratchMeter(spark).start()
         t0 = time.monotonic()
         sh, banded, star = _pipeline_frames(docs_nx, narrow=narrow)
@@ -232,7 +233,7 @@ def main() -> int:
 
         m = ScratchMeter(spark).start()
         t0 = time.monotonic()
-        edges = D.scoped_pin(star())
+        edges = M.scoped_pin(star())
         n_edges = edges.count()
         stages["B_candidates_verify"] = {
             "wall_sec": round(time.monotonic() - t0, 1),

@@ -37,8 +37,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from mapping_timeseries_spark.materialize import scoped_pin  # noqa: E402
 from mapping_timeseries_spark.operators.dedup import (  # noqa: E402
-    _pin,
     _shingled,
     ngram_jaccard_pairs,
 )
@@ -54,7 +54,7 @@ CORPORA = {
 
 def measure(spark, sf_dir: str) -> dict:
     docs = read_table(spark, sf_dir, "documents")
-    sh = _pin(_shingled(docs, "text", 2))
+    sh = scoped_pin(_shingled(docs, "text", 2))
     inv = sh.select("doc_id", F.explode("shingles").alias("shingle"))
     n_docs = docs.count()
     n_occ = inv.count()

@@ -43,7 +43,7 @@ def main() -> None:
         extra_conf={"spark.driver.memory": "16g"},
     )
     qs = bench.leg_queries()
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
+    from mapping_timeseries_spark.materialize import dedup_cache_scope
 
     for leg in bench.LEGS:
         name = leg.name

@@ -55,7 +55,7 @@ def main() -> None:
     app_id = sc.applicationId
     qs = {**entry_mod.queries(), **bench.leg_queries()}
     build_timed_legs = {leg.name for leg in bench.LEGS if leg.build_timed}
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
+    from mapping_timeseries_spark.materialize import dedup_cache_scope
 
     out: dict = {"sf_dir": sf_dir, "cpus": cpus, "legs": {}}
     for name in args:

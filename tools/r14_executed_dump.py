@@ -64,7 +64,7 @@ def main() -> None:
     base = f"http://localhost:{sc.uiWebUrl.rsplit(':', 1)[1]}"
     app_id = sc.applicationId
     qs = {**entry_mod.queries(), **bench.leg_queries()}
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
+    from mapping_timeseries_spark.materialize import dedup_cache_scope
 
     for name in names:
         if name not in qs:

@@ -50,7 +50,7 @@ def _steal():
 
 
 def _timed(spark, fn, sf_dir, reps):
-    from mapping_timeseries_spark.operators.dedup import dedup_cache_scope
+    from mapping_timeseries_spark.materialize import dedup_cache_scope
 
     a = _steal()
     with dedup_cache_scope():
