@@ -146,9 +146,8 @@ def narrow_sets_to_participants(
     docs the un-narrowed verify must shuffle all 50M set rows, while
     star-candidate participants are ~1% of the corpus. Boundary: the
     broadcast carries the distinct participant-id list (~8 B each,
-    ~80 MB at 10M participants); past ~100M participants switch to a
-    Bloom-filter semi-join or let AQE pick the strategy by dropping the
-    explicit broadcast hint."""
+    ~80 MB at 10M participants); past ~100M participants let AQE pick
+    the strategy by dropping the explicit broadcast hint."""
     ids = (
         candidates.select(F.col("doc_a").alias(id_col))
         .unionByName(candidates.select(F.col("doc_b").alias(id_col)))
@@ -465,123 +464,12 @@ def ngram_jaccard_pairs(
     return _verify_jaccard_hashed(cand, hsets, threshold)
 
 
-def _bloom_words(hashes, bits_per_key: int = 12):
-    """Driver-side Bloom bitmap over signed 64-bit hashes (xxhash64 or
-    non-negative 60-bit portable hashes — the probe derivation is
-    sign-safe: Python's arithmetic right shift then 30-bit mask yields
-    the same bits as SQL shiftright on a bigint), as a list of 64-bit
-    words plus (m_bits, k). Double-hashing scheme
-    (Kirsch & Mitzenmacher): probe i tests bit (h1 + i*h2) mod m with
-    h1 = low 30 bits, h2 = bits 30..59 forced odd — integer-exact and
-    reproducible in any engine. bits_per_key=12, k=8 gives ~3e-4 FP."""
-    n = max(len(hashes), 1)
-    m = max(64, n * bits_per_key)
-    k = max(1, round(bits_per_key * 0.69))
-    words = [0] * ((m + 63) // 64)
-    for h in hashes:
-        h1 = h & ((1 << 30) - 1)
-        h2 = ((h >> 30) & ((1 << 30) - 1)) | 1
-        for i in range(k):
-            idx = (h1 + i * h2) % m
-            words[idx >> 6] |= 1 << (idx & 63)
-    # two's-complement into signed 64-bit: Spark bigint can't hold
-    # unsigned words with bit 63 set, and getbit reads raw bits, so the
-    # reinterpretation is lossless
-    words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-    return words, m, k
-
-
-def _bloom_probe_sql(
-    hash_col: str, words_col: str, m: int | str, k: int
-) -> str:
-    """SQL predicate testing the k Bloom probes of ``hash_col`` against
-    the ``words_col`` array<bigint> bitmap — same double-hashing as
-    :func:`_bloom_words`. Built as a SQL string because PySpark's
-    shiftright/getbit wrappers only take literal shift positions, while
-    the SQL forms accept full expressions (probe recorded in SCALE.md).
-    ``m`` may be an int literal or the NAME of a bigint column carrying
-    the bitmap size (the lazy distributed build broadcasts m alongside
-    the words array on the same one-row frame)."""
-    m_sql = f"{m}L" if isinstance(m, int) else f"({m})"
-    h1 = f"({hash_col} & {(1 << 30) - 1})"
-    h2 = f"((shiftright({hash_col}, 30) & {(1 << 30) - 1}) | 1)"
-    tests = []
-    for i in range(k):
-        idx = f"pmod({h1} + {i} * {h2}, {m_sql})"
-        word = f"element_at({words_col}, cast(shiftright({idx}, 6) as int) + 1)"
-        tests.append(f"getbit({word}, cast(({idx} & 63) as int)) = 1")
-    return " AND ".join(tests)
-
-
-def _bloom_frame(
-    hashes_df: DataFrame, bits_per_key: int = 12
-) -> tuple[DataFrame, int]:
-    """LAZY distributed twin of :func:`_bloom_words`: builds the Bloom
-    bitmap of the ``__h`` (signed 64-bit bigint hash) column as a
-    one-row DataFrame ``(__bloom_m bigint, __bloom_words array<bigint>)``
-    — bitwise identical to the driver-loop bitmap (same m = max(64,
-    n*bits), same k, same Kirsch-Mitzenmacher double hashing; pinned in
-    tests) but with no driver collect and no Spark jobs until an action
-    consumes the plan. Build shape: k probe indices explode per hash,
-    ``bit_or`` ors them into 64-bit words, ``transform(sequence(...))``
-    densifies the sparse word map. An EMPTY input yields an EMPTY frame
-    (not an all-zero bitmap) — callers crossJoin it, so nothing
-    survives, which matches 'nothing can match an empty holdout'.
-    Returns (frame, k)."""
-    k = max(1, round(bits_per_key * 0.69))
-    # m = max(64, n * bits): same sizing as _bloom_words, derived by a
-    # lazy 1-row aggregate instead of a driver len()
-    sized = hashes_df.groupBy().agg(
-        F.greatest(
-            F.lit(64).cast("bigint"),
-            F.count(F.lit(1)) * F.lit(int(bits_per_key)),
-        ).alias("__m")
-    )
-    h1 = f"(__h & {(1 << 30) - 1})"
-    h2 = f"((shiftright(__h, 30) & {(1 << 30) - 1}) | 1)"
-    probes = hashes_df.crossJoin(F.broadcast(sized)).select(
-        "__m",
-        F.explode(
-            F.array(
-                *[F.expr(f"pmod({h1} + {i} * {h2}, __m)") for i in range(k)]
-            )
-        ).alias("__idx"),
-    )
-    words_map = (
-        probes.select(
-            "__m",
-            F.expr("cast(shiftright(__idx, 6) as int)").alias("__w"),
-            # shiftleft(1L, 63) wraps negative — same two's-complement
-            # signed-word representation _bloom_words emits
-            F.expr("shiftleft(1L, cast((__idx & 63) as int))").alias("__bit"),
-        )
-        .groupBy("__m", "__w")
-        .agg(F.expr("bit_or(__bit)").alias("__word"))
-    )
-    return (
-        words_map.groupBy("__m")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("__w", "__word")))
-            ).alias("__wm")
-        )
-        .select(
-            F.col("__m").alias("__bloom_m"),
-            F.expr(
-                "transform(sequence(0, cast((__m + 63) div 64 as int) - 1),"
-                " i -> coalesce(__wm[i], 0L))"
-            ).alias("__bloom_words"),
-        )
-    ), k
-
-
 def ngram_decontaminate(
     train: DataFrame,
     holdout: DataFrame,
     text_col: str = "text",
     n: int = 2,
     min_overlap: float = 0.2,
-    bloom_bits_per_key: int | None = 12,
     train_hsets: DataFrame | None = None,
     holdout_hsets: DataFrame | None = None,
 ) -> DataFrame:
@@ -605,60 +493,35 @@ def ngram_decontaminate(
     Holdout docs with fewer than ``n`` tokens have no shingles and cannot
     be flagged (they carry no matchable content).
 
-    Bloom pre-filter: before the exact broadcast
-    join, train postings are screened against a Bloom bitmap of the
-    holdout's 60-bit shingle hashes (pure getbit/shiftright expressions
-    over one broadcast array<bigint> row — Spark 4.1 does not register
-    bloom_filter_agg/might_contain as SQL functions, probed and
-    recorded in SCALE.md). A Bloom has no false negatives, so the
-    RESULT is unchanged (pytest-pinned bloom==exact); the win is that
-    the ~100% of corpus postings sharing no shingle with the benchmark
-    suite are dropped by a bitmap test (~1.5 KB/1k shingles at 12
-    bits/key) instead of each probing the multi-MB broadcast hash
-    relation — measured 5.1x posting reduction even with an
-    adversarially large holdout (1% of the corpus, same vocabulary;
-    tests/test_llm_ops.py); a realistic benchmark suite over a
-    web-scale corpus shares far less vocabulary and filters
-    correspondingly harder. ``bloom_bits_per_key=None`` disables it.
-
-    The bitmap is built LAZILY INSIDE THE PLAN: probe
-    indices explode per holdout hash, a ``bit_or`` aggregation ors them
-    into 64-bit words, and ``transform(sequence(...))`` densifies the
-    word map into the broadcast array — bitwise identical to the old
-    driver-loop bitmap (same m = max(64, n*bits), same k, same double
-    hashing) but with zero driver collect, zero Spark jobs at
-    DataFrame-construction time (explain/audit stays action-free and
-    bench legs time the build where it runs), and the build cost
-    distributed. Size contract: the one-row bitmap is
-    ``bits_per_key * |holdout shingles| / 8`` bytes and must fit in a
-    broadcast row — the SAME broadcast-holdout contract the exact join
-    below already imposes, so the Bloom adds no new ceiling (both fall
-    over together if the 'holdout' stops being benchmark-suite-sized;
-    disable with ``bloom_bits_per_key=None`` and swap the broadcast
-    join for a shuffle join at that point).
+    The broadcast hash join is the membership test: every train
+    posting probes the holdout's hash table once, on the 64-bit shingle
+    hash. A probabilistic pre-filter in front of it tests the same key
+    and pays only when it saves shipping or probing a large relation;
+    the holdout is broadcast anyway, and the bitmap pre-filter this
+    operator once had lost every paired run against the bare join
+    (SCALE.md, "Decontamination: the broadcast join alone").
 
     Output: (train_doc, holdout_doc, shared_ngrams, holdout_ngrams,
     overlap) for pairs with overlap >= min_overlap.
     """
-    # the join key, broadcast relation and Bloom all run on
-    # xxhash64(shingle) rather than shingle strings — the broadcast
-    # carries 8-byte longs (~2-3x smaller than ~15-char grams), the
-    # corpus-side probe hashes with the JVM-native xxhash64 instead of
-    # md5, and the containment count inherits the same documented
-    # 64-bit-collision approximation as the near-dup pipeline
-    # (`_verify_jaccard_hashed`): a collision can overcount
-    # shared_ngrams by 1 with probability ~V^2/2^65 — the DuckDB oracle
-    # stays the exact string formulation and the registry gate
-    # hash-compares against it.
+    # the join key and the broadcast relation run on xxhash64(shingle)
+    # rather than shingle strings — the broadcast carries 8-byte longs
+    # (~2-3x smaller than ~15-char grams), the corpus-side probe hashes
+    # with the JVM-native xxhash64 instead of md5, and the containment
+    # count inherits the same documented 64-bit-collision approximation
+    # as the near-dup pipeline (`_verify_jaccard_hashed`): a collision
+    # can overcount shared_ngrams by 1 with probability ~V^2/2^65 — the
+    # DuckDB oracle stays the exact string formulation and the registry
+    # gate hash-compares against it.
     # don't compute things twice: callers that have already paid the
     # shingle pass (q_ngram_jaccard shares the PPJoin half's pinned
-    # hsets) pass ``*_hsets`` frames in `_ngram_hsets` shape. Exploding
-    # a sorted-hash array yields each distinct shingle's hash once.
+    # hsets, flag_corpus the MinHash stage's pinned sets) pass
+    # ``*_hsets`` frames with `_ngram_hsets`' columns. Exploding a
+    # sorted-hash array yields each distinct shingle's hash once.
     if train_hsets is None:
         train_hsets = _ngram_hsets(train, text_col, n)
     if holdout_hsets is None:
-        # pinned: the Bloom build and the broadcast join both read it
-        holdout_hsets = scoped_pin(_ngram_hsets(holdout, text_col, n))
+        holdout_hsets = _ngram_hsets(holdout, text_col, n)
     tr = train_hsets.select(
         F.col("doc_id").alias("train_doc"),
         F.explode("__hset").alias("shingle"),
@@ -668,24 +531,6 @@ def ngram_decontaminate(
         F.col("n_shingles").alias("holdout_ngrams"),
         F.explode("__hset").alias("shingle"),
     )
-    if bloom_bits_per_key is not None:
-        bloom_row, k = _bloom_frame(
-            ho.select(F.col("shingle").alias("__h")).distinct(),
-            bloom_bits_per_key,
-        )
-        # empty holdout => bloom_row has ZERO rows and the crossJoin
-        # empties the train side — correct (the exact join below would
-        # match nothing anyway) and it skips the corpus scan entirely
-        tr = (
-            tr.withColumn("__bh", F.col("shingle"))
-            .crossJoin(F.broadcast(bloom_row))
-            .where(
-                F.expr(
-                    _bloom_probe_sql("__bh", "__bloom_words", "__bloom_m", k)
-                )
-            )
-            .drop("__bh", "__bloom_words", "__bloom_m")
-        )
     return (
         tr.join(F.broadcast(ho), "shingle")
         .groupBy("train_doc", "holdout_doc")
@@ -829,6 +674,7 @@ def minhash_lsh_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     mode: str = "pairs",
+    sets: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash + LSH near-dup candidates, Jaccard-verified.
 
@@ -850,6 +696,10 @@ def minhash_lsh_pairs(
     Each doc's shingles are projected once, into its hash set and base
     hashes (:func:`_minhash_sets`); banding and the verifier
     (:func:`_verify_jaccard_hashed`) both read that one pin.
+    ``sets``: a caller that also runs another operator over the same
+    corpus passes ONE pinned :func:`_minhash_sets` frame of ``docs``
+    (``text_col``, ``n``) so the shingle pass runs once for both; the
+    caller then owns the pin's lifetime.
     The DuckDB twin is generated from the SAME coefficients, so the
     full signature->band->verify pipeline is hash-compared end-to-end.
 
@@ -881,9 +731,9 @@ def minhash_lsh_pairs(
     # sf0.1 before this ordering).
     # One pin, one shingle pass: banding reads its __base, the
     # verifier its __hset.
-    sets = scoped_pin(_minhash_sets(docs, text_col, n)).where(
-        F.col("n_shingles") > 0
-    )
+    if sets is None:
+        sets = scoped_pin(_minhash_sets(docs, text_col, n))
+    sets = sets.where(F.col("n_shingles") > 0)
     # persisted: the self-join (or hub join) would otherwise recompute
     # the full signature pipeline once per side
     banded = scoped_pin(_band_frame(sets, num_hashes, bands))

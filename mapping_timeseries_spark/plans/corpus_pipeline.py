@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from ..materialize import dedup_cache_scope, scoped_pin
 from ..operators.dedup import (
+    _minhash_sets,
     dedup_clusters,
     minhash_lsh_pairs,
     ngram_decontaminate,
@@ -272,11 +273,17 @@ def flag_corpus(
     # trade (member-member edges whose bucket min clears neither) is
     # documented on dedup._lsh_candidates, and cluster equality on
     # transitively-similar corpora is pytest-pinned.
+    # One 2-shingle pass for the corpus: the MinHash stage and the
+    # decontamination train side both read this pin (its __hset is the
+    # _ngram_hsets shape ngram_decontaminate explodes). The clustering
+    # below fills it; the export reads it back.
+    sets = scoped_pin(_minhash_sets(docs, text_col, 2))
     pairs = minhash_lsh_pairs(
         docs,
         text_col,
         threshold=minhash_threshold,
         mode=neardup_mode,
+        sets=sets,
     )
     clusters = dedup_clusters(docs, pairs).select(
         "doc_id", F.col("is_keeper").alias("pass_neardup")
@@ -285,7 +292,11 @@ def flag_corpus(
 
     contaminated = (
         ngram_decontaminate(
-            docs, holdout, text_col, min_overlap=contam_overlap
+            docs,
+            holdout,
+            text_col,
+            min_overlap=contam_overlap,
+            train_hsets=sets,
         )
         .select(F.col("train_doc").alias("doc_id"))
         .distinct()

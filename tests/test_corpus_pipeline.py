@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -8,6 +9,8 @@ from mapping_timeseries_spark.plans.corpus_pipeline import (
     flag_corpus,
     run_corpus_pipeline,
 )
+
+from .conftest import job_group
 
 BASE = (
     "the quick brown fox jumps over a lazy dog while data engines process "
@@ -140,6 +143,67 @@ def test_run_corpus_pipeline_end_to_end(spark, tmp_path):
     # stats came from the export's single materialization: flags are gone
     # from the written output, quality_score is retained
     assert "pass_exact" not in got.columns and "quality_score" in got.columns
+
+
+#: Spark jobs one run_corpus_pipeline call on the _corpus/_holdout
+#: fixture may start (local[4], 4 shuffle partitions). Measured: 51
+#: while decontamination built a bitmap pre-filter in front of its
+#: broadcast join and re-shingled the corpus; 41-42 once the join alone
+#: decides membership and the train side reads the MinHash stage's
+#: pinned sets. The export action went from 22 jobs to 12-13.
+CORPUS_PIPELINE_JOB_BUDGET = 45
+
+
+def test_run_corpus_pipeline_job_budget(spark, tmp_path):
+    with job_group(spark.sparkContext, "corpus-pipeline-budget") as jobs:
+        res = run_corpus_pipeline(
+            _corpus(spark), _holdout(spark), str(tmp_path / "shards"),
+            n_shards=4,
+        )
+    assert res.stats["n_retained"] == 2
+    assert len(jobs) <= CORPUS_PIPELINE_JOB_BUDGET, len(jobs)
+
+
+def _sql_executions(spark) -> list:
+    """The SQL executions the status store holds, after the listener bus
+    has delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [ex.apply(i) for i in range(ex.size())]
+
+
+def test_run_corpus_pipeline_shingles_the_corpus_once(spark, tmp_path):
+    """One 2-shingle pass per corpus operation: the MinHash stage and
+    the decontamination train side read one pinned set frame. Across
+    every SQL execution of the operation, the tokens(...) projections
+    over the docs scan are that one pass, and the export plan reads it.
+    A projection is over the holdout scan when it trims the holdout's
+    own text attribute; the docs side may appear under re-aliased
+    attributes (the flag joins reuse the docs subtree)."""
+    holdout = _holdout(spark)
+    holdout_text = re.search(
+        r"\btext#(\d+)",
+        holdout._jdf.queryExecution().analyzed().output().toString(),
+    ).group(1)
+    toks = re.compile(r"trim\(text#(\d+), None\).* AS __toks#(\d+)")
+
+    def docs_passes(plan: str) -> set[str]:
+        return {t for text, t in toks.findall(plan) if text != holdout_text}
+
+    before = max((e.executionId() for e in _sql_executions(spark)), default=-1)
+    run_corpus_pipeline(
+        _corpus(spark), holdout, str(tmp_path / "shards"), n_shards=4
+    )
+    plans = [
+        e.physicalPlanDescription()
+        for e in _sql_executions(spark)
+        if e.executionId() > before
+    ]
+    export = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(export) == 1
+    in_export = docs_passes(export[0])
+    assert len(in_export) == 1
+    assert set().union(*map(docs_passes, plans)) == in_export
 
 
 def test_run_corpus_pipeline_releases_pins(spark, tmp_path):

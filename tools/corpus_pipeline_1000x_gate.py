@@ -1,13 +1,12 @@
 """Gate the FULL composed corpus pipeline at x1000 = 5M docs (r12,
 VERDICT r11 #3): every stage of ``run_corpus_pipeline`` ON
 (canonicalize NFC, corpus line-dedup, PII redaction, exact dedup,
-MinHash star+CC near-dup, n-gram benchmark decontamination with the
-Bloom prefilter, quality, Gopher repetition, bigram-LM perplexity, NB
-classifier, DSIR selection, shard export + manifest), run ONCE as the
-single composition a 100 TB user actually executes. The component
-stages were individually gated at 5M docs across r10-r11; the
-composition itself was gated only at 10x (corpus_pipeline_stress.json,
-50k docs).
+MinHash star+CC near-dup, n-gram benchmark decontamination, quality,
+Gopher repetition, bigram-LM perplexity, NB classifier, DSIR selection,
+shard export + manifest), run ONCE as the single composition a 100 TB
+user actually executes. The component stages were individually gated
+at 5M docs across r10-r11; the composition itself was gated only at 10x
+(corpus_pipeline_stress.json, 50k docs).
 
 Corpus: the shared ``scale_stress_1000x_dedup`` dir (replicate_range,
 documents only), SHARED-VOCAB variant since r13 (VERDICT r12 #4):
@@ -433,7 +432,7 @@ def main() -> int:
             "lm_ref": "FIXED 1x non-src0 (CCNet trains on a trusted "
             "reference corpus that does not scale with the crawl)",
             "stages": "canonicalize=NFC, line_dedup=keep_first, redact, "
-            "exact, minhash(star)+CC, decontam(bloom), quality, gopher, "
+            "exact, minhash(star)+CC, decontam, quality, gopher, "
             "lm_ppl, nb, dsir, shard export(16)+manifest",
         },
         "1x": r1,

@@ -5,9 +5,8 @@ Every pipeline leg is individually 10x-stress-gated, but
 actually runs — had only small-corpus pytest coverage. This script runs
 the pipeline WITH EVERY VERDICT-LISTED STAGE ON (canonicalize NFC,
 corpus line-dedup, PII redaction, exact + MinHash near-dup dedup,
-benchmark decontamination with the Bloom prefilter, Gopher repetition,
-bigram-LM perplexity, NB classifier, DSIR selection, shard export +
-manifest) against sf0.1 and against the 10x replicated corpus
+benchmark decontamination, Gopher repetition, bigram-LM perplexity, NB
+classifier, DSIR selection, shard export + manifest) against sf0.1 and against the 10x replicated corpus
 (tools/scale_stress.replicate — per-word-renamed replicas, so the true
 dup/near-dup/contam graph of 10x is exactly 10 disjoint copies of 1x),
 and records into artifacts/corpus_pipeline_stress.json:
@@ -275,7 +274,7 @@ def main() -> int:
             "min_nb_log_odds": MIN_NB_LOG_ODDS,
             "dsir_keep_1x": DSIR_KEEP_1X,
             "stages": "canonicalize=NFC, line_dedup=keep_first, redact, "
-            "exact, minhash+CC, decontam(bloom), quality, gopher, "
+            "exact, minhash+CC, decontam, quality, gopher, "
             "lm_ppl, nb, dsir, shard export(16)+manifest",
         },
         "1x": r1,

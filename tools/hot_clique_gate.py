@@ -56,6 +56,7 @@ from mapping_timeseries_spark.operators.dedup import (  # noqa: E402
     dedup_cache_scope,
     minhash_lsh_pairs,
 )
+from mapping_timeseries_spark.materialize import scoped_pin  # noqa: E402
 from mapping_timeseries_spark.session import get_spark  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -108,82 +109,89 @@ def main(out_path: str) -> None:
     spark = get_spark()
     results = []
     for k in K_GRID:
-        docs = clique_corpus(spark, k).persist()
-        n_docs = docs.count()
-        sh = _shingled(docs, "text", 2).where(F.col("n_shingles") > 0).persist()
-        banded = _band_frame(sh, 32, 8).persist()
-        n_banded = banded.count()
-        # analytic all-pairs join output: one aggregation, no join
-        join_volume = int(
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("sz"))
-            .agg(F.sum(F.col("sz") * (F.col("sz") - 1) / 2))
-            .first()[0]
-        )
-        t0 = time.time()
-        cand_star = _lsh_candidates(banded, "star").count()
-        t_star_cand = round(time.time() - t0, 2)
-        banded.unpersist(); sh.unpersist()
-        # all-pairs candidate count in a SUBPROCESS: its OOM at k=10⁴
-        # must not take this gate's JVM down (module docstring)
-        t0 = time.time()
-        cand_pairs = pairs_cand_died = None
-        try:
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--pairs-count", str(k)],
-                capture_output=True,
-                text=True,
-                timeout=900,
-            )
-        except subprocess.TimeoutExpired:
-            # a thrashing (rather than promptly-OOMing) all-pairs job must
-            # be RECORDED as a death, not crash the gate and lose every
-            # per-k result gathered so far (ADVICE r9 #2)
-            proc = None
-            pairs_cand_died = "timeout"
-        t_pairs_cand = round(time.time() - t0, 2)
-        if proc is not None:
-            for ln in proc.stdout.splitlines():
-                if ln.startswith("PAIRS_COUNT="):
-                    cand_pairs = int(ln.split("=", 1)[1])
-            if cand_pairs is None:
-                tail = (proc.stdout + proc.stderr)[-4000:]
-                for marker in ("OutOfMemoryError", "SparkException"):
-                    if marker in tail:
-                        pairs_cand_died = marker
-                        break
-                else:
-                    pairs_cand_died = f"subprocess rc={proc.returncode}"
+        with dedup_cache_scope():
+            docs = scoped_pin(clique_corpus(spark, k))
+            n_docs = docs.count()
+            with dedup_cache_scope():
+                sh = scoped_pin(
+                    _shingled(docs, "text", 2).where(F.col("n_shingles") > 0)
+                )
+                banded = scoped_pin(_band_frame(sh, 32, 8))
+                n_banded = banded.count()
+                # analytic all-pairs join output: one aggregation, no join
+                join_volume = int(
+                    banded.groupBy("band", "bucket")
+                    .agg(F.count(F.lit(1)).alias("sz"))
+                    .agg(F.sum(F.col("sz") * (F.col("sz") - 1) / 2))
+                    .first()[0]
+                )
+                t0 = time.time()
+                cand_star = _lsh_candidates(banded, "star").count()
+                t_star_cand = round(time.time() - t0, 2)
+            # all-pairs candidate count in a SUBPROCESS: its OOM at k=10⁴
+            # must not take this gate's JVM down (module docstring)
+            t0 = time.time()
+            cand_pairs = pairs_cand_died = None
+            try:
+                proc = subprocess.run(
+                    [
+                        sys.executable,
+                        os.path.abspath(__file__),
+                        "--pairs-count",
+                        str(k),
+                    ],
+                    capture_output=True,
+                    text=True,
+                    timeout=900,
+                )
+            except subprocess.TimeoutExpired:
+                # a thrashing (rather than promptly-OOMing) all-pairs job must
+                # be RECORDED as a death, not crash the gate and lose every
+                # per-k result gathered so far (ADVICE r9 #2)
+                proc = None
+                pairs_cand_died = "timeout"
+            t_pairs_cand = round(time.time() - t0, 2)
+            if proc is not None:
+                for ln in proc.stdout.splitlines():
+                    if ln.startswith("PAIRS_COUNT="):
+                        cand_pairs = int(ln.split("=", 1)[1])
+                if cand_pairs is None:
+                    tail = (proc.stdout + proc.stderr)[-4000:]
+                    for marker in ("OutOfMemoryError", "SparkException"):
+                        if marker in tail:
+                            pairs_cand_died = marker
+                            break
+                    else:
+                        pairs_cand_died = f"subprocess rc={proc.returncode}"
 
-        wall_star, shape_star = run_e2e(docs, "star")
-        row = {
-            "k": k,
-            "n_docs": n_docs,
-            "n_banded": n_banded,
-            "pairs_join_volume": join_volume,
-            "cand_star": cand_star,
-            "cand_pairs": cand_pairs,
-            "pairs_cand_died": pairs_cand_died,
-            "t_cand_star_s": t_star_cand,
-            "t_cand_pairs_s": t_pairs_cand,
-            "wall_star_e2e_s": wall_star,
-            # the spanning proof: the whole clique lands in ONE cluster
-            # with ONE keeper (max_cluster == k), noise docs singleton
-            "star_max_cluster": shape_star["max_cluster"],
-            "star_n_keepers": shape_star["n_keepers"],
-            "star_clique_spanned": shape_star["max_cluster"] == k,
-        }
-        if k <= PAIRS_E2E_MAX:
-            wall_pairs, shape_pairs = run_e2e(docs, "pairs")
-            row["wall_pairs_e2e_s"] = wall_pairs
-            row["pairs_max_cluster"] = shape_pairs["max_cluster"]
-            row["clusters_equal"] = (
-                shape_pairs["max_cluster"] == shape_star["max_cluster"]
-                and shape_pairs["n_keepers"] == shape_star["n_keepers"]
-            )
-        docs.unpersist()
-        results.append(row)
-        print(json.dumps(row), flush=True)
+            wall_star, shape_star = run_e2e(docs, "star")
+            row = {
+                "k": k,
+                "n_docs": n_docs,
+                "n_banded": n_banded,
+                "pairs_join_volume": join_volume,
+                "cand_star": cand_star,
+                "cand_pairs": cand_pairs,
+                "pairs_cand_died": pairs_cand_died,
+                "t_cand_star_s": t_star_cand,
+                "t_cand_pairs_s": t_pairs_cand,
+                "wall_star_e2e_s": wall_star,
+                # the spanning proof: the whole clique lands in ONE cluster
+                # with ONE keeper (max_cluster == k), noise docs singleton
+                "star_max_cluster": shape_star["max_cluster"],
+                "star_n_keepers": shape_star["n_keepers"],
+                "star_clique_spanned": shape_star["max_cluster"] == k,
+            }
+            if k <= PAIRS_E2E_MAX:
+                wall_pairs, shape_pairs = run_e2e(docs, "pairs")
+                row["wall_pairs_e2e_s"] = wall_pairs
+                row["pairs_max_cluster"] = shape_pairs["max_cluster"]
+                row["clusters_equal"] = (
+                    shape_pairs["max_cluster"] == shape_star["max_cluster"]
+                    and shape_pairs["n_keepers"] == shape_star["n_keepers"]
+                )
+            results.append(row)
+            print(json.dumps(row), flush=True)
 
     # linearity pin: star candidates per doc are flat across the grid;
     # the all-pairs join volume per doc grows ~linearly with k (total
@@ -229,8 +237,9 @@ def pairs_count(k: int) -> None:
     spark = get_spark()
     docs = clique_corpus(spark, k)
     sh = _shingled(docs, "text", 2).where(F.col("n_shingles") > 0)
-    banded = _band_frame(sh, 32, 8).persist()
-    print(f"PAIRS_COUNT={_lsh_candidates(banded, 'pairs').count()}")
+    with dedup_cache_scope():
+        banded = scoped_pin(_band_frame(sh, 32, 8))
+        print(f"PAIRS_COUNT={_lsh_candidates(banded, 'pairs').count()}")
     spark.stop()
 
 

@@ -38,6 +38,10 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entry_mod
+    from mapping_timeseries_spark.materialize import (
+        dedup_cache_scope,
+        scoped_pin,
+    )
     from mapping_timeseries_spark.operators.correlation import (
         best_lag_correlation,
     )
@@ -54,92 +58,92 @@ def main() -> int:
     )
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    if sf_dir == "--long-history":
-        n_e = int(sys.argv[2]) if len(sys.argv) > 2 else 2000
-        n_m = int(sys.argv[3]) if len(sys.argv) > 3 else 240
-        # deterministic long-series pair: value = f(entity, month index)
-        # on the money lattice; months span n_m consecutive 'yyyy-MM'
-        merged = (
-            spark.range(n_e)
-            .select(F.col("id").alias("cus_code"))
-            .crossJoin(spark.range(n_m).select(F.col("id").alias("mi")))
-            .select(
-                F.col("cus_code"),
-                F.date_format(
-                    F.add_months(F.lit("1990-01-01").cast("date"), F.col("mi")),
-                    "yyyy-MM",
-                ).alias("month"),
-                (F.round((F.pmod(F.col("cus_code") * 37 + F.col("mi") * 13, F.lit(997))) * 0.25, 2)).alias("txn_amount"),
-                (F.round((F.pmod(F.col("cus_code") * 37 + (F.col("mi") - 1) * 13, F.lit(997))) * 0.10, 2)).alias("revenue"),
+    with dedup_cache_scope():
+        if sf_dir == "--long-history":
+            n_e = int(sys.argv[2]) if len(sys.argv) > 2 else 2000
+            n_m = int(sys.argv[3]) if len(sys.argv) > 3 else 240
+            # deterministic long-series pair: value = f(entity, month index)
+            # on the money lattice; months span n_m consecutive 'yyyy-MM'
+            merged = scoped_pin(
+                spark.range(n_e)
+                .select(F.col("id").alias("cus_code"))
+                .crossJoin(spark.range(n_m).select(F.col("id").alias("mi")))
+                .select(
+                    F.col("cus_code"),
+                    F.date_format(
+                        F.add_months(F.lit("1990-01-01").cast("date"), F.col("mi")),
+                        "yyyy-MM",
+                    ).alias("month"),
+                    (F.round((F.pmod(F.col("cus_code") * 37 + F.col("mi") * 13, F.lit(997))) * 0.25, 2)).alias("txn_amount"),
+                    (F.round((F.pmod(F.col("cus_code") * 37 + (F.col("mi") - 1) * 13, F.lit(997))) * 0.10, 2)).alias("revenue"),
+                )
             )
-            .persist()
-        )
-        sf_label = f"long-history {n_e}x{n_m}"
-    else:
-        merged = entry_mod._merged(spark, sf_dir).persist()
-        sf_label = sf_dir
-    months = sorted(r[0] for r in merged.select("month").distinct().collect())
-    last = months[-1]
-    history = merged.where(F.col("month") < last)
-    new_rows = merged.where(F.col("month") == last)
-    n_entities = merged.select("cus_code").distinct().count()
-    print(
-        f"# {len(months)} months, {n_entities} entities, "
-        f"append month = {last}"
-    )
-
-    work = tempfile.mkdtemp(prefix="mts_incr_bench_")
-    try:
-        t0 = time.time()
-        init_corr_state(history, os.path.join(work, "state"), max_lag=6)
-        t_init = time.time() - t0
-
-        def run_full():
-            best_lag_correlation(merged, 6).write.format("noop").mode(
-                "overwrite"
-            ).save()
-
-        def run_advance(root):
-            advance_corr_state(spark, root, new_rows)
-            model_from_state(spark, root).write.format("noop").mode(
-                "overwrite"
-            ).save()
-
-        full_times, adv_times = [], []
-        for rep in range(3):
-            t0 = time.time(); run_full(); full_times.append(time.time() - t0)
-            # fresh state copy per rep: advance is append-only
-            root = os.path.join(work, f"state_rep{rep}")
-            shutil.copytree(os.path.join(work, "state"), root)
-            t0 = time.time(); run_advance(root); adv_times.append(time.time() - t0)
-            spark.catalog.clearCache()
-
-        f, a = statistics.median(full_times), statistics.median(adv_times)
-        # input-volume accounting — the claim that matters on a cluster
-        # where history is cold storage, not page cache: rows each path
-        # must READ (full: all history+new; advance: state trio + new)
-        from mapping_timeseries_spark.plans.incremental import (
-            _read_meta,
-            _read_state,
-        )
-
-        full_input = merged.count()
-        mo, ta, en = _read_state(
-            spark, os.path.join(work, "state"),
-            _read_meta(os.path.join(work, "state")),
-        )
-        adv_input = mo.count() + ta.count() + en.count() + new_rows.count()
+            sf_label = f"long-history {n_e}x{n_m}"
+        else:
+            merged = scoped_pin(entry_mod._merged(spark, sf_dir))
+            sf_label = sf_dir
+        months = sorted(r[0] for r in merged.select("month").distinct().collect())
+        last = months[-1]
+        history = merged.where(F.col("month") < last)
+        new_rows = merged.where(F.col("month") == last)
+        n_entities = merged.select("cus_code").distinct().count()
         print(
-            f'{{"sf_dir": "{sf_label}", "n_months": {len(months)}, '
-            f'"n_entities": {n_entities}, "init_sec": {t_init:.2f}, '
-            f'"full_model_sec": {f:.2f}, "advance_model_sec": {a:.2f}, '
-            f'"speedup": {f / max(a, 1e-9):.2f}, '
-            f'"full_input_rows": {full_input}, '
-            f'"advance_input_rows": {adv_input}, '
-            f'"input_reduction": {full_input / max(adv_input, 1):.1f}}}'
+            f"# {len(months)} months, {n_entities} entities, "
+            f"append month = {last}"
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+        work = tempfile.mkdtemp(prefix="mts_incr_bench_")
+        try:
+            t0 = time.time()
+            init_corr_state(history, os.path.join(work, "state"), max_lag=6)
+            t_init = time.time() - t0
+
+            def run_full():
+                best_lag_correlation(merged, 6).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+
+            def run_advance(root):
+                advance_corr_state(spark, root, new_rows)
+                model_from_state(spark, root).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+
+            full_times, adv_times = [], []
+            for rep in range(3):
+                t0 = time.time(); run_full(); full_times.append(time.time() - t0)
+                # fresh state copy per rep: advance is append-only
+                root = os.path.join(work, f"state_rep{rep}")
+                shutil.copytree(os.path.join(work, "state"), root)
+                t0 = time.time(); run_advance(root); adv_times.append(time.time() - t0)
+                spark.catalog.clearCache()
+
+            f, a = statistics.median(full_times), statistics.median(adv_times)
+            # input-volume accounting — the claim that matters on a cluster
+            # where history is cold storage, not page cache: rows each path
+            # must READ (full: all history+new; advance: state trio + new)
+            from mapping_timeseries_spark.plans.incremental import (
+                _read_meta,
+                _read_state,
+            )
+
+            full_input = merged.count()
+            mo, ta, en = _read_state(
+                spark, os.path.join(work, "state"),
+                _read_meta(os.path.join(work, "state")),
+            )
+            adv_input = mo.count() + ta.count() + en.count() + new_rows.count()
+            print(
+                f'{{"sf_dir": "{sf_label}", "n_months": {len(months)}, '
+                f'"n_entities": {n_entities}, "init_sec": {t_init:.2f}, '
+                f'"full_model_sec": {f:.2f}, "advance_model_sec": {a:.2f}, '
+                f'"speedup": {f / max(a, 1e-9):.2f}, '
+                f'"full_input_rows": {full_input}, '
+                f'"advance_input_rows": {adv_input}, '
+                f'"input_reduction": {full_input / max(adv_input, 1):.1f}}}'
+            )
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
     spark.stop()
     return 0
 

@@ -22,6 +22,10 @@ def main() -> int:
     sys.path.insert(0, "/root/repo")
     from pyspark.sql import functions as F
 
+    from mapping_timeseries_spark.materialize import (
+        dedup_cache_scope,
+        scoped_pin,
+    )
     from mapping_timeseries_spark.operators.similarity import (
         cosine_topk,
         ivf_refine_centroids,
@@ -34,35 +38,38 @@ def main() -> int:
     spark = get_spark(
         "ivf-recall", extra_conf={"spark.driver.memory": "8g"}
     )
-    emb = read_table(spark, sf_dir, "embeddings").persist()
-    queries = emb.where(F.col("vec_id") < 20)
-    exact = {
-        (r["query_id"], r["vec_id"])
-        for r in cosine_topk(emb, queries, k=k).collect()
-    }
-
-    def recall(cents) -> float:
-        got = {
+    with dedup_cache_scope():
+        emb = scoped_pin(read_table(spark, sf_dir, "embeddings"))
+        queries = emb.where(F.col("vec_id") < 20)
+        exact = {
             (r["query_id"], r["vec_id"])
-            for r in ivf_topk(
-                emb, queries, k=k, nprobe=nprobe, centroids=cents
-            ).collect()
+            for r in cosine_topk(emb, queries, k=k).collect()
         }
-        return len(got & exact) / len(exact)
 
-    seeds = ivf_seed_centroids(emb, nlist).persist()
-    r_seed = recall(seeds)
-    t0 = time.time()
-    refined = ivf_refine_centroids(emb, seeds, iterations=2).persist()
-    refined.count()
-    t_refine = time.time() - t0
-    r_refined = recall(refined)
-    print(
-        f'{{"sf_dir": "{sf_dir}", "k": {k}, "nlist": {nlist}, '
-        f'"nprobe": {nprobe}, "recall_seed": {r_seed:.4f}, '
-        f'"recall_lloyd2": {r_refined:.4f}, '
-        f'"refine_sec": {t_refine:.2f}}}'
-    )
+        def recall(cents) -> float:
+            got = {
+                (r["query_id"], r["vec_id"])
+                for r in ivf_topk(
+                    emb, queries, k=k, nprobe=nprobe, centroids=cents
+                ).collect()
+            }
+            return len(got & exact) / len(exact)
+
+        seeds = scoped_pin(ivf_seed_centroids(emb, nlist))
+        r_seed = recall(seeds)
+        t0 = time.time()
+        refined = scoped_pin(
+            ivf_refine_centroids(emb, seeds, iterations=2)
+        )
+        refined.count()
+        t_refine = time.time() - t0
+        r_refined = recall(refined)
+        print(
+            f'{{"sf_dir": "{sf_dir}", "k": {k}, "nlist": {nlist}, '
+            f'"nprobe": {nprobe}, "recall_seed": {r_seed:.4f}, '
+            f'"recall_lloyd2": {r_refined:.4f}, '
+            f'"refine_sec": {t_refine:.2f}}}'
+        )
     spark.stop()
     return 0
 

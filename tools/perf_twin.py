@@ -22,38 +22,29 @@ import sys
 import time
 
 
-def make_pair(spark, n_customers: int, n_months: int = 24):
-    from mapping_timeseries_spark.sources.fixtures import synthetic_pair
-
-    t1, t2 = synthetic_pair(
-        spark, num_customers=n_customers, num_months=n_months
-    )
-    return t1.cache(), t2.cache()
-
-
 def run_tier(spark, t1, t2, reps: int = 5, method: str = "correlation"):
     from mapping_timeseries_spark.engine import map_tables_simple
+    from mapping_timeseries_spark.materialize import (
+        dedup_cache_scope,
+        scoped_pin,
+    )
 
-    # inputs (re-)pinned and materialized outside the timed region,
-    # mirroring the reference's timing (its tables pre-exist the timer);
-    # the explicit cache() matters because a prior tier's clearCache
-    # unmarked them
-    t1.cache().count(), t2.cache().count()
     times = []
     n_mappings = None
-    for rep in range(reps):
-        t0 = time.time()
-        out = map_tables_simple(
-            spark, t1, t2, "cus_code", "month", "txn_amount", "revenue",
-            method=method, max_lag=6,
-        )
-        n_mappings = out.count()
-        times.append(time.time() - t0)
-        # drop cached intermediates so each rep recomputes the mapping,
-        # then re-pin the inputs — except after the last rep
-        spark.catalog.clearCache()
-        if rep < reps - 1:
-            t1.cache().count(), t2.cache().count()
+    for _ in range(reps):
+        # each rep pins and fills its inputs outside the timed region,
+        # mirroring the reference's timing (its tables pre-exist the
+        # timer); leaving the scope drops the pins and every
+        # intermediate the mapping cached, so each rep recomputes it
+        with dedup_cache_scope():
+            scoped_pin(t1).count(), scoped_pin(t2).count()
+            t0 = time.time()
+            out = map_tables_simple(
+                spark, t1, t2, "cus_code", "month", "txn_amount", "revenue",
+                method=method, max_lag=6,
+            )
+            n_mappings = out.count()
+            times.append(time.time() - t0)
     med = statistics.median(times)
     return n_mappings, med, n_mappings / med
 
@@ -61,6 +52,7 @@ def run_tier(spark, t1, t2, reps: int = 5, method: str = "correlation"):
 def main() -> int:
     sys.path.insert(0, "/root/repo")
     from mapping_timeseries_spark.session import get_spark
+    from mapping_timeseries_spark.sources.fixtures import synthetic_pair
 
     spark = get_spark("perf-twin", master="local[32]")
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -76,14 +68,14 @@ def main() -> int:
         (5000, "dtw"): "500-1,000 rec/s published floor",
     }
     for n_cust, label in tiers.items():
-        t1, t2 = make_pair(spark, n_cust)  # one fixture per tier
+        # one fixture per tier
+        t1, t2 = synthetic_pair(spark, num_customers=n_cust, num_months=24)
         for method in ("correlation", "dtw"):
             n, med, rate = run_tier(spark, t1, t2, method=method)
             print(
                 f"{label}, {method}: {n:,} mappings in {med:.2f}s median -> "
                 f"{rate:,.0f} mappings/s  [{claims[(n_cust, method)]}]"
             )
-        t1.unpersist(), t2.unpersist()
     return 0
 
 

@@ -173,22 +173,20 @@ def main() -> int:
         formulation). Per-stage walls and scratch-disk high-water
         (scratch.ScratchMeter) land in the artifact.
 
-        The contam leg mirrors operators/dedup.py ngram_decontaminate
-        (Bloom prescreen -> broadcast holdout join -> containment,
-        dedup.py:640-651) reading the SAME staged hash sets — xxhash64
-        per shingle, exactly the hashes ngram_decontaminate derives.
-        Any drift from the real operator fails the count gate: the
-        expectation comes from the REAL query at 1x.
+        The contam leg runs operators/dedup.py ngram_decontaminate
+        itself (broadcast holdout join -> containment) on the SAME
+        staged hash sets — xxhash64 per shingle, exactly the hashes the
+        operator derives from text. Any drift from the real query fails
+        the count gate: the expectation comes from the REAL query at 1x.
         """
         from pyspark.sql import functions as F
 
         from mapping_timeseries_spark.operators.dedup import (
-            _bloom_frame,
-            _bloom_probe_sql,
             _ngram_candidates,
             _ngram_hsets,
             _ngram_prefix,
             _verify_jaccard_hashed,
+            ngram_decontaminate,
         )
         from mapping_timeseries_spark.scratch import ScratchMeter
         from mapping_timeseries_spark.sources.readers import read_table
@@ -252,40 +250,15 @@ def main() -> int:
         # the matched-row groupBy, which fits this box's disk on its
         # own. Bucketing is the NEAR leg's disk mitigation; applying it
         # here just multiplied broadcast builds.
-        tr_all = hsets.where(F.col("source") != "src0").select(
-            F.col("doc_id").alias("train_doc"),
-            F.explode("__hset").alias("shingle"),
-        )
-        ho = hsets.where(F.col("source") == "src0").select(
-            F.col("doc_id").alias("holdout_doc"),
-            F.col("n_shingles").alias("holdout_ngrams"),
-            F.explode("__hset").alias("shingle"),
-        )
-        bloom_row, k = _bloom_frame(
-            ho.select(F.col("shingle").alias("__h")).distinct(), 12
-        )
         m = ScratchMeter(spark).start()
         t0 = time.monotonic()
-        tr = (
-            tr_all.withColumn("__bh", F.col("shingle"))
-            .crossJoin(F.broadcast(bloom_row))
-            .where(
-                F.expr(
-                    _bloom_probe_sql("__bh", "__bloom_words", "__bloom_m", k)
-                )
-            )
-            .drop("__bh", "__bloom_words", "__bloom_m")
-        )
-        n = (
-            tr.join(F.broadcast(ho), "shingle")
-            .groupBy("train_doc", "holdout_doc")
-            .agg(
-                F.count(F.lit(1)).alias("shared_ngrams"),
-                F.first("holdout_ngrams").alias("holdout_ngrams"),
-            )
-            .where(F.col("shared_ngrams") / F.col("holdout_ngrams") >= 0.2)
-            .count()
-        )
+        n = ngram_decontaminate(
+            None,
+            None,
+            min_overlap=0.2,
+            train_hsets=hsets.where(F.col("source") != "src0"),
+            holdout_hsets=hsets.where(F.col("source") == "src0"),
+        ).count()
         stages["contam"] = {
             "rows": n,
             "wall_s": round(time.monotonic() - t0, 1),
