@@ -37,20 +37,6 @@ class MappingConfig:
         (mapping_engine.py:74).
     normalize:
         Z-score-normalize series before DTW (mapping_engine.py:75).
-    shuffle_partitions:
-        Advisory parallelism for the per-entity stages. The reference fixes
-        ``repartition(200, 'cus_code')`` (mapping_engine.py:76,530-531); we
-        let AQE coalesce instead and only repartition when the caller pins a
-        value — a fixed repartition immediately before a groupBy is a
-        redundant extra shuffle (SURVEY §4).
-    cache_intermediate:
-        Gates ``engine.map_tables``' reuse exchanges only: a frame that
-        is consumed more than once (the canonical series; in auto mode
-        also the merged and correlation frames) is hash-partitioned once
-        on the entity key, so its consumers read one shuffle instead of
-        recomputing it. Nothing is cached in executor storage, and
-        ``run_pipeline`` does not read the flag. The reference caches
-        unconditionally (mapping_engine.py:77).
     broadcast_threshold:
         Reference-parity knob (mapping_engine.py:78 sets
         autoBroadcastJoinThreshold on the live session). This engine
@@ -66,8 +52,6 @@ class MappingConfig:
     max_lag: int = 6
     window_size: int | None = None
     normalize: bool = True
-    shuffle_partitions: int | None = None
-    cache_intermediate: bool = True
     broadcast_threshold: int = 10 * 1024 * 1024
 
     def __post_init__(self) -> None:

@@ -63,7 +63,7 @@ def map_tables(
     forbid_broadcast = cfg.broadcast_threshold <= 0
     t1 = canonicalize(table1, key_col, time_col, value1_col, VALUE1, "table1")
     t2 = canonicalize(table2, key_col, time_col, value2_col, VALUE2, "table2")
-    if cfg.cache_intermediate and cfg.method != "dtw":
+    if cfg.method != "dtw":
         # correlation/auto consume each canonical series twice: once
         # through the merged frame feeding the correlation grid, once as
         # a side of the lag join. The reuse point is
@@ -81,12 +81,10 @@ def map_tables(
         # clearCache contract for long-lived sessions.
         t1 = t1.repartition(F.col(KEY))
         t2 = t2.repartition(F.col(KEY))
+    # AQE sizes the per-entity stages; the reference's fixed
+    # repartition(200, key) (mapping_engine.py:530-531) right before a
+    # groupBy would be a redundant extra shuffle (SURVEY §4)
     merged = merge_series(t1, t2)
-    if cfg.shuffle_partitions is not None:
-        # the caller pinned an explicit parallelism for the per-entity
-        # stages (reference fixes repartition(200, key),
-        # mapping_engine.py:530-531); default None lets AQE size them
-        merged = merged.repartition(cfg.shuffle_partitions, F.col(KEY))
 
     if cfg.method == "correlation":
         corr = best_lag_correlation(merged, cfg.max_lag)
@@ -97,22 +95,19 @@ def map_tables(
     elif cfg.method == "dtw":
         result = build_dtw_mappings(merged, cfg.window_size, cfg.normalize)
     else:  # auto — one correlation pass, route entities on it
-        if cfg.cache_intermediate and cfg.shuffle_partitions is None:
-            # same exchange-as-reuse-point trick as t1/t2 above: merged
-            # feeds the corr grid AND the DTW semi-join; one KEY
-            # exchange computes the merge join exactly once (a
-            # caller-pinned shuffle_partitions already inserted this
-            # exchange two lines up). The measured winner is gating
-            # merged AND corr with NO caches (shape D in
-            # artifacts/r13_shape_ab_results.json: 3.76 -> 2.88 s median);
-            # mixing gates with caches was the worst shape (4.62 s).
-            merged = merged.repartition(F.col(KEY))
-        corr = best_lag_correlation(merged, cfg.max_lag)
-        if cfg.cache_intermediate:
-            # corr's subtree is the whole correlation-grid window stack,
-            # consumed twice (simple/complex routing split) — the gate
-            # dedupes it for the cost of an entity-sized exchange
-            corr = corr.repartition(F.col(KEY))
+        # same exchange-as-reuse-point trick as t1/t2 above: merged
+        # feeds the corr grid AND the DTW semi-join; one KEY exchange
+        # computes the merge join exactly once. The measured winner is
+        # gating merged AND corr with NO caches (shape D in
+        # artifacts/r13_shape_ab_results.json: 3.76 -> 2.88 s median);
+        # mixing gates with caches was the worst shape (4.62 s).
+        merged = merged.repartition(F.col(KEY))
+        # corr's subtree is the whole correlation-grid window stack,
+        # consumed twice (simple/complex routing split) — the gate
+        # dedupes it for the cost of an entity-sized exchange
+        corr = best_lag_correlation(merged, cfg.max_lag).repartition(
+            F.col(KEY)
+        )
         # the routing split is the MAX of the auto threshold and the
         # caller's min_correlation: with min_correlation > 0.7, an
         # entity in [0.7, min_correlation) would otherwise route to the

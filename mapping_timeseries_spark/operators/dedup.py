@@ -41,6 +41,7 @@ from ..materialize import (
     scoped_checkpoint,
     scoped_pin,
 )
+from ..sources.index_store import IndexStore
 from ..sources.readers import ensure_parallel
 
 __all__ = [
@@ -767,17 +768,23 @@ def minhash_lsh_pairs(
 # Verification joins hash sets for candidate doc_ids only; the hset
 # table is the heavy store (8 B per shingle), so at scale write it
 # bucketed by doc_id (sources.writers.write_bucketed_table) to make the
-# candidate join shuffle-free. meta.json is the commit marker: build
-# writes it LAST and readers require it. It also names the hash family
-# and the set format: every index is md5-family ("portable": true,
-# band-value bucket keys) and stores sorted xxhash64 sets ("sets"), and
+# candidate join shuffle-free. meta.json is the commit marker of the
+# protocol the BM25 and IVF indexes share (sources/index_store.py):
+# build and append commit it LAST with the committed bands/hsets row
+# counts, and load and append refuse an index whose frames disagree
+# with it (a torn append). It also names the hash family and the set
+# format: every index is md5-family ("portable": true, band-value
+# bucket keys) and stores sorted xxhash64 sets ("sets"), and
 # load_minhash_index refuses an index of the removed seeded-xxhash64
-# family ("portable": false) or one that stores string shingles (no
-# "sets") with a rebuild message.
+# family ("portable": false), one that stores string shingles (no
+# "sets"), or one without committed counts, each with a rebuild
+# message.
 
 #: meta.json "sets" value of an index whose hset table holds
 #: _SET_COLS rows (sorted xxhash64 arrays).
 _SET_FORMAT = "xxhash64-sorted"
+
+_STORE = IndexStore("meta.json", {"hsets": "n_hsets", "bands": "n_bands"})
 
 
 def minhash_index_frames(
@@ -807,7 +814,8 @@ def _write_index_batch(
     """The writer body of :func:`build_minhash_index` (``index_sets``
     None: overwrite) and :func:`append_minhash_index` (``index_sets``
     the stored sets: refuse ids already indexed, then append): one
-    shingle pass over ``docs`` into ``path/hsets`` and ``path/bands``.
+    shingle pass over ``docs`` into ``path/hsets`` and ``path/bands``,
+    then the marker commit.
 
     The sets are persisted ONCE: the clash check, the hset write and the
     band write all read them. Measured by index_append_gate at 5M docs:
@@ -817,36 +825,20 @@ def _write_index_batch(
     (247 s vs 93 s); persist() gets the same compute-tokenize-once
     guarantee at O(batch) cost (post-fix walls and the unchanged
     hash-sums: artifacts/index_append_gate.json)."""
-    import os
-
-    mode = "overwrite" if index_sets is None else "append"
     with dedup_cache_scope():
         sets = scoped_pin(_minhash_sets(docs, meta["text_col"], meta["n"]))
         live = sets.where(F.col("n_shingles") > 0)
         if index_sets is not None:
-            # no broadcast hint on the clash probe: the batch id set
-            # has no size bound — a 10% batch of a 1B-doc index is
-            # ~100M ids, past the broadcast cap — and the un-hinted
-            # semi-join of two bare doc_id columns (8 B/row) is
-            # size-safe at any scale; AQE may still pick broadcast when
-            # the batch is genuinely small
-            clash = (
-                index_sets.select("doc_id")
-                .join(live.select("doc_id"), "doc_id", "left_semi")
-                .limit(1)
-                .count()
-            )
-            if clash:
-                raise ValueError(
-                    f"append_minhash_index: batch contains doc_ids "
-                    f"already in the index at {path}"
-                )
-        live.select(*_SET_COLS).write.mode(mode).parquet(
-            os.path.join(path, "hsets")
+            _STORE.refuse_reuse(index_sets, live, "doc_id", path)
+        _STORE.write(
+            path,
+            meta,
+            {
+                "hsets": live.select(*_SET_COLS),
+                "bands": _band_frame(live, meta["num_hashes"], meta["bands"]),
+            },
+            "overwrite" if index_sets is None else "append",
         )
-        _band_frame(live, meta["num_hashes"], meta["bands"]).write.mode(
-            mode
-        ).parquet(os.path.join(path, "bands"))
 
 
 def build_minhash_index(
@@ -859,12 +851,9 @@ def build_minhash_index(
 ) -> None:
     """Build the persisted LSH index for :func:`minhash_dedup_incremental`:
     ``path/bands`` (doc_id, band, bucket), ``path/hsets`` (doc_id,
-    n_shingles, __hset), and ``path/meta.json`` (the LSH parameters,
-    written last as the commit marker — a partially-written index is
-    unloadable, not silently wrong)."""
-    import json
-    import os
-
+    n_shingles, __hset), and ``path/meta.json`` (the LSH parameters and
+    the committed row counts, written last as the commit marker — a
+    partially-written index is unloadable, not silently wrong)."""
     meta = {
         "n": n,
         "num_hashes": num_hashes,
@@ -878,23 +867,13 @@ def build_minhash_index(
         "sets": _SET_FORMAT,
     }
     _write_index_batch(docs, path, meta)
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(meta, f)
 
 
 def load_minhash_index(spark, path: str):
     """Load a persisted LSH index -> (bands_df, hsets_df, meta dict).
-    Raises if the commit marker is missing (interrupted build/append)."""
-    import json
-    import os
-
-    meta_path = os.path.join(path, "meta.json")
-    if not os.path.exists(meta_path):
-        raise FileNotFoundError(
-            f"{meta_path} missing — index at {path} was never committed"
-        )
-    with open(meta_path) as f:
-        meta = json.load(f)
+    Raises if the commit marker is missing or a frame's row count
+    disagrees with it (interrupted build/append)."""
+    meta = _STORE.read(path)
     # An index whose meta says portable: false was banded by the
     # removed seeded-xxhash64 family. Its keys never collide with the
     # keys _band_frame makes now, so every new batch would join it with
@@ -917,11 +896,8 @@ def load_minhash_index(spark, path: str):
             f"shingle sets, not {_SET_FORMAT!r} hash sets — rebuild the "
             "index with build_minhash_index"
         )
-    return (
-        spark.read.parquet(os.path.join(path, "bands")),
-        spark.read.parquet(os.path.join(path, "hsets")),
-        meta,
-    )
+    stored = _STORE.frames_of(spark, path, meta)
+    return stored["bands"], stored["hsets"], meta
 
 
 def minhash_dedup_incremental(
@@ -991,19 +967,10 @@ def minhash_index_compact(
     spark, path: str, target_file_mb: int = 128
 ) -> dict:
     """Rewrite the LSH index's bands/hsets into ~``target_file_mb``
-    files (the append-fragmentation maintenance pass; row-count
-    identity checked by compact_in_place, meta.json — parameters only —
-    untouched). OFFLINE op; crash contract on
-    sources.writers.compact_in_place. Returns per-frame file counts."""
-    import os
-
-    from ..sources.writers import compact_in_place
-
-    load_minhash_index(spark, path)  # commit marker must be present
-    return {
-        name: compact_in_place(spark, os.path.join(path, name), target_file_mb)
-        for name in ("bands", "hsets")
-    }
+    files (the append-fragmentation maintenance pass,
+    sources/index_store.py). OFFLINE op. Returns per-frame file
+    counts."""
+    return _STORE.compact(spark, path, target_file_mb)
 
 
 def minhash_dedup_stream(
@@ -1120,10 +1087,11 @@ def minhash_dedup_incremental_path(
 def append_minhash_index(new_docs: DataFrame, path: str) -> None:
     """Fold a new batch into a persisted index (after deduping against
     it): appends the batch's hash sets and bands with the index's own
-    parameters, refusing ids already present (an id collision would
-    silently alias two documents). meta.json is untouched — parameters
-    are immutable for the index's lifetime, which is what keeps every
-    batch's bucket keys collidable with every other's.
+    parameters and recommits meta.json with the new row counts. Refuses
+    a torn index and ids already present (an id collision would
+    silently alias two documents). The parameters are immutable for the
+    index's lifetime, which is what keeps every batch's bucket keys
+    collidable with every other's.
 
     Invariant (pytest-pinned): build(old) + append(new) reads equal to
     build(old ∪ new) row-for-row."""

@@ -41,7 +41,6 @@ def build_correlation_mappings(
     table2: DataFrame,
     correlations: DataFrame,
     min_correlation: float = 0.3,
-    broadcast_dim: bool = False,
     forbid_broadcast: bool = False,
 ) -> DataFrame:
     """Mapping table for the correlation method.
@@ -51,18 +50,14 @@ def build_correlation_mappings(
     canonical t2 (cus_code, month, revenue), and the per-entity result of
     :func:`best_lag_correlation`.
 
-    Broadcast policy: by default the dim-side join strategy is left to
-    AQE, which converts to broadcast at runtime exactly when the filtered
-    dim fits under ``autoBroadcastJoinThreshold`` — the safe default at
-    10^10 entities where a forced broadcast would OOM the driver. That
-    means a session with AQE off (or the threshold at -1) plans a
-    sort-merge join on the fact table; callers at moderate scale who run
-    such sessions can pass ``broadcast_dim=True`` to restore the
-    reference's explicit hint (mapping_engine.py:617,641). The inverse
-    knob ``forbid_broadcast=True`` pins a sort-merge join via a
-    query-scoped SHUFFLE_MERGE hint (MappingConfig.broadcast_threshold
-    <= 0 routes here) so "never broadcast this dim" needs no session
-    conf mutation.
+    Broadcast policy: the dim-side join strategy is left to AQE, which
+    converts to broadcast at runtime exactly when the filtered dim fits
+    under ``autoBroadcastJoinThreshold`` — the safe default at 10^10
+    entities where a forced broadcast (the reference's explicit hint,
+    mapping_engine.py:617,641) would OOM the driver.
+    ``forbid_broadcast=True`` pins a sort-merge join via a query-scoped
+    SHUFFLE_MERGE hint (MappingConfig.broadcast_threshold <= 0 routes
+    here) so "never broadcast this dim" needs no session conf mutation.
 
     Output schema (README.md:165-178): ``cus_code, time1, value1, time2,
     value2, lag_offset:int, method:'correlation', correlation:double``.
@@ -77,9 +72,7 @@ def build_correlation_mappings(
         (F.col("correlation") >= min_correlation)
         & ~F.isnan(F.col("correlation"))
     ).select(KEY, "optimal_lag", "correlation")
-    if broadcast_dim:
-        valid = F.broadcast(valid)
-    elif forbid_broadcast:
+    if forbid_broadcast:
         # query-scoped "threshold <= 0": the SHUFFLE_MERGE hint pins a
         # sort-merge join for THIS plan without touching the shared
         # session's autoBroadcastJoinThreshold (engine.py routes

@@ -36,7 +36,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import portable_hash64, tokens
-from ..materialize import scoped_pin
+from ..materialize import dedup_cache_scope, scoped_pin
+from ..sources.index_store import IndexStore
 from ..sources.readers import ensure_parallel
 
 __all__ = [
@@ -186,15 +187,20 @@ def bm25_topk(
     )
 
 
+#: postings (wh, doc_id, tf) and doc lengths (doc_id, dl); meta.json
+#: commits ``text_col`` and both row counts (sources/index_store.py).
+_STORE = IndexStore("meta.json", {"postings": "n_postings", "dl": "n_docs"})
+
+
 def bm25_index_write(
     docs: DataFrame, path: str, text_col: str = "text"
 ) -> None:
     """Persist the inverted index for serving and INCREMENTAL
     maintenance: ``path/postings`` (wh, doc_id, tf) and ``path/dl``
-    (doc_id, dl) as parquet, plus ``path/meta.json`` — written LAST as
-    the commit marker, carrying the committed ``n_docs`` so an
-    interrupted write/append is detected at load (row count mismatch)
-    instead of silently serving a partial index.
+    (doc_id, dl) as parquet, plus ``path/meta.json`` — the commit
+    marker, written last with both committed row counts
+    (sources/index_store.py), so an interrupted write or append is
+    refused at load instead of silently serving a partial index.
 
     Only the two ADDITIVE frames are persisted; document frequencies
     and corpus totals are derived at load time (one groupBy over the
@@ -203,25 +209,12 @@ def bm25_index_write(
     re-derived df/totals over the union are identical to a full
     rebuild — there is no stored aggregate to drift.
     """
-    import json
-    import os
-
-    idx = bm25_index(docs, text_col)
-    idx["postings"].write.mode("overwrite").parquet(
-        os.path.join(path, "postings")
-    )
-    idx["dl"].write.mode("overwrite").parquet(os.path.join(path, "dl"))
-    spark = docs.sparkSession
-    n_docs = spark.read.parquet(os.path.join(path, "dl")).count()
-    # BOTH committed row counts go into the marker: a crash between the
-    # two appends would otherwise leave one frame ahead of the other
-    # while the surviving count still validates (orphan postings inflate
-    # df/idf invisibly — the exact failure the marker exists to catch)
-    n_postings = spark.read.parquet(os.path.join(path, "postings")).count()
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(
-            {"text_col": text_col, "n_docs": n_docs, "n_postings": n_postings},
-            f,
+    with dedup_cache_scope():  # the postings pin ends with the write
+        idx = bm25_index(docs, text_col)
+        _STORE.write(
+            path,
+            {"text_col": text_col},
+            {"postings": idx["postings"], "dl": idx["dl"]},
         )
 
 
@@ -230,36 +223,8 @@ def bm25_index_load(spark, path: str) -> dict:
     returns (postings/dl stored; df/totals re-derived lazily). Raises
     on a missing commit marker or a row-count mismatch (interrupted
     append)."""
-    import json
-    import os
-
-    meta_path = os.path.join(path, "meta.json")
-    if not os.path.exists(meta_path):
-        raise FileNotFoundError(
-            f"{meta_path} missing — index at {path} was never committed"
-        )
-    with open(meta_path) as f:
-        meta = json.load(f)
-    dl = spark.read.parquet(os.path.join(path, "dl"))
-    n_docs = dl.count()
-    if n_docs != meta["n_docs"]:
-        raise ValueError(
-            f"index at {path} has {n_docs} doc-length rows but meta.json "
-            f"committed {meta['n_docs']} — an append was interrupted; "
-            "rebuild the index (bm25_index_write over the full corpus)"
-        )
-    postings = spark.read.parquet(os.path.join(path, "postings"))
-    # the dl count alone cannot see a crash that landed postings but not
-    # dl (or vice versa): validate the postings count too, so every
-    # torn-append window is detected instead of serving inflated df/idf
-    n_postings = postings.count()
-    if n_postings != meta["n_postings"]:
-        raise ValueError(
-            f"index at {path} has {n_postings} postings rows but "
-            f"meta.json committed {meta['n_postings']} — an append was "
-            "interrupted; rebuild the index (bm25_index_write over the "
-            "full corpus)"
-        )
+    _, stored = _STORE.load(spark, path)
+    postings, dl = stored["postings"], stored["dl"]
     totals = dl.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("total_len"),
@@ -276,90 +241,27 @@ def bm25_index_compact(
     """Rewrite the index's postings/dl into ~``target_file_mb`` files —
     the maintenance pass for an append-maintained index, where every
     batch leaves one file per write task and file COUNT eventually
-    dominates planning. Row counts are identity-checked against the
-    committed meta before and after, so a compaction can never change
-    what the index serves (OFFLINE op — no concurrent appender; see
-    sources.writers.compact_in_place for the crash contract). Returns
-    per-frame output file counts."""
-    from ..sources.writers import compact_in_place
-
-    import os
-
-    bm25_index_load(spark, path)  # validates both counts vs meta
-    out = {
-        "postings": compact_in_place(
-            spark, os.path.join(path, "postings"), target_file_mb
-        ),
-        "dl": compact_in_place(spark, os.path.join(path, "dl"), target_file_mb),
-    }
-    bm25_index_load(spark, path)  # counts unchanged -> marker still valid
-    return out
+    dominates planning. Returns per-frame output file counts."""
+    return _STORE.compact(spark, path, target_file_mb)
 
 
 def bm25_index_append(new_docs: DataFrame, path: str) -> None:
     """Append a new-document batch to a persisted index — continuous
     corpus ingestion without re-reading old text: the batch is
-    tokenized once, its postings/dl rows land in append mode, and
-    meta.json is rewritten LAST with the new committed counts. Document
-    ids must be globally unique (the standard ingestion contract);
-    reuse is REFUSED with one doc_id-keyed membership probe against the
-    stored lengths (a duplicated id would double-count its postings in
-    every derived df/tf).
-
-    Torn-append safety: the append first validates BOTH stored frames
-    against the committed meta counts, so appending onto an index left
-    torn by a previous crash is refused rather than compounding the
-    damage — previously the doc_id probe alone could pass (it checks
-    dl, which a postings-first crash never updated) and a re-run would
-    double-count the batch's postings permanently. Every crash window
-    inside this function leaves at least one frame's row count ahead of
-    meta.json, which :func:`bm25_index_load` (and the next append)
-    detects; recovery from a torn index is a full rebuild.
+    tokenized once and its postings/dl rows land in append mode. An
+    index left torn by an earlier crash, or a batch reusing a stored
+    doc_id (it would double-count its postings in every derived df/tf),
+    is refused (sources/index_store.py); recovery from a torn index is
+    a full rebuild.
 
     Exactness contract (pytest-pinned): queries over
     load(build(old) + append(new)) are bitwise-equal to queries over
     build(old ∪ new).
     """
-    import json
-    import os
-
-    spark = new_docs.sparkSession
-    meta_path = os.path.join(path, "meta.json")
-    if not os.path.exists(meta_path):
-        raise FileNotFoundError(
-            f"{meta_path} missing — build the index before appending"
+    meta, stored = _STORE.load(new_docs.sparkSession, path)
+    _STORE.refuse_reuse(stored["dl"], new_docs, "doc_id", path)
+    with dedup_cache_scope():
+        idx = bm25_index(new_docs, meta["text_col"])
+        _STORE.write(
+            path, meta, {"postings": idx["postings"], "dl": idx["dl"]}, "append"
         )
-    with open(meta_path) as f:
-        meta = json.load(f)
-    stored_dl = spark.read.parquet(os.path.join(path, "dl"))
-    if stored_dl.count() != meta["n_docs"] or (
-        spark.read.parquet(os.path.join(path, "postings")).count()
-        != meta["n_postings"]
-    ):
-        raise ValueError(
-            f"index at {path} does not match its committed meta.json "
-            "counts — a previous append was interrupted; rebuild the "
-            "index before appending"
-        )
-    clash = (
-        new_docs.select("doc_id")
-        .join(stored_dl.select("doc_id"), "doc_id", "inner")
-        .limit(1)
-        .count()
-    )
-    if clash:
-        raise ValueError(
-            f"doc_id reuse detected appending to {path} — ids must be "
-            "globally unique across the index and every batch"
-        )
-    idx = bm25_index(new_docs, meta["text_col"])
-    idx["postings"].write.mode("append").parquet(
-        os.path.join(path, "postings")
-    )
-    idx["dl"].write.mode("append").parquet(os.path.join(path, "dl"))
-    meta["n_docs"] = spark.read.parquet(os.path.join(path, "dl")).count()
-    meta["n_postings"] = spark.read.parquet(
-        os.path.join(path, "postings")
-    ).count()
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.index_store import IndexStore
+
 __all__ = ["cosine", "with_unit_norm", "cosine_topk", "ann_bucketed_topk",
            "embedding_near_dups", "ivf_seed_centroids", "ivf_assign",
            "ivf_refine_centroids", "ivf_topk", "ivf_build_index",
@@ -481,6 +483,13 @@ def _centroid_fingerprint(centroids: DataFrame) -> str:
     return hashlib.md5(repr(rows).encode()).hexdigest()[:16]
 
 
+#: the inverted lists, partitioned by centroid_id, ARE the index root;
+#: the commit marker lives inside it (``_``-prefixed, so Spark's
+#: listing skips it) with the committed row count, ``vec_col`` and the
+#: centroid fingerprint (sources/index_store.py).
+_STORE = IndexStore("_ivf_meta.json", {"": "n_rows"}, "centroid_id")
+
+
 def ivf_build_index(
     embeddings: DataFrame,
     centroids: DataFrame,
@@ -494,27 +503,17 @@ def ivf_build_index(
     bytes). Assignment is the map-only broadcast pass of
     :func:`ivf_assign`; the write is one shuffle-free pass.
 
-    ``meta.json`` is written LAST as the commit marker (committed row
-    count + centroid fingerprint), making the index append-safe:
-    :func:`ivf_index_append` folds a new embedding batch in without
-    re-reading the standing corpus, refusing mismatched centroids and
-    torn predecessors (the BM25/MinHash index discipline)."""
-    import json
-    import os
-
-    corpus = ivf_assign(embeddings, centroids, nprobe=1, vec_col=vec_col)
-    corpus.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-    spark = embeddings.sparkSession
-    n_rows = spark.read.parquet(path).count()
-    with open(os.path.join(path, "_ivf_meta.json"), "w") as f:
-        json.dump(
-            {
-                "vec_col": vec_col,
-                "n_rows": n_rows,
-                "centroid_fp": _centroid_fingerprint(centroids),
-            },
-            f,
-        )
+    The commit marker (committed row count + centroid fingerprint) is
+    written last, making the index append-safe: :func:`ivf_index_append`
+    folds a new embedding batch in without re-reading the standing
+    corpus, refusing mismatched centroids and torn predecessors (the
+    commit protocol MinHash and BM25 indexes share,
+    sources/index_store.py)."""
+    _STORE.write(
+        path,
+        {"vec_col": vec_col, "centroid_fp": _centroid_fingerprint(centroids)},
+        {"": ivf_assign(embeddings, centroids, nprobe=1, vec_col=vec_col)},
+    )
 
 
 def ivf_index_append(
@@ -526,112 +525,46 @@ def ivf_index_append(
     """Fold a new embedding batch into a persisted IVF index (the
     fifth incremental-state family): assign against the FROZEN
     centroids (map-only broadcast pass), append into the partitioned
-    lists, rewrite meta.json LAST. Because assignment is per-row and
+    lists, recommit the marker. Because assignment is per-row and
     the centroids are pinned by fingerprint, ``append == rebuild``
     exactly (pytest-pinned): queries over the appended index equal
     queries over an index rebuilt from the union.
 
-    Refuses (a) centroids whose fingerprint differs from the build's —
-    re-quantizing requires a rebuild, silently mixing quantizers would
-    file vectors into wrong lists; (b) an index whose row count does
-    not match its committed meta (torn previous append); (c) vec_id
-    reuse against the stored ids (would duplicate a vector under one
-    id). Every crash window here leaves row count ahead of meta, which
-    the next load/append detects."""
-    import json
-    import os
-
-    spark = new_embeddings.sparkSession
-    meta_path = os.path.join(path, "_ivf_meta.json")
-    if not os.path.exists(meta_path):
-        raise FileNotFoundError(
-            f"{meta_path} missing — build the index before appending"
-        )
-    with open(meta_path) as f:
-        meta = json.load(f)
+    Refuses (a) an index whose row count does not match its committed
+    marker (torn previous append); (b) centroids whose fingerprint
+    differs from the build's — re-quantizing requires a rebuild,
+    silently mixing quantizers would file vectors into wrong lists;
+    (c) vec_id reuse against the stored ids (would duplicate a vector
+    under one id)."""
+    meta, stored = _STORE.load(new_embeddings.sparkSession, path)
     fp = _centroid_fingerprint(centroids)
     if fp != meta["centroid_fp"]:
         raise ValueError(
             f"centroid fingerprint {fp} != index's {meta['centroid_fp']} — "
             "the quantizer changed; rebuild the index instead of appending"
         )
-    stored = spark.read.parquet(path)
-    if stored.count() != meta["n_rows"]:
-        raise ValueError(
-            f"index at {path} does not match its committed meta.json row "
-            "count — a previous append was interrupted; rebuild the index"
-        )
-    clash = (
-        new_embeddings.select("vec_id")
-        .join(stored.select("vec_id"), "vec_id", "inner")
-        .limit(1)
-        .count()
-    )
-    if clash:
-        raise ValueError(
-            f"vec_id reuse detected appending to {path} — ids must be "
-            "globally unique across the index and every batch"
-        )
+    _STORE.refuse_reuse(stored[""], new_embeddings, "vec_id", path)
     batch = ivf_assign(new_embeddings, centroids, nprobe=1, vec_col=vec_col)
-    batch.write.mode("append").partitionBy("centroid_id").parquet(path)
-    meta["n_rows"] = spark.read.parquet(path).count()
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
+    _STORE.write(path, meta, {"": batch}, "append")
 
 
 def ivf_index_compact(
     spark, path: str, target_file_mb: int = 128
 ) -> int:
     """Rewrite the partitioned inverted lists into ~``target_file_mb``
-    files per the usual append-fragmentation maintenance
-    (sources.writers.compact_in_place, partition layout preserved via
-    partition_col). The commit marker lives INSIDE the partitioned root,
-    so it is re-written after the swap from the pre-validated content
-    (counts and fingerprint are unchanged by construction — the
-    identity check enforces the former). OFFLINE op; a crash between
-    swap and marker rewrite reads as a missing marker — loud, never a
-    silently half-compacted index. Returns the output file count."""
-    import json
-    import os
-
-    from ..sources.writers import compact_in_place
-
-    ivf_index_load(spark, path)  # validates count vs committed meta
-    meta_path = os.path.join(path, "_ivf_meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    n_files = compact_in_place(
-        spark, path, target_file_mb, partition_col="centroid_id"
-    )
-    # the swap retired the old root (marker included): recommit
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    ivf_index_load(spark, path)
-    return n_files
+    files per the usual append-fragmentation maintenance, partition
+    layout preserved. The swap retires the old root with the marker in
+    it, so the marker is recommitted after it; a crash in between reads
+    as a missing marker — loud, never a silently half-compacted index.
+    Returns the output file count."""
+    return _STORE.compact(spark, path, target_file_mb)[""]
 
 
 def ivf_index_load(spark, path: str) -> DataFrame:
     """Load a persisted IVF index with the commit-marker check (row
-    count vs meta.json) — the validating twin of the raw
+    count vs the marker) — the validating twin of the raw
     ``spark.read.parquet`` that :func:`ivf_topk_indexed` performs."""
-    import json
-    import os
-
-    meta_path = os.path.join(path, "_ivf_meta.json")
-    if not os.path.exists(meta_path):
-        raise FileNotFoundError(
-            f"{meta_path} missing — index at {path} was never committed"
-        )
-    with open(meta_path) as f:
-        meta = json.load(f)
-    idx = spark.read.parquet(path)
-    n = idx.count()
-    if n != meta["n_rows"]:
-        raise ValueError(
-            f"index at {path} has {n} rows but meta.json committed "
-            f"{meta['n_rows']} — an append was interrupted; rebuild"
-        )
-    return idx
+    return _STORE.load(spark, path)[1][""]
 
 
 def ivf_topk_indexed(

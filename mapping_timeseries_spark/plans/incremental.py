@@ -58,13 +58,13 @@ from ..operators.correlation import (
     corr_moments_delta,
     merge_moment_states,
 )
+from ..sources.index_store import write_json
 from ..sources.versioned import read_versioned, write_versioned
 
 __all__ = [
     "init_corr_state",
     "advance_corr_state",
     "model_from_state",
-    "run_pipeline_incremental_state",
     "vacuum_corr_state",
 ]
 
@@ -95,15 +95,19 @@ def _tail(merged: DataFrame, max_lag: int) -> DataFrame:
 
 
 def _read_meta(state_root: str) -> dict:
-    with open(os.path.join(state_root, _META)) as fh:
+    path = os.path.join(state_root, _META)
+    if not os.path.exists(path):
+        raise ValueError(
+            f"state_root {state_root!r} is not an initialized corr state — "
+            "run plans.incremental.init_corr_state over full history "
+            "first (the one-time backfill)"
+        )
+    with open(path) as fh:
         return json.load(fh)
 
 
 def _write_meta(state_root: str, meta: dict) -> None:
-    tmp = os.path.join(state_root, _META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, indent=1)
-    os.replace(tmp, os.path.join(state_root, _META))
+    write_json(os.path.join(state_root, _META), meta, indent=1)
 
 
 def _read_state(spark: SparkSession, state_root: str, meta: dict):
@@ -294,40 +298,3 @@ def vacuum_corr_state(state_root: str, keep_last: int = 2) -> dict[str, list[int
                 shutil.rmtree(os.path.join(root, f"v={v:06d}"))
                 removed[name].append(v)
     return removed
-
-
-def run_pipeline_incremental_state(
-    spark: SparkSession,
-    table1_new: DataFrame,
-    table2_new: DataFrame,
-    state_root: str,
-    key_col: str,
-    time_col: str,
-    value1_col: str,
-    value2_col: str,
-    min_correlation: float = 0.3,
-) -> DataFrame:
-    """Month-append production step: advance the persisted state with the
-    new months, refresh the model from state, and emit mappings for the
-    NEW slice only.
-
-    ``table2_new`` must reach ``max_lag`` months past table1's slice
-    (same widening contract as ``run_incremental``,
-    plans/pipeline.py:300-317) — the lag join maps time1 -> time1 + lag.
-    The merged frame that advances the state is built from the t1 slice
-    months only (state months must be appended exactly once; the widened
-    t2 months re-arrive with the next append).
-    """
-    from ..operators.canonicalize import VALUE1, VALUE2, canonicalize
-    from ..operators.lag_join import build_correlation_mappings
-    from ..operators.merge import merge_series
-
-    t1 = canonicalize(table1_new, key_col, time_col, value1_col, VALUE1, "table1")
-    t2 = canonicalize(table2_new, key_col, time_col, value2_col, VALUE2, "table2")
-    new_merged = merge_series(t1, t2)
-    # only months <= t1's max enter the state: the widened t2 overhang
-    # has no t1 partner yet (merge is inner, so new_merged already
-    # stops at months both sides have — documented for the reader)
-    advance_corr_state(spark, state_root, new_merged)
-    model = model_from_state(spark, state_root)
-    return build_correlation_mappings(t1, t2, model, min_correlation)

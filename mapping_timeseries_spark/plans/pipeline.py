@@ -416,16 +416,10 @@ def run_incremental(
     )
     model = None
     if state_root is not None:
-        import os as _os
-
         from .incremental import advance_corr_state, model_from_state
 
-        if not _os.path.exists(_os.path.join(state_root, "_meta.json")):
-            raise ValueError(
-                f"state_root {state_root!r} is not an initialized corr "
-                "state — run plans.incremental.init_corr_state over full "
-                "history first (the one-time backfill)"
-            )
+        # advance_corr_state refuses a state_root init_corr_state never
+        # initialized
         c1 = canonicalize(t1, key_col, time_col, value1_col, VALUE1, "table1")
         c2 = canonicalize(t2, key_col, time_col, value2_col, VALUE2, "table2")
         advance_corr_state(spark, state_root, merge_series(c1, c2))

@@ -43,6 +43,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .index_store import write_json
+
 __all__ = [
     "write_versioned",
     "read_versioned",
@@ -69,10 +71,7 @@ def _read_history(root: str) -> list[dict]:
 
 
 def _write_history(root: str, history: list[dict]) -> None:
-    tmp = os.path.join(root, _HISTORY + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(history, f, indent=1)
-    os.replace(tmp, os.path.join(root, _HISTORY))
+    write_json(os.path.join(root, _HISTORY), history, indent=1)
 
 
 def _current_version(root: str) -> int:

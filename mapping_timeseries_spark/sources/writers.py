@@ -17,6 +17,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from ..materialize import dedup_cache_scope, scoped_checkpoint
+from .index_store import write_json
 
 
 def write_overwrite(df: DataFrame, path: str) -> None:
@@ -310,9 +311,6 @@ def write_shard_manifest(spark: SparkSession, path: str) -> dict:
     can call :func:`verify_shard_manifest` before consuming shards to
     detect truncated copies, partial re-writes or silent corruption.
     Returns the manifest dict."""
-    import json
-    import os
-
     from pyspark.errors.exceptions.captured import AnalysisException
 
     try:
@@ -332,8 +330,9 @@ def write_shard_manifest(spark: SparkSession, path: str) -> dict:
         },
         "n_total": int(sum(r["n_rows"] for r in rows)),
     }
-    with open(os.path.join(path, "_manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    write_json(
+        os.path.join(path, "_manifest.json"), manifest, indent=1, sort_keys=True
+    )
     return manifest
 
 
@@ -341,9 +340,6 @@ def verify_shard_manifest(spark: SparkSession, path: str) -> dict:
     """Recompute the per-shard summaries of the data at ``path`` and
     compare against its committed ``_manifest.json``. Raises ValueError
     naming every drifted shard; returns the manifest on success."""
-    import json
-    import os
-
     from pyspark.errors.exceptions.captured import AnalysisException
 
     mpath = os.path.join(path, "_manifest.json")

@@ -20,7 +20,6 @@ from mapping_timeseries_spark.plans.incremental import (
     advance_corr_state,
     init_corr_state,
     model_from_state,
-    run_pipeline_incremental_state,
 )
 from mapping_timeseries_spark.sources.fixtures import synthetic_pair
 
@@ -273,13 +272,15 @@ def test_run_incremental_stateful_mode(spark, tables, merged, tmp_path):
 
 
 def test_incremental_state_pipeline_end_to_end(spark, tables, merged, tmp_path):
-    """Full month-append step: mappings emitted for the new slice equal
-    the batch pipeline's rows for those months (the model is identical
-    by the state invariant; the lag join is shared code), with the
-    widened-t2 contract honored."""
+    """Full month-append step: advance the state with the new months,
+    finish the model from state and apply it to the new slice through
+    run_pipeline. The mappings equal the batch pipeline's rows for those
+    months (the model is identical by the state invariant; the lag join
+    is shared code), with the widened-t2 contract honored."""
     from mapping_timeseries_spark.operators.lag_join import (
         build_correlation_mappings,
     )
+    from mapping_timeseries_spark.plans.pipeline import run_pipeline
 
     t1, t2 = tables
     months = _months(merged)
@@ -296,14 +297,22 @@ def test_incremental_state_pipeline_end_to_end(spark, tables, merged, tmp_path):
         MAX_LAG,
     )
 
-    # the append slice: t1 new months; t2 widened (here: through end)
-    out = run_pipeline_incremental_state(
+    # the append slice: t1 new months; t2 widened (here: through end).
+    # Only months both sides have enter the state (merge is inner).
+    t1_new = t1.where(F.col("month") >= cut)
+    t2_new = t2.where(F.col("month") >= cut)
+    advance_corr_state(
         spark,
-        t1.where(F.col("month") >= cut),
-        t2.where(F.col("month") >= cut),
         root,
-        "cus_code", "month", "txn_amount", "revenue",
+        merge_series(
+            c1.where(F.col("month") >= cut), c2.where(F.col("month") >= cut)
+        ),
     )
+    out = run_pipeline(
+        spark, t1_new, t2_new, None,
+        "cus_code", "month", "txn_amount", "revenue",
+        model=model_from_state(spark, root),
+    ).mapped
     got = {
         (r["cus_code"], r["time1"], r["time2"]): (r["lag_offset"], r["value1"])
         for r in out.collect()

@@ -212,7 +212,7 @@ def test_bm25_index_append_equals_rebuild(spark, tmp_path):
     )
     assert got == want and got
 
-    # compaction (r7): appended indexes fragment; the rewrite must not
+    # compaction: appended indexes fragment; the rewrite must not
     # change what the index serves, and the commit marker stays valid
     from mapping_timeseries_spark.operators.search import bm25_index_compact
 
@@ -245,7 +245,7 @@ def test_bm25_index_append_equals_rebuild(spark, tmp_path):
         bm25_index_load(spark, path)
     json.dump(good_meta, open(meta_path, "w"))
 
-    # the postings-first crash window (ADVICE r6): postings landed, dl
+    # the postings-first crash window: postings landed, dl
     # did not. dl count still equals meta n_docs, so the old dl-only
     # check passed and a re-run append double-counted the batch. Now:
     # load fails on the postings count, and append REFUSES the torn
